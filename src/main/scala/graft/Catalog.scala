@@ -43,6 +43,27 @@ object Catalog {
     // Micros hold every representable Spark timestamp exactly.
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
+  /** The local session every main builds: `local[n]` with n from
+    * `SPARK_GRAFT_CPUS` (default: the machine's cores), as many shuffle
+    * partitions as cores, the UI off, [[sessionConfs]], and WARN logs.
+    * `extra` is applied last, so it overrides any of these.
+    */
+  def localSession(appName: String,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config(sessionConfs)
+      .config(extra)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Normalize a `ts` event-time column to TimestampType regardless of
     * how the driver's parquet encoded it. Schema-aware, so batch reads
     * (through [[t]]) and streaming reads (which must pin the schema up

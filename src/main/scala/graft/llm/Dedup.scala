@@ -3,6 +3,7 @@ package graft.llm
 import graft.{Catalog, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats
 
 /** Deduplication operators for LLM data pipelines: exact (hash
   * groupBy), MinHash+LSH, n-gram Jaccard, and SimHash over `documents`,
@@ -121,6 +122,9 @@ object Dedup {
     QueryDef("d19_dup_span_ranges", Some(dupSpanRangesOracle),
       (s, d) => dupSpanRangesFrom(spanWindows(s, d))),
 
+    QueryDef("d22_lsh_tuning", Some(lshTuningOracle),
+      (s, d) => lshTuning(Catalog.t(s, d, "documents"))),
+
     // Bag-of-words fingerprint dedup: documents grouped by the md5 of
     // their SORTED DISTINCT token set — order-free content identity, the
     // cheap middle ground between d01's byte-exact hash (misses any
@@ -131,9 +135,6 @@ object Dedup {
     // forms collapsed into each bag (the reorder evidence). The
     // canonical 100 TB shape: narrow per-row normalize + one
     // map-side-combinable groupBy, nothing pairwise anywhere.
-    QueryDef("d22_lsh_tuning", Some(lshTuningOracle),
-      (s, d) => lshTuning(Catalog.t(s, d, "documents"))),
-
     QueryDef(
       "d21_bag_dedup",
       Some("""WITH b AS (SELECT doc_id,
@@ -437,7 +438,9 @@ object Dedup {
     * candidates to verify; this report prices that trade on the actual
     * corpus. One signature computation (narrow, shuffle-free) feeds all
     * configs; per config one exploded band self-join — the d02 shape —
-    * never all-pairs.
+    * never all-pairs. The report (one row per config) is computed
+    * eagerly and returned as a local frame, so the cached signature is
+    * released before the call returns.
     */
   def lshTuning(docs: DataFrame): DataFrame = {
     val sig = minhashSignatureNarrow(docs).cache()
@@ -469,7 +472,11 @@ object Dedup {
             "ELSE n_est_dups * 1000000 div n_candidates END")
             .as("precision_fx"))
     }
-    per.reduce(_ unionByName _)
+    val report = per.reduce(_ unionByName _)
+    val rows = report.collect()
+    sig.unpersist(blocking = true)
+    docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), report.schema)
   }
 
   private def lshTuningOracle: String = {
@@ -1252,21 +1259,20 @@ object Dedup {
       if (cur != null && (cur._1 eq s)) cur
       else {
         val docs = Catalog.t(s, d, "documents")
-        // checkpointActualStats (round 17): the stock checkpoint
-        // inherits the ESTIMATE of the join-heavy candidate derivation
-        // (5.9 GB for the ~2 MB sf0.1 edge list), which poisoned every
+        // actual stored size, not the stock checkpoint's inherited
+        // ESTIMATE of the join-heavy candidate derivation (5.9 GB for
+        // the ~2 MB sf0.1 edge list), which would poison every
         // size-derived decision downstream — the graph family's
-        // adaptive partition counts most of all. The shim swaps in the
-        // checkpoint's actual stored size.
+        // adaptive partition counts most of all
         (s,
-          org.apache.spark.sql.graftshim.CheckpointStats
-            .checkpointActualStats(
-              docs.select(col("doc_id").as("id")).distinct()),
+          CheckpointStats.truncate(
+            docs.select(col("doc_id").as("id")).distinct(),
+            reliable = false, CheckpointStats.Actual),
           // hamming rides along: g03 selects the tight-clique subgraph
-          org.apache.spark.sql.graftshim.CheckpointStats
-            .checkpointActualStats(simhashNearDupPairs(docs)
+          CheckpointStats.truncate(simhashNearDupPairs(docs)
               .select(col("doc_a").as("src"), col("doc_b").as("dst"),
-                col("hamming"))))
+                col("hamming")),
+            reliable = false, CheckpointStats.Actual))
       }
     })
     (entry._2, entry._3)

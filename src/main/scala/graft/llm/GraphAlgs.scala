@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
 
 /** Reusable distributed graph algorithms over plain DataFrames — the
   * library surface behind the d08/g01 gate queries. Both take:
@@ -54,87 +55,18 @@ object GraphAlgs {
     */
   val DefaultBroadcastMaxNodes: Long = 4L * 1000 * 1000
 
-  /** Per-round lineage truncation: reliable `checkpoint()` when a
-    * directory is given, executor-local `localCheckpoint` otherwise.
-    *
-    * Severing inherited plan statistics after the checkpoint is
-    * load-bearing (round-14 finding, measured at the
-    * curation smoke's 100× scale): Spark's checkpoint node COPIES the
-    * origin plan's `sizeInBytes` statistic, and every round of a
-    * self-referential iteration joins the previous table with a
-    * derivative of itself — so the carried estimate SQUARES per round.
-    * Its bit-length doubles each round, and by round ~18 the driver
-    * spends its time in multi-megabyte BigInteger multiplications
-    * inside `SizeInBytesOnlyStatsPlanVisitor` (observed: round walls
-    * 2.5 s → 5 → 10 → 24 → 80 s, identical on the broadcast and
-    * co-partitioned paths, main thread pinned in Toom-Cook). Building
-    * a fresh DataFrame from the checkpointed RDD resets the statistic
-    * to the session default, which bounds every stats product the
-    * planner ever computes.
-    *
-    * Round 15 replaced the Row round-trip with
-    * [[org.apache.spark.sql.graftshim.CheckpointStats.severStats]]:
-    * rebuild the Dataset around a new `LogicalRDD` sharing the
-    * checkpoint's `InternalRow` RDD, output, partitioning and
-    * ordering, with `originStats = None`. Zero re-encode, zero lost
-    * Exchange — so the sever now runs on EVERY truncation and the
-    * carried estimate never squares at all. (The round-14 compromise
-    * — a `createDataFrame(cp.rdd, cp.schema)` round-trip every 16th
-    * call, because paying its Exchange every round cost ~1-2 s per
-    * g-family gate query — survives behind `GRAFT_STATS_RESET=legacy`
-    * for A/B only.)
+  /** Sets the reliable checkpoint directory when one is given and says
+    * whether the loop's per-round truncations use it. Every loop below
+    * truncates each round through
+    * [[org.apache.spark.sql.graftshim.CheckpointStats.truncate]] with
+    * severed statistics and the recovered layout: a self-referential
+    * round joins the previous table with a derivative of itself, so
+    * inherited estimates would square per round, and under AQE a stock
+    * checkpoint drops the layout the next round's joins rely on.
     */
-  /** Truncation-mode switch, parsed in ONE place (the r15 advice found
-    * a dead second definition drifting beside the match): the
-    * `graft.statsReset` system property first — settable from specs,
-    * which is what lets StatsInvarianceSpec run the iterative gates
-    * under `stock` vs the shim in-process — then the `GRAFT_STATS_RESET`
-    * env var the bench A/B tooling uses. Unset = the shim.
-    */
-  private[graft] def statsResetMode: Option[String] =
-    sys.props.get("graft.statsReset")
-      .orElse(sys.env.get("GRAFT_STATS_RESET"))
-  private val StatsResetEvery = 16 // legacy A/B path only
-
-  /** Mode-aware one-shot truncation for iterative loops OUTSIDE this
-    * file (t34's textrank) — the same switch Rounds.truncate honors,
-    * executor-local only, so StatsInvarianceSpec's stock-vs-shim sweep
-    * exercises those loops too. */
-  private[graft] def truncateLocal(df: DataFrame): DataFrame =
-    statsResetMode match {
-      case Some("legacy") | Some("stock") => df.localCheckpoint(true)
-      case Some("sever-only") =>
-        org.apache.spark.sql.graftshim.CheckpointStats
-          .severStats(df.localCheckpoint(true))
-      case _ => org.apache.spark.sql.graftshim.CheckpointStats
-        .checkpointSevered(df)
-    }
-
-  private final class Rounds(spark: SparkSession, dir: Option[String]) {
+  private def reliable(spark: SparkSession, dir: Option[String]): Boolean = {
     dir.foreach(spark.sparkContext.setCheckpointDir)
-    private var calls = 0
-    def truncate(df: DataFrame): DataFrame = {
-      calls += 1
-      statsResetMode match {
-        case Some("legacy") =>
-          val cp =
-            if (dir.isDefined) df.checkpoint(eager = true)
-            else df.localCheckpoint(eager = true)
-          if (calls % StatsResetEvery == 0)
-            cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-          else cp
-        case Some("sever-only") => // A/B probe: no layout recovery
-          val cp =
-            if (dir.isDefined) df.checkpoint(eager = true)
-            else df.localCheckpoint(eager = true)
-          org.apache.spark.sql.graftshim.CheckpointStats.severStats(cp)
-        case Some("stock") => // A/B probe: plain checkpoint, no sever
-          if (dir.isDefined) df.checkpoint(eager = true)
-          else df.localCheckpoint(eager = true)
-        case _ => org.apache.spark.sql.graftshim.CheckpointStats
-          .checkpointSevered(df, reliable = dir.isDefined)
-      }
-    }
+    dir.isDefined
   }
 
   private def shufflePartitions(df: DataFrame): Int =
@@ -196,7 +128,7 @@ object GraphAlgs {
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = nodes.sparkSession
-    val rounds = new Rounds(spark, checkpointDir)
+    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(edges, p)
     val labels0 = nodes.select(col("id"))
@@ -245,12 +177,12 @@ object GraphAlgs {
       // flow through edge adjacency is the binding constraint, not
       // pointer depth) while each round paid one more node-sized join;
       // interleaved A/B: 4.43 vs 3.77 s warm on g12. Single jump kept.)
-      val l1t = if (small) l1.cache() else rounds.truncate(l1)
+      val l1t = if (small) l1.cache() else truncate(l1, rel, Severed)
       val ptr = l1t.select(col("id").as("pid"), col("label").as("plabel"))
       val ptrIn = if (small) broadcast(ptr) else ptr
       val next = l1t.join(ptrIn, l1t("label") === ptrIn("pid"))
         .select(l1t("id"), least(l1t("label"), col("plabel")).as("label"))
-      val nextT = rounds.truncate(next)
+      val nextT = truncate(next, rel, Severed)
       if (small) l1t.unpersist()
       prevSum = curSum
       curSum = sumAndCount(nextT)._1
@@ -312,7 +244,7 @@ object GraphAlgs {
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = edges.sparkSession
-    val rounds = new Rounds(spark, checkpointDir)
+    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(edges))
     val e = undirected(edges, p)
     // Round 16 (guide §2.4): the visited set is a LAZY union of the
@@ -323,9 +255,9 @@ object GraphAlgs {
     // checkpointed RDD, so the union plan stays shallow (≤ maxDepth
     // leaves), the anti-join reads it as plain scans, and the only
     // per-depth materialization left is the new frontier itself.
-    var dist = rounds.truncate(
+    var dist = truncate(
       seeds.select(col("probe"), col("id")).distinct()
-        .withColumn("dist", lit(0)))
+        .withColumn("dist", lit(0)), rel, Severed)
     var frontier = dist.select(col("probe"), col("id"))
     var frontierCount = frontier.count()
     var visitedCount = frontierCount
@@ -353,9 +285,9 @@ object GraphAlgs {
       val vIn =
         if (visitedCount <= broadcastMaxNodes / 4) broadcast(dist)
         else dist.repartition(p, col("probe"), col("id"))
-      val next = rounds.truncate(
+      val next = truncate(
         nbrs.join(vIn, Seq("probe", "id"), "left_anti")
-          .withColumn("dist", lit(depth)))
+          .withColumn("dist", lit(depth)), rel, Severed)
       frontierCount = next.count()
       visitedCount += frontierCount
       dist = dist.union(next)
@@ -403,7 +335,7 @@ object GraphAlgs {
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = nodes.sparkSession
-    val rounds = new Rounds(spark, checkpointDir)
+    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     // cached: the edge set appears on BOTH sides of the deg bake-in join
     // below — uncached it would evaluate its lineage twice
@@ -466,7 +398,7 @@ object GraphAlgs {
       val next = n0.join(contribIn, n0("id") === contribIn("dst"), "left")
         .select(n0("id"),
           (baseCol + expr("(85 * coalesce(msum, 0L)) div 100")).as("val"))
-      pr = rounds.truncate(next)
+      pr = truncate(next, rel, Severed)
       debug(f"[pagerank] iter $it took=${(System.nanoTime() - tr) / 1e9}%.1fs")
     }
     e.unpersist()
@@ -496,7 +428,7 @@ object GraphAlgs {
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = nodes.sparkSession
-    val rt = new Rounds(spark, checkpointDir)
+    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(edges, p)
     val n0 = nodes.select(col("id")).repartition(p, col("id")).cache()
@@ -514,9 +446,10 @@ object GraphAlgs {
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("dst"), (-col("m.nl")).as("nlabel"))
       val bestIn = if (small) broadcast(best) else best
-      labels = rt.truncate(
+      labels = truncate(
         labels.join(bestIn, labels("id") === bestIn("dst"), "left")
-          .select(col("id"), coalesce(col("nlabel"), col("label")).as("label")))
+          .select(col("id"), coalesce(col("nlabel"), col("label")).as("label")),
+        rel, Severed)
     }
     e.unpersist()
     n0.unpersist()
@@ -681,10 +614,10 @@ object GraphAlgs {
       localMaxEdges: Int = LocalPeelMaxEdges): DataFrame = {
     require(maxK >= 3, "truss decomposition needs maxK >= 3")
     val spark = edges.sparkSession
-    val rd = new Rounds(spark, checkpointDir)
+    val rel = reliable(spark, checkpointDir)
     val canon = edges.select(least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst")).distinct()
-    var cur = rd.truncate(canon)
+    var cur = truncate(canon, rel, Severed)
     var curN = cur.count()
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 3
@@ -698,10 +631,10 @@ object GraphAlgs {
         // canonical edge, same 32 MB/partition target as adaptiveP
         val pRound = ((curN * 48 + TargetPartitionBytes - 1) /
           TargetPartitionBytes).min(confP).max(1).toInt
-        val keep = rd.truncate(
+        val keep = truncate(
           edgeTriangleSupport(cur, k - 2, Some(pRound))
             .filter(col("in_truss"))
-            .select(col("src"), col("dst")))
+            .select(col("src"), col("dst")), rel, Severed)
         val keepN = keep.count()
         rounds += 1
         stable = keepN == curN
@@ -930,10 +863,10 @@ object GraphAlgs {
       checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1, "k-core peel needs k >= 1, rounds >= 1")
     val spark = nodes.sparkSession
-    val rd = new Rounds(spark, checkpointDir)
+    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(edges, p)
-    var remaining = rd.truncate(nodes.select(col("id")).distinct())
+    var remaining = truncate(nodes.select(col("id")).distinct(), rel, Severed)
     var nRem = remaining.count()
     val profile = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var r = 0
@@ -958,10 +891,10 @@ object GraphAlgs {
         .join(dstIn, Seq("dst"), "left_semi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       val degIn = if (small) broadcast(deg) else deg
-      val next = rd.truncate(
+      val next = truncate(
         remaining.join(degIn, Seq("id"), "left")
           .filter(coalesce(col("deg"), lit(0L)) >= k)
-          .select(col("id")))
+          .select(col("id")), rel, Severed)
       val nNext = next.count()
       profile += ((r, nRem - nNext, nNext))
       remaining = next

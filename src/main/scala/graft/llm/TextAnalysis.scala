@@ -3,6 +3,7 @@ package graft.llm
 import graft.{Catalog, QueryDef}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
 
 /** Text-analysis operators for LLM data pipelines over the `documents`
   * table: language ID (stopword n-gram heuristic), quality scoring,
@@ -2278,22 +2279,20 @@ object TextAnalysis {
         col("cnt")))
       .groupBy(col("lang"), col("u"), col("v")).agg(sum(col("cnt")).as("wgt"))
     val wdeg = e0.groupBy(col("lang"), col("u")).agg(sum(col("wgt")).as("wdeg"))
-    // round 16 (r15 verdict item 6): the iteration's truncation runs
-    // through the graftshim — this was the one remaining IN-LOOP
-    // localCheckpoint outside GraphAlgs.Rounds, so its inherited stats
-    // compounded geometrically across rounds (bounded by TrIters, but
-    // the class is now gone) — and with severed stats the loop carries
-    // the graph family's EXPLICIT broadcast/co-partition discipline
-    // instead of leaning on stats-based auto-broadcast (the g09
-    // lesson; t34 is swept by StatsInvarianceSpec like the g-family).
+    // the iteration truncates through the graftshim with severed
+    // stats (inherited ones would compound across rounds), so the loop
+    // carries the graph family's explicit broadcast/co-partition
+    // discipline instead of leaning on stats-based auto-broadcast
+    // (t34 is swept by StatsInvarianceSpec like the g-family).
     val p = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = graft.llm.GraphAlgs.truncateLocal(e0.join(wdeg, Seq("lang", "u")))
+    val e = truncate(e0.join(wdeg, Seq("lang", "u")), reliable = false, Severed)
     val nv = wdeg.groupBy(col("lang")).agg(count(lit(1)).as("nv"))
-    val nodes = graft.llm.GraphAlgs.truncateLocal(
+    val nodes = truncate(
       wdeg.select(col("lang"), col("u"))
       .join(nv, "lang")
       .withColumn("init", expr(s"$TrScale div nv"))
-      .withColumn("base", expr("(15 * init) div 100")))
+      .withColumn("base", expr("(15 * init) div 100")),
+      reliable = false, Severed)
     val nWords = nodes.count()
     val small = nWords <= graft.llm.GraphAlgs.DefaultBroadcastMaxNodes
     var tr = nodes.select(col("lang"), col("u"), col("init").as("val"))
@@ -2306,12 +2305,13 @@ object TextAnalysis {
         .agg(sum(expr("(val * wgt) div wdeg")).as("msum"))
       val contribIn =
         if (small) broadcast(contrib) else contrib
-      tr = graft.llm.GraphAlgs.truncateLocal(nodes
+      tr = truncate(nodes
         .select(col("lang"), col("u"), col("base"))
         .join(contribIn.withColumnRenamed("v", "u"), Seq("lang", "u"), "left")
         .select(col("lang"), col("u"),
           (col("base") + expr("(85 * coalesce(msum, 0L)) div 100"))
-            .as("val")))
+            .as("val")),
+        reliable = false, Severed)
     }
     val wtop = Window.partitionBy(col("lang"))
       .orderBy(col("val").desc, col("u").asc)

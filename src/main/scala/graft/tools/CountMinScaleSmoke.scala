@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the round-13 count-min operators (q77 batch,
@@ -27,14 +26,7 @@ import org.apache.spark.sql.functions._
 object CountMinScaleSmoke {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-countmin-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    graft.Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Catalog.localSession("graft-countmin-scale-smoke")
 
     val W = 64L
     Seq(100000L, 1000000L, 10000000L).foreach { n =>

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Catalog
 import graft.llm.{Dedup, GraphAlgs, Pipeline, TextAnalysis}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round 13: the first artifact measuring the curation operators
@@ -40,13 +40,7 @@ object CurationScaleSmoke {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val copiesList = if (args.length > 1)
       args(1).split(",").toSeq.map(_.toInt) else Seq(1, 10)
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-curation-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-curation-scale-smoke")
     graft.functions.GraftFunctions.register(spark)
 
     val base = Catalog.t(spark, sfDir, "documents")

@@ -56,13 +56,7 @@ object EpsGraphScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-eps-graph-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-eps-graph-scale-smoke")
     graft.functions.GraftFunctions.register(spark)
 
     // deterministic synthetic corpus: id % 100 < 5 → cluster member of

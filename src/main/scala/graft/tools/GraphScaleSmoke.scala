@@ -4,7 +4,7 @@ import graft.Catalog
 import graft.llm.GraphAlgs
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.CheckpointStats
 
 /** Round 17 (r16 verdict item 3): parallel-scaling evidence for the
   * iterative graph loops. The sf0.1 bench cannot provide it — every
@@ -50,14 +50,7 @@ object GraphScaleSmoke {
           else GraphAlgs.DefaultBroadcastMaxNodes)
       }
     val chains = if (args.length > 1) args(1).toLong else 50000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-graph-scale-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-graph-scale-smoke")
 
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -66,11 +59,11 @@ object GraphScaleSmoke {
       // chain graph: i -> i + chains (disjoint chains of length
       // ~n/chains); localCheckpoint so tier build cost stays out of
       // the timed region and stats are the checkpoint's own
-      val nodes = org.apache.spark.sql.graftshim.CheckpointStats
-        .checkpointActualStats(spark.range(n).select(col("id")))
-      val edges = org.apache.spark.sql.graftshim.CheckpointStats
-        .checkpointActualStats(spark.range(n - chains)
-          .select(col("id").as("src"), (col("id") + chains).as("dst")))
+      val nodes = CheckpointStats.truncate(spark.range(n).select(col("id")),
+        reliable = false, CheckpointStats.Actual)
+      val edges = CheckpointStats.truncate(spark.range(n - chains)
+          .select(col("id").as("src"), (col("id") + chains).as("dst")),
+        reliable = false, CheckpointStats.Actual)
       val path = if (n <= bmax) "broadcast" else "co-partition"
 
       val t0 = System.nanoTime()

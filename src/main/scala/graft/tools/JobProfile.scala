@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (guide §1 / §7): runs registry queries and prints a
   * per-JOB breakdown — wall seconds, stage count, task count, summed
@@ -15,13 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .appName("jobprofile").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Catalog.localSession("jobprofile")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     final case class JobRow(id: Int, desc: String, startNs: Long,

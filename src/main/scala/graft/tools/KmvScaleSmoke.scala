@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for round 11's KMV operators (q72 set algebra,
@@ -24,14 +23,7 @@ import org.apache.spark.sql.functions._
 object KmvScaleSmoke {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-kmv-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    graft.Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Catalog.localSession("graft-kmv-scale-smoke")
     graft.functions.GraftFunctions.register(spark)
 
     val K = graft.relational.RelationalQueries4.KmvK

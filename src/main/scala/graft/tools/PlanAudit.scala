@@ -28,15 +28,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(Catalog.sessionConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-plan-audit")
     graft.functions.GraftFunctions.register(spark)
     // minimal JSON string escape: exception messages carry newlines
     // and backslashes (AnalysisException plan fragments) that would

@@ -4,8 +4,6 @@ import graft.Catalog
 import graft.core.codec.Codecs.LongCodec
 import graft.state.Savepoints
 
-import org.apache.spark.sql.SparkSession
-
 /** 100×-scale smoke for the savepoint path (SURVEY.md §7.4 #7): builds
   * a savepoint ~50× the sf0.1 state-query corpus (default 5M keys,
   * maxParallelism 4096, 128 subtasks), then measures the full
@@ -70,14 +68,8 @@ object SavepointScaleSmoke {
     val maxPar = 4096
     val par = 128
 
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "16g")
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-scale-smoke",
+      Map("spark.driver.memory" -> "16g"))
     import spark.implicits._
 
     startSampler()

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the 16-bit pigeonhole chunk currency: grows
@@ -33,13 +33,7 @@ object SimhashScaleSmoke {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-simhash-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-simhash-scale-smoke")
     graft.functions.GraftFunctions.register(spark)
 
     val base = Catalog.t(spark, sfDir, "documents").select("doc_id", "text")

@@ -3,7 +3,6 @@ package graft.tools
 import graft.Catalog
 import graft.streaming.StreamingQueries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 100×-scale smoke for the versioned upsert sink (st24) and its vacuum
@@ -35,13 +34,7 @@ object SnapshotChainScaleSmoke {
     val nKeys = if (args.length > 0) args(0).toLong else 5000000L
     val batchRows = if (args.length > 1) args(1).toLong else 5000000L
     val nBatches = if (args.length > 2) args(2).toInt else 4
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-snapshot-chain-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-snapshot-chain-scale-smoke")
 
     val base = java.nio.file.Files
       .createTempDirectory("graft-chain-smoke").toString

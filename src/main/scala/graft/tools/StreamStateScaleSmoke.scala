@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured evidence that the complete-mode streaming family's state
@@ -29,14 +29,8 @@ import org.apache.spark.sql.functions._
 object StreamStateScaleSmoke {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-stream-state-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    graft.Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Catalog.localSession("graft-stream-state-scale-smoke",
+      Map("spark.sql.shuffle.partitions" -> "8"))
     graft.functions.GraftFunctions.register(spark)
 
     Seq(1000000L, 10000000L).foreach { n =>

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Catalog
 import graft.llm.GraphAlgs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for g14's scale design: the truss decomposition
@@ -33,13 +33,7 @@ object TrussScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-truss-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-    Catalog.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Catalog.localSession("graft-truss-scale-smoke")
 
     // planted 8-cliques: nodes block*1000 .. block*1000+7, all pairs.
     // background: each node u gets 4 hash-random forward edges

@@ -2,149 +2,100 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** The one-file internals shim behind `GraphAlgs.Rounds.truncate`
-  * (round-14 finding, round-15 fix). Two defects in stock
-  * `Dataset.checkpoint` hurt iterative DataFrame algorithms:
+/** The one home of lineage truncation: [[truncate]]. Stock
+  * `Dataset.checkpoint` has two defects that hurt iterative DataFrame
+  * code:
   *
   *  1. **Inherited statistics square per round.** The checkpoint's
-  *     `LogicalRDD` COPIES the origin plan's `Statistics`
-  *     (`originStats`), and a self-referential iteration joins the
-  *     previous table with a derivative of itself — so the carried
-  *     `sizeInBytes` SQUARES each round, its bit-length doubles, and
-  *     by round ~18 the driver is multiplying multi-megabyte
-  *     BigIntegers inside `SizeInBytesOnlyStatsPlanVisitor` (the
-  *     100×-scale d08 curation stage measured 2.5 s → 80 s round
-  *     walls from exactly this).
-  *  2. **AQE erases the checkpoint's layout.** `LogicalRDD
-  *     .fromDataset` reads `executedPlan.outputPartitioning`, but
-  *     under adaptive execution the executed plan is an
-  *     `AdaptiveSparkPlanExec`, which never overrides
-  *     `outputPartitioning` — so the checkpoint stores
-  *     `UnknownPartitioning` even though the eager execution already
-  *     decided (and materialized) the real layout, and every
-  *     downstream same-key join/aggregate pays a fresh Exchange.
+  *     `LogicalRDD` copies the origin plan's `sizeInBytes`, and a
+  *     self-referential iteration joins the previous table with a
+  *     derivative of itself, so the carried estimate squares each
+  *     round until the driver spends its time multiplying
+  *     multi-megabyte BigIntegers in `SizeInBytesOnlyStatsPlanVisitor`
+  *     (the 100×-scale d08 curation stage: round walls 2.5 s → 80 s).
+  *  2. **AQE drops the layout.** `LogicalRDD.fromDataset` reads
+  *     `executedPlan.outputPartitioning`, but under adaptive execution
+  *     that is an `AdaptiveSparkPlanExec`, which reports
+  *     `UnknownPartitioning` — so every downstream same-key join or
+  *     aggregate pays a fresh Exchange.
   *
-  * Round 14 severed the stats by rebuilding through
-  * `createDataFrame(cp.rdd, cp.schema)`, which works but pays twice:
-  * the Row round-trip re-encodes every row on every downstream pass
-  * AND discards partitioning (measured ~1–2 s per g-family gate query
-  * when paid every round), which forced an every-16th-call
-  * compromise. [[checkpointSevered]] does the minimal correct thing
-  * instead: run the stock (local/reliable) checkpoint, then rebuild
-  * the Dataset around a NEW `LogicalRDD` that shares the checkpoint's
-  * `RDD[InternalRow]` — zero re-encode — carries `originStats = None`
-  * (stats fall back to the bounded session default, exactly what
-  * `createDataFrame` produced), and repairs the layout by remapping
-  * the executed AQE final plan's `outputPartitioning`/`outputOrdering`
-  * onto the logical output attributes (best-effort: any attribute the
-  * remap cannot place falls back to what stock checkpoint stored).
+  * [[truncate]] runs the stock checkpoint, recovers the layout from the
+  * executed AQE plan, and rebuilds the Dataset around a new `LogicalRDD`
+  * sharing the checkpoint's `RDD[InternalRow]` (zero re-encode) with the
+  * statistics the caller asked for.
   *
   * Lives under `org.apache.spark.sql` because `Dataset.ofRows` and
-  * `LogicalRDD`'s second parameter list are `private[sql]` — the
-  * standard pattern for extensions that must construct logical plans
-  * directly. Pure Spark-internals plumbing; cites nothing external.
+  * `LogicalRDD`'s second parameter list are `private[sql]`.
   *
-  * **Spark-upgrade contract (round 16, from the r15 verdict):** every
-  * internals dependency here degrades to STOCK behavior, never to a
-  * wrong answer — a non-`LogicalRDD` checkpoint plan falls back to the
-  * round-14 Row round-trip, a non-AQE (or output-misaligned, or
-  * throwing) `finalPhysicalPlan` keeps whatever layout stock
-  * checkpoint stored, and any attribute the remap cannot place keeps
-  * stock's answer. GraftShimFallbackSpec exercises each of those
-  * paths; on a Spark version bump re-run it together with
-  * RoundFifteenOpsSpec's severed-stats/layout pins FIRST — if the
-  * repair stops firing, results stay correct and only the
-  * zero-Exchange plan pins fail, which is the designed failure mode.
+  * **Spark-upgrade contract:** every internals dependency degrades to
+  * stock behavior, never to a wrong answer. CheckpointStatsSpec
+  * exercises the layout fallbacks and pins the repaired layout; on a Spark
+  * version bump run it first — if the repair stops firing, results
+  * stay correct and only the zero-Exchange layout pins fail.
   */
 object CheckpointStats {
 
-  /** True when [[severStats]] will take the zero-copy path for `df`
-    * (its analyzed plan is exactly a [[LogicalRDD]] — e.g. the result
-    * of `checkpoint()`/`localCheckpoint()`).
-    */
-  def canSever(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+  /** The statistics a truncated frame carries. */
+  sealed trait Stats
 
-  /** Eagerly checkpoint `df` (reliable when `reliable`, else local)
-    * and return a frame with inherited stats severed and the executed
-    * plan's real layout attached. The drop-in replacement for
-    * `df.localCheckpoint(true)` in iterative loops.
+  /** No statistics: the planner falls back to the bounded session
+    * default. For iterative loops, where inherited stats square.
     */
-  def checkpointSevered(df: DataFrame, reliable: Boolean = false): DataFrame = {
+  case object Severed extends Stats
+
+  /** The checkpoint's actual stored size. For one-shot memo pins, where
+    * the origin estimate can be orders of magnitude off (the near-dup
+    * edge memo: ~2 MB stored, 5.9 GB estimated) and would steer
+    * auto-broadcasts and size-derived partition counts.
+    */
+  case object Actual extends Stats
+
+  /** Eagerly checkpoint `df` — reliable `checkpoint()` when `reliable`,
+    * else executor-local — and return it with the recovered layout and
+    * the requested statistics.
+    *
+    * Fallbacks: a checkpoint plan that is not a `LogicalRDD` takes a
+    * Row round-trip (severed) or keeps stock's inherited estimate
+    * (actual), as does an empty storage report (actual). The system
+    * property `graft.statsReset=stock` turns severed truncation into a
+    * plain stock checkpoint; it exists only as StatsInvarianceSpec's
+    * reference.
+    */
+  def truncate(df: DataFrame, reliable: Boolean, stats: Stats): DataFrame = {
     val cp =
       if (reliable) df.checkpoint(eager = true)
       else df.localCheckpoint(eager = true)
+    if (stats == Severed && sys.props.get("graft.statsReset").contains("stock"))
+      return cp
     cp.queryExecution.analyzed match {
       case l: LogicalRDD =>
         val session = cp.sparkSession.asInstanceOf[ClassicSession]
-        val (part, ord) = recoverLayout(df, l)
-        Dataset.ofRows(session,
-          LogicalRDD(l.output, l.rdd, part, ord, l.isStreaming, l.stream)(
-            session, None, None))
-      case _ => // not checkpoint-shaped (never expected): round-14 path
-        cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+        def rebuild(carried: Option[Statistics]): DataFrame = {
+          val (part, ord) = recoverLayout(df, l)
+          Dataset.ofRows(session,
+            LogicalRDD(l.output, l.rdd, part, ord, l.isStreaming, l.stream)(
+              session, carried, None))
+        }
+        stats match {
+          case Severed => rebuild(None)
+          case Actual =>
+            val size = session.sparkContext.getRDDStorageInfo
+              .filter(_.id == l.rdd.id)
+              .map(i => BigInt(i.memSize) + BigInt(i.diskSize)).sum
+            if (size > 0) rebuild(Some(Statistics(sizeInBytes = size))) else cp
+        }
+      case _ if stats == Actual => cp
+      case _ => cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
     }
   }
 
-  /** Eagerly local-checkpoint `df` and attach the checkpoint's ACTUAL
-    * stored byte size as its statistics (round 17). Stock checkpoint
-    * copies the origin plan's sizeInBytes ESTIMATE, which for the
-    * join-heavy one-shot memo pins is off by three orders of magnitude
-    * (the near-dup edge memo: ~2 MB stored, 5.9 GB estimated) — and
-    * that poisons every size-derived decision downstream, from
-    * auto-broadcasts to the family's scale-adaptive partition counts.
-    * The materialized blocks are already registered with the block
-    * manager, so the true size is one driver-side storage-status read.
-    * Layout is recovered like [[checkpointSevered]]. Degradation
-    * contract: a non-`LogicalRDD` plan or an empty storage report keeps
-    * stock behavior (inherited estimate), never a wrong answer — the
-    * stats only steer layout and join strategy.
-    */
-  def checkpointActualStats(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(eager = true)
-    cp.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val session = cp.sparkSession.asInstanceOf[ClassicSession]
-        val (part, ord) = recoverLayout(df, l)
-        val actual = session.sparkContext.getRDDStorageInfo
-          .filter(_.id == l.rdd.id)
-          .map(i => BigInt(i.memSize) + BigInt(i.diskSize)).sum
-        val stats =
-          if (actual > 0)
-            Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
-              sizeInBytes = actual))
-          else None // no storage entry: keep stock's inherited estimate
-        if (stats.isEmpty) cp // keep stock's inherited estimate
-        else Dataset.ofRows(session,
-          LogicalRDD(l.output, l.rdd, part, ord, l.isStreaming, l.stream)(
-            session, stats, None))
-      case _ => cp
-    }
-  }
-
-  /** Rebuild an already-checkpointed `df` with inherited plan
-    * statistics severed, keeping whatever layout its `LogicalRDD`
-    * carries. Zero-copy for checkpoint-shaped plans; anything else
-    * falls back to the round-14 Row round-trip.
-    */
-  def severStats(df: DataFrame): DataFrame =
-    df.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val session = df.sparkSession.asInstanceOf[ClassicSession]
-        Dataset.ofRows(session,
-          LogicalRDD(l.output, l.rdd, l.outputPartitioning,
-            l.outputOrdering, l.isStreaming, l.stream)(
-            session, None, None))
-      case _ =>
-        df.sparkSession.createDataFrame(df.rdd, df.schema)
-    }
-
-  /** The layout stock checkpoint SHOULD have stored: if it recorded
+  /** The layout stock checkpoint should have stored: if it recorded
     * `UnknownPartitioning` and the origin ran under AQE, read the
     * final physical plan (already executed — the checkpoint was
     * eager) and remap its partitioning/ordering expressions from

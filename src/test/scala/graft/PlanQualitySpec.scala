@@ -519,7 +519,31 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("d22 LSH sweep joins only on band keys: no cartesian at any " +
     "config") {
-    val p = plan("d22_lsh_tuning")
+    // lshTuning runs the sweep eagerly and returns its rows as a local
+    // frame, so check the plan its own collect executed
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = executed.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("d22_lsh_tuning")(spark, sf)
+      // the execution-listener bus is asynchronous: drain until the
+      // capture count is stable
+      var (last, stable, waited) = (-1, 0, 0)
+      while (stable < 3 && waited < 100) {
+        Thread.sleep(100); waited += 1
+        val cur = executed.size()
+        if (cur > 0 && cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val p = String.join("\n", executed)
+    assert(p.contains("Join"), s"no band join captured:\n$p")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }

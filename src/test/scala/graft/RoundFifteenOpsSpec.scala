@@ -72,61 +72,4 @@ class RoundFifteenOpsSpec extends AnyFunSuite {
     assert(BigInt(r.getLong(6)) === staged,
       "z2_fx matches the BigInt staged reduction")
   }
-
-  test("checkpointSevered resets inherited sizeInBytes to the session " +
-    "default and repairs the layout AQE erased") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.graftshim.CheckpointStats
-    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
-      "this spec exercises the AQE-erasure path")
-    val df = spark.range(1000)
-      .select(col("id").as("src"), (col("id") % 7).as("lbl"))
-      .repartition(8, col("src"))
-    // stock checkpoint under AQE: stats inherited, layout ERASED —
-    // the two defects the shim exists for
-    val stock = df.localCheckpoint(true)
-    assert(CheckpointStats.canSever(stock), "checkpoint plan is a LogicalRDD")
-    val stockL = stock.queryExecution.analyzed
-      .collectFirst { case l: LogicalRDD => l }.get
-    assert(!stockL.outputPartitioning.isInstanceOf[HashPartitioning],
-      s"expected stock checkpoint to erase layout under AQE, " +
-        s"got ${stockL.outputPartitioning}")
-    val severed = CheckpointStats.checkpointSevered(df, reliable = false)
-    val defaultSize = BigInt(spark.sessionState.conf.defaultSizeInBytes)
-    assert(severed.queryExecution.optimizedPlan.stats.sizeInBytes
-      === defaultSize, "severed stats must be the session default")
-    // layout repaired from the executed AQE final plan:
-    // HashPartitioning(src, 8) survives onto the logical node …
-    val lrdd = severed.queryExecution.analyzed
-      .collectFirst { case l: LogicalRDD => l }.get
-    assert(lrdd.outputPartitioning.isInstanceOf[HashPartitioning],
-      s"severed partitioning was ${lrdd.outputPartitioning}")
-    assert(lrdd.outputPartitioning
-      .asInstanceOf[HashPartitioning].numPartitions === 8)
-    // … and a same-key aggregate plans with NO new Exchange (the
-    // whole point: both the round-14 Row round-trip AND stock
-    // AQE checkpoint pay one node-sized shuffle here)
-    val agg = severed.groupBy(col("src")).count()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"same-key aggregate over the severed frame re-shuffled:\n$plan")
-    // zero-copy: values identical without re-encoding
-    assert(severed.count() === 1000L)
-    assert(severed.agg(sum(col("lbl"))).head().getLong(0) ===
-      stock.agg(sum(col("lbl"))).head().getLong(0))
-  }
-
-  test("the graph loops stay correct on the severStats path") {
-    // d08-shaped check: two components plus an isolate, through the
-    // default (shim) truncation path
-    val s = spark
-    import s.implicits._
-    val nodes = (1L to 7L).toDF("id")
-    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L)).toDF("src", "dst")
-    val cc = graft.llm.GraphAlgs.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
-      4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L))
-  }
 }

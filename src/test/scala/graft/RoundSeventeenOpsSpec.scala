@@ -2,6 +2,7 @@ package graft
 
 import graft.llm.GraphAlgs
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-17 optimization internals:
@@ -10,9 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *    from the plan's sizeInBytes statistic, clamped to [1, conf] — a
   *    tiny relation collapses to one partition, an unknown/huge one
   *    keeps the configured parallelism (so nothing changes at scale).
-  *  - `CheckpointStats.checkpointActualStats`: the one-shot memo pin
-  *    carries the checkpoint's ACTUAL stored size, not the origin
-  *    plan's estimate, with values and row counts untouched.
   *  - `GraphAlgs.modularity`: m2 now derives from the degree table
   *    (Σ deg) instead of a third edge scan — results must stay
   *    bit-identical, including the empty-edge case whose m2 must stay
@@ -25,8 +23,8 @@ class RoundSeventeenOpsSpec extends AnyFunSuite {
   test("adaptiveP collapses a tiny relation to one partition and keeps " +
     "the configured parallelism when the statistic is huge") {
     val tiny = spark.range(100).toDF("id").localCheckpoint(true)
-    val tinyStats = org.apache.spark.sql.graftshim.CheckpointStats
-      .checkpointActualStats(spark.range(100).toDF("id"))
+    val tinyStats = CheckpointStats.truncate(spark.range(100).toDF("id"),
+      reliable = false, CheckpointStats.Actual)
     assert(GraphAlgs.adaptiveP(tinyStats, 32) === 1)
     // a parquet-less huge estimate: cross joins inflate sizeInBytes
     val big = tiny.crossJoin(tiny).crossJoin(tiny).crossJoin(tiny)
@@ -34,30 +32,6 @@ class RoundSeventeenOpsSpec extends AnyFunSuite {
     assert(GraphAlgs.adaptiveP(big, 32) === 32)
     // clamp floor: even a zero/unknown size never returns < 1
     assert(GraphAlgs.adaptiveP(tinyStats, 1) === 1)
-  }
-
-  test("checkpointActualStats: values identical, statistic is the " +
-    "stored size (not the origin estimate), layout recovered") {
-    val origin = spark.range(1000).toDF("id")
-      .withColumn("v", col("id") * 3)
-      .repartition(4, col("id"))
-    val pinned = org.apache.spark.sql.graftshim.CheckpointStats
-      .checkpointActualStats(origin)
-    // values and count untouched
-    assert(pinned.count() === 1000)
-    assert(pinned.agg(sum(col("v"))).first().getLong(0) ===
-      (0L until 1000L).map(_ * 3).sum)
-    // the statistic is the actual stored size: positive and far below
-    // any estimate-poisoned figure (1000 rows of two longs store in
-    // well under 1 MB)
-    val sz = pinned.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(sz > 0 && sz < BigInt(1024 * 1024), s"sizeInBytes=$sz")
-    // layout recovery: the explicit hash(id)%4 layout survives the pin
-    // (stock checkpoint under AQE stores UnknownPartitioning)
-    val part = pinned.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      .outputPartitioning
-    assert(part.toString.contains("hashpartitioning"), part.toString)
   }
 
   test("modularity: m2 from Σ deg matches the direct edge count, " +

@@ -32,7 +32,7 @@ class StatsInvarianceSpec extends AnyFunSuite {
     ("BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|" +
       "BroadcastNestedLoopJoin|CartesianProduct").r
 
-  /** The gate queries whose bodies iterate through Rounds.truncate. */
+  /** The gate queries whose loops truncate through CheckpointStats. */
   private val LoopQueries = Seq(
     "d08_conn_components", "g01_pagerank", "g02_label_propagation",
     "g05_bfs_layers", "g08_modularity", "g09_kcore_peel",
