@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for the named queries (or
   * all). Usage: `sbt "runMain graft.Explain <sfDir> [name ...]"`.
   */
@@ -9,12 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config(Catalog.sessionConfs)
-      .getOrCreate()
+    val spark = Catalog.localSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.registry
       .filter(q => names.isEmpty || names.contains(q.name))

@@ -1,6 +1,7 @@
 package graft.core.codec
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream}
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException,
+  FilterOutputStream, InputStream, OutputStream}
 
 /** Minimal DataInput/DataOutput-style views used by every codec and the
   * snapshot stream format. Big-endian, mirroring the reference's Java
@@ -39,21 +40,8 @@ class ByteReader(in: InputStream) {
   def readDouble(): Double = d.readDouble()
   def readFully(n: Int): Array[Byte] = { val b = new Array[Byte](n); d.readFully(b); b }
 
-  /** Skips exactly `n` bytes; EOFException on truncated input (a bare
-    * `skip` loop would spin forever once `InputStream.skip` returns 0).
-    */
-  def skip(n: Long): Unit = {
-    var left = n
-    while (left > 0) {
-      val s = d.skip(left)
-      if (s > 0) left -= s
-      else {
-        if (d.read() == -1)
-          throw new EOFException(s"truncated stream: $left bytes short of skip($n)")
-        left -= 1
-      }
-    }
-  }
+  /** Skips exactly `n` bytes; EOFException on truncated input. */
+  def skip(n: Long): Unit = Streams.skipFully(d, n, "stream")
 
   /** Unsigned LEB128-style var-int. */
   def readVarInt(): Int = {
@@ -86,6 +74,46 @@ class ByteReader(in: InputStream) {
   /** -1 at clean EOF, otherwise 0-255. */
   def tryReadUnsignedByte(): Int =
     try d.readUnsignedByte() catch { case _: EOFException => -1 }
+}
+
+/** Stream plumbing shared by the snapshot stream formats. */
+private[core] object Streams {
+
+  /** Skips exactly `n` bytes of `in`; EOFException naming `what` on
+    * truncated input (a bare `skip` loop would spin forever once
+    * `InputStream.skip` returns 0).
+    */
+  def skipFully(in: InputStream, n: Long, what: String): Unit = {
+    var left = n
+    while (left > 0) {
+      val s = in.skip(left)
+      if (s > 0) left -= s
+      else {
+        if (in.read() == -1)
+          throw new EOFException(s"truncated $what: $left bytes short of skip($n)")
+        left -= 1
+      }
+    }
+  }
+}
+
+/** Shields a file stream from the close of a per-key-group
+  * (compression) stream wrapped around it.
+  */
+private[core] final class NonClosing(out: OutputStream) extends FilterOutputStream(out) {
+  override def close(): Unit = flush()
+  // FilterOutputStream.write(b[],off,len) writes byte-at-a-time; delegate
+  override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+}
+
+/** Counts the bytes written through it: the encoders' segment offsets. */
+private[core] final class CountingOutputStream(out: OutputStream)
+    extends FilterOutputStream(out) {
+  var count = 0L
+  override def write(b: Int): Unit = { out.write(b); count += 1 }
+  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+    out.write(b, off, len); count += len
+  }
 }
 
 final class ByteWriter(val out: ByteArrayOutputStream = new ByteArrayOutputStream()) {

@@ -2,7 +2,7 @@ package graft.core.flink
 
 import graft.core.meta._
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 
 /** Real Flink `_metadata` reader/writer — the checkpoint-metadata
   * header (`Checkpoints.storeCheckpointMetadata`) plus the SavepointV2
@@ -240,7 +240,7 @@ object FlinkMetadataIO {
           keyedBySubtask.get(subtask) match {
             case None => d.writeByte(NullHandle)
             case Some(f) if f.kind == KeyedFileHandle.RocksDbKind =>
-              val dirPath = resolvePath(meta.basePath, f.relativePath)
+              val dirPath = KeyedFileHandle.resolve(meta.basePath, f.relativePath)
               val dfs = dirPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
               val files = dfs.listStatus(dirPath).filter(_.isFile)
                 .sortBy(_.getPath.getName)
@@ -288,19 +288,18 @@ object FlinkMetadataIO {
               d.writeInt(f.kgStart)
               d.writeInt(f.kgEnd - f.kgStart + 1)
               f.offsets.foreach(d.writeLong)
-              val rawP = new org.apache.hadoop.fs.Path(f.relativePath)
-              val pfs = resolvePath(meta.basePath, f.relativePath)
-                .getFileSystem(new org.apache.hadoop.conf.Configuration())
+              val resolved = KeyedFileHandle.resolve(meta.basePath, f.relativePath)
+              val pfs = resolved.getFileSystem(new org.apache.hadoop.conf.Configuration())
               // qualify so the emitted reference is absolute even when
               // the SOURCE savepoint was loaded from a relative path —
               // an unqualified path would re-resolve against the NEW
               // dir on read and dangle
-              val p = pfs.makeQualified(resolvePath(meta.basePath, f.relativePath))
+              val p = pfs.makeQualified(resolved)
               // fail fast on a missing/unreadable state file: a
               // savepoint referencing absent state must not be written
               val size = pfs.getFileStatus(p).getLen
-              if (version == MetadataV4Version && !rawP.isAbsolute &&
-                  rawP.toUri.getScheme == null &&
+              if (version == MetadataV4Version &&
+                  KeyedFileHandle.isRelative(f.relativePath) &&
                   // relocatability requires CO-LOCATION: only files that
                   // actually live in the output dir may be referenced
                   // relative to it (a carried-over handle whose file
@@ -445,7 +444,7 @@ object FlinkMetadataIO {
       val resolved = ops.map { case (op, incProxyBytes) =>
         op.keyedFiles.find(_.kind == KeyedFileHandle.FlinkStreamKind) match {
           case Some(f) =>
-            val p = resolvePath(basePath, f.relativePath)
+            val p = KeyedFileHandle.resolve(basePath, f.relativePath)
             val sin = p.getFileSystem(conf).open(p)
             try {
               val proxy = FlinkProxyIO.read(new BufferedInputStream(sin))
@@ -511,7 +510,7 @@ object FlinkMetadataIO {
         readStreamHandle(d) match { // meta state: the serialization proxy
           case ByteHandle(_, bytes) => proxyOut += bytes
           case FileHandle(path, _) =>
-            val p = resolvePath(basePath, path)
+            val p = KeyedFileHandle.resolve(basePath, path)
             val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
             val in = fs.open(p)
             try proxyOut += in.readAllBytes() finally in.close()
@@ -549,7 +548,7 @@ object FlinkMetadataIO {
             java.nio.file.Files.write(stub.resolve(name), bytes)
           case (name, FileHandle(path, _)) =>
             manifest.append(name).append('\t')
-              .append(resolvePath(basePath, path).toString).append('\n')
+              .append(KeyedFileHandle.resolve(basePath, path).toString).append('\n')
           case (_, NullStream) =>
         }
         java.nio.file.Files.write(
@@ -609,7 +608,7 @@ object FlinkMetadataIO {
       case ByteHandle(_, bytes) =>
         Some(FlinkOperatorStateIO.read(bytes, offsets))
       case FileHandle(path, _) =>
-        val p = resolvePath(basePath, path)
+        val p = KeyedFileHandle.resolve(basePath, path)
         val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
         val in = fs.open(p)
         val bytes = try in.readAllBytes() finally in.close()
@@ -697,24 +696,6 @@ object FlinkMetadataIO {
   }
 
   // ---------------------------------------------------------- helpers
-
-  private def resolvePath(basePath: String, p: String): org.apache.hadoop.fs.Path = {
-    val raw = new org.apache.hadoop.fs.Path(p)
-    if (raw.isAbsolute || raw.toUri.getScheme != null) raw
-    else new org.apache.hadoop.fs.Path(basePath, p)
-  }
-
-  private def skipFully(d: DataInputStream, n: Long): Unit = {
-    var left = n
-    while (left > 0) {
-      val s = d.skip(left)
-      if (s > 0) left -= s
-      else {
-        if (d.read() == -1) throw new EOFException(s"truncated metadata: $left short")
-        left -= 1
-      }
-    }
-  }
 
   private def hexToBytes(hex: String): Array[Byte] = {
     require(hex.length == 32, s"operator id must be 32 hex chars, got '$hex'")

@@ -1,6 +1,7 @@
 package graft.core.flink
 
 import graft.core.codec.{ByteReader, CodecRegistry}
+import graft.core.meta.KeyedFileHandle
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, InputStream}
 
@@ -147,13 +148,8 @@ object FlinkTimerIO {
             Some(RawKeyedHandle(kgStart, offsets, Some(bytes), None))
           case FlinkMetadataIO.FileStreamHandle =>
             d.readLong() // size
-            val p = d.readUTF()
-            val abs = {
-              val raw = new org.apache.hadoop.fs.Path(p)
-              if (raw.isAbsolute || raw.toUri.getScheme != null) raw
-              else new org.apache.hadoop.fs.Path(basePath, p)
-            }
-            Some(RawKeyedHandle(kgStart, offsets, None, Some(abs.toString)))
+            val p = KeyedFileHandle.resolve(basePath, d.readUTF())
+            Some(RawKeyedHandle(kgStart, offsets, None, Some(p.toString)))
           case FlinkMetadataIO.RelativeStreamHandle =>
             val p = d.readUTF()
             d.readLong()

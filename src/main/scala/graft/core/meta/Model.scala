@@ -61,6 +61,21 @@ object KeyedFileHandle {
     * holds the reason. Scanning raises it as the error.
     */
   val UnsupportedKind: Byte = 3
+
+  /** True when a handle path is relative to its savepoint directory:
+    * neither rooted nor scheme-qualified (`hdfs://…`, `file:…`).
+    */
+  def isRelative(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    !p.isAbsolute && p.toUri.getScheme == null
+  }
+
+  /** The one handle-path rule: a relative path resolves against the
+    * savepoint directory `basePath`, any other path stands as written.
+    */
+  def resolve(basePath: String, path: String): org.apache.hadoop.fs.Path =
+    if (isRelative(path)) new org.apache.hadoop.fs.Path(basePath, path)
+    else new org.apache.hadoop.fs.Path(path)
 }
 
 /** Savepoint wire dialect: graft's own compact layout vs the
@@ -168,6 +183,15 @@ final case class SavepointMeta(
         o.operatorId == hashed).getOrElse(
       throw new NoSuchElementException(s"no operator with uid '$uid' in savepoint"))
   }
+
+  /** `f` with a relative path resolved against this savepoint's
+    * directory, so a `_metadata` written elsewhere still reaches the
+    * file; absolute handles come back unchanged.
+    */
+  def absolutized(f: KeyedFileHandle): KeyedFileHandle =
+    if (KeyedFileHandle.isRelative(f.relativePath))
+      f.copy(relativePath = KeyedFileHandle.resolve(basePath, f.relativePath).toString)
+    else f
 
   /** Metadata-level replace of operator states (reference
     * StateMetadataUtils.createNewSavepoint, :103-125).

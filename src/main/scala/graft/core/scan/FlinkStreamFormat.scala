@@ -1,6 +1,8 @@
 package graft.core.scan
 
-import java.io.{DataInputStream, DataOutputStream, FilterOutputStream, InputStream, OutputStream}
+import graft.core.codec.{CountingOutputStream, NonClosing, Streams}
+
+import java.io.{DataInputStream, DataOutputStream, IOException, InputStream, OutputStream}
 
 /** The REAL Flink full-savepoint keyed-state stream layout — byte-for-
   * byte the format the reference reads and writes, unlike
@@ -50,20 +52,6 @@ object FlinkStreamFormat {
   private def decorateIn(in: InputStream, compression: Boolean): InputStream =
     if (compression) new org.xerial.snappy.SnappyFramedInputStream(in, false)
     else in
-
-  /** Shields the file stream from per-group compression-stream closes. */
-  private final class NonClosing(out: OutputStream) extends FilterOutputStream(out) {
-    override def close(): Unit = flush()
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
-  }
-
-  private final class CountingOutputStream(out: OutputStream) extends FilterOutputStream(out) {
-    var count = 0L
-    override def write(b: Int): Unit = { out.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      out.write(b, off, len); count += len
-    }
-  }
 
   /** Encode one subtask's records (pre-sorted by (keyGroup, stateId))
     * exactly like RocksDBSavepointWriter.java:130-175: one-record
@@ -145,44 +133,34 @@ object FlinkStreamFormat {
       private var nextRec: StateStreamFormat.Record = _
       private var done = false
 
-      private def skipFully(n: Long): Unit = {
-        var left = n
-        while (left > 0) {
-          val s = d.skip(left)
-          if (s > 0) left -= s
-          else {
-            if (d.read() == -1)
-              throw new java.io.EOFException(s"truncated segment: $left short")
-            left -= 1
-          }
-        }
+      /** A record length; the key holds at least its flag byte. */
+      private def length(field: String, min: Int): Int = {
+        val n = d.readInt()
+        if (n < min) throw new IOException(s"flink segment: impossible $field $n")
+        n
       }
+
+      private def skip(n: Long): Unit = Streams.skipFully(d, n, "segment")
 
       private def advance(): Unit = {
         while (nextRec == null && !done) {
           if (stateId == EndOfKeyGroup) { done = true }
-          else if (keep(stateId)) {
-            val keyLen = d.readInt()
+          else {
+            val kept = keep(stateId)
+            val keyLen = length("keyLen", 1)
             val key0 = d.readByte()
-            val flag = (key0 & MetaFlag) != 0
             val key: Array[Byte] =
-              if (needKey) {
+              if (kept && needKey) {
                 val k = new Array[Byte](keyLen)
                 k(0) = (key0 & ~MetaFlag).toByte
                 d.readFully(k, 1, keyLen - 1)
                 k
-              } else { skipFully(keyLen - 1L); null }
-            val valueLen = d.readInt()
+              } else { skip(keyLen - 1L); null }
+            val valueLen = length("valueLen", 0)
             val value: Array[Byte] =
-              if (needValue) { val v = new Array[Byte](valueLen); d.readFully(v); v }
-              else { skipFully(valueLen.toLong); null }
-            nextRec = StateStreamFormat.Record(stateId, key, value)
-            if (flag) stateId = d.readShort() & 0xffff
-          } else {
-            val keyLen = d.readInt()
-            val key0 = d.readByte()
-            skipFully(keyLen - 1L)
-            skipFully(d.readInt().toLong)
+              if (kept && needValue) { val v = new Array[Byte](valueLen); d.readFully(v); v }
+              else { skip(valueLen.toLong); null }
+            if (kept) nextRec = StateStreamFormat.Record(stateId, key, value)
             if ((key0 & MetaFlag) != 0) stateId = d.readShort() & 0xffff
           }
         }

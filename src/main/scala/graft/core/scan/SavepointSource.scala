@@ -5,6 +5,7 @@ import graft.core.meta.{KeyedFileHandle, MetadataIO, OperatorStateMeta}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNotNull}
@@ -20,10 +21,14 @@ import scala.jdk.CollectionConverters._
   * yields the raw `KeyedStateRow` relation
   * `(stateName string, keyAndNamespaceBytes binary, valueBytes binary)`.
   *
-  * - One `InputPartition` per subtask state file by default; set
-  *   `splitPerKeyGroup=true` for per-key-group partitions (the
-  *   finer-grained split the reference names as future work at
-  *   README.md:71 — free here because offsets are per key-group).
+  * - Splits come from bytes: each subtask state file is cut into runs
+  *   of consecutive key groups of at most
+  *   `spark.sql.files.maxPartitionBytes` (128 MB by default), one
+  *   `InputPartition` per run. A file under the target is one partition;
+  *   a larger file splits at key-group boundaries, which the per-group
+  *   offsets in `_metadata` make free (the finer split the reference
+  *   names as future work at README.md:71). One RocksDB checkpoint
+  *   directory is always one partition.
   * - `SupportsPushDownFilters` on `stateName` (`=`, `IN`): filtered
   *   states are length-skipped during decode without materializing
   *   key/value bytes, mirroring the reference's scan-time state skip
@@ -109,9 +114,8 @@ final class SavepointScanBuilder(
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new SavepointScan(
-    basePath, op, nameFilter,
-    options.getBoolean("splitPerKeyGroup", false), requiredSchema)
+  override def build(): Scan =
+    new SavepointScan(basePath, op, nameFilter, requiredSchema)
 }
 
 final case class StateSegmentPartition(
@@ -133,7 +137,6 @@ final class SavepointScan(
     basePath: String,
     op: OperatorStateMeta,
     nameFilter: Option[Set[String]],
-    splitPerKeyGroup: Boolean,
     requiredSchema: StructType)
     extends Scan with Batch {
 
@@ -153,8 +156,9 @@ final class SavepointScan(
     if (nameFilter.isDefined && keepIds.isEmpty) return Array.empty
 
     val conf = new org.apache.hadoop.conf.Configuration()
+    val target = SQLConf.get.filesMaxPartitionBytes
     op.keyedFiles.flatMap { f =>
-      val p = resolved(f)
+      val p = KeyedFileHandle.resolve(basePath, f.relativePath)
       if (f.kind == KeyedFileHandle.RocksDbKind) {
         // S4: one partition per subtask checkpoint dir; pushdown = the
         // set of column families to open
@@ -164,7 +168,7 @@ final class SavepointScan(
         throw new UnsupportedOperationException(
           s"subtask ${f.subtaskIndex} of operator ${op.uid} is not " +
             s"scannable: ${f.relativePath}")
-      } else streamPartitions(f, p, conf, stateNames, keepIds)
+      } else streamPartitions(f, p, conf, target, stateNames, keepIds)
     }.toArray
   }
 
@@ -172,32 +176,65 @@ final class SavepointScan(
       f: KeyedFileHandle,
       p: org.apache.hadoop.fs.Path,
       conf: org.apache.hadoop.conf.Configuration,
+      target: Long,
       stateNames: Array[String],
       keepIds: Array[Int]): Seq[InputPartition] = {
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val nGroups = f.kgEnd - f.kgStart + 1
-    val fields = requiredSchema.fieldNames
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    val offsets = f.offsets.toArray
     val flink = f.kind == KeyedFileHandle.FlinkStreamKind
-    if (splitPerKeyGroup) {
-      (0 until nGroups).map { g =>
-        StateSegmentPartition(p.toString, len, f.offsets.toArray, f.kgStart,
-          f.kgEnd, g, g, op.compression, stateNames, keepIds, fields, flink)
+    SavepointScan.runs(SavepointScan.segmentSizes(offsets, len, flink), target)
+      .map { case (from, to) =>
+        StateSegmentPartition(p.toString, len, offsets, f.kgStart, f.kgEnd,
+          from, to, op.compression, stateNames, keepIds,
+          requiredSchema.fieldNames, flink)
       }
-    } else {
-      Seq(StateSegmentPartition(p.toString, len, f.offsets.toArray, f.kgStart,
-        f.kgEnd, 0, nGroups - 1, op.compression, stateNames, keepIds, fields,
-        flink))
-    }
-  }
-
-  private def resolved(f: KeyedFileHandle): org.apache.hadoop.fs.Path = {
-    val raw = new org.apache.hadoop.fs.Path(f.relativePath)
-    if (raw.isAbsolute) raw else new org.apache.hadoop.fs.Path(basePath, f.relativePath)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SavepointReaderFactory()
+}
+
+object SavepointScan {
+
+  /** Bytes of each key group's segment in a subtask file of `fileLen`
+    * bytes. Graft layout: next offset − offset. Flink layout: offset 0
+    * marks an empty group (size 0), so a segment ends at the next
+    * non-zero offset. The last segment ends at the file end.
+    */
+  def segmentSizes(offsets: Array[Long], fileLen: Long,
+      flinkLayout: Boolean): Array[Long] = {
+    val sizes = new Array[Long](offsets.length)
+    var end = fileLen
+    for (g <- offsets.indices.reverse)
+      if (!(flinkLayout && offsets(g) == 0L)) {
+        sizes(g) = end - offsets(g)
+        end = offsets(g)
+      }
+    sizes
+  }
+
+  /** Cuts the groups of `sizes` into runs of consecutive groups: a group
+    * closes the run before it when both hold bytes and together they
+    * would exceed `target`. A group larger than the target is the only
+    * non-empty group of its run and is never cut (a key group is the
+    * unit a reader seeks to).
+    * Returns inclusive `(from, to)` pairs tiling `sizes.indices` in order.
+    */
+  def runs(sizes: Array[Long], target: Long): Seq[(Int, Int)] = {
+    val out = Seq.newBuilder[(Int, Int)]
+    var from = 0
+    var bytes = 0L
+    for (g <- sizes.indices) {
+      if (sizes(g) > 0 && bytes > 0 && bytes + sizes(g) > target) {
+        out += ((from, g - 1))
+        from = g
+        bytes = 0L
+      }
+      bytes += sizes(g)
+    }
+    if (sizes.nonEmpty) out += ((from, sizes.length - 1))
+    out.result()
+  }
 }
 
 /** One subtask's incremental-checkpoint directory (S4). */
@@ -263,26 +300,17 @@ final class StateSegmentReader(p: StateSegmentPartition)
   private var group = p.groupFrom
   private var it: Iterator[StateStreamFormat.Record] = Iterator.empty
   private var current: StateStreamFormat.Record = _
-
-  /** Flink layout: offset 0 marks an empty key-group (the proxy bytes
-    * occupy position 0, reference ValidOffsetsIterator.java:31-34), so
-    * the end of a segment is the next NON-ZERO offset (or file end).
-    * Graft layout: every group has a real (possibly empty) segment.
-    */
-  private def segmentEnd(g: Int): Long = {
-    var i = g + 1
-    while (i < p.offsets.length && p.flinkLayout && p.offsets(i) == 0L) i += 1
-    if (i < p.offsets.length) p.offsets(i) else p.fileLen
-  }
+  private val sizes = SavepointScan.segmentSizes(p.offsets, p.fileLen, p.flinkLayout)
 
   private def nextGroupIterator(): Boolean = {
+    // Flink layout: offset 0 marks an empty key-group (the proxy bytes
+    // occupy position 0, reference ValidOffsetsIterator.java:31-34).
+    // Graft layout: every group has a real (possibly empty) segment.
     while (group <= p.groupTo && p.flinkLayout && p.offsets(group) == 0L)
-      group += 1 // empty key-group in the Flink layout
+      group += 1
     if (group > p.groupTo) return false
-    val off = p.offsets(group)
-    val end = segmentEnd(group)
-    in.seek(off)
-    val bounded = new BoundedInputStream(in, end - off)
+    in.seek(p.offsets(group))
+    val bounded = new BoundedInputStream(in, sizes(group))
     it =
       if (p.flinkLayout)
         FlinkStreamFormat.decodeGroup(bounded, p.compression, keep,

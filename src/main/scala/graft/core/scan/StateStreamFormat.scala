@@ -1,8 +1,8 @@
 package graft.core.scan
 
-import graft.core.codec.{ByteReader, ByteWriter}
+import graft.core.codec.{ByteReader, CountingOutputStream, NonClosing}
 
-import java.io.{BufferedOutputStream, FilterOutputStream, InputStream, OutputStream}
+import java.io.{IOException, InputStream, OutputStream}
 
 /** The keyed-state file format: one contiguous stream segment per
   * key-group, each segment optionally snappy-framed, holding
@@ -29,21 +29,6 @@ object StateStreamFormat {
     var v = v0
     while ((v & ~0x7f) != 0) { d.writeByte((v & 0x7f) | 0x80); v >>>= 7 }
     d.writeByte(v)
-  }
-
-  /** Prevents per-group snappy streams from closing the file stream. */
-  private final class NonClosing(out: OutputStream) extends FilterOutputStream(out) {
-    override def close(): Unit = flush()
-    // FilterOutputStream.write(b[],off,len) writes byte-at-a-time; delegate
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
-  }
-
-  private final class CountingOutputStream(out: OutputStream) extends FilterOutputStream(out) {
-    var count = 0L
-    override def write(b: Int): Unit = { out.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      out.write(b, off, len); count += len
-    }
   }
 
   /** Encode one subtask's records (pre-sorted by (keyGroup, stateId))
@@ -106,8 +91,10 @@ object StateStreamFormat {
     new Iterator[Record] {
       private var nextRec: Record = _
       private var done = false
-      private def part(need: Boolean): Array[Byte] = {
-        val len = r.readVarInt()
+      /** One length-prefixed part: read when `need`, else skipped. */
+      private def part(field: String, need: Boolean): Array[Byte] = {
+        val len = r.readVarInt() // a corrupt varint can overflow negative
+        if (len < 0) throw new IOException(s"graft segment: impossible $field $len")
         if (need) r.readFully(len)
         else { r.skip(len.toLong); null }
       }
@@ -115,11 +102,11 @@ object StateStreamFormat {
         while (nextRec == null && !done) {
           val sid = ((r.readByte() & 0xff) << 8) | (r.readByte() & 0xff)
           if (sid == EndOfKeyGroup) { done = true }
-          else if (keep(sid)) {
-            nextRec = Record(sid, part(needKey), part(needValue))
-          } else {
-            r.skip(r.readVarInt().toLong) // key
-            r.skip(r.readVarInt().toLong) // value
+          else {
+            val kept = keep(sid)
+            val key = part("keyLen", kept && needKey)
+            val value = part("valueLen", kept && needValue)
+            if (kept) nextRec = Record(sid, key, value)
           }
         }
       }

@@ -185,7 +185,7 @@ final class OperatorStateWriter(
             (maxPar == base.maxParallelism && par == base.parallelism)),
           "state list / parallelism changed but no rows were supplied: " +
             "add the rewritten rows (e.g. reader.getAllUnreadKeyedStateRows)")
-        base.keyedFiles.map(absolutize)
+        base.keyedFiles.map(savepoint.absolutized)
       case Some(rows0) =>
         require(finalStates.nonEmpty, "rows added but no state metadata defined")
         // W9: rows are encoded in the base key-group space; re-shard by
@@ -283,26 +283,7 @@ final class OperatorStateWriter(
       base.rawOperatorState, base.rawKeyedState, base.coordinatorState,
       fullyFinished = base.fullyFinished && rowsAcc.isEmpty,
       finishedSubtasks = if (rowsAcc.isEmpty) base.finishedSubtasks else Set.empty)
-    val others = savepoint.operators
-      .filterNot(_.operatorId == opId)
-      .map(o => o.copy(keyedFiles = o.keyedFiles.map(absolutize)))
-    // master states ride along untouched (reference: every rewritten
-    // savepoint keeps oldSavepoint.getMasterStates(),
-    // StateMetadataUtils.java:124)
-    val newMeta = SavepointMeta(savepoint.checkpointId + 1, outAbs,
-      others :+ newOp, outDialect, savepoint.masterStates)
-    if (outDialect == Dialect.Flink)
-      graft.core.flink.FlinkMetadataIO.write(outAbs, newMeta)
-    else
-      MetadataIO.write(outAbs, newMeta)
-    newMeta
-  }
-
-  private def absolutize(f: KeyedFileHandle): KeyedFileHandle = {
-    val p = new org.apache.hadoop.fs.Path(f.relativePath)
-    if (p.isAbsolute) f
-    else f.copy(relativePath =
-      new org.apache.hadoop.fs.Path(savepoint.basePath, f.relativePath).toString)
+    Savepoints.commit(savepoint, newOp, outAbs, outDialect)
   }
 }
 
@@ -462,6 +443,25 @@ object Savepoints {
 
   def writer(spark: SparkSession, sp: SavepointMeta, uid: String): OperatorStateWriter =
     new OperatorStateWriter(spark, sp, uid)
+
+  /** Commits a rewrite of one operator of `sp` as a new savepoint in
+    * `outDir`: the next checkpoint id, the other operators first with
+    * their handles absolutized (their files stay in `sp`'s directory),
+    * `newOp` last, and `sp`'s master states carried verbatim (reference:
+    * every rewritten savepoint keeps oldSavepoint.getMasterStates(),
+    * StateMetadataUtils.java:124). Writes `_metadata` in `dialect`.
+    */
+  def commit(sp: SavepointMeta, newOp: OperatorStateMeta, outDir: String,
+      dialect: Byte): SavepointMeta = {
+    val outAbs = new org.apache.hadoop.fs.Path(outDir).toString
+    val others = sp.operators.filterNot(_.operatorId == newOp.operatorId)
+      .map(o => o.copy(keyedFiles = o.keyedFiles.map(sp.absolutized)))
+    val meta = SavepointMeta(sp.checkpointId + 1, outAbs, others :+ newOp,
+      dialect, sp.masterStates)
+    if (dialect == Dialect.Flink) graft.core.flink.FlinkMetadataIO.write(outAbs, meta)
+    else MetadataIO.write(outAbs, meta)
+    meta
+  }
 
   /** An empty savepoint containing one state-less operator — the
     * bootstrap entry point (reference KeyedStateAddRemoveTest.java:50-94

@@ -1,7 +1,7 @@
 package graft.state
 
 import graft.core.codec.{ByteReader, CodecRegistry, KeyFraming, KeyGroups}
-import graft.core.meta.{SavepointMeta, StateKind}
+import graft.core.meta.{KeyedFileHandle, SavepointMeta, StateKind}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
@@ -163,7 +163,6 @@ object StateMaintenance {
       upserts: org.apache.spark.sql.Dataset[KeyedStateRow],
       deletes: org.apache.spark.sql.Dataset[KeyedStateRow],
       outDir: String): SavepointMeta = {
-    import graft.core.meta.{KeyedFileHandle, SavepointMeta => SPMeta}
     val op = sp.operator(uid)
     require(op.keyedFiles.nonEmpty &&
       op.keyedFiles.forall(_.kind == KeyedFileHandle.RocksDbKind),
@@ -174,14 +173,8 @@ object StateMaintenance {
     val maxPar = op.maxParallelism
     val opId = op.operatorId
     val outAbs = new org.apache.hadoop.fs.Path(outDir).toString
-    def absolutize(f: KeyedFileHandle): KeyedFileHandle = {
-      val p = new org.apache.hadoop.fs.Path(f.relativePath)
-      if (p.isAbsolute) f
-      else f.copy(relativePath =
-        new org.apache.hadoop.fs.Path(sp.basePath, f.relativePath).toString)
-    }
     val baseBySubtask: Map[Int, String] =
-      op.keyedFiles.map(f => f.subtaskIndex -> absolutize(f).relativePath).toMap
+      op.keyedFiles.map(f => f.subtaskIndex -> sp.absolutized(f).relativePath).toMap
 
     implicit val dEnc: org.apache.spark.sql.Encoder[DeltaRow] =
       Encoders.product[DeltaRow]
@@ -213,19 +206,9 @@ object StateMaintenance {
     val newFiles = (handles.toSeq.map(h =>
       KeyedFileHandle(h.subtaskIndex, h.relativePath, h.kgStart, h.kgEnd,
         Seq.empty, KeyedFileHandle.RocksDbKind)) ++
-      op.keyedFiles.filterNot(f => touched(f.subtaskIndex)).map(absolutize))
+      op.keyedFiles.filterNot(f => touched(f.subtaskIndex)).map(sp.absolutized))
       .sortBy(_.subtaskIndex)
-    val newOp = op.copy(keyedFiles = newFiles)
-    val others = sp.operators
-      .filterNot(_.operatorId == op.operatorId)
-      .map(o => o.copy(keyedFiles = o.keyedFiles.map(absolutize)))
-    val newMeta = SPMeta(sp.checkpointId + 1, outAbs, others :+ newOp,
-      sp.dialect, sp.masterStates)
-    if (sp.dialect == graft.core.meta.Dialect.Flink)
-      graft.core.flink.FlinkMetadataIO.write(outAbs, newMeta)
-    else
-      graft.core.meta.MetadataIO.write(outAbs, newMeta)
-    newMeta
+    Savepoints.commit(sp, op.copy(keyedFiles = newFiles), outAbs, sp.dialect)
   }
 
   final case class SavepointGcReport(
@@ -254,11 +237,8 @@ object StateMaintenance {
       live: Seq[SavepointMeta]): SavepointGcReport = {
     import graft.core.scan.RocksDbCheckpoints
     def absDirs(sp: SavepointMeta): Seq[String] =
-      sp.operators.flatMap(_.keyedFiles).map { f =>
-        val p = new org.apache.hadoop.fs.Path(f.relativePath)
-        if (p.isAbsolute) p.toString
-        else new org.apache.hadoop.fs.Path(sp.basePath, f.relativePath).toString
-      }
+      sp.operators.flatMap(_.keyedFiles).map(f =>
+        KeyedFileHandle.resolve(sp.basePath, f.relativePath).toString)
     def norm(dir: String): String =
       new org.apache.hadoop.fs.Path(dir).toUri.toString
     val liveDirs = live.flatMap(absDirs)

@@ -978,17 +978,11 @@ object StateQueries {
         // handles are stored savepoint-relative; pin them to the source
         // directory so the renamed `_metadata` (written elsewhere)
         // keeps referencing the ORIGINAL state files byte-for-byte
-        def abs(f: KeyedFileHandle): KeyedFileHandle = {
-          val p = new org.apache.hadoop.fs.Path(f.relativePath)
-          if (p.isAbsolute) f
-          else f.copy(relativePath = new org.apache.hadoop.fs.Path(
-            loaded.basePath, f.relativePath).toString)
-        }
         val renamed = loaded.copy(operators = loaded.operators.map { o =>
           if (o.uid == "ren-old")
             o.copy(uid = "ren-new",
               operatorId = Identifiers.operatorId("ren-new"),
-              keyedFiles = o.keyedFiles.map(abs))
+              keyedFiles = o.keyedFiles.map(loaded.absolutized))
           else o
         })
         val dir2 = tmp("graft-sp34b")

@@ -12,12 +12,10 @@ import graft.state.Savepoints
   *
   *  1. WRITE: bootstrap a value state of `nKeys` (Long → Long) entries
   *     across 128 subtask files at maxPar 4096.
-  *  2. SCAN A (per-subtask splits, the default): one input partition
-  *     per subtask file.
-  *  3. SCAN B (`splitPerKeyGroup=true`): one partition per key group —
-  *     the fine-grained split the reference names as planned future
-  *     work (reference README.md:71); quantifies the A/B here.
-  *  4. RESCALE: copy-through rewrite at parallelism 256 (key groups
+  *  2. SCAN: the source's byte-sized splits (runs of key groups up to
+  *     `spark.sql.files.maxPartitionBytes`; at this size one partition
+  *     per subtask file).
+  *  3. RESCALE: copy-through rewrite at parallelism 256 (key groups
   *     re-bucketed 128 → 256 subtasks), then re-read and verify count.
   *
   * What "driver holds handles only" means measurably: the driver-side
@@ -26,9 +24,8 @@ import graft.state.Savepoints
   * driver (phases aggregate counts distributively). JVM heap peaks are
   * sampled per phase; in local mode executors share the JVM, so the
   * heap number bounds driver+executor together — the scale argument is
-  * the handle count plus the per-partition row shares, also printed
-  * (`scan_b_max_share` ≈ 1/4096 means no task ever sees more than a
-  * key-group's worth of input regardless of total size).
+  * the handle count plus the largest partition's row count, also
+  * printed (`scan_subtask_max_rows`).
   *
   * Run: `sbt "runMain graft.tools.SavepointScaleSmoke [nKeys] [dir]"`.
   * Prints one JSON line; round evidence lands in PLANS.md.
@@ -86,25 +83,17 @@ object SavepointScaleSmoke {
     }
     val handles1 = meta1.operator("bigop").keyedFiles.size
 
-    def scan(perKg: Boolean) = {
-      val df = spark.read.format("flink-savepoint")
-        .option("uid", "bigop")
-        .option("splitPerKeyGroup", perKg.toString)
-        .load(dir1)
-      // distributed per-partition tally; only the (partitions)-row
-      // histogram ever reaches the driver
-      val sizes = df.rdd
-        .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
+    // 2. SCAN: distributed per-partition tally; only the
+    // (partitions)-row histogram ever reaches the driver
+    val ((parts, rows, maxRows), scanS, scanMb) = phase {
+      val sizes = spark.read.format("flink-savepoint")
+        .option("uid", "bigop").load(dir1).rdd
+        .mapPartitions(it => Iterator(it.size.toLong))
         .collect()
-      (sizes.length, sizes.map(_._2).sum, sizes.map(_._2).max)
+      (sizes.length, sizes.sum, sizes.max)
     }
 
-    // 2. SCAN A: per-subtask-file partitions
-    val ((aParts, aRows, aMax), scanAS, scanAMb) = phase(scan(perKg = false))
-    // 3. SCAN B: per-key-group partitions
-    val ((bParts, bRows, bMax), scanBS, scanBMb) = phase(scan(perKg = true))
-
-    // 4. RESCALE 128 → 256 subtasks (same maxPar), pure copy-through
+    // 3. RESCALE 128 → 256 subtasks (same maxPar), pure copy-through
     val (meta2, rescaleS, rescaleMb) = phase {
       val reader = Savepoints.reader(spark, meta1, "bigop")
       Savepoints.writer(spark, meta1, "bigop")
@@ -120,18 +109,15 @@ object SavepointScaleSmoke {
         .count()
     }
     require(nAfter == nKeys, s"rescale lost rows: $nAfter of $nKeys")
-    require(aRows == nKeys && bRows == nKeys, s"scan rows $aRows/$bRows")
+    require(rows == nKeys, s"scan rows $rows of $nKeys")
 
     val json =
       s"""{"metric":"savepoint_scale_smoke","n_keys":$nKeys,""" +
       s""""max_parallelism":$maxPar,"parallelism":$par,""" +
       s""""write_s":${f"$writeS%.1f"},"write_peak_mb":$writeMb,""" +
       s""""meta_handles_128":$handles1,"meta_handles_256":$handles2,""" +
-      s""""scan_subtask_parts":$aParts,"scan_subtask_s":${f"$scanAS%.1f"},""" +
-      s""""scan_subtask_max_rows":$aMax,"scan_subtask_peak_mb":$scanAMb,""" +
-      s""""scan_kg_parts":$bParts,"scan_kg_s":${f"$scanBS%.1f"},""" +
-      s""""scan_kg_max_rows":$bMax,"scan_kg_peak_mb":$scanBMb,""" +
-      s""""scan_kg_max_share":${f"${bMax.toDouble * maxPar / nKeys}%.3f"},""" +
+      s""""scan_subtask_parts":$parts,"scan_subtask_s":${f"$scanS%.1f"},""" +
+      s""""scan_subtask_max_rows":$maxRows,"scan_subtask_peak_mb":$scanMb,""" +
       s""""rescale_s":${f"$rescaleS%.1f"},"rescale_peak_mb":$rescaleMb,""" +
       s""""verify_s":${f"$verifyS%.1f"},"verified_rows":$nAfter}"""
     // single greppable result line, like Bench

@@ -340,13 +340,90 @@ class FlinkFormatSpec extends AnyFunSuite {
   test("per-key-group splits (S5) work on the Flink layout, skipping " +
     "empty groups") {
     val meta = Savepoints.load(resourceDir.toString)
-    val rows = spark.read.format("flink-savepoint")
-      .option("uid", meta.operator(Uid).uid)
-      .option("splitPerKeyGroup", "true")
-      .load(meta.basePath)
-      .collect()
+    val rows = TestSpark.withMaxPartitionBytes(1L) {
+      spark.read.format("flink-savepoint")
+        .option("uid", meta.operator(Uid).uid)
+        .load(meta.basePath)
+        .collect()
+    }
     // 3 keys x 2 states, regardless of split granularity
     assert(rows.length === 6)
+  }
+
+  test("byte-sized splits tile each file's key groups exactly once and " +
+    "read the same rows at any target, on both layouts") {
+    import graft.core.scan.{SavepointScan, SavepointTable, StateSegmentPartition}
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+
+    // the graft layout: 2 subtasks x 64 key groups, uneven values
+    val graftDir = Files.createTempDirectory("graft-split-tiles")
+    Files.delete(graftDir)
+    Savepoints.writer(spark, Savepoints.bootstrap("tiles", 2, MaxPar), "tiles")
+      .withKeyCodec(Codecs.LongCodec)
+      .createNewValueState("v",
+        (1L to 400L).map(k => (k, "x" * (k % 37).toInt)).toDS(),
+        Codecs.FlinkStringCodec)
+      .writeAll(graftDir.toString)
+    // the rule itself, on generated segment sizes (empty groups included)
+    val rnd = new scala.util.Random(42)
+    (0 until 200).foreach { _ =>
+      val sizes = Array.fill(1 + rnd.nextInt(40))(
+        if (rnd.nextInt(3) == 0) 0L else 1L + rnd.nextInt(100))
+      val target = 1L + rnd.nextInt(300)
+      val runs = SavepointScan.runs(sizes, target)
+      assert(runs.flatMap { case (a, b) => a to b } === sizes.indices)
+      runs.foreach { case (a, b) =>
+        val run = sizes.slice(a, b + 1)
+        assert(run.sum <= target || run.count(_ > 0) === 1)
+      }
+    }
+    // the Flink layout: the golden fixture, most of its groups empty
+    val fixtures = Seq((graftDir.toString, "tiles"), (resourceDir.toString, Uid))
+
+    fixtures.foreach { case (dir, uid) =>
+      val opts = new CaseInsensitiveStringMap(Map("path" -> dir, "uid" -> uid).asJava)
+      def scan(target: Long) = TestSpark.withMaxPartitionBytes(target) {
+        val parts = new SavepointTable(opts).newScanBuilder(opts).build()
+          .toBatch.planInputPartitions()
+          .map(_.asInstanceOf[StateSegmentPartition]).toSeq
+        val rows = spark.read.format("flink-savepoint").option("uid", uid)
+          .load(dir).collect()
+          .map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq,
+            r.getAs[Array[Byte]](2).toSeq))
+          .sortBy(_.toString).toSeq
+        (target, parts, rows)
+      }
+      val default = scan(SQLConf.FILES_MAX_PARTITION_BYTES.defaultValue.get)
+      val nFiles = Savepoints.load(dir).operator(uid).keyedFiles.size
+      // at the default every (small) file stays one partition, as before
+      assert(default._2.size === nFiles)
+      val nonEmpty = default._2
+        .flatMap(p => SavepointScan.segmentSizes(p.offsets, p.fileLen, p.flinkLayout))
+        .filter(_ > 0).sorted
+      val scans = Seq(scan(nonEmpty.head - 1), scan(nonEmpty(nonEmpty.length / 2)), default)
+      scans.foreach { case (target, parts, _) =>
+        val byFile = parts.groupBy(_.filePath)
+        assert(byFile.size === nFiles, s"$uid @ $target")
+        byFile.values.foreach { ps =>
+          val groups = ps.flatMap(p => p.kgStart + p.groupFrom to p.kgStart + p.groupTo)
+          assert(groups === (ps.head.kgStart to ps.head.kgEnd), s"$uid @ $target")
+          // a run over the target holds exactly one non-empty group
+          val segs = SavepointScan.segmentSizes(ps.head.offsets, ps.head.fileLen,
+            ps.head.flinkLayout)
+          ps.foreach { p =>
+            val run = segs.slice(p.groupFrom, p.groupTo + 1)
+            assert(run.sum <= target || run.count(_ > 0) === 1, s"$uid @ $target")
+          }
+        }
+      }
+      // below the smallest segment every non-empty group is its own run
+      assert(scans.head._2.size >= nonEmpty.length)
+      assert(scans.map(_._3).distinct.size === 1, uid)
+      assert(default._3.nonEmpty)
+    }
   }
 
   test("TTL value serializer detected by snapshot class name (C9 parity)") {
@@ -856,6 +933,37 @@ class FlinkFormatSpec extends AnyFunSuite {
         java.util.Arrays.copyOfRange(truncated, off.toInt, truncated.length))
       graft.core.scan.FlinkStreamFormat
         .decodeGroup(in, compression = false, _ => true).toList
+    }
+    // impossible record lengths: an IOException naming the field, on
+    // the read and the skip path alike (not an index / array-size error,
+    // and not a silently misaligned skip)
+    def flinkRecord(keyLen: Int, valueLen: Int): Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      val d = new DataOutputStream(bos)
+      d.writeShort(0) // stateId
+      d.writeInt(keyLen); d.writeByte(0x80) // flag: metadata follows
+      d.writeInt(valueLen)
+      d.writeShort(0xffff); d.flush()
+      bos.toByteArray
+    }
+    val negVarInt = Array(0xff, 0xff, 0xff, 0xff, 0x0f).map(_.toByte) // -1
+    val badLengths: Seq[(String, Boolean => Iterator[_])] =
+      Seq((0, 1, "keyLen 0"), (-1, 1, "keyLen -1"), (1, -1, "valueLen -1")).map {
+        case (k, v, what) => what -> ((kept: Boolean) =>
+          graft.core.scan.FlinkStreamFormat.decodeGroup(
+            new java.io.ByteArrayInputStream(flinkRecord(k, v)),
+            compression = false, _ => kept))
+      } ++ Seq(
+        (Array[Byte](0, 0) ++ negVarInt, "keyLen -1"),
+        (Array[Byte](0, 0, 1, 7) ++ negVarInt, "valueLen -1")).map {
+        case (bytes, what) => what -> ((kept: Boolean) =>
+          graft.core.scan.StateStreamFormat.decodeGroup(
+            new java.io.ByteArrayInputStream(bytes), compression = false, _ => kept))
+      }
+    for ((what, decode) <- badLengths; kept <- Seq(true, false)) {
+      val e = intercept[java.io.IOException](decode(kept).toList)
+      assert(!e.isInstanceOf[java.io.EOFException], what)
+      assert(e.getMessage.contains(what), e.getMessage)
     }
     // unknown proxy version
     val badProxy = {

@@ -18,7 +18,7 @@ class RoundEightBatchTwentyFiveSpec extends AnyFunSuite {
     "the ORIGINAL files and the old uid is gone") {
     val s = spark; import s.implicits._
     import graft.core.codec.Codecs.LongCodec
-    import graft.core.meta.{Identifiers, KeyedFileHandle, MetadataIO}
+    import graft.core.meta.{Identifiers, MetadataIO}
     val src = Seq((1L, 10L), (2L, 20L)).toDS()
     val dir1 = TempDirs.create("graft-ren1")
     val meta1 = state.Savepoints
@@ -27,15 +27,9 @@ class RoundEightBatchTwentyFiveSpec extends AnyFunSuite {
       .createNewValueState("S", src, LongCodec)
       .writeAll(dir1)
     val loaded = state.Savepoints.load(meta1.basePath)
-    def abs(f: KeyedFileHandle): KeyedFileHandle = {
-      val p = new org.apache.hadoop.fs.Path(f.relativePath)
-      if (p.isAbsolute) f
-      else f.copy(relativePath = new org.apache.hadoop.fs.Path(
-        loaded.basePath, f.relativePath).toString)
-    }
     val renamed = loaded.copy(operators = loaded.operators.map(o =>
       o.copy(uid = "spec-new", operatorId = Identifiers.operatorId("spec-new"),
-        keyedFiles = o.keyedFiles.map(abs))))
+        keyedFiles = o.keyedFiles.map(loaded.absolutized))))
     val dir2 = TempDirs.create("graft-ren2")
     MetadataIO.write(dir2, renamed)
     val re = state.Savepoints.load(dir2)

@@ -388,10 +388,13 @@ class StateRoundtripSpec extends AnyFunSuite {
     }
     val r = Savepoints.reader(spark, meta, "big")
     assert(r.readValueStates[Int, Long]("v").collect().toMap == data.toMap)
-    // per-key-group splits agree
-    val fine = spark.read.format("flink-savepoint")
-      .option("uid", "big").option("splitPerKeyGroup", "true").load(dir)
-    assert(fine.rdd.getNumPartitions == 1024 && fine.count() == 5000)
+    // per-key-group splits agree: a split target below the smallest
+    // segment gives every key group its own partition
+    TestSpark.withMaxPartitionBytes(1L) {
+      val fine = spark.read.format("flink-savepoint")
+        .option("uid", "big").load(dir)
+      assert(fine.rdd.getNumPartitions == 1024 && fine.count() == 5000)
+    }
   }
 
   test("per-key-group splits read the same data (README.md:71 finer splits)") {
@@ -401,10 +404,11 @@ class StateRoundtripSpec extends AnyFunSuite {
       .withKeyCodec(IntCodec)
       .createNewValueState("s", spark.createDataset(data), StringCodec)
       .writeAll(dir)
-    val df = spark.read.format("flink-savepoint")
-      .option("uid", "op").option("splitPerKeyGroup", "true")
-      .load(meta.basePath)
-    assert(df.rdd.getNumPartitions == 128) // one partition per key-group
-    assert(df.count() == 40)
+    TestSpark.withMaxPartitionBytes(1L) {
+      val df = spark.read.format("flink-savepoint")
+        .option("uid", "op").load(meta.basePath)
+      assert(df.rdd.getNumPartitions == 128) // one partition per key-group
+      assert(df.count() == 40)
+    }
   }
 }

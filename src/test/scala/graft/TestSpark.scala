@@ -17,4 +17,14 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `f` with the savepoint scan's split target
+    * (`spark.sql.files.maxPartitionBytes`) at `bytes`, then restores it.
+    */
+  def withMaxPartitionBytes[A](bytes: Long)(f: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
