@@ -64,6 +64,22 @@ object Catalog {
     spark
   }
 
+  /** Run `body` with session confs borrowed: each key is set to its
+    * value, and when `body` returns or throws each is given back its
+    * previous value, or unset if it had none. Nested scopes restore in
+    * reverse order.
+    */
+  def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Normalize a `ts` event-time column to TimestampType regardless of
     * how the driver's parquet encoded it. Schema-aware, so batch reads
     * (through [[t]]) and streaming reads (which must pin the schema up

@@ -1,41 +1,49 @@
 package graft
 
-/** Gate/bench temp-dir hygiene, shared by every roundtrip QueryDef
-  * (state savepoints, ingest-format rewrites, streaming checkpoints):
-  * dirs are deleted on JVM exit — not earlier, because the RESULT
-  * DataFrame of a roundtrip query lazily re-reads them on every action
-  * — so repeated bench/verify runs do not accumulate output on disk.
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+/** The one home of scratch lifetime on local disk, shared by the
+  * loaders, writers, roundtrip QueryDefs, tools and tests. One rule:
+  *   - a path that a returned DataFrame still reads (a roundtrip query's
+  *     output, an inline-state file a scan seeks) is [[create]]d or
+  *     [[track]]ed and deleted at JVM exit — not earlier, because the
+  *     result re-reads it lazily on every action;
+  *   - a path that nothing outside the call reads (a streaming
+  *     checkpoint, a RocksDB work or staging dir) is [[scoped]] and
+  *     deleted when the call returns or throws.
+  * Repeated bench/verify runs in a long-lived driver therefore do not
+  * accumulate output on disk. [[deleteNow]] is the only tree delete.
   */
 object TempDirs {
 
-  private val dirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.nio.file.Path]())
+  private val tracked =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[Path]())
 
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    dirs.forEach { p =>
-      try {
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      } catch { case _: Throwable => }
-    }))
+    tracked.forEach(p => try deleteNow(p) catch { case _: Throwable => })))
 
   /** Create a temp directory deleted (recursively) on JVM exit. */
   def create(prefix: String): String =
-    track(java.nio.file.Files.createTempDirectory(prefix)).toString
+    track(Files.createTempDirectory(prefix)).toString
 
-  /** Register an existing path for exit-time recursive deletion. */
-  def track(p: java.nio.file.Path): java.nio.file.Path = { dirs.add(p); p }
+  /** Register an existing file or directory for exit-time deletion. */
+  def track(p: Path): Path = { tracked.add(p); p }
 
-  /** Delete a path tree immediately — for gates that must prove a
-    * result no longer depends on it (e.g. sp36's chain retirement).
+  /** Create a temp directory, run `body` on it, and delete the tree
+    * when `body` returns or throws; the result is `body`'s.
     */
-  def deleteNow(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+  def scoped[A](prefix: String)(body: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally deleteNow(dir)
+  }
+
+  /** Delete a file or directory tree now; a missing path is a no-op. */
+  def deleteNow(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
     }
 }

@@ -81,26 +81,6 @@ object FlinkMetadataIO {
 
   val MetadataFile = "_metadata"
 
-  /** Temp artifacts materialized during loads (inline-state files,
-    * incremental stub dirs) — deleted on JVM exit so repeated loads in
-    * a long-lived driver do not fill local disk.
-    */
-  private val tempArtifacts =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.nio.file.Path]())
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    tempArtifacts.forEach { p =>
-      try {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Throwable => }
-    }))
-
-  private def trackTemp(p: java.nio.file.Path): java.nio.file.Path = {
-    tempArtifacts.add(p); p
-  }
-
   /** Sniff: does this file start with Flink's checkpoint magic? */
   def isFlinkMetadata(head: Array[Byte]): Boolean =
     head.length >= 4 &&
@@ -491,8 +471,10 @@ object FlinkMetadataIO {
             Some(KeyedFileHandle(subtask, path, kgStart, kgStart + numKgs - 1,
               offsets, KeyedFileHandle.FlinkStreamKind))
           case ByteHandle(_, bytes) =>
-            // inline state: materialize so the scan can seek it
-            val tmp = trackTemp(
+            // inline state: materialize so the scan can seek it; the
+            // scan of the loaded savepoint reads it, so it lives until
+            // JVM exit
+            val tmp = graft.TempDirs.track(
               java.nio.file.Files.createTempFile("graft-flink-state", ".bin"))
             java.nio.file.Files.write(tmp, bytes)
             Some(KeyedFileHandle(subtask, tmp.toAbsolutePath.toString, kgStart,
@@ -540,7 +522,7 @@ object FlinkMetadataIO {
           .getOrElse(java.nio.file.Paths.get(
             System.getProperty("java.io.tmpdir")))
         java.nio.file.Files.createDirectories(stage)
-        val stub = trackTemp(
+        val stub = graft.TempDirs.track(
           java.nio.file.Files.createTempDirectory(stage, "graft-flink-inc"))
         val manifest = new StringBuilder
         (shared ++ priv).foreach {

@@ -38,28 +38,26 @@ object RocksDbCheckpoints {
   def createCheckpoint(
       targetDir: String,
       rows: Iterator[(String, Array[Byte], Array[Byte])]): Unit = {
-    val work = Files.createTempDirectory("graft-rocks-work")
-    val opts = new Options().setCreateIfMissing(true)
-    val db = RocksDB.open(opts, work.toString)
-    try {
-      val handles = scala.collection.mutable.Map.empty[String, ColumnFamilyHandle]
+    graft.TempDirs.scoped("graft-rocks-work") { work =>
+      val opts = new Options().setCreateIfMissing(true)
+      val db = RocksDB.open(opts, work.toString)
       try {
-        rows.foreach { case (state, k, v) =>
-          val h = handles.getOrElseUpdate(state,
-            db.createColumnFamily(new ColumnFamilyDescriptor(
-              state.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-          db.put(h, k, v)
-        }
-        // flush to SSTs before checkpointing: data left in the WAL would
-        // be invisible to later incremental writes' SST sharing
-        val fo = new FlushOptions().setWaitForFlush(true)
-        try handles.values.foreach(h => db.flush(fo, h)) finally fo.close()
-        val cp = Checkpoint.create(db)
-        try cp.createCheckpoint(targetDir) finally cp.close()
-      } finally handles.values.foreach(_.close()) // CF handles before db
-    } finally {
-      db.close(); opts.close()
-      deleteRecursively(work)
+        val handles = scala.collection.mutable.Map.empty[String, ColumnFamilyHandle]
+        try {
+          rows.foreach { case (state, k, v) =>
+            val h = handles.getOrElseUpdate(state,
+              db.createColumnFamily(new ColumnFamilyDescriptor(
+                state.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
+            db.put(h, k, v)
+          }
+          // flush to SSTs before checkpointing: data left in the WAL would
+          // be invisible to later incremental writes' SST sharing
+          val fo = new FlushOptions().setWaitForFlush(true)
+          try handles.values.foreach(h => db.flush(fo, h)) finally fo.close()
+          val cp = Checkpoint.create(db)
+          try cp.createCheckpoint(targetDir) finally cp.close()
+        } finally handles.values.foreach(_.close()) // CF handles before db
+      } finally { db.close(); opts.close() }
     }
   }
 
@@ -121,8 +119,7 @@ object RocksDbCheckpoints {
     // 2. writable work copy: hard-link the immutable SSTs (fallback:
     // copy), copy the small mutable metadata files
     val localized = localize(baseDir)
-    val work = Files.createTempDirectory("graft-rocks-incr")
-    try {
+    graft.TempDirs.scoped("graft-rocks-incr") { work =>
       Files.list(Paths.get(localized.path)).forEach { f =>
         val dst = work.resolve(f.getFileName.toString)
         if (f.getFileName.toString.endsWith(".sst"))
@@ -194,9 +191,9 @@ object RocksDbCheckpoints {
             .getBytes(utf8))
           finally out.close()
         }
-      } finally deleteRecursively(cpDir)
+      } finally graft.TempDirs.deleteNow(cpDir)
       IncrementalResult(shared.map(_._1).toSeq.sorted, created.toSeq.sorted)
-    } finally deleteRecursively(work)
+    }
   }
 
   /** Closeable scan over the kept column families of a checkpoint dir. */
@@ -270,7 +267,7 @@ object RocksDbCheckpoints {
     */
   final case class LocalizedDir(path: String, downloaded: Boolean) extends AutoCloseable {
     def close(): Unit =
-      if (downloaded) deleteRecursively(Paths.get(path))
+      if (downloaded) graft.TempDirs.deleteNow(Paths.get(path))
   }
 
   /** A stub dir produced from a Flink incremental handle: small
@@ -380,12 +377,5 @@ object RocksDbCheckpoints {
         new org.apache.hadoop.fs.Path(local.resolve(name).toString))
     }
     LocalizedDir(local.toString, downloaded = true)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -324,27 +325,33 @@ object SimHash64 {
   */
 object GraftFunctions {
 
-  /** Registers `graft_polyhash32` / `graft_dot` for use inside SQL
-    * expressions and higher-order-function lambdas.
+  /** Every kernel as (SQL name, expression class, builder): the one
+    * table both [[register]] and [[GraftExtensions]] iterate.
+    */
+  private[functions] val kernels: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(
+      ("graft_polyhash32", classOf[PolyHash32], exprs => PolyHash32(exprs.head)),
+      ("graft_bytehash32", classOf[ByteHash32], exprs => ByteHash32(exprs.head)),
+      ("graft_dot", classOf[ArrayDotProduct],
+        exprs => ArrayDotProduct(exprs(0), exprs(1))),
+      ("graft_kmin", classOf[KMinValues], exprs => KMinValues(exprs(0),
+        exprs(1).eval().asInstanceOf[Number].intValue())),
+      ("graft_ws_tokens", classOf[WhitespaceTokenCount],
+        exprs => WhitespaceTokenCount(exprs.head)),
+      ("graft_mg", classOf[MisraGries], exprs => MisraGries(exprs(0),
+        exprs(1).eval().asInstanceOf[Number].intValue())),
+      ("graft_simhash64", classOf[SimHash64], exprs => SimHash64(exprs.head)))
+
+  /** Registers every kernel for use inside SQL expressions and
+    * higher-order-function lambdas; names the session already holds
+    * are left as they are.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_polyhash32",
-      exprs => PolyHash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bytehash32",
-      exprs => ByteHash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_kmin",
-      exprs => KMinValues(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_ws_tokens",
-      exprs => WhitespaceTokenCount(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_mg",
-      exprs => MisraGries(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
+    kernels.foreach { case (name, _, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
 
@@ -353,24 +360,10 @@ object GraftFunctions {
   * the kernels available in every session without driver code.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_polyhash32"),
-      new ExpressionInfo(classOf[PolyHash32].getName, "graft_polyhash32"),
-      (exprs: Seq[Expression]) => PolyHash32(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_bytehash32"),
-      new ExpressionInfo(classOf[ByteHash32].getName, "graft_bytehash32"),
-      (exprs: Seq[Expression]) => ByteHash32(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => ArrayDotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_ws_tokens"),
-      new ExpressionInfo(classOf[WhitespaceTokenCount].getName, "graft_ws_tokens"),
-      (exprs: Seq[Expression]) => WhitespaceTokenCount(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-  }
+  def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.kernels.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls.getName, name),
+        build))
+    }
 }

@@ -35,9 +35,6 @@ import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
   */
 object GraphAlgs {
 
-  private def debug(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_DEBUG")) System.err.println(msg)
-
   /** Wall-clock instrumentation of the last [[connectedComponents]]
     * run on this driver: convergence round count and per-round seconds.
     * Written once at loop exit (driver-side only; the smoke tools read
@@ -92,12 +89,9 @@ object GraphAlgs {
 
   private[graft] def adaptiveP(df: DataFrame, conf: Int): Int = {
     val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val p =
-      if (sz <= 0) conf
-      else ((sz + TargetPartitionBytes - 1) / TargetPartitionBytes)
-        .min(BigInt(conf)).max(BigInt(1)).toInt
-    debug(s"[adaptiveP] sizeInBytes=$sz conf=$conf -> p=$p")
-    p
+    if (sz <= 0) conf
+    else ((sz + TargetPartitionBytes - 1) / TargetPartitionBytes)
+      .min(BigInt(conf)).max(BigInt(1)).toInt
   }
 
   /** Symmetrized edge list, hash-partitioned by `src` once and cached.
@@ -189,8 +183,6 @@ object GraphAlgs {
       labels = nextT
       round += 1
       roundSecs += (System.nanoTime() - tr) / 1e9
-      debug(s"[cc] round $round sum=$curSum " +
-        f"took=${roundSecs.last}%.1fs")
     }
     lastCcStats = Some(CcStats(round, roundSecs.toSeq))
     e.unpersist()
@@ -292,7 +284,6 @@ object GraphAlgs {
       visitedCount += frontierCount
       dist = dist.union(next)
       frontier = next.select(col("probe"), col("id"))
-      debug(s"[msbfs] depth $depth frontier=$frontierCount")
     }
     e.unpersist()
     dist
@@ -378,11 +369,9 @@ object GraphAlgs {
     val init = scale / ns
     val base = (15L * init) / 100L
     val baseCol = when(col("seed"), lit(base)).otherwise(lit(0L))
-    debug(s"[pagerank] n=$n seeds=$ns small=$small edges cached")
     var pr = n0.select(col("id"),
       when(col("seed"), lit(init)).otherwise(lit(0L)).as("val"))
     for (it <- 1 to iters) {
-      val tr = System.nanoTime()
       // Small N: broadcast the rank table (checkpointed RDDs carry no
       // stats, so without the hint Spark would shuffle the edge list).
       // Large N: ranks repartition to the edge layout — node-sized
@@ -399,7 +388,6 @@ object GraphAlgs {
         .select(n0("id"),
           (baseCol + expr("(85 * coalesce(msum, 0L)) div 100")).as("val"))
       pr = truncate(next, rel, Severed)
-      debug(f"[pagerank] iter $it took=${(System.nanoTime() - tr) / 1e9}%.1fs")
     }
     e.unpersist()
     edgesWithDeg.unpersist()
@@ -640,7 +628,6 @@ object GraphAlgs {
         stable = keepN == curN
         cur = keep
         curN = keepN
-        debug(s"[truss] k=$k round=$rounds remaining=$curN")
       }
       // a level completed distributed only if it reached its fixpoint
       // ABOVE the local threshold; a mid-level threshold crossing hands
@@ -657,7 +644,6 @@ object GraphAlgs {
       import spark.implicits._
       val collected = cur.select(col("src"), col("dst"))
         .as[(Long, Long)].collect()
-      debug(s"[truss] local finish: ${collected.length} edges from k=$k")
       val local = localPeel(collected, k, maxK)
       val rowsLocal = local.toSeq.collect {
         case ((a, b), t) if t >= 3 => (a, b, t)
@@ -899,7 +885,6 @@ object GraphAlgs {
       profile += ((r, nRem - nNext, nNext))
       remaining = next
       nRem = nNext
-      debug(s"[kcore] round $r remaining=$nRem")
     }
     e.unpersist()
     import spark.implicits._

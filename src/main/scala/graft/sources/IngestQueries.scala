@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, QueryDef, TempDirs}
 import graft.llm.TextExprs.duckWordHash
 
 import org.apache.spark.sql.functions._
@@ -38,9 +38,6 @@ import org.apache.spark.sql.types._
   */
 object IngestQueries {
 
-  private def tmp(prefix: String): String =
-    graft.TempDirs.create(prefix) // exit-time cleanup (bench hygiene)
-
   /** ceil(total data bytes / target) — the output file count a
     * compaction rewrite coalesces to (>= 1). Listing only; no read.
     */
@@ -77,7 +74,7 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i01")
+        val out = TempDirs.create("graft-i01")
         Catalog.t(s, d, "documents").write.mode("overwrite").json(out)
         s.read.schema(docSchema).json(out)
           .groupBy("lang")
@@ -94,7 +91,7 @@ object IngestQueries {
               |FROM documents GROUP BY source""".stripMargin),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i02")
+        val out = TempDirs.create("graft-i02")
         // `tag` embeds the delimiter, so the writer MUST quote it and the
         // reader MUST unquote it for tag_hash to survive.
         // whitespace preservation is opt-in in Spark's univocity CSV
@@ -121,7 +118,7 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i04")
+        val out = TempDirs.create("graft-i04")
         // ORC: the second columnar lake format (predicate pushdown,
         // column pruning, splittable stripes — same scan properties the
         // parquet paths rely on)
@@ -150,7 +147,7 @@ object IngestQueries {
              |  CAST(sum(strlen(text)) AS BIGINT) AS sum_bytes
              |FROM s GROUP BY lang""".stripMargin),
       (s, d) => {
-        val out = tmp("graft-i05")
+        val out = TempDirs.create("graft-i05")
         val sample = Catalog.t(s, d, "documents")
           .filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"), col("lang"), col("text"))
@@ -188,8 +185,8 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val sliver = tmp("graft-i06-sliver")
-        val compact = tmp("graft-i06-compact")
+        val sliver = TempDirs.create("graft-i06-sliver")
+        val compact = TempDirs.create("graft-i06-compact")
         Catalog.t(s, d, "documents")
           .repartition(64).write.mode("overwrite").parquet(sliver)
         val n = compactionTargetParts(s, sliver, targetBytes = 4L << 20)
@@ -219,7 +216,7 @@ object IngestQueries {
              |    AS BIGINT) AS sum_chars
              |FROM documents GROUP BY lang""".stripMargin),
       (s, d) => {
-        val root = tmp("graft-i07")
+        val root = TempDirs.create("graft-i07")
         val docs = Catalog.t(s, d, "documents")
         docs.filter(col("doc_id") % 2 === 0)
           .select("doc_id", "text", "lang")
@@ -242,7 +239,7 @@ object IngestQueries {
              |FROM documents WHERE lang IN ('en', 'de')
              |GROUP BY lang, source""".stripMargin),
       (s, d) => {
-        val out = tmp("graft-i03")
+        val out = TempDirs.create("graft-i03")
         val docs = Catalog.t(s, d, "documents")
         docs.write.mode("overwrite").partitionBy("lang").parquet(out)
         // Pruned read: only the lang=en / lang=de directories are opened
@@ -274,7 +271,7 @@ object IngestQueries {
              |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
              |GROUP BY o_orderpriority""".stripMargin),
       (s, d) => {
-        val root = tmp("graft-i08")
+        val root = TempDirs.create("graft-i08")
         val suffix = math.abs(d.hashCode)
         val ot = s"graft_i08_orders_$suffix"
         val lt = s"graft_i08_lineitem_$suffix"
@@ -318,7 +315,7 @@ object IngestQueries {
              |FROM t WHERE ms >= $ZmLo AND ms < $ZmHi
              |GROUP BY l_returnflag""".stripMargin),
       (s, d) => {
-        val out = tmp("graft-i09")
+        val out = TempDirs.create("graft-i09")
         Catalog.t(s, d, "lineitem")
           .select(col("l_returnflag"),
             expr("unix_millis(cast(l_shipdate as timestamp))").as("ms"),
@@ -360,7 +357,7 @@ object IngestQueries {
              |UNION ALL
              |SELECT NULL, 3, 3""".stripMargin),
       (s, d) => {
-        val out = tmp("graft-i10")
+        val out = TempDirs.create("graft-i10")
         Catalog.t(s, d, "documents").select("doc_id", "lang", "text")
           .write.mode("overwrite").json(out)
         java.nio.file.Files.writeString(
@@ -422,7 +419,7 @@ object IngestQueries {
              |SELECT * FROM carry UNION ALL SELECT * FROM closed
              |UNION ALL SELECT * FROM opened""".stripMargin),
       (s, d) => {
-        val out = tmp("graft-i11")
+        val out = TempDirs.create("graft-i11")
         val merged = scd2Merge(
           Catalog.t(s, d, "customer")
             .select(col("c_custkey"), col("c_mktsegment")),
@@ -451,7 +448,7 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i12")
+        val out = TempDirs.create("graft-i12")
         Catalog.t(s, d, "documents").write.mode("overwrite")
           .option("compression", "gzip").json(out)
         s.read.schema(docSchema).json(out)
@@ -497,7 +494,7 @@ object IngestQueries {
             when(col("key") % 7 === 0, "D").otherwise("U"))
         // the changelog is a real file delivery: JSONL out, explicit
         // schema back in (schema inference is a full extra corpus pass)
-        val out = tmp("graft-i13")
+        val out = TempDirs.create("graft-i13")
         changes.write.mode("overwrite").json(out)
         val chSchema = StructType(Seq(
           StructField("key", LongType),
@@ -537,9 +534,9 @@ object IngestQueries {
       (s, d) => {
         val e = Catalog.t(s, d, "events")
           .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-        val daily = tmp("graft-i14-daily")
+        val daily = TempDirs.create("graft-i14-daily")
         e.write.mode("overwrite").partitionBy("day").parquet(daily)
-        val monthly = tmp("graft-i14-monthly")
+        val monthly = TempDirs.create("graft-i14-monthly")
         // explicit schemas on both re-reads: an empty day/lake writes
         // zero partition dirs and schema inference would die (i01's
         // pinned-schema contract)
@@ -568,7 +565,7 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i15")
+        val out = TempDirs.create("graft-i15")
         // the short alias "avro" is reserved for the external module by
         // Spark's lookup even though the format classes ship inside
         // spark-sql — the fully-qualified FileFormat name loads them
@@ -592,7 +589,7 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i16")
+        val out = TempDirs.create("graft-i16")
         Catalog.t(s, d, "documents").write.mode("overwrite")
           .option("rowTag", "doc").format("xml").save(out)
         s.read.schema(docSchema).option("rowTag", "doc")
@@ -619,7 +616,7 @@ object IngestQueries {
              |    as bigint) AS sum_cents
              |FROM orders GROUP BY 1""".stripMargin),
       (s, d) => {
-        val out = tmp("graft-i17")
+        val out = TempDirs.create("graft-i17")
         Catalog.t(s, d, "orders")
           .select(format_string("%012d%012d%s%014d%s",
             col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -651,7 +648,7 @@ object IngestQueries {
       Some(fidelityOracle),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val out = tmp("graft-i18")
+        val out = TempDirs.create("graft-i18")
         Catalog.t(s, d, "documents")
           .groupBy((col("doc_id") % 16).as("shard"))
           .agg(to_json(collect_list(struct(col("doc_id"), col("text"),
@@ -683,9 +680,9 @@ object IngestQueries {
              |  CASE WHEN doc_id % 8 < 4 THEN 0 ELSE 1 END AS session
              |FROM documents GROUP BY 1, 3""".stripMargin),
       (s, d) => {
-        val lake = tmp("graft-i19-lake")
-        val landed = tmp("graft-i19-landed")
-        val manifestDir = tmp("graft-i19-manifest")
+        val lake = TempDirs.create("graft-i19-lake")
+        val landed = TempDirs.create("graft-i19-landed")
+        val manifestDir = TempDirs.create("graft-i19-manifest")
         val docs = Catalog.t(s, d, "documents")
           .withColumn("shard_id", col("doc_id") % 8)
         docs.write.partitionBy("shard_id").mode("overwrite").parquet(lake)

@@ -393,9 +393,8 @@ object OperatorStateWriter {
       it: Iterator[EncRow], stateNames: Seq[String]): HandleRow = {
     val (kgStart, kgEnd) = KeyGroups.keyGroupRange(maxPar, par, opIndex)
     val rel = s"op-$opId/rocks-$opIndex-${java.util.UUID.randomUUID().toString.take(8)}"
-    val staging = java.nio.file.Files.createTempDirectory("graft-rocks-cp")
-    val cpDir = staging.resolve("cp") // must not pre-exist (RocksDB contract)
-    try {
+    graft.TempDirs.scoped("graft-rocks-cp") { staging =>
+      val cpDir = staging.resolve("cp") // must not pre-exist (RocksDB contract)
       graft.core.scan.RocksDbCheckpoints.createCheckpoint(cpDir.toString,
         it.map(e => (stateNames(e.stateId), e.key, e.value)))
       val dst = new org.apache.hadoop.fs.Path(outDir, rel)
@@ -406,11 +405,6 @@ object OperatorStateWriter {
           new org.apache.hadoop.fs.Path(f.toAbsolutePath.toString),
           new org.apache.hadoop.fs.Path(dst, f.getFileName.toString))
       }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(staging))
-        java.nio.file.Files.walk(staging).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
     }
     HandleRow(opIndex, rel, kgStart, kgEnd, Seq.empty)
   }

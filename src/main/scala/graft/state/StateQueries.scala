@@ -1,6 +1,6 @@
 package graft.state
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, QueryDef, TempDirs}
 import graft.core.codec.{ByteWriter, Codecs, KeyGroups}
 import graft.core.codec.Codecs.{DoubleCodec, ListCodec, LongCodec, StringCodec}
 import graft.core.meta.{Identifiers, KeyedFileHandle, MetadataIO,
@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object StateQueries {
 
-  private def tmp(prefix: String): String =
-    graft.TempDirs.create(prefix) // exit-time cleanup (bench hygiene)
-
   def all: Seq[QueryDef] = Seq(
 
     // Savepoint bootstrap + scan roundtrip (S1-S10, P1, W1, W3, W7).
@@ -36,7 +33,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("counts", parallelism = 4, maxParallelism = 128), "counts")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp01"))
+          .writeAll(TempDirs.create("graft-sp01"))
         Savepoints.reader(s, meta, "counts")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -58,7 +55,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("counts", 4, 128), "counts")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp02a"))
+          .writeAll(TempDirs.create("graft-sp02a"))
 
         val state = Savepoints.reader(s, meta1, "counts")
           .readValueStates[Long, Long]("Count")
@@ -71,7 +68,7 @@ object StateQueries {
 
         val meta2 = Savepoints.writer(s, meta1, "counts")
           .addValueState("Count", merged)
-          .writeAll(tmp("graft-sp02b"))
+          .writeAll(TempDirs.create("graft-sp02b"))
         Savepoints.reader(s, meta2, "counts")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -101,7 +98,7 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(Codecs.FlinkStringCodec)
           .createNewValueState("Balance", bal, LongCodec)
-          .writeAll(tmp("graft-sp06"))
+          .writeAll(TempDirs.create("graft-sp06"))
         // load back through the magic-sniffing loader (drops the
         // in-memory meta: proves `_metadata` + proxy carry everything)
         val loaded = Savepoints.load(meta.basePath)
@@ -132,7 +129,7 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .defineState(StateMeta("Quantities", StateKind.List, "list<double>"))
           .addKeyedStateRows(packed)
-          .writeAll(tmp("graft-sp03"))
+          .writeAll(TempDirs.create("graft-sp03"))
         Savepoints.reader(s, meta, "lists")
           .readListStateValues[Long, Double]("Quantities")
           .toDF("key", "qty")
@@ -159,7 +156,7 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .defineState(StateMeta("StatusCounts", StateKind.Map, "long", Some("string")))
           .addKeyedStateRows(rows)
-          .writeAll(tmp("graft-sp04"))
+          .writeAll(TempDirs.create("graft-sp04"))
         Savepoints.reader(s, meta, "maps")
           .readMapStates[Long, String, Long]("StatusCounts")
           .toDF("key", "status", "cnt")
@@ -189,7 +186,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("diff-op", 4, 128), "diff-op")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", df, LongCodec)
-          .writeAll(tmp(s"graft-sp07-$tag"))
+          .writeAll(TempDirs.create(s"graft-sp07-$tag"))
         val orders = Catalog.t(s, d, "orders")
         val before = snapshot(orders.filter(col("o_orderkey") % 2 === 1)
           .groupBy(col("o_custkey")).count().as[(Long, Long)], "a")
@@ -228,9 +225,9 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .defineState(StateMeta("Count", StateKind.Value, "ttl<long>"))
           .addKeyedStateRows(rows)
-          .writeAll(tmp("graft-sp08a"))
+          .writeAll(TempDirs.create("graft-sp08a"))
         val meta2 = StateMaintenance.expireTtl(
-          s, meta1, "ttl-op", "Count", cutoffMs, tmp("graft-sp08b"))
+          s, meta1, "ttl-op", "Count", cutoffMs, TempDirs.create("graft-sp08b"))
         Savepoints.reader(s, meta2, "ttl-op")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -255,13 +252,13 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp09a"))
+          .writeAll(TempDirs.create("graft-sp09a"))
         val rows = Savepoints.reader(s, Savepoints.load(meta1.basePath), "rescale-op")
           .getAllUnreadKeyedStateRows
         val meta2 = Savepoints.writer(s, Savepoints.load(meta1.basePath), "rescale-op")
           .addKeyedStateRows(rows)
           .withParallelism(16, 512)
-          .writeAll(tmp("graft-sp09b"))
+          .writeAll(TempDirs.create("graft-sp09b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "rescale-op")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -286,13 +283,13 @@ object StateQueries {
             maxParallelism = 512), "shrink-op")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp18a"))
+          .writeAll(TempDirs.create("graft-sp18a"))
         val rows = Savepoints.reader(s, Savepoints.load(meta1.basePath), "shrink-op")
           .getAllUnreadKeyedStateRows
         val meta2 = Savepoints.writer(s, Savepoints.load(meta1.basePath), "shrink-op")
           .addKeyedStateRows(rows)
           .withParallelism(2, 64)
-          .writeAll(tmp("graft-sp18b"))
+          .writeAll(TempDirs.create("graft-sp18b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "shrink-op")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -318,7 +315,7 @@ object StateQueries {
           .transformNonKeyedState((_, b) =>
             BackendStates.withBroadcastState(b, "nations", pairs)(
               graft.core.codec.Codecs.IntCodec, Codecs.FlinkStringCodec))
-          .writeAll(tmp("graft-sp10"))
+          .writeAll(TempDirs.create("graft-sp10"))
         val op = Savepoints.load(meta.basePath).operator("bc-op")
         val back = BackendStates.broadcastState[Int, String](
           op.nonKeyed(0), "nations")(
@@ -347,11 +344,11 @@ object StateQueries {
           .transformNonKeyedState((i, b) =>
             BackendStates.withListState(b, "ids", halves.lift(i).getOrElse(Seq.empty),
               mode = graft.core.meta.ListStateMode.Union)(LongCodec))
-          .writeAll(tmp("graft-sp21a"))
+          .writeAll(TempDirs.create("graft-sp21a"))
         val meta2 = Savepoints
           .writer(s, Savepoints.load(meta1.basePath), "un-op")
           .withParallelism(3, 128) // non-keyed-only op: metadata-only rescale
-          .writeAll(tmp("graft-sp21b"))
+          .writeAll(TempDirs.create("graft-sp21b"))
         val restored = Savepoints.load(meta2.basePath).operator("un-op")
         BackendStates.unionListState[Long](restored.nonKeyed(0), "ids")(LongCodec)
           .toDF("elem")
@@ -376,11 +373,11 @@ object StateQueries {
           .transformNonKeyedState((i, b) =>
             BackendStates.withListState(b, "ids",
               halves.lift(i).getOrElse(Seq.empty))(LongCodec))
-          .writeAll(tmp("graft-sp22a"))
+          .writeAll(TempDirs.create("graft-sp22a"))
         val meta2 = Savepoints
           .writer(s, Savepoints.load(meta1.basePath), "sd-op")
           .withParallelism(3, 128)
-          .writeAll(tmp("graft-sp22b"))
+          .writeAll(TempDirs.create("graft-sp22b"))
         val restored = Savepoints.load(meta2.basePath).operator("sd-op")
         (0 until 3).flatMap(i =>
             BackendStates.listState[Long](restored.nonKeyed(i), "ids")(LongCodec))
@@ -411,14 +408,14 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(LongCodec)
           .createNewValueState("V", Seq((1L, nRegion)).toDS(), LongCodec)
-          .writeAll(tmp("graft-sp11a"))
+          .writeAll(TempDirs.create("graft-sp11a"))
         // reload from disk (only `_metadata` carries the blob now), then
         // rewrite — passthrough under transform is what's under test
         val loaded1 = Savepoints.load(meta1.basePath)
         val rows = Savepoints.reader(s, loaded1, "ms-op").getAllUnreadKeyedStateRows
         val meta2 = Savepoints.writer(s, loaded1, "ms-op")
           .addKeyedStateRows(rows)
-          .writeAll(tmp("graft-sp11b"))
+          .writeAll(TempDirs.create("graft-sp11b"))
         val ms = Savepoints.load(meta2.basePath).masterStates
         require(ms.size == 1, s"master states not preserved: ${ms.size}")
         new String(ms.head, java.nio.charset.StandardCharsets.UTF_8)
@@ -455,7 +452,7 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp23a"))
+          .writeAll(TempDirs.create("graft-sp23a"))
         // inject raw sections (valid Flink handle grammar, opaque
         // payloads) onto subtask 0, as a real 1.7 job with heap timers
         // would have written them
@@ -467,7 +464,7 @@ object StateQueries {
         val meta2 = Savepoints.writer(s, withRaw, "raw-op")
           .addKeyedStateRows(
             Savepoints.reader(s, withRaw, "raw-op").getAllUnreadKeyedStateRows)
-          .writeAll(tmp("graft-sp23b"))
+          .writeAll(TempDirs.create("graft-sp23b"))
         // reload from disk: the raw sections must have survived the
         // metadata write + read cycle verbatim
         val re = Savepoints.load(meta2.basePath).operator("raw-op")
@@ -530,7 +527,7 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp24a"))
+          .writeAll(TempDirs.create("graft-sp24a"))
         val loaded1 = Savepoints.load(meta1.basePath)
         val op1 = loaded1.operator("timer-op")
         val rawKeyed = (0 until par).map { sub =>
@@ -544,7 +541,7 @@ object StateQueries {
         val meta2 = Savepoints.writer(s, withTimers, "timer-op")
           .addKeyedStateRows(
             Savepoints.reader(s, withTimers, "timer-op").getAllUnreadKeyedStateRows)
-          .writeAll(tmp("graft-sp24b"))
+          .writeAll(TempDirs.create("graft-sp24b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "timer-op")
           .readEventTimeWindowTimers[Long]()
           .toDF("key", "window_start", "window_end", "fire_ts")
@@ -572,7 +569,7 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .withNativeRocksDb()
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp25"))
+          .writeAll(TempDirs.create("graft-sp25"))
         Savepoints.reader(s, Savepoints.load(meta.basePath), "native-rocks")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -601,7 +598,7 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .withNativeRocksDb()
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp26a"))
+          .writeAll(TempDirs.create("graft-sp26a"))
         val ups = counts.filter(_._1 < 100).map { case (k, v) =>
           StateRowEncoder.valueRow("Count", k, v * 2, LongCodec, LongCodec, maxPar)
         }
@@ -611,7 +608,7 @@ object StateQueries {
           }
         val meta2 = StateMaintenance.incrementalUpdate(
           s, Savepoints.load(meta1.basePath), "incr-gate", ups, dels,
-          tmp("graft-sp26b"))
+          TempDirs.create("graft-sp26b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "incr-gate")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -641,7 +638,7 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .withNativeRocksDb()
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp27a"))
+          .writeAll(TempDirs.create("graft-sp27a"))
         val ups = counts.filter(_._1 < 50).map { case (k, v) =>
           StateRowEncoder.valueRow("Count", k, v * 3, LongCodec, LongCodec, maxPar)
         }
@@ -651,7 +648,7 @@ object StateQueries {
           }
         val base = Savepoints.load(meta1.basePath)
         val meta2 = StateMaintenance.incrementalUpdate(
-          s, base, "gc-gate", ups, dels, tmp("graft-sp27b"))
+          s, base, "gc-gate", ups, dels, TempDirs.create("graft-sp27b"))
         val updated = Savepoints.load(meta2.basePath)
         val report = StateMaintenance.gcSavepoint(base, Seq(updated))
         require(report.deletedFiles.nonEmpty,
@@ -692,20 +689,20 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .withNativeRocksDb()
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp37a"))
+          .writeAll(TempDirs.create("graft-sp37a"))
         val ups1 = counts.filter(_._1 < 50).map { case (k, v) =>
           StateRowEncoder.valueRow("Count", k, v * 3, LongCodec, LongCodec, maxPar)
         }
         val v1 = Savepoints.load(meta1.basePath)
         val meta2 = StateMaintenance.incrementalUpdate(
-          s, v1, "ret-gate", ups1, noDels, tmp("graft-sp37b"))
+          s, v1, "ret-gate", ups1, noDels, TempDirs.create("graft-sp37b"))
         val ups2 = counts.filter(r => r._1 >= 50 && r._1 < 100)
           .map { case (k, v) =>
             StateRowEncoder.valueRow("Count", k, v * 5, LongCodec, LongCodec, maxPar)
           }
         val v2 = Savepoints.load(meta2.basePath)
         val meta3 = StateMaintenance.incrementalUpdate(
-          s, v2, "ret-gate", ups2, noDels, tmp("graft-sp37c"))
+          s, v2, "ret-gate", ups2, noDels, TempDirs.create("graft-sp37c"))
         val head = Savepoints.load(meta3.basePath)
         // newest-only retention: retire the chain oldest-first, each
         // pass scoped to the head's live closure
@@ -742,7 +739,7 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(LongCodec)
           .createNewValueState("OrderCount", counts, LongCodec)
-          .writeAll(tmp("graft-sp28"))
+          .writeAll(TempDirs.create("graft-sp28"))
         val re = Savepoints.load(meta.basePath)
         require(re.operator("v4-src").fullyFinished,
           "fully-finished marker lost through the v4 envelope")
@@ -786,7 +783,7 @@ object StateQueries {
           .createNewValueState("Count", counts, LongCodec)
           .defineState(StateMeta("StatusCounts", StateKind.Map, "long", Some("string")))
           .addKeyedStateRows(mapRows)
-          .writeAll(tmp("graft-sp14"))
+          .writeAll(TempDirs.create("graft-sp14"))
         StateMaintenance.validate(s, Savepoints.load(meta.basePath), "val-op")
           .select("state", "n_rows", "ok_rows", "bad_rows")
       }),
@@ -822,9 +819,9 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
           .addKeyedStateRows(corrupt.toDF())
-          .writeAll(tmp("graft-sp15a"))
+          .writeAll(TempDirs.create("graft-sp15a"))
         val meta2 = StateMaintenance.repair(
-          s, Savepoints.load(meta1.basePath), "repair-op", tmp("graft-sp15b"))
+          s, Savepoints.load(meta1.basePath), "repair-op", TempDirs.create("graft-sp15b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "repair-op")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")
@@ -852,7 +849,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("op-a", 4, 128), "op-a")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp13a"))
+          .writeAll(TempDirs.create("graft-sp13a"))
         // clone: add a state-less op-b to the savepoint, feed it op-a's
         // raw rows; op-a's files pass through untouched (W8)
         val opB = graft.core.meta.OperatorStateMeta("op-b",
@@ -864,7 +861,7 @@ object StateQueries {
           .withKeyCodec(LongCodec)
           .defineState(StateMeta("Count", StateKind.Value, "long"))
           .addKeyedStateRows(rowsA)
-          .writeAll(tmp("graft-sp13b"))
+          .writeAll(TempDirs.create("graft-sp13b"))
         val loaded = Savepoints.load(meta2.basePath)
         Seq("op-a", "op-b").map { uid =>
           Savepoints.reader(s, loaded, uid)
@@ -894,14 +891,14 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("typed-op", 4, 128), "typed-op")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp20a"))
+          .writeAll(TempDirs.create("graft-sp20a"))
         val asString = Savepoints.reader(s, Savepoints.load(meta1.basePath), "typed-op")
           .readValueStates[Long, Long]("Count")
           .map { case (k, v) => (k, s"count=$v") }
         val meta2 = Savepoints
           .writer(s, Savepoints.load(meta1.basePath), "typed-op")
           .createNewValueState("Count", asString, StringCodec)
-          .writeAll(tmp("graft-sp20b"))
+          .writeAll(TempDirs.create("graft-sp20b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "typed-op")
           .readValueStates[Long, String]("Count")
           .toDF("key", "label")
@@ -929,13 +926,13 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("reloc-op", 4, 128), "reloc-op")
           .withKeyCodec(LongCodec)
           .createNewValueState("Cnt", counts, LongCodec)
-          .writeAll(tmp("graft-sp35a"))
+          .writeAll(TempDirs.create("graft-sp35a"))
         // relocate: byte-for-byte copy of the WHOLE savepoint tree
         // (metadata included, handles untouched) — a valid savepoint
         // must load from wherever the tree lands, because its handles
         // are stored savepoint-relative
         val src = java.nio.file.Paths.get(meta1.basePath)
-        val dst = java.nio.file.Paths.get(tmp("graft-sp35b"))
+        val dst = java.nio.file.Paths.get(TempDirs.create("graft-sp35b"))
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
           val rel = src.relativize(p)
@@ -973,7 +970,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("ren-old", 4, 128), "ren-old")
           .withKeyCodec(LongCodec)
           .createNewValueState("Cnt", counts, LongCodec)
-          .writeAll(tmp("graft-sp34a"))
+          .writeAll(TempDirs.create("graft-sp34a"))
         val loaded = Savepoints.load(meta1.basePath)
         // handles are stored savepoint-relative; pin them to the source
         // directory so the renamed `_metadata` (written elsewhere)
@@ -985,7 +982,7 @@ object StateQueries {
               keyedFiles = o.keyedFiles.map(loaded.absolutized))
           else o
         })
-        val dir2 = tmp("graft-sp34b")
+        val dir2 = TempDirs.create("graft-sp34b")
         MetadataIO.write(dir2, renamed)
         Savepoints.reader(s, Savepoints.load(dir2), "ren-new")
           .readValueStates[Long, Long]("Cnt")
@@ -1016,7 +1013,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("key-op", 4, 128), "key-op")
           .withKeyCodec(LongCodec)
           .createNewValueState("Cnt", counts, LongCodec)
-          .writeAll(tmp("graft-sp33a"))
+          .writeAll(TempDirs.create("graft-sp33a"))
         val migrated = Savepoints
           .reader(s, Savepoints.load(meta1.basePath), "key-op")
           .readValueStates[Long, Long]("Cnt")
@@ -1025,7 +1022,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("key-op", 8, 256), "key-op")
           .withKeyCodec(StringCodec)
           .createNewValueState("Cnt", migrated, LongCodec)
-          .writeAll(tmp("graft-sp33b"))
+          .writeAll(TempDirs.create("graft-sp33b"))
         Savepoints.reader(s, Savepoints.load(meta2.basePath), "key-op")
           .readValueStates[String, Long]("Cnt")
           .toDF("key", "cnt")
@@ -1061,7 +1058,7 @@ object StateQueries {
           .defineState(StateMeta(OperatorStateReader.WindowContents,
             StateKind.Value, "long", None, Codecs.FlinkTimeWindowCodec.id))
           .addKeyedStateRows(rows)
-          .writeAll(tmp("graft-sp19"))
+          .writeAll(TempDirs.create("graft-sp19"))
         Savepoints.reader(s, Savepoints.load(meta.basePath), "win-op")
           .readWindowStatesWithBounds[Long, Long]()
           .toDF("key", "window_start", "window_end", "cnt")
@@ -1091,7 +1088,7 @@ object StateQueries {
           .withDialect(graft.core.meta.Dialect.Flink)
           .withKeyCodec(Codecs.FlinkStringCodec)
           .createNewValueState("Balance", bal, LongCodec)
-          .writeAll(tmp("graft-sp17f"))
+          .writeAll(TempDirs.create("graft-sp17f"))
         val raw = Savepoints.reader(s, Savepoints.load(metaF.basePath), "mig-op")
           .getAllUnreadKeyedStateRows
         val metaG = Savepoints
@@ -1099,7 +1096,7 @@ object StateQueries {
           .withKeyCodec(Codecs.FlinkStringCodec)
           .defineState(StateMeta("Balance", StateKind.Value, "long"))
           .addKeyedStateRows(raw)
-          .writeAll(tmp("graft-sp17g"))
+          .writeAll(TempDirs.create("graft-sp17g"))
         Savepoints.reader(s, Savepoints.load(metaG.basePath), "mig-op")
           .readValueStates[String, Long]("Balance")
           .toDF("key", "cents")
@@ -1136,12 +1133,12 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("merge-src-a", 4, 128), "merge-src-a")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", oddCounts, LongCodec)
-          .writeAll(tmp("graft-sp16a"))
+          .writeAll(TempDirs.create("graft-sp16a"))
         val metaB = Savepoints
           .writer(s, Savepoints.bootstrap("merge-src-b", 4, 128), "merge-src-b")
           .withKeyCodec(LongCodec)
           .createNewValueState("Cents", evenCents, LongCodec)
-          .writeAll(tmp("graft-sp16b"))
+          .writeAll(TempDirs.create("graft-sp16b"))
         val rowsA = Savepoints.reader(s, metaA, "merge-src-a").getAllUnreadKeyedStateRows
         val rowsB = Savepoints.reader(s, metaB, "merge-src-b").getAllUnreadKeyedStateRows
         val merged = Savepoints
@@ -1150,7 +1147,7 @@ object StateQueries {
           .defineState(StateMeta("Count", StateKind.Value, "long"))
           .defineState(StateMeta("Cents", StateKind.Value, "long"))
           .addKeyedStateRows(rowsA.unionAll(rowsB))
-          .writeAll(tmp("graft-sp16m"))
+          .writeAll(TempDirs.create("graft-sp16m"))
         val r = Savepoints.reader(s, Savepoints.load(merged.basePath), "merged")
         val cnt = r.readValueStates[Long, Long]("Count").toDF("key", "odd_cnt")
         val cents = r.readValueStates[Long, Long]("Cents").toDF("key", "even_cents")
@@ -1217,7 +1214,7 @@ object StateQueries {
           .addKeyedStateRows(lists)
           .defineState(StateMeta("StatusCounts", StateKind.Map, "long", Some("string")))
           .addKeyedStateRows(maps)
-          .writeAll(tmp("graft-sp29"))
+          .writeAll(TempDirs.create("graft-sp29"))
         val loaded = Savepoints.load(meta.basePath)
         val op = loaded.operators.find(_.uid == "inv-op").get
         val kindName = Map(StateKind.Value -> "value",
@@ -1265,7 +1262,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("plan-op", 4, 128), "plan-op")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp30"))
+          .writeAll(TempDirs.create("graft-sp30"))
         val op = Savepoints.load(meta.basePath).operator("plan-op")
         StateMaintenance.rescalePlan(s, op.maxParallelism,
           op.parallelism, newParallelism = 6)
@@ -1316,7 +1313,7 @@ object StateQueries {
               Catalog.t(s, d, "orders").filter(pred)
                 .groupBy(col("o_custkey")).count().as[(Long, Long)],
               LongCodec)
-            .writeAll(tmp(s"graft-sp31-$tag"))
+            .writeAll(TempDirs.create(s"graft-sp31-$tag"))
         val c1 = snapshot(col("o_orderkey") % 3 === 0, "a")
         val c2 = snapshot(col("o_orderkey") % 3 <= 1, "b")
         val c3 = snapshot(lit(true), "c")
@@ -1362,7 +1359,7 @@ object StateQueries {
           .writer(s, Savepoints.bootstrap("op-counts", 4, 128), "op-counts")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", counts, LongCodec)
-          .writeAll(tmp("graft-sp32a"))
+          .writeAll(TempDirs.create("graft-sp32a"))
         val opB = graft.core.meta.OperatorStateMeta("op-balances",
           Identifiers.operatorId("op-balances"), 4, 128, None, Seq.empty,
           compression = true, Seq.empty)
@@ -1375,7 +1372,7 @@ object StateQueries {
             "op-balances")
           .withKeyCodec(LongCodec)
           .createNewValueState("Cents", balances, LongCodec)
-          .writeAll(tmp("graft-sp32b"))
+          .writeAll(TempDirs.create("graft-sp32b"))
         val loaded = Savepoints.load(meta2.basePath)
         val cnt = Savepoints.reader(s, loaded, "op-counts")
           .readValueStates[Long, Long]("Count").toDF("key", "cnt")
@@ -1408,7 +1405,7 @@ object StateQueries {
           .withKeyCodec(Codecs.FlinkStringCodec)
           .createNewValueState("Cents", cents, LongCodec)
           .createNewValueState("Name", names, Codecs.FlinkStringCodec)
-          .writeAll(tmp("graft-sp12"))
+          .writeAll(TempDirs.create("graft-sp12"))
         Savepoints.reader(s, Savepoints.load(meta.basePath), "sz-op")
           .getAllUnreadKeyedStateRows
           .groupBy(col("stateName").as("state"))
@@ -1432,7 +1429,7 @@ object StateQueries {
         val counts = Catalog.t(s, d, "orders")
           .groupBy(col("o_custkey")).count()
           .as[(Long, Long)].collect()
-        val dir = tmp("graft-sp05")
+        val dir = TempDirs.create("graft-sp05")
         val rows = counts.map { case (k, v) =>
           StateRowEncoder.valueRow("Count", k, v, LongCodec, LongCodec, maxPar)
         }
@@ -1473,8 +1470,8 @@ object StateQueries {
         val maxPar = 128
         val counts = Catalog.t(s, d, "orders")
           .groupBy(col("o_custkey")).count().as[(Long, Long)]
-        val chainDirs = Seq(tmp("graft-sp36a"), tmp("graft-sp36b"),
-          tmp("graft-sp36c"))
+        val chainDirs = Seq(TempDirs.create("graft-sp36a"), TempDirs.create("graft-sp36b"),
+          TempDirs.create("graft-sp36c"))
         val meta1 = Savepoints
           .writer(s, Savepoints.bootstrap("compact-gate", 4, maxPar),
             "compact-gate")
@@ -1516,12 +1513,12 @@ object StateQueries {
             "compact-gate")
           .withKeyCodec(LongCodec)
           .createNewValueState("Count", live, LongCodec)
-          .writeAll(tmp("graft-sp36d"))
+          .writeAll(TempDirs.create("graft-sp36d"))
         val result = Savepoints.load(compacted.basePath)
         // retire the ENTIRE chain before the lazy read below runs: the
         // oracle row exists only if compaction is truly self-contained
         chainDirs.foreach(p =>
-          graft.TempDirs.deleteNow(java.nio.file.Paths.get(p)))
+          TempDirs.deleteNow(java.nio.file.Paths.get(p)))
         Savepoints.reader(s, result, "compact-gate")
           .readValueStates[Long, Long]("Count")
           .toDF("key", "cnt")

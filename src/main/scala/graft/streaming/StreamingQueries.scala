@@ -27,6 +27,15 @@ final case class UserSession(
 object StreamingQueries {
 
   private val counter = new AtomicInteger(0)
+  // Stateful streaming ops open one state store PER shuffle partition
+  // (stream-stream joins open four); at test scale the store setup
+  // dominates, so every stream of this family runs with few partitions.
+  // A real deployment sizes this to keyspace/executor count instead.
+  // Borrowed through Catalog.withConfs, so batch queries keep the
+  // session default. A stream gives it back only after
+  // processAllAvailable/stop: micro-batch planning reads the conf
+  // lazily during the run, not at start().
+  private val StreamStatePartitions = "spark.sql.shuffle.partitions" -> "8"
   private val GapMs = 1800000L
   private val GapMs2 = 3600000L // st04 attribution window (1 hour in ms)
   // st28 monitor family: a fixed 4-band × 12-bit PREFIX of the maximal
@@ -61,24 +70,15 @@ object StreamingQueries {
       build: DataFrame => DataFrame): DataFrame = {
     val rawSchema = s.read.parquet(s"$d/$table.parquet").schema
     val name = s"${tag}_mem_${counter.incrementAndGet()}"
-    // Stateful streaming ops open one state store PER shuffle partition
-    // (stream-stream joins open four); at test scale the store setup
-    // dominates, so run streaming with few partitions. A real deployment
-    // sizes this to keyspace/executor count instead. The conf is
-    // restored after the query: batch queries keep the session default.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    Catalog.withConfs(s, StreamStatePartitions) {
       // readStream requires a directory: stream the sf dir, globbed to
       // the events table only
       val raw = Catalog.normalizeTs(s.readStream.schema(rawSchema)
         .option("pathGlobFilter", s"$table.parquet").parquet(d))
       val q = build(raw).writeStream
         .outputMode(outputMode).format("memory").queryName(name).start()
-      // restore only after the run: micro-batch planning reads the conf
-      // lazily during processAllAvailable, not at start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     // the memory table lives in the session after stop
     s.table(name)
   }
@@ -397,31 +397,25 @@ object StreamingQueries {
       (s, d) => {
         val rawSchema = s.read.parquet(s"$d/events.parquet").schema
         // the returned DataFrame lazily SCANS outDir, so it cannot be
-        // deleted inline — it is cleaned by the JVM-exit hook; the
-        // checkpoint dir is not referenced by the result and is
-        // deleted as soon as the stream stops
-        val outDir = StreamingQueries.trackTemp(java.nio.file.Files
-          .createTempDirectory("graft-st11-out")).toString
-        val ckptPath = java.nio.file.Files.createTempDirectory("graft-st11-ckpt")
-        val ckpt = ckptPath.toString
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          val raw = s.readStream.schema(rawSchema)
-            .option("pathGlobFilter", "events.parquet").parquet(d)
-          val q = raw.filter(col("event_type") === "purchase")
-            .select(col("event_id"), col("user_id"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            // exactly-once across restarts: (target, batchId) is the
-            // write key (StreamingSinkSpec proves replay + restart)
-            .foreachBatch(StreamingQueries.idempotentParquetBatchWriter(outDir))
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        } finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          StreamingQueries.deleteRecursively(ckptPath)
+        // deleted inline — it is cleaned at JVM exit; the checkpoint
+        // dir is not referenced by the result and is deleted as soon as
+        // the stream stops
+        val outDir = graft.TempDirs.create("graft-st11-out")
+        graft.TempDirs.scoped("graft-st11-ckpt") { ckpt =>
+          Catalog.withConfs(s, StreamStatePartitions) {
+            val raw = s.readStream.schema(rawSchema)
+              .option("pathGlobFilter", "events.parquet").parquet(d)
+            val q = raw.filter(col("event_type") === "purchase")
+              .select(col("event_id"), col("user_id"),
+                expr("cast(round(value * 100) as bigint)").as("cents"))
+              .writeStream
+              .option("checkpointLocation", ckpt.toString)
+              // exactly-once across restarts: (target, batchId) is the
+              // write key (StreamingSinkSpec proves replay + restart)
+              .foreachBatch(StreamingQueries.idempotentParquetBatchWriter(outDir))
+              .start()
+            try q.processAllAvailable() finally q.stop()
+          }
         }
         s.read.parquet(outDir).select("event_id", "user_id", "cents")
       }),
@@ -771,17 +765,11 @@ object StreamingQueries {
         val schema = new org.apache.spark.sql.types.StructType()
           .add("doc_id", "long").add("text", "string").add("lang", "string")
         val name = s"st15_mem_${counter.incrementAndGet()}"
-        // round 17: st15 was the one stream builder NOT applying the
-        // family's few-partitions override (runToMemorySink/st11/st24
-        // all run streams at 8), so each of its three file-trigger
-        // batches opened and committed a state store per SESSION
-        // shuffle partition — JobProfile measured ~0.8 s/task of store
-        // setup across 32 tasks per batch. Same rule, same rationale:
-        // a real deployment sizes state partitions to keyspace, not to
-        // this box. The conf is restored after the run.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
+        // without the family's few-partitions rule each of the three
+        // file-trigger batches opened and committed a state store per
+        // SESSION shuffle partition (~0.8 s/task of store setup across
+        // 32 tasks per batch)
+        Catalog.withConfs(s, StreamStatePartitions) {
           val q = s.readStream.schema(schema)
             .option("maxFilesPerTrigger", "3").json(dir)
             .groupBy("lang")
@@ -789,10 +777,8 @@ object StreamingQueries {
               sum(expr("graft_polyhash32(text)")).as("text_hash"))
             .writeStream.outputMode("complete")
             .format("memory").queryName(name).start()
-          // restore only after the run: micro-batch planning reads the
-          // conf lazily during processAllAvailable, not at start()
           try q.processAllAvailable() finally q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
         s.table(name)
       }),
 
@@ -1049,26 +1035,21 @@ object StreamingQueries {
              |FROM c JOIN r ON c.user_id = r.user_id AND r.rn = 1""".stripMargin),
       (s, d) => {
         val rawSchema = s.read.parquet(s"$d/events.parquet").schema
-        val snapBase = trackTemp(java.nio.file.Files
-          .createTempDirectory("graft-st24-snap")).toString
-        val ckptPath = java.nio.file.Files.createTempDirectory("graft-st24-ckpt")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          val raw = Catalog.normalizeTs(s.readStream.schema(rawSchema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          val q = raw.select(col("user_id"), col("event_id"),
-              col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"),
-              unix_millis(col("ts")).as("ms"))
-            .writeStream
-            .option("checkpointLocation", ckptPath.toString)
-            .foreachBatch(upsertSnapshotWriter(snapBase))
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        } finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          deleteRecursively(ckptPath)
+        val snapBase = graft.TempDirs.create("graft-st24-snap")
+        graft.TempDirs.scoped("graft-st24-ckpt") { ckptPath =>
+          Catalog.withConfs(s, StreamStatePartitions) {
+            val raw = Catalog.normalizeTs(s.readStream.schema(rawSchema)
+              .option("pathGlobFilter", "events.parquet").parquet(d))
+            val q = raw.select(col("user_id"), col("event_id"),
+                col("event_type"),
+                expr("cast(round(value * 100) as bigint)").as("cents"),
+                unix_millis(col("ts")).as("ms"))
+              .writeStream
+              .option("checkpointLocation", ckptPath.toString)
+              .foreachBatch(upsertSnapshotWriter(snapBase))
+              .start()
+            try q.processAllAvailable() finally q.stop()
+          }
         }
         latestSnapshot(s, snapBase) match {
           case Some(snap) => snap.select(col("user_id"), col("n_events"),
@@ -1179,16 +1160,13 @@ object StreamingQueries {
         import s.implicits._
         val NumBatches = 4L
         val RetainFrom = 2L // keep v2, v3; vacuum v0, v1
-        val snapBase = trackTemp(java.nio.file.Files
-          .createTempDirectory("graft-st25-snap")).toString
+        val snapBase = graft.TempDirs.create("graft-st25-snap")
         val ev = Catalog.t(s, d, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             expr("cast(round(value * 100) as bigint)").as("cents"),
             unix_millis(col("ts")).as("ms"))
         val writeSnap = upsertSnapshotWriter(snapBase)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
+        Catalog.withConfs(s, StreamStatePartitions) {
           // pmod, not %: Spark's % keeps the dividend's sign, so a
           // negative event_id would fall out of EVERY batch slice while
           // the oracle's positive-mod rewrite counts it — the slices
@@ -1196,7 +1174,7 @@ object StreamingQueries {
           (0L until NumBatches).foreach { b =>
             writeSnap(ev.filter(pmod(col("event_id"), lit(NumBatches)) === b), b)
           }
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
         // price every version BEFORE the vacuum: 1-row bounded aggregate
         // per snapshot (4 rows total to the driver, never row data)
         val stats = (0L until NumBatches).map { b =>
@@ -1207,7 +1185,7 @@ object StreamingQueries {
         }
         // vacuum: retire everything older than the retention window
         (0L until RetainFrom).foreach { b =>
-          deleteRecursively(java.nio.file.Paths.get(s"$snapBase/v$b"))
+          graft.TempDirs.deleteNow(java.nio.file.Paths.get(s"$snapBase/v$b"))
         }
         (0L until RetainFrom).foreach { b =>
           require(!new java.io.File(s"$snapBase/v$b").exists(),
@@ -1331,27 +1309,4 @@ object StreamingQueries {
   def idempotentParquetBatchWriter(outDir: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) =>
       batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-
-  // ---------------------------------------------------- temp hygiene
-
-  /** Temp dirs whose contents the RESULT DataFrame still references —
-    * deleted on JVM exit so repeated gate/bench runs do not accumulate
-    * parquet output on disk (same discipline as FlinkMetadataIO's
-    * inline-state staging).
-    */
-  private val tempDirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.nio.file.Path]())
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    tempDirs.forEach(p => try deleteRecursively(p) catch { case _: Throwable => })))
-
-  private[streaming] def trackTemp(p: java.nio.file.Path): java.nio.file.Path = {
-    tempDirs.add(p); p
-  }
-
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
 }

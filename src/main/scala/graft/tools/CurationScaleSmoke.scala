@@ -98,16 +98,11 @@ object CurationScaleSmoke {
       row(copies, "d05_neardup_pairs", nSurv, nPairs, pS)
 
       // stage 3 — d08 connected components = near-dup families.
-      // GRAFT_CC_BCAST_MAX overrides the broadcast-vs-copartition
-      // threshold (the round-14 A/B: per-round broadcasts accumulate
-      // faster than the ContextCleaner reclaims them on long loops)
-      val bcastMax = sys.env.get("GRAFT_CC_BCAST_MAX").map(_.toLong)
-        .getOrElse(GraphAlgs.DefaultBroadcastMaxNodes)
       val (labels, cS) = timed {
         val l = GraphAlgs.connectedComponents(
           survivors.select(col("doc_id").as("id")),
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-          broadcastMaxNodes = bcastMax)
+          broadcastMaxNodes = GraphAlgs.DefaultBroadcastMaxNodes)
           .select(col("id").as("doc_id"), col("component").as("cluster_id"))
           .cache()
         l.count()

@@ -333,21 +333,14 @@ object EpsGraphScaleSmoke {
   private def blockedRow(spark: SparkSession, corpus: DataFrame, n: Long,
       slices: Int, eps: Double, knnK: Int): Unit = {
     import org.apache.spark.sql.expressions.Window
-    import scala.jdk.CollectionConverters._
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f
       (a, (System.nanoTime() - t0) / 1e9)
     }
     def freeGb: Double =
       new java.io.File("/tmp").getUsableSpace / 1e9
-    def rmTree(p: String): Unit = {
-      val d = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(d))
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
     val base = "/tmp/graft-eps-blocked"
-    rmTree(base)
+    graft.TempDirs.deleteNow(java.nio.file.Paths.get(base))
     val candPath = s"$base/cand"
     val verPath = s"$base/verified"
     val (bandsA, rowBitsA) = Similarity.adaptiveFamily(n)

@@ -61,7 +61,7 @@ object SavepointScaleSmoke {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
     val nKeys = if (args.length > 0) args(0).toLong else 5000000L
     val root = if (args.length > 1) args(1)
-      else java.nio.file.Files.createTempDirectory("graft-scale").toString
+      else graft.TempDirs.create("graft-scale") // a caller's dir is kept
     val maxPar = 4096
     val par = 128
 

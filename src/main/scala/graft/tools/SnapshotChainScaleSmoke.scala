@@ -73,7 +73,7 @@ object SnapshotChainScaleSmoke {
     val reclaimed = retire.map(bi => dirBytes(s"$base/v$bi")).sum
     val t0 = System.nanoTime()
     retire.foreach { bi =>
-      StreamingQueries.deleteRecursively(java.nio.file.Paths.get(s"$base/v$bi"))
+      graft.TempDirs.deleteNow(java.nio.file.Paths.get(s"$base/v$bi"))
     }
     val vacS = (System.nanoTime() - t0) / 1e9
     val headRows = spark.read.parquet(s"$base/v${nBatches - 1}").count()
@@ -81,7 +81,7 @@ object SnapshotChainScaleSmoke {
       s""""retired_versions":${retire.size},"reclaimed_bytes":$reclaimed,""" +
       s""""vacuum_s":${"%.1f".format(vacS)},"head_keys":$headRows}""")
 
-    StreamingQueries.deleteRecursively(java.nio.file.Paths.get(base))
+    graft.TempDirs.deleteNow(java.nio.file.Paths.get(base))
     spark.stop()
   }
 }

@@ -94,10 +94,7 @@ object StreamStateScaleSmoke {
         s""""rows_per_s":${(n / kmvS).toLong}}""")
 
       // clean up the shards
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+      graft.TempDirs.deleteNow(java.nio.file.Paths.get(dir))
     }
     spark.stop()
   }

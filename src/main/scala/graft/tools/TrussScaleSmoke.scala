@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   *     and no edge exceeds the planted trussness;
   *   - the handoff: at the smallest scale the local path runs
   *     immediately; at the largest, the first distributed rounds peel
-  *     the background until the survivor set fits the budget
-  *     (GRAFT_DEBUG=1 prints the per-round counts).
+  *     the background until the survivor set fits the budget.
   *
   * Graph generation is distributed and deterministic (hash-of-id
   * targets, no driver materialization). Run:

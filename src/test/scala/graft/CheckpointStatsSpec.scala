@@ -99,9 +99,7 @@ class CheckpointStatsSpec extends AnyFunSuite {
 
   test("severed truncate under DISABLED AQE keeps stock's layout " +
     "(the recoverLayout early-return) and stays correct") {
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    graft.Catalog.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val df = spark.range(512)
         .select(col("id").as("src"), (col("id") % 5).as("lbl"))
         .repartition(4, col("src"))
@@ -115,7 +113,7 @@ class CheckpointStatsSpec extends AnyFunSuite {
       // stats still severed on this path
       assert(severed.queryExecution.optimizedPlan.stats.sizeInBytes ===
         BigInt(spark.sessionState.conf.defaultSizeInBytes))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
   test("recoverLayout with MISALIGNED origin output falls back to " +
@@ -141,15 +139,13 @@ class CheckpointStatsSpec extends AnyFunSuite {
   }
 
   test("recoverLayout with a NON-AQE executed origin returns stock") {
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
     // build an AQE checkpoint first (UnknownPartitioning stored)
     val df = spark.range(128)
       .select(col("id").as("src"))
       .repartition(4, col("src"))
     val l = logicalRdd(df.localCheckpoint(true))
     assert(l.outputPartitioning.isInstanceOf[UnknownPartitioning])
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    graft.Catalog.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val nonAqe = spark.range(128)
         .select(col("id").as("src"))
         .repartition(4, col("src"))
@@ -157,7 +153,7 @@ class CheckpointStatsSpec extends AnyFunSuite {
       val (part, _) = CheckpointStats.recoverLayout(nonAqe, l)
       assert(part === l.outputPartitioning,
         "non-AQE origin must keep stock partitioning")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
   test("severed truncate preserves values and schema on an empty frame") {

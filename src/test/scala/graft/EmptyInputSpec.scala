@@ -2,8 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.jdk.CollectionConverters._
-
 /** Empty-input contract: at 100 TB an empty shard / day / partition is
   * routine, not exceptional. Every operator must either succeed with a
   * well-defined (usually empty) result, or refuse with an EXPLICIT
@@ -25,16 +23,7 @@ class EmptyInputSpec extends AnyFunSuite {
     val d = TempDirs.create("graft-emptyfix")
     Catalog.tableNames.foreach { t =>
       val src = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-empty-part")
-      src.limit(0).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(fail(s"no part file for $t"))
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(d, s"$t.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+      TestIo.writeSingleFile(src.limit(0), d, t)
     }
     d
   }

@@ -61,7 +61,7 @@ class FlinkFormatSpec extends AnyFunSuite {
 
   test("golden fixture is byte-stable against the independent assembler") {
     val dir = resourceDir
-    val tmp = Files.createTempDirectory("flink-golden-regen")
+    val tmp = TempDirs.track(Files.createTempDirectory("flink-golden-regen"))
     golden.writeFixture(tmp)
     assert(Files.readAllBytes(tmp.resolve("_metadata")).toSeq ===
       Files.readAllBytes(dir.resolve("_metadata")).toSeq, "_metadata drift")
@@ -108,7 +108,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val base = SavepointMeta(golden.CheckpointId - 1, "", Seq(
       OperatorStateMeta(Uid, Identifiers.operatorId(Uid), 1, MaxPar,
         None, Seq.empty, compression = false, Seq.empty)))
-    val outDir = Files.createTempDirectory("flink-writer-golden")
+    val outDir = TempDirs.track(Files.createTempDirectory("flink-writer-golden"))
     Files.delete(outDir) // writer creates it (NO_OVERWRITE semantics)
     val meta = Savepoints.writer(spark, base, Uid)
       .withDialect(Dialect.Flink)
@@ -138,7 +138,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val loaded = Savepoints.load(resourceDir.toString)
     val rows = Savepoints.reader(spark, loaded, Uid).getAllUnreadKeyedStateRows
     // Flink-dialect rewrite: _metadata re-emits magic + length + payload
-    val outF = Files.createTempDirectory("flink-master-f"); Files.delete(outF)
+    val outF = TempDirs.track(Files.createTempDirectory("flink-master-f")); Files.delete(outF)
     val metaF = Savepoints.writer(spark, loaded, Uid)
       .addKeyedStateRows(rows)
       .writeAll(outF.toString)
@@ -149,7 +149,7 @@ class FlinkFormatSpec extends AnyFunSuite {
       Seq(FlinkGoldenAssembler.masterStatePayload().toSeq))
     // graft-dialect rewrite carries the blob too (v04 trailing section),
     // so Flink -> graft -> Flink loses nothing
-    val outG = Files.createTempDirectory("flink-master-g"); Files.delete(outG)
+    val outG = TempDirs.track(Files.createTempDirectory("flink-master-g")); Files.delete(outG)
     val metaG = Savepoints.writer(spark, reF, Uid)
       .withDialect(Dialect.Graft)
       .addKeyedStateRows(Savepoints.reader(spark, reF, Uid).getAllUnreadKeyedStateRows)
@@ -157,7 +157,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val reG = Savepoints.load(metaG.basePath)
     assert(reG.masterStates.map(_.toSeq) ===
       Seq(FlinkGoldenAssembler.masterStatePayload().toSeq))
-    val outF2 = Files.createTempDirectory("flink-master-f2"); Files.delete(outF2)
+    val outF2 = TempDirs.track(Files.createTempDirectory("flink-master-f2")); Files.delete(outF2)
     val metaF2 = Savepoints.writer(spark, reG, Uid)
       .withDialect(Dialect.Flink)
       .addKeyedStateRows(Savepoints.reader(spark, reG, Uid).getAllUnreadKeyedStateRows)
@@ -176,7 +176,7 @@ class FlinkFormatSpec extends AnyFunSuite {
       OperatorStateMeta("cmp-op", Identifiers.operatorId("cmp-op"), 2, 128,
         None, Seq.empty, compression = true, Seq.empty)))
     val values = (1L to 500L).map(k => (s"key-$k", k * 3))
-    val outDir = Files.createTempDirectory("flink-compressed")
+    val outDir = TempDirs.track(Files.createTempDirectory("flink-compressed"))
     Files.delete(outDir)
     val meta = Savepoints.writer(spark, base, "cmp-op")
       .withDialect(Dialect.Flink)
@@ -208,7 +208,7 @@ class FlinkFormatSpec extends AnyFunSuite {
       OperatorStateMeta("nk-op", Identifiers.operatorId("nk-op"), 2, 128,
         None, Seq.empty, compression = false, Seq.empty,
         Map(0 -> backend0))))
-    val outDir = Files.createTempDirectory("flink-nonkeyed")
+    val outDir = TempDirs.track(Files.createTempDirectory("flink-nonkeyed"))
     Files.delete(outDir)
     // metadata-only write in the Flink dialect (no keyed rows)
     val meta = Savepoints.writer(spark, base, "nk-op")
@@ -247,7 +247,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val base = SavepointMeta(11L, "", Seq(
       OperatorStateMeta("win-op", Identifiers.operatorId("win-op"), 2, 128,
         None, Seq.empty, compression = true, Seq.empty)))
-    val outDir = Files.createTempDirectory("flink-window")
+    val outDir = TempDirs.track(Files.createTempDirectory("flink-window"))
     Files.delete(outDir)
     val meta = Savepoints.writer(spark, base, "win-op")
       .withDialect(Dialect.Flink)
@@ -277,12 +277,12 @@ class FlinkFormatSpec extends AnyFunSuite {
       w.writeByte(0)
       ("v", w.toBytes, LongCodec.toBytes(k * 11))
     }
-    val ckpt = Files.createTempDirectory("flink-inc-src").resolve("chk")
+    val ckpt = TempDirs.track(Files.createTempDirectory("flink-inc-src")).resolve("chk")
     RocksDbCheckpoints.createCheckpoint(ckpt.toString, rows)
     val proxy = FlinkProxyIO.toBytes(FlinkProxyIO.Proxy(compression = false,
       keyCodecId = "long", states = Seq(StateMeta("v", StateKind.Value, "long"))))
     // hand-assemble _metadata with an INCREMENTAL_KEY_GROUPS_HANDLE
-    val dir = Files.createTempDirectory("flink-inc-meta")
+    val dir = TempDirs.track(Files.createTempDirectory("flink-inc-meta"))
     val bos = new ByteArrayOutputStream()
     val d = new DataOutputStream(bos)
     d.writeInt(0x4960672d); d.writeInt(2)
@@ -359,7 +359,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
 
     // the graft layout: 2 subtasks x 64 key groups, uneven values
-    val graftDir = Files.createTempDirectory("graft-split-tiles")
+    val graftDir = TempDirs.track(Files.createTempDirectory("graft-split-tiles"))
     Files.delete(graftDir)
     Savepoints.writer(spark, Savepoints.bootstrap("tiles", 2, MaxPar), "tiles")
       .withKeyCodec(Codecs.LongCodec)
@@ -464,7 +464,7 @@ class FlinkFormatSpec extends AnyFunSuite {
       OperatorStateMeta("wide-op", Identifiers.operatorId("wide-op"), 2, 128,
         None, Seq.empty, compression = true, Seq.empty)))
     val values = (1L to 300L).map(k => (k, k * 7))
-    val out1 = Files.createTempDirectory("flink-wide-a")
+    val out1 = TempDirs.track(Files.createTempDirectory("flink-wide-a"))
     Files.delete(out1)
     val meta1 = Savepoints.writer(spark, base, "wide-op")
       .withDialect(Dialect.Flink)
@@ -476,7 +476,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     // byte, which stays < 0x80 for any maxPar <= 32768
     val rows = Savepoints.reader(spark, Savepoints.load(meta1.basePath), "wide-op")
       .getAllUnreadKeyedStateRows
-    val out2 = Files.createTempDirectory("flink-wide-b")
+    val out2 = TempDirs.track(Files.createTempDirectory("flink-wide-b"))
     Files.delete(out2)
     val meta2 = Savepoints.writer(spark, Savepoints.load(meta1.basePath), "wide-op")
       .addKeyedStateRows(rows)
@@ -492,7 +492,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = FlinkV3GoldenAssembler.resourceDir
     // byte-stability against the independent assembler
-    val tmp = Files.createTempDirectory("flink-v3-regen")
+    val tmp = TempDirs.track(Files.createTempDirectory("flink-v3-regen"))
     FlinkV3GoldenAssembler.writeFixture(tmp)
     assert(Files.readAllBytes(tmp.resolve("_metadata")).toSeq ===
       Files.readAllBytes(dir.resolve("_metadata")).toSeq, "_metadata drift")
@@ -532,7 +532,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     assert(op.rawOperatorState(0).toSeq === golden.rawOperatorSection().toSeq)
     // full rewrite with rows: raw sections must ride along untouched
     val rows = Savepoints.reader(spark, loaded, Uid).getAllUnreadKeyedStateRows
-    val out = Files.createTempDirectory("flink-raw-rt"); Files.delete(out)
+    val out = TempDirs.track(Files.createTempDirectory("flink-raw-rt")); Files.delete(out)
     val meta2 = Savepoints.writer(spark, loaded, Uid)
       .addKeyedStateRows(rows)
       .writeAll(out.toString)
@@ -553,14 +553,14 @@ class FlinkFormatSpec extends AnyFunSuite {
   test("raw state survives a Flink -> graft -> Flink rewrite chain") {
     import spark.implicits._
     val loaded = Savepoints.load(rawResourceDir.toString)
-    val outG = Files.createTempDirectory("flink-raw-g"); Files.delete(outG)
+    val outG = TempDirs.track(Files.createTempDirectory("flink-raw-g")); Files.delete(outG)
     val metaG = Savepoints.writer(spark, loaded, Uid)
       .withDialect(Dialect.Graft)
       .addKeyedStateRows(Savepoints.reader(spark, loaded, Uid).getAllUnreadKeyedStateRows)
       .writeAll(outG.toString)
     val reG = Savepoints.load(metaG.basePath)
     assert(reG.operator(Uid).rawKeyedState(0).toSeq === golden.rawKeyedSection().toSeq)
-    val outF = Files.createTempDirectory("flink-raw-f"); Files.delete(outF)
+    val outF = TempDirs.track(Files.createTempDirectory("flink-raw-f")); Files.delete(outF)
     val metaF = Savepoints.writer(spark, reG, Uid)
       .withDialect(Dialect.Flink)
       .addKeyedStateRows(Savepoints.reader(spark, reG, Uid).getAllUnreadKeyedStateRows)
@@ -576,7 +576,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     import spark.implicits._
     val loaded = Savepoints.load(rawResourceDir.toString)
     val rows = Savepoints.reader(spark, loaded, Uid).getAllUnreadKeyedStateRows
-    val out = Files.createTempDirectory("flink-raw-rs"); Files.delete(out)
+    val out = TempDirs.track(Files.createTempDirectory("flink-raw-rs")); Files.delete(out)
     val e = intercept[IllegalArgumentException] {
       Savepoints.writer(spark, loaded, Uid)
         .addKeyedStateRows(rows)
@@ -590,7 +590,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     "decodes through P1: coordinator slot, relative handle, channel state") {
     import spark.implicits._
     val dir = FlinkV3GoldenAssembler.v3MetaResourceDir
-    val tmp = Files.createTempDirectory("flink-v3meta-regen")
+    val tmp = TempDirs.track(Files.createTempDirectory("flink-v3meta-regen"))
     FlinkV3GoldenAssembler.writeV3MetaFixture(tmp)
     assert(Files.readAllBytes(tmp.resolve("_metadata")).toSeq ===
       Files.readAllBytes(dir.resolve("_metadata")).toSeq, "_metadata drift")
@@ -607,7 +607,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     "relative handle, and keyed decode through the new envelope") {
     import spark.implicits._
     val dir = FlinkV3GoldenAssembler.v4MetaResourceDir
-    val tmp = Files.createTempDirectory("flink-v4meta-regen")
+    val tmp = TempDirs.track(Files.createTempDirectory("flink-v4meta-regen"))
     FlinkV3GoldenAssembler.writeV4MetaFixture(tmp)
     assert(Files.readAllBytes(tmp.resolve("_metadata")).toSeq ===
       Files.readAllBytes(dir.resolve("_metadata")).toSeq, "_metadata drift")
@@ -628,7 +628,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     import spark.implicits._
     val meta = Savepoints.load(FlinkV3GoldenAssembler.v4MetaResourceDir.toString)
     // metadata-level rewrite: markers present -> v4 envelope selected
-    val out = Files.createTempDirectory("flink-v4-rt"); Files.delete(out)
+    val out = TempDirs.track(Files.createTempDirectory("flink-v4-rt")); Files.delete(out)
     FlinkMetadataIO.write(out.toString, meta)
     val written = Files.readAllBytes(Paths.get(out.toString, "_metadata"))
     assert(java.nio.ByteBuffer.wrap(written, 4, 4).getInt === 4, "v4 envelope")
@@ -674,7 +674,7 @@ class FlinkFormatSpec extends AnyFunSuite {
           fullyFinished = fully, finishedSubtasks = finished)
       }
       val meta = SavepointMeta(i.toLong, "", ops, Dialect.Flink)
-      val out = Files.createTempDirectory(s"flink-v4-prop$i"); Files.delete(out)
+      val out = TempDirs.track(Files.createTempDirectory(s"flink-v4-prop$i")); Files.delete(out)
       FlinkMetadataIO.write(out.toString, meta)
       val written = Files.readAllBytes(Paths.get(out.toString, "_metadata"))
       val expectV4 = ops.exists(o => o.fullyFinished || o.finishedSubtasks.nonEmpty)
@@ -706,7 +706,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     d.writeByte(0)  // coordinator: null
     d.writeInt(-1)  // sentinel in a v3 file: corrupt
     d.flush()
-    val dir = Files.createTempDirectory("flink-v3-badsentinel")
+    val dir = TempDirs.track(Files.createTempDirectory("flink-v3-badsentinel"))
     Files.write(dir.resolve("_metadata"), bos.toByteArray)
     val e = intercept[IllegalArgumentException](Savepoints.load(dir.toString))
     assert(e.getMessage.contains("bad subtask count"), e.getMessage)
@@ -716,7 +716,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val live = meta.operator(FlinkV3GoldenAssembler.V4Uid)
     val contradiction = meta.copy(operators =
       Seq(live.copy(fullyFinished = true)))
-    val out = Files.createTempDirectory("flink-v4-contradiction"); Files.delete(out)
+    val out = TempDirs.track(Files.createTempDirectory("flink-v4-contradiction")); Files.delete(out)
     val e2 = intercept[IllegalArgumentException](
       FlinkMetadataIO.write(out.toString, contradiction))
     assert(e2.getMessage.contains("fully finished"), e2.getMessage)
@@ -774,7 +774,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     d.writeByte(0) // raw keyed: null
     d.writeInt(0); d.writeInt(0) // channel state: empty
     d.flush()
-    val dir = Files.createTempDirectory("flink-v3-coord")
+    val dir = TempDirs.track(Files.createTempDirectory("flink-v3-coord"))
     Files.write(dir.resolve("_metadata"), bos.toByteArray)
     val meta = Savepoints.load(dir.toString)
     val op = meta.operator("coord-op")
@@ -783,7 +783,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     assert(op.coordinatorState.get.toSeq.containsSlice(coord.toSeq))
     // rewrite: coordinator presence selects the v3 envelope, and the
     // bytes replay exactly
-    val out = Files.createTempDirectory("flink-v3-coord-out"); Files.delete(out)
+    val out = TempDirs.track(Files.createTempDirectory("flink-v3-coord-out")); Files.delete(out)
     FlinkMetadataIO.write(out.toString, meta)
     val written = Files.readAllBytes(
       java.nio.file.Paths.get(out.toString, "_metadata"))
@@ -829,7 +829,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val base = SavepointMeta(21L, "", Seq(
       OperatorStateMeta("t-op", Identifiers.operatorId("t-op"), 1, 16,
         None, Seq.empty, compression = false, Seq.empty)))
-    val out = Files.createTempDirectory("flink-timers"); Files.delete(out)
+    val out = TempDirs.track(Files.createTempDirectory("flink-timers")); Files.delete(out)
     val meta = Savepoints.writer(spark, base, "t-op")
       .withDialect(Dialect.Flink)
       .withKeyCodec(Codecs.LongCodec)
@@ -838,7 +838,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     val loaded = Savepoints.load(meta.basePath)
     val withTimers = loaded.withReplacedOperators(Seq(
       loaded.operator("t-op").copy(rawKeyedState = Map(0 -> section))))
-    val out2 = Files.createTempDirectory("flink-timers2"); Files.delete(out2)
+    val out2 = TempDirs.track(Files.createTempDirectory("flink-timers2")); Files.delete(out2)
     val meta2 = Savepoints.writer(spark, withTimers, "t-op")
       .addKeyedStateRows(Savepoints.reader(spark, withTimers, "t-op")
         .getAllUnreadKeyedStateRows)
@@ -889,7 +889,7 @@ class FlinkFormatSpec extends AnyFunSuite {
     d.writeByte(0)  // managed keyed: null
     d.writeByte(0)  // raw keyed: null
     d.flush()
-    val dir = Files.createTempDirectory("flink-raw-op")
+    val dir = TempDirs.track(Files.createTempDirectory("flink-raw-op"))
     Files.write(dir.resolve("_metadata"), bos.toByteArray)
     val meta = Savepoints.load(dir.toString) // must not throw
     val op = meta.operator("raw-op")
@@ -917,7 +917,7 @@ class FlinkFormatSpec extends AnyFunSuite {
       d.writeInt(0x4960672d); d.writeInt(99); d.flush()
       bos.toByteArray
     }
-    val dir1 = Files.createTempDirectory("flink-bad-v")
+    val dir1 = TempDirs.track(Files.createTempDirectory("flink-bad-v"))
     Files.write(dir1.resolve("_metadata"), badVersion)
     val e1 = intercept[IllegalArgumentException] {
       Savepoints.load(dir1.toString)

@@ -30,7 +30,7 @@ class IngestSpec extends AnyFunSuite {
       (4L, "tab\tand trailing space "),
       (5L, "中文 und ümlaut"),
       (6L, "")).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-csv").toString
+    val dir = TempDirs.create("graft-ingest-csv")
     // whitespace preservation is opt-in: the univocity writer/parser trim
     // trailing whitespace by default (same flags set in i02's path)
     hostile.write.mode("overwrite").option("header", "true")
@@ -62,14 +62,14 @@ class IngestSpec extends AnyFunSuite {
       StructField("id", LongType), StructField("v", StringType)))
     val want = hostile.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
-    val avroDir = java.nio.file.Files.createTempDirectory("graft-ingest-avro").toString
+    val avroDir = TempDirs.create("graft-ingest-avro")
     val avro = "org.apache.spark.sql.avro.AvroFileFormat"
     hostile.write.mode("overwrite").format(avro).save(avroDir)
     val backAvro = spark.read.schema(schema).format(avro).load(avroDir)
       .collect().map(r => r.getLong(0) -> Option(r.getString(1)).getOrElse("")).toMap
     assert(backAvro === want)
 
-    val xmlDir = java.nio.file.Files.createTempDirectory("graft-ingest-xml").toString
+    val xmlDir = TempDirs.create("graft-ingest-xml")
     hostile.write.mode("overwrite").option("rowTag", "doc")
       .format("xml").save(xmlDir)
     val backXml = spark.read.schema(schema).option("rowTag", "doc")
@@ -80,7 +80,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("gzip JSONL reads back identically (per-file tasks, documented non-splittable)") {
     val docs = Catalog.t(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-gz").toString
+    val dir = TempDirs.create("graft-ingest-gz")
     docs.write.mode("overwrite").option("compression", "gzip").json(dir)
     val back = spark.read.schema(docs.schema).json(dir)
     assert(back.count() === docs.count())
@@ -92,7 +92,7 @@ class IngestSpec extends AnyFunSuite {
   test("compaction rewrites a sliver layout to ceil(bytes/target) files " +
     "with identical content") {
     import graft.sources.IngestQueries
-    val sliver = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val sliver = TempDirs.create("graft-compact")
     val docs = Catalog.t(spark, sf, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(sliver)
     import scala.jdk.CollectionConverters._
@@ -100,7 +100,7 @@ class IngestSpec extends AnyFunSuite {
       .iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
     assert(parts(sliver) === 64)
     val n = IngestQueries.compactionTargetParts(spark, sliver, 4L << 20)
-    val compact = java.nio.file.Files.createTempDirectory("graft-compact2").toString
+    val compact = TempDirs.create("graft-compact2")
     spark.read.parquet(sliver).repartition(n)
       .write.mode("overwrite").parquet(compact)
     assert(parts(compact) === n)
@@ -114,7 +114,7 @@ class IngestSpec extends AnyFunSuite {
     // A malformed extra file in the dir must not break the typed read of
     // well-formed parts when the schema is explicit and mode=PERMISSIVE:
     // corrupt lines become nulls, not a failed inference scan.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-schema").toString
+    val dir = TempDirs.create("graft-ingest-schema")
     Catalog.t(spark, sf, "documents").limit(10).write.mode("overwrite").json(dir)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "part-bad.json"), "{not json at all\n")
@@ -126,7 +126,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("i09 zone-map manifest comes from footers, prunes files, and the " +
     "pruned read equals the full-scan filter") {
-    val out = java.nio.file.Files.createTempDirectory("graft-zm").toString
+    val out = TempDirs.create("graft-zm")
     val li = Catalog.t(spark, sf, "lineitem")
       .select(expr("unix_millis(cast(l_shipdate as timestamp))").as("ms"),
         col("l_orderkey"))

@@ -112,8 +112,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("partitioned writes enable partition pruning on re-read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part")
-    try {
+    TempDirs.scoped("graft-part") { dir =>
       Catalog.t(spark, sf, "documents")
         .write.mode("overwrite").partitionBy("lang").parquet(dir.toString)
       val df = spark.read.parquet(dir.toString).filter(col("lang") === "en")
@@ -139,11 +138,6 @@ class PlanQualitySpec extends AnyFunSuite {
       val total = Catalog.t(spark, sf, "documents")
         .filter(col("lang") === "en").count()
       assert(df.count() === total)
-    } finally {
-      // recursive temp cleanup — repeated runs must not leak copies
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -152,9 +146,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // on the join key join WITHOUT any shuffle — the layout 100 TB
     // fact-fact joins pre-pay for. Broadcast is forced off so the
     // assert proves co-location, not a small-side special case.
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try Catalog.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Catalog.t(spark, sf, "orders")
         .write.mode("overwrite").bucketBy(8, "o_custkey")
         .sortBy("o_custkey").saveAsTable("graft_orders_bkt")
@@ -182,7 +174,6 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(!s.substring(i).contains("Exchange"),
         s"bucketed join still shuffles:\n$s")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS graft_orders_bkt")
       spark.sql("DROP TABLE IF EXISTS graft_cust_bkt")
     }
@@ -217,12 +208,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // broadcast the plan cannot run without — an explicit broadcast()
     // hint survives a -1 threshold, so with thresholds off, any
     // BroadcastExchange left is a mandatory one (GraphAlgsSpec idiom)
-    val conf = spark.conf
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    saved.foreach { case (k, _) => conf.set(k, "-1") }
-    try {
+    Catalog.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("d06_embedding_neardup")
       assert(!p.contains("CartesianProduct"), p)
       assert(!p.contains("BroadcastNestedLoopJoin"), p)
@@ -234,9 +221,6 @@ class PlanQualitySpec extends AnyFunSuite {
         exact = true).queryExecution.executedPlan.toString
       assert(exact.contains("BroadcastExchange") ||
         exact.contains("BroadcastNestedLoopJoin"), exact)
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 
@@ -247,19 +231,12 @@ class PlanQualitySpec extends AnyFunSuite {
     // grows O(N²/25). It now routes through d06's banded sign-LSH
     // candidates; this pin keeps it that way (d06-pin idiom: with
     // broadcast thresholds off, any BroadcastExchange left is mandatory)
-    val conf = spark.conf
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    saved.foreach { case (k, _) => conf.set(k, "-1") }
-    try {
+    Catalog.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("c11_dbscan_core")
       assert(!p.contains("CartesianProduct"), p)
       assert(!p.contains("BroadcastNestedLoopJoin"), p)
       assert(!p.contains("BroadcastExchange"), p)
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 

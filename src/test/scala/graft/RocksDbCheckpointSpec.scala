@@ -19,7 +19,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def buildSavepoint(): SavepointMeta = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rocks-sp").toString
+    val dir = TempDirs.create("graft-rocks-sp")
     def row(name: String, k: Int, v: Int): KeyedStateRow =
       StateRowEncoder.valueRow(name, k, v, IntCodec, IntCodec, 128)
     val rows = Seq(
@@ -66,7 +66,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
 
   test("rocksdb checkpoint state can be rewritten as a full savepoint (S4 -> S9)") {
     val meta = buildSavepoint()
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-rocks-out").toString
+    val dir2 = TempDirs.create("graft-rocks-out")
     val r = Savepoints.reader(spark, meta, "rocky")
     import spark.implicits._
     val doubled = r.readValueStates[Int, Int]("Count").map { case (k, v) => (k, v * 2) }
@@ -83,7 +83,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
     "savepoint with per-subtask checkpoint dirs roundtrips through S4") {
     import graft.core.codec.Codecs.LongCodec
     val values = (1L to 400L).map(k => (k, k * 13))
-    val out = java.nio.file.Files.createTempDirectory("graft-rocks-native")
+    val out = TempDirs.track(java.nio.file.Files.createTempDirectory("graft-rocks-native"))
     java.nio.file.Files.delete(out)
     val meta = Savepoints
       .writer(spark, Savepoints.bootstrap("native-op", 4, 128), "native-op")
@@ -103,7 +103,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
 
   test("TRUE incremental checkpoint write: unchanged SSTs are shared " +
     "with the base, only the delta materializes") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rocks-incr-spec")
+    val root = TempDirs.track(java.nio.file.Files.createTempDirectory("graft-rocks-incr-spec"))
     val base = root.resolve("cp-1").toString
     def row(name: String, k: Int, v: Int): KeyedStateRow =
       StateRowEncoder.valueRow(name, k, v, IntCodec, IntCodec, 128)
@@ -191,7 +191,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
     import graft.state.{StateMaintenance, StateRowEncoder}
     val par = 4; val maxPar = 128
     val values = (1L to 400L).map(k => (k, k * 13))
-    val out1 = java.nio.file.Files.createTempDirectory("graft-incr-base")
+    val out1 = TempDirs.track(java.nio.file.Files.createTempDirectory("graft-incr-base"))
     java.nio.file.Files.delete(out1)
     val meta1 = Savepoints
       .writer(spark, Savepoints.bootstrap("incr-op", par, maxPar), "incr-op")
@@ -211,7 +211,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
         .operatorIndex(maxPar, par)).toSet
     assert(touchedSubs.size < par, "test premise: some subtask untouched")
 
-    val out2 = java.nio.file.Files.createTempDirectory("graft-incr-upd")
+    val out2 = TempDirs.track(java.nio.file.Files.createTempDirectory("graft-incr-upd"))
     java.nio.file.Files.delete(out2)
     val meta2 = StateMaintenance.incrementalUpdate(
       spark, meta1, "incr-op", ups, dels, out2.toString)
@@ -244,7 +244,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
     "INCREMENTAL_KEY_GROUPS handle that the S4 reader consumes") {
     import graft.core.codec.Codecs
     val values = (1L to 300L).map(k => (s"u-$k", k * 7))
-    val out = java.nio.file.Files.createTempDirectory("graft-rocks-flink")
+    val out = TempDirs.track(java.nio.file.Files.createTempDirectory("graft-rocks-flink"))
     java.nio.file.Files.delete(out)
     val meta = Savepoints
       .writer(spark, Savepoints.bootstrap("inc-w-op", 2, 128), "inc-w-op")
@@ -264,7 +264,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
     assert(got === values.toMap)
     // and the rescale path works FROM the incremental checkpoint: rows
     // re-shard into a plain stream savepoint without a pre-rewrite
-    val out2 = java.nio.file.Files.createTempDirectory("graft-rocks-rescale")
+    val out2 = TempDirs.track(java.nio.file.Files.createTempDirectory("graft-rocks-rescale"))
     java.nio.file.Files.delete(out2)
     val rows = Savepoints.reader(spark, loaded, "inc-w-op").getAllUnreadKeyedStateRows
     val meta2 = Savepoints.writer(spark, loaded, "inc-w-op")
@@ -279,7 +279,7 @@ class RocksDbCheckpointSpec extends AnyFunSuite {
   test("gcCheckpoint retires a base: manifest-referenced SSTs survive " +
     "in place, everything else is deleted, the stub still reads") {
     import java.nio.file.{Files => JFiles, Paths}
-    val root = JFiles.createTempDirectory("graft-gc-spec")
+    val root = TempDirs.track(JFiles.createTempDirectory("graft-gc-spec"))
     val base = root.resolve("cp-1").toString
     def row(name: String, k: Int, v: Int): KeyedStateRow =
       StateRowEncoder.valueRow(name, k, v, IntCodec, IntCodec, 128)

@@ -53,7 +53,7 @@ class RoundEightBatchElevenSpec extends AnyFunSuite {
   test("j05 picks forward when nearer, backward on exact ties, null " +
     "with no candidates (hand fixture tables)") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-j05").toString
+    val dir = TempDirs.create("graft-j05")
     Seq((7L, new java.sql.Timestamp(1000L), 100L),
         (7L, new java.sql.Timestamp(100000L), 101L))
       .toDF("o_custkey", "o_orderdate", "o_orderkey")

@@ -77,7 +77,7 @@ class RoundEightBatchThirteenSpec extends AnyFunSuite {
   test("q58 buckets out-of-order arrivals by power-of-2 lateness " +
     "(hand fixture with late rows)") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-q58").toString
+    val dir = TempDirs.create("graft-q58")
     // user 1 arrival order (event_id): t=10s, t=70s, t=69s (1s late,
     // bucket 0), t=5s (65s late, bucket 6: 64 <= 65 < 128)
     Seq((1L, 1L, 10000L), (2L, 1L, 70000L), (3L, 1L, 69000L),

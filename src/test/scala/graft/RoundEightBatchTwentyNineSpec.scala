@@ -36,8 +36,7 @@ class RoundEightBatchTwentyNineSpec extends AnyFunSuite {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     // destroy the ORIGINAL: the copy must be fully self-contained
-    java.nio.file.Files.walk(src).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
+    TempDirs.deleteNow(src)
     val back = state.Savepoints
       .reader(s, state.Savepoints.load(dst.toString), "rl-op")
       .readValueStates[Long, Long]("S").collect().toMap

@@ -310,7 +310,7 @@ class RoundFiveOpsSpec extends AnyFunSuite {
       .withKeyCodec(LongCodec)
       .defineState(StateMeta("Count", StateKind.Value, "long"))
       .addKeyedStateRows(rows.toDS())
-      .writeAll(java.nio.file.Files.createTempDirectory("graft-validate").toString + "/sp")
+      .writeAll(TempDirs.create("graft-validate") + "/sp")
     val rep = StateMaintenance.validate(spark, Savepoints.load(meta.basePath),
       "corrupt-op").collect()
     assert(rep.length === 1)
@@ -333,7 +333,7 @@ class RoundFiveOpsSpec extends AnyFunSuite {
       LongCodec.write(vw, v)
       KeyedStateRow("Count", w.toBytes, vw.toBytes)
     }
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = TempDirs.create(p)
     val rows = Seq(row(1L, 100L, 11L), row(2L, 200L, 22L), row(3L, 150L, 33L))
     val meta1 = Savepoints
       .writer(spark, Savepoints.bootstrap("ttl-spec", 2, maxPar), "ttl-spec")

@@ -158,7 +158,7 @@ class RoundSixOpsSpec extends AnyFunSuite {
   test("metadata-only rescale: allowed without keyed files, rejected with them") {
     import graft.core.codec.Codecs.LongCodec
     import graft.state.{BackendStates, Savepoints}
-    def tmp() = java.nio.file.Files.createTempDirectory("graft-rescale").toString
+    def tmp() = TempDirs.create("graft-rescale")
     // keyed op: parallelism change without rows must fail loudly
     val keyed = Savepoints
       .writer(spark, Savepoints.bootstrap("k-op", 2, 128), "k-op")

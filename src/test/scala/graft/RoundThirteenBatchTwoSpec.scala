@@ -301,7 +301,7 @@ class RoundThirteenBatchTwoSpec extends AnyFunSuite {
     "wrong-modality exclusion)") {
     val sqlc = spark
     import sqlc.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m12fix").toString
+    val dir = TempDirs.create("m12fix")
     val docs = Seq(
       // frames: [32 spaces = 131072 active][32 a's = 32 idle][active]
       (2L, " " * 32 + "a" * 32 + " " * 32, "en", "src", 96L),

@@ -43,9 +43,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       .sortBy("l_orderkey").saveAsTable("li_bucketed")
     ord.write.mode("overwrite").bucketBy(8, "o_orderkey")
       .sortBy("o_orderkey").saveAsTable("ord_bucketed")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Catalog.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("li_bucketed")
         .join(spark.table("ord_bucketed"),
           col("l_orderkey") === col("o_orderkey"))
@@ -53,8 +51,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       val plan = j.queryExecution.executedPlan.toString
       // co-located: sort-merge join straight over the bucketed scans
       assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
   }
 

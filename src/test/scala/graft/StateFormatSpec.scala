@@ -87,7 +87,7 @@ class MetadataIOSpec extends AnyFunSuite {
         broadcastStates = Map("bc" -> Seq((Array[Byte](1), Array[Byte](9)))))))))
 
   test("metadata write/load roundtrip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-meta").toString
+    val dir = TempDirs.create("graft-meta")
     val meta = sampleMeta(dir)
     MetadataIO.write(dir, meta)
     val loaded = MetadataIO.load(dir)
@@ -108,7 +108,7 @@ class MetadataIOSpec extends AnyFunSuite {
   }
 
   test("metadata write is NO_OVERWRITE (StateMetadataUtils.java:189-194)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-meta2").toString
+    val dir = TempDirs.create("graft-meta2")
     MetadataIO.write(dir, sampleMeta(dir))
     intercept[java.nio.file.FileAlreadyExistsException] {
       MetadataIO.write(dir, sampleMeta(dir))

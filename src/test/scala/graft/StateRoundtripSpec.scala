@@ -19,7 +19,7 @@ class StateRoundtripSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-sp").toString
+    TempDirs.create("graft-sp")
 
   private def encodeRow[K](key: K, value: Array[Byte], name: String,
       kc: Codec[K], maxPar: Int, mapKey: Array[Byte] = Array.empty): KeyedStateRow = {

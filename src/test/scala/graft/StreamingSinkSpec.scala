@@ -17,10 +17,8 @@ class StreamingSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p
-  }
+  private def tmp(prefix: String): Path =
+    TempDirs.track(Files.createTempDirectory(prefix))
 
   test("idempotentParquetBatchWriter: replaying a batch id rewrites, " +
     "never appends") {

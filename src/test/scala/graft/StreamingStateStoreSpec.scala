@@ -10,10 +10,8 @@ class StreamingStateStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("windowed agg and sessionizer run on the RocksDB state store") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Catalog.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val sf = "/root/testdata/sf0.001"
       val hourly = SparkEntry.queries("st01_stream_hourly")(spark, sf)
       assert(hourly.count() > 0)
@@ -24,11 +22,6 @@ class StreamingStateStoreSpec extends AnyFunSuite {
       // internal consistency of session event counts
       val total = sessions.selectExpr("sum(n_events)").collect()(0).getLong(0)
       assert(total == 1000L) // every event lands in exactly one session
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -11,17 +11,15 @@ import scala.jdk.CollectionConverters._
   * drift on the naming contract.
   */
 object TestIo {
-  def writeSingleFile(df: DataFrame, dir: String, table: String): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-single-part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = java.nio.file.Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        s"no part file written for $table"))
-    java.nio.file.Files.move(part,
-      java.nio.file.Paths.get(dir, s"$table.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
+  def writeSingleFile(df: DataFrame, dir: String, table: String): Unit =
+    TempDirs.scoped("graft-single-part") { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = java.nio.file.Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(
+          s"no part file written for $table"))
+      java.nio.file.Files.move(part,
+        java.nio.file.Paths.get(dir, s"$table.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
 }

@@ -11,7 +11,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+        TempDirs.create("graft-wh"))
       .config(Catalog.sessionConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -21,10 +21,6 @@ object TestSpark {
   /** Runs `f` with the savepoint scan's split target
     * (`spark.sql.files.maxPartitionBytes`) at `bytes`, then restores it.
     */
-  def withMaxPartitionBytes[A](bytes: Long)(f: => A): A = {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bytes)
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def withMaxPartitionBytes[A](bytes: Long)(f: => A): A =
+    Catalog.withConfs(spark, "spark.sql.files.maxPartitionBytes" -> bytes.toString)(f)
 }
