@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Per-round benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
   *
@@ -9,6 +11,32 @@ package graft
   * kernels, similarity scores).
   */
 object Bench {
+
+  /** Seconds to build `query` and run it through the `noop` sink.
+    * Afterwards, OUTSIDE the timed region and also when it throws, the
+    * session's cached tables are released and the heap is collected:
+    *   - queries may cache() intermediates (LSH signatures). Spark's
+    *     CacheManager matches a repeat run's identical plan against the
+    *     previous run's still-populated InMemoryRelation, so a query
+    *     whose builder caches its dominant subtree (c11, d03) recorded a
+    *     second-run "minimum" that timed a mostly-materialized plan
+    *     (round-17 measurement fix). Clearing makes every run recompute
+    *     from the parquet inputs;
+    *   - one run's heap garbage must not tax the next run's allocations
+    *     — in-suite d07 measured 2.6x its isolated time from exactly
+    *     this carryover.
+    */
+  def timedNoop(spark: SparkSession)(query: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try {
+      query.write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally {
+      spark.catalog.clearCache()
+      System.gc()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // machine-load guard: a record taken on a contended machine is not
     // comparable round-over-round (r6 post-mortem: the official record
@@ -45,29 +73,13 @@ object Bench {
       .filter(q => only.forall(_.contains(q.name)))
       .map { q =>
       val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try q.run(spark, sfDir).write.mode("overwrite").format("noop").save()
+        try timedNoop(spark)(q.run(spark, sfDir))
         catch {
           case e: Throwable =>
             failedNames += q.name
             System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+            0.0
         }
-        val secs = (System.nanoTime() - t0) / 1e9
-        // queries may cache() intermediates (LSH signatures); release
-        // them OUTSIDE the timed region — and do it between the min-of-N
-        // RUNS of one query, not only between queries (round-17
-        // measurement fix, requested by the r16 verdict): Spark's
-        // CacheManager matches run 2's identical plan against run 1's
-        // still-populated InMemoryRelation, so a query whose builder
-        // caches its dominant subtree (c11, d03) recorded a run-2
-        // "minimum" that timed a mostly-materialized plan. Clearing
-        // here makes every run recompute from the parquet inputs.
-        // GC between runs/queries so one run's heap garbage doesn't tax
-        // the next run's allocations — in-suite d07 measured 2.6x its
-        // isolated time from exactly this carryover.
-        spark.catalog.clearCache()
-        System.gc()
-        secs
       }
       q.name -> times.min
     }

@@ -35,15 +35,14 @@ import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
   */
 object GraphAlgs {
 
-  /** Wall-clock instrumentation of the last [[connectedComponents]]
-    * run on this driver: convergence round count and per-round seconds.
-    * Written once at loop exit (driver-side only; the smoke tools read
-    * it to show rounds grow O(log diameter) while per-round work stays
+  /** Wall-clock instrumentation of one [[connectedComponents]] run:
+    * convergence round count and per-round seconds, returned by
+    * [[connectedComponentsWithStats]] (the scale smokes read it to show
+    * rounds grow O(log diameter) while per-round work stays
     * proportional to edges — the scale claim single-query benches
     * can't see).
     */
   final case class CcStats(rounds: Int, roundSecs: Seq[Double])
-  @volatile private[graft] var lastCcStats: Option[CcStats] = None
 
   /** Nodes at or below which the node-sized side is broadcast. ~4M rows
     * of (long, long) ≈ 64 MB serialized — a conservative ceiling for
@@ -120,7 +119,17 @@ object GraphAlgs {
       edges: DataFrame,
       maxRounds: Int = 40,
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    connectedComponentsWithStats(nodes, edges, maxRounds, broadcastMaxNodes,
+      checkpointDir)._1
+
+  /** [[connectedComponents]] plus this run's [[CcStats]]. */
+  private[graft] def connectedComponentsWithStats(
+      nodes: DataFrame,
+      edges: DataFrame,
+      maxRounds: Int = 40,
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
+      checkpointDir: Option[String] = None): (DataFrame, CcStats) = {
     val spark = nodes.sparkSession
     val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
@@ -184,13 +193,13 @@ object GraphAlgs {
       round += 1
       roundSecs += (System.nanoTime() - tr) / 1e9
     }
-    lastCcStats = Some(CcStats(round, roundSecs.toSeq))
     e.unpersist()
     labels0.unpersist()
     if (curSum != prevSum)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds")
-    labels.select(col("id"), col("label").as("component"))
+    (labels.select(col("id"), col("label").as("component")),
+      CcStats(round, roundSecs.toSeq))
   }
 
   /** Multi-source BFS distances: hops from the nearest seed, breadth

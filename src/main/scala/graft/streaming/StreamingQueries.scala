@@ -35,7 +35,7 @@ object StreamingQueries {
   // session default. A stream gives it back only after
   // processAllAvailable/stop: micro-batch planning reads the conf
   // lazily during the run, not at start().
-  private val StreamStatePartitions = "spark.sql.shuffle.partitions" -> "8"
+  private[graft] val StreamStatePartitions = "spark.sql.shuffle.partitions" -> "8"
   private val GapMs = 1800000L
   private val GapMs2 = 3600000L // st04 attribution window (1 hour in ms)
   // st28 monitor family: a fixed 4-band × 12-bit PREFIX of the maximal

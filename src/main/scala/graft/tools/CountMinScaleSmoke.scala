@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the round-13 count-min operators (q77 batch,
@@ -21,27 +22,29 @@ import org.apache.spark.sql.functions._
   * cell arithmetic ([[graft.relational.RelationalQueries4.cmCells]]),
   * not a re-implementation. Run:
   * `sbt "runMain graft.tools.CountMinScaleSmoke"` — one JSON line per
-  * scale; record lands in CM_SCALE_r13.json.
+  * scale (100k, 1M, 10M rows); record lands in CM_SCALE_r13.json.
+  * [[run]] takes the row counts.
   */
 object CountMinScaleSmoke {
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val spark = graft.Catalog.localSession("graft-countmin-scale-smoke")
+  def main(args: Array[String]): Unit =
+    ToolKit.main("graft-countmin-scale-smoke")(run(_, Seq(100000L, 1000000L, 10000000L)))
 
+  /** One JSON line per row count in `ns`. */
+  def run(spark: SparkSession, ns: Seq[Long]): Unit = {
     val W = 64L
-    Seq(100000L, 1000000L, 10000000L).foreach { n =>
+    ToolKit.rungs(spark, ns) { n =>
       val keyed = spark.range(n).toDF("i")
         .select(expr("cast(floor(sqrt(i)) as bigint)").as("user_id"),
           expr("i % 7").as("day_i"))
         .withColumn("k", expr("(user_id % 1000003) * 100003L + day_i"))
-      val t0 = System.nanoTime()
-      val grid = keyed
-        .select(posexplode(graft.relational.RelationalQueries4.cmCells)
-          .as(Seq("r", "bucket")))
-        .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val gridS = (System.nanoTime() - t0) / 1e9
+      val (grid, gridS, _) = ToolKit.phase {
+        keyed
+          .select(posexplode(graft.relational.RelationalQueries4.cmCells)
+            .as(Seq("r", "bucket")))
+          .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("cnt"))
+          .collect()
+          .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      }
       // driver-side truth: the heaviest 10 keys and the grid probes —
       // the grid itself is ≤256 cells, so this math is exact and tiny
       val top = keyed.groupBy(col("k")).agg(count(lit(1)).as("exact_n"))
@@ -55,14 +58,13 @@ object CountMinScaleSmoke {
         est - exact
       }
       val nKeys = keyed.select(col("k")).distinct().count()
-      println(s"""{"metric":"countmin_scale_smoke","n_rows":$n,""" +
-        s""""n_keys":$nKeys,"state_cells":${grid.size},""" +
-        s""""mean_over":${overs.sum / overs.length},""" +
-        s""""max_over":${overs.max},"n_over_w":${n / W},""" +
-        s""""markov_bound_2n_over_w":${2 * n / W},""" +
-        s""""all_within_bound":${overs.max <= 2 * n / W},""" +
-        s""""grid_s":${"%.1f".format(gridS)}}""")
+      ToolKit.emit("metric" -> "countmin_scale_smoke", "n_rows" -> n,
+        "n_keys" -> nKeys, "state_cells" -> grid.size,
+        "mean_over" -> overs.sum / overs.length,
+        "max_over" -> overs.max, "n_over_w" -> n / W,
+        "markov_bound_2n_over_w" -> 2 * n / W,
+        "all_within_bound" -> (overs.max <= 2 * n / W),
+        "grid_s" -> gridS)
     }
-    spark.stop()
   }
 }

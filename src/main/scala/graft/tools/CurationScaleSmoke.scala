@@ -3,7 +3,7 @@ package graft.tools
 import graft.Catalog
 import graft.llm.{Dedup, GraphAlgs, Pipeline, TextAnalysis}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round 13: the first artifact measuring the curation operators
@@ -29,20 +29,21 @@ import org.apache.spark.sql.functions._
   * exactly the place single-query benches can't see (composition keeps
   * intermediate results alive across stages).
   *
-  * Run: `sbt "runMain graft.tools.CurationScaleSmoke [sfDir] [copies,copies,...]"`.
-  * Prints one JSON line per (scale, stage); record lands in
-  * CURATION_SCALE_r13.json + PLANS.md.
+  * Run: `sbt "runMain graft.tools.CurationScaleSmoke [sfDir] [copies,copies,...]"`
+  * (default copies 1,10; [[run]] takes the list). Prints one JSON line
+  * per (scale, stage); the d08 row carries the run's own
+  * [[GraphAlgs.CcStats]]. Record lands in CURATION_SCALE_r13.json +
+  * PLANS.md.
   */
 object CurationScaleSmoke {
 
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val copiesList = if (args.length > 1)
-      args(1).split(",").toSeq.map(_.toInt) else Seq(1, 10)
-    val spark = Catalog.localSession("graft-curation-scale-smoke")
-    graft.functions.GraftFunctions.register(spark)
+  def main(args: Array[String]): Unit =
+    ToolKit.main("graft-curation-scale-smoke")(run(_,
+      if (args.length > 0) args(0) else "/root/testdata/sf0.1",
+      if (args.length > 1) args(1).split(",").toSeq.map(_.toInt) else Seq(1, 10)))
 
+  /** One JSON line per (copy count in `copiesList`, stage). */
+  def run(spark: SparkSession, sfDir: String, copiesList: Seq[Int]): Unit = {
     val base = Catalog.t(spark, sfDir, "documents")
       .select("doc_id", "text", "lang", "source")
 
@@ -55,82 +56,70 @@ object CurationScaleSmoke {
           col("lang"), col("source"))
       }.reduce(_ union _)
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
+    // the stage's output cached and counted inside the phase
+    def stage(df: => DataFrame): (DataFrame, Double) = {
+      val (out, secs, _) = ToolKit.phase { val d = df.cache(); d.count(); d }
+      (out, secs)
     }
     def row(scale: Int, stage: String, rowsIn: Long, rowsOut: Long,
-        secs: Double, extra: String = ""): Unit =
-      println(s"""{"metric":"curation_scale_smoke","scale":$scale,""" +
-        s""""stage":"$stage","rows_in":$rowsIn,"rows_out":$rowsOut,""" +
-        s""""s":${"%.1f".format(secs)}$extra}""")
+        secs: Double, extra: (String, Any)*): Unit =
+      ToolKit.emit(Seq("metric" -> "curation_scale_smoke", "scale" -> scale,
+        "stage" -> stage, "rows_in" -> rowsIn, "rows_out" -> rowsOut,
+        "s" -> secs) ++ extra: _*)
 
     val tokens = "cast(size(split(text, ' ')) as bigint)"
     val MixBudget = 1000000000L
     val PackBudget = 2048L
 
-    copiesList.foreach { copies =>
+    ToolKit.rungs(spark, copiesList) { copies =>
       val docs = corpus(copies).cache()
       val nDocs = docs.count()
 
       // stage 1 — t02 quality gate: drop the degenerate tail (too
       // short/long or bottom-decile composite score)
-      val (survivors, qS) = timed {
+      val (survivors, qS) = stage {
         val q = TextAnalysis.qualityScore(docs)
           .filter(col("len_ok") && col("quality_score") >= 0.2)
           .select("doc_id")
-        val s = docs.join(q, "doc_id").cache()
-        s.count()
-        s
+        docs.join(q, "doc_id")
       }
       val nSurv = survivors.count()
       row(copies, "t02_quality_gate", nDocs, nSurv, qS)
 
       // stage 2 — d05 simhash near-dup pairs over SURVIVORS (the DAG
       // point: dedup runs on the quality-gated corpus, not the raw one)
-      val (pairs, pS) = timed {
-        val p = Dedup.simhashNearDupPairs(
-          survivors.select("doc_id", "text")).cache()
-        p.count()
-        p
+      val (pairs, pS) = stage {
+        Dedup.simhashNearDupPairs(survivors.select("doc_id", "text"))
       }
       val nPairs = pairs.count()
       row(copies, "d05_neardup_pairs", nSurv, nPairs, pS)
 
       // stage 3 — d08 connected components = near-dup families.
-      val (labels, cS) = timed {
-        val l = GraphAlgs.connectedComponents(
+      val ((labels, st), cS, _) = ToolKit.phase {
+        val (l, st) = GraphAlgs.connectedComponentsWithStats(
           survivors.select(col("doc_id").as("id")),
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
           broadcastMaxNodes = GraphAlgs.DefaultBroadcastMaxNodes)
-          .select(col("id").as("doc_id"), col("component").as("cluster_id"))
+        val lc = l.select(col("id").as("doc_id"), col("component").as("cluster_id"))
           .cache()
-        l.count()
-        l
+        lc.count()
+        (lc, st)
       }
       val nFamilies = labels.select("cluster_id").distinct().count()
       // the r13 verdict's one superlinear stage: break its wall into
       // convergence ROUNDS × per-round cost, so the artifact shows
       // rounds grow O(log diameter) while per-round work tracks edges
-      val ccExtra = GraphAlgs.lastCcStats.map { st =>
-        val per = st.roundSecs.map(x => "%.2f".format(x)).mkString("[", ",", "]")
-        s""","cc_rounds":${st.rounds},"cc_round_s":$per,""" +
-          s""""cc_s_per_kpair":${"%.3f".format(
-            if (nPairs == 0) 0.0 else cS * 1000.0 / nPairs)}"""
-      }.getOrElse("")
-      row(copies, "d08_families", nSurv, nFamilies, cS, ccExtra)
+      row(copies, "d08_families", nSurv, nFamilies, cS,
+        "cc_rounds" -> st.rounds, "cc_round_s" -> st.roundSecs,
+        "cc_s_per_kpair" -> (if (nPairs == 0) 0.0 else cS * 1000.0 / nPairs))
 
       // stage 4 — p27 leakage-safe split keyed on the family id
-      val (split, sS) = timed {
-        val sp = Dedup.familyCoherentSplit(labels).cache()
-        sp.count()
-        sp
-      }
-      val splitCounts = split.groupBy("split").count().collect()
-        .map(r => s""""${r.getString(0)}":${r.getLong(1)}""").sorted
-        .mkString(",")
+      val (split, sS) = stage { Dedup.familyCoherentSplit(labels) }
+      val splitCounts = scala.collection.immutable.TreeMap(
+        split.groupBy("split").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toIndexedSeq: _*)
       row(copies, "p27_leakage_safe_split", nSurv, nSurv, sS,
-        s""","splits":{$splitCounts}""")
+        "splits" -> splitCounts)
 
       // the end-to-end claim, asserted at scale: NO near-dup pair
       // straddles splits (every d05 pair, not a sample)
@@ -149,7 +138,7 @@ object CurationScaleSmoke {
         split.filter(col("split") === "train").select("doc_id"), "doc_id")
         .cache()
       val nTrain = train.count()
-      val (mix, mS) = timed {
+      val (mix, mS, _) = ToolKit.phase {
         val m = Pipeline.mixAllocation(train, col("source"),
           expr(tokens), MixBudget)
         m.count()
@@ -161,17 +150,13 @@ object CurationScaleSmoke {
       row(copies, "p06_mix_allocation", nTrain, mix.count(), mS)
 
       // stage 6 — p01 sequence packing of the train split (lang shards)
-      val (packed, kS) = timed {
+      val ((nPacked, maxBin), kS, _) = ToolKit.phase {
         val p = Pipeline.packSequences(train, PackBudget, col("lang"),
           col("doc_id"), expr(tokens))
         (p.count(), p.agg(max("bin_id")).first().getLong(0))
       }
-      row(copies, "p01_pack_sequences", nTrain, packed._1, kS,
-        s""","max_bin_id":${packed._2}""")
-
-      train.unpersist(); split.unpersist(); labels.unpersist()
-      pairs.unpersist(); survivors.unpersist(); docs.unpersist()
+      row(copies, "p01_pack_sequences", nTrain, nPacked, kS,
+        "max_bin_id" -> maxBin)
     }
-    spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Catalog
 import graft.llm.GraphAlgs
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointStats
 
@@ -30,14 +30,15 @@ import org.apache.spark.sql.graftshim.CheckpointStats
   * maxDepth instead of the full profile. Chain length n/chains bounds
   * the diameter, so CC rounds ≈ log2(n/chains) + 2.
   *
-  * Run: `sbt "runMain graft.tools.GraphScaleSmoke [nodes,nodes,...]
-  * [chains] [broadcastMaxNodes]"`. One JSON line per (tier, algo);
-  * committed record: GRAPH_SCALE_r17.json.
+  * Run: `sbt "runMain graft.tools.GraphScaleSmoke [nodes[:bmax],...]
+  * [chains]"` (default tiers 1000000,6000000,6000000:0 and 50000
+  * chains; [[run]] takes the parsed tiers). One JSON line per (tier,
+  * algo); the cc row's rounds come from the run's own
+  * [[GraphAlgs.CcStats]]. Committed record: GRAPH_SCALE_r17.json.
   */
 object GraphScaleSmoke {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     // tier syntax: "<nodes>" (default gate) or "<nodes>:<broadcastMax>"
     // — ":0" forces the co-partition path even for joins whose own row
     // counts (BFS frontier/visited) never cross the default ceiling
@@ -50,12 +51,12 @@ object GraphScaleSmoke {
           else GraphAlgs.DefaultBroadcastMaxNodes)
       }
     val chains = if (args.length > 1) args(1).toLong else 50000L
-    val spark = Catalog.localSession("graft-graph-scale-smoke")
+    ToolKit.main("graft-graph-scale-smoke")(run(_, tiers, chains))
+  }
 
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-    tiers.foreach { case (n, bmax) =>
+  /** Two JSON lines (cc, msbfs) per (nodes, broadcastMaxNodes) tier. */
+  def run(spark: SparkSession, tiers: Seq[(Long, Long)], chains: Long): Unit =
+    ToolKit.rungs(spark, tiers) { case (n, bmax) =>
       // chain graph: i -> i + chains (disjoint chains of length
       // ~n/chains); localCheckpoint so tier build cost stays out of
       // the timed region and stats are the checkpoint's own
@@ -66,19 +67,17 @@ object GraphScaleSmoke {
         reliable = false, CheckpointStats.Actual)
       val path = if (n <= bmax) "broadcast" else "co-partition"
 
-      val t0 = System.nanoTime()
-      val labels = GraphAlgs.connectedComponents(nodes, edges,
-        maxRounds = 64, broadcastMaxNodes = bmax)
-      val nComp = labels.select(countDistinct(col("component"))).first().getLong(0)
-      val ccSecs = (System.nanoTime() - t0) / 1e9
-      val st = GraphAlgs.lastCcStats.get
+      val ((nComp, st), ccSecs, _) = ToolKit.phase {
+        val (labels, st) = GraphAlgs.connectedComponentsWithStats(nodes, edges,
+          maxRounds = 64, broadcastMaxNodes = bmax)
+        (labels.select(countDistinct(col("component"))).first().getLong(0), st)
+      }
       assert(nComp == chains.min(n),
         s"tier $n: expected ${chains.min(n)} components, got $nComp")
-      println(s"""{"smoke":"graph_scale","algo":"cc","nodes":$n,""" +
-        s""""edges":${n - chains},"path":"$path","rounds":${st.rounds},""" +
-        s""""round_secs":[${st.roundSecs.map(r3).mkString(",")}],""" +
-        s""""total_sec":${r3(ccSecs)},"n_components":$nComp,""" +
-        s""""broadcast_max_nodes":$bmax}""")
+      ToolKit.emit("smoke" -> "graph_scale", "algo" -> "cc", "nodes" -> n,
+        "edges" -> (n - chains), "path" -> path, "rounds" -> st.rounds,
+        "round_secs" -> st.roundSecs, "total_sec" -> ccSecs,
+        "n_components" -> nComp, "broadcast_max_nodes" -> bmax)
 
       // multi-source BFS: seeds = one node per 1000th chain head; at
       // maxDepth D each seed reaches D+1 nodes of its own chain (chain
@@ -87,11 +86,10 @@ object GraphScaleSmoke {
       val depth = 6
       val seeds = spark.range(0, chains, 1000)
         .select(col("id").as("probe"), col("id"))
-      val t1 = System.nanoTime()
-      val dist = GraphAlgs.multiSourceBfs(edges, seeds, depth,
-        broadcastMaxNodes = bmax)
-      val reached = dist.count()
-      val bfsSecs = (System.nanoTime() - t1) / 1e9
+      val (reached, bfsSecs, _) = ToolKit.phase {
+        GraphAlgs.multiSourceBfs(edges, seeds, depth,
+          broadcastMaxNodes = bmax).count()
+      }
       val nSeeds = (chains + 999) / 1000
       assert(reached == nSeeds * (depth + 1),
         s"tier $n: expected ${nSeeds * (depth + 1)} reached, got $reached")
@@ -99,14 +97,9 @@ object GraphScaleSmoke {
       // the default ceiling regardless of graph size — only a forced
       // bmax=0 exercises its co-partition path
       val bfsPath = if (bmax == 0) "co-partition(forced)" else "broadcast"
-      println(s"""{"smoke":"graph_scale","algo":"msbfs","nodes":$n,""" +
-        s""""edges":${n - chains},"path":"$bfsPath","depth":$depth,""" +
-        s""""seeds":$nSeeds,"reached":$reached,""" +
-        s""""total_sec":${r3(bfsSecs)},"broadcast_max_nodes":$bmax}""")
-
-      spark.catalog.clearCache()
-      System.gc()
+      ToolKit.emit("smoke" -> "graph_scale", "algo" -> "msbfs", "nodes" -> n,
+        "edges" -> (n - chains), "path" -> bfsPath, "depth" -> depth,
+        "seeds" -> nSeeds, "reached" -> reached,
+        "total_sec" -> bfsSecs, "broadcast_max_nodes" -> bmax)
     }
-    spark.stop()
-  }
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for round 11's KMV operators (q72 set algebra,
@@ -18,28 +19,29 @@ import org.apache.spark.sql.functions._
   * so hash inputs aren't trivially sequential), so reruns reproduce
   * the same numbers. Run:
   * `sbt "runMain graft.tools.KmvScaleSmoke"` — one JSON line per
-  * (scale, group); record lands in KMV_SCALE_r11.json.
+  * (scale, group) at 100k, 1M and 10M rows; record lands in
+  * KMV_SCALE_r11.json. [[run]] takes the row counts.
   */
 object KmvScaleSmoke {
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val spark = graft.Catalog.localSession("graft-kmv-scale-smoke")
-    graft.functions.GraftFunctions.register(spark)
+  def main(args: Array[String]): Unit =
+    ToolKit.main("graft-kmv-scale-smoke")(run(_, Seq(100000L, 1000000L, 10000000L)))
 
+  /** One JSON line per (row count in `ns`, group). */
+  def run(spark: SparkSession, ns: Seq[Long]): Unit = {
     val K = graft.relational.RelationalQueries4.KmvK
-    Seq(100000L, 1000000L, 10000000L).foreach { n =>
+    ToolKit.rungs(spark, ns) { n =>
       // 4 groups of different true cardinality: group g owns ids whose
       // stride-mixed value ≡ g (mod 4), so exact NDV ≈ n/4 per group
       val pop = spark.range(n).toDF("i")
         .select(expr("pmod(hash(i), 4)").cast("int").as("g"),
           expr("cast(hash(i, 42) as string) || '-' || cast(i as string)")
             .as("uid"))
-      val t0 = System.nanoTime()
-      val sk = pop
-        .select(col("g"), expr("graft_polyhash32(uid)").as("h"))
-        .groupBy(col("g")).agg(expr(s"graft_kmin(h, $K)").as("hs"))
-        .collect()
-      val sketchS = (System.nanoTime() - t0) / 1e9
+      val (sk, sketchS, _) = ToolKit.phase {
+        pop
+          .select(col("g"), expr("graft_polyhash32(uid)").as("h"))
+          .groupBy(col("g")).agg(expr(s"graft_kmin(h, $K)").as("hs"))
+          .collect()
+      }
       val exact = pop.groupBy(col("g"))
         .agg(countDistinct(col("uid")).as("nd")).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -49,13 +51,12 @@ object KmvScaleSmoke {
         val est = graft.functions.KmvEstimator.scala(hs, K)
         val ex = exact(g)
         val errPpm = math.abs(est - ex) * 1000000L / ex
-        println(s"""{"metric":"kmv_scale_smoke","n_rows":$n,"group":$g,""" +
-          s""""k":$K,"sketch_longs":${hs.length},"exact_ndv":$ex,""" +
-          s""""est_ndv":$est,"err_ppm":$errPpm,""" +
-          s""""se_theory_ppm":${(1000000 / math.sqrt(K - 2)).toLong},""" +
-          s""""agg_s":${"%.1f".format(sketchS)}}""")
+        ToolKit.emit("metric" -> "kmv_scale_smoke", "n_rows" -> n, "group" -> g,
+          "k" -> K, "sketch_longs" -> hs.length, "exact_ndv" -> ex,
+          "est_ndv" -> est, "err_ppm" -> errPpm,
+          "se_theory_ppm" -> (1000000 / math.sqrt(K - 2)).toLong,
+          "agg_s" -> sketchS)
       }
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Catalog, SparkEntry}
+import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 
 /** Registry-wide physical-plan audit: build every gated query's
@@ -25,23 +25,8 @@ object PlanAudit {
       q.name -> p
     }
 
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
+  def main(args: Array[String]): Unit = ToolKit.main("graft-plan-audit") { spark =>
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Catalog.localSession("graft-plan-audit")
-    graft.functions.GraftFunctions.register(spark)
-    // minimal JSON string escape: exception messages carry newlines
-    // and backslashes (AnalysisException plan fragments) that would
-    // otherwise break the line-oriented output
-    def jq(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     var bad = 0
     sweep(spark, sfDir).foreach { case (name, p) =>
       val cp = p.contains("CartesianProduct")
@@ -49,11 +34,11 @@ object PlanAudit {
       val fail = p.startsWith("BUILD-FAILED")
       if (cp || bnlj || fail) {
         bad += 1
-        println(s"""{"query":"$name","cartesian":$cp,"bnlj":$bnlj""" +
-          (if (fail) s""","error":"${jq(p.take(160))}"""" else "") + "}")
+        ToolKit.emit(Seq("query" -> name, "cartesian" -> cp, "bnlj" -> bnlj) ++
+          (if (fail) Seq("error" -> p.take(160)) else Nil): _*)
       }
     }
-    println(s"""{"metric":"plan_audit","queries":${SparkEntry.registry.size},"flagged":$bad}""")
-    spark.stop()
+    ToolKit.emit("metric" -> "plan_audit", "queries" -> SparkEntry.registry.size,
+      "flagged" -> bad)
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Catalog
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the 16-bit pigeonhole chunk currency: grows
@@ -25,19 +25,20 @@ import org.apache.spark.sql.functions._
   * ~quadratically at 8-bit (N²/1024 collision mass) and stay
   * ~linear-dominated at 16-bit until far larger N.
   *
-  * Run: `sbt "runMain graft.tools.SimhashScaleSmoke [sfDir]"`.
-  * Prints one JSON line per (scale, width); record lands in PLANS.md.
+  * Run: `sbt "runMain graft.tools.SimhashScaleSmoke [sfDir]"` (scales
+  * 1×/2×/4×; [[run]] takes the scales). Prints one JSON line per
+  * (scale, width); record lands in PLANS.md.
   */
 object SimhashScaleSmoke {
 
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = Catalog.localSession("graft-simhash-scale-smoke")
-    graft.functions.GraftFunctions.register(spark)
+  def main(args: Array[String]): Unit =
+    ToolKit.main("graft-simhash-scale-smoke")(run(_,
+      if (args.length > 0) args(0) else "/root/testdata/sf0.1", Seq(1, 2, 4)))
 
+  /** One JSON line per (copy count in `scales`, chunk width). */
+  def run(spark: SparkSession, sfDir: String, scales: Seq[Int]): Unit = {
     val base = Catalog.t(spark, sfDir, "documents").select("doc_id", "text")
-    val nBase = base.count()
+    require(base.count() > 0)
 
     def corpus(copies: Int): DataFrame =
       (0 until copies).map { i =>
@@ -58,27 +59,23 @@ object SimhashScaleSmoke {
         .select(col("doc_id"), col("c.ci"), col("c.cv"))
       val a = chunked.select(col("doc_id").as("doc_a"), col("ci"), col("cv"))
       val bb = chunked.select(col("doc_id").as("doc_b"), col("ci"), col("cv"))
-      val t0 = System.nanoTime()
-      val n = a.join(bb, Seq("ci", "cv"))
-        .filter(col("doc_a") < col("doc_b"))
-        .count()
-      (n, (System.nanoTime() - t0) / 1e9)
+      val (n, secs, _) = ToolKit.phase {
+        a.join(bb, Seq("ci", "cv"))
+          .filter(col("doc_a") < col("doc_b"))
+          .count()
+      }
+      (n, secs)
     }
 
-    Seq(1, 2, 4).foreach { f =>
+    ToolKit.rungs(spark, scales) { f =>
       val fp = graft.llm.Dedup.simhashFingerprints(corpus(f)).cache()
       val nDocs = fp.count() // materialize once; both widths reuse
       Seq(8, 16).foreach { bits =>
         val (cand, secs) = candidates(fp, bits)
-        println(
-          s"""{"metric":"simhash_scale_smoke","scale":$f,"n_docs":$nDocs,""" +
-          s""""chunk_bits":$bits,"candidate_pairs":$cand,""" +
-          s""""join_s":${f"$secs%.1f"},""" +
-          s""""pairs_per_doc":${f"${cand.toDouble / nDocs}%.1f"}}""")
+        ToolKit.emit("metric" -> "simhash_scale_smoke", "scale" -> f,
+          "n_docs" -> nDocs, "chunk_bits" -> bits, "candidate_pairs" -> cand,
+          "join_s" -> secs, "pairs_per_doc" -> cand.toDouble / nDocs)
       }
-      fp.unpersist()
     }
-    require(nBase > 0)
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.tools
 
-import graft.Catalog
+import graft.TempDirs
 import graft.streaming.StreamingQueries
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 100×-scale smoke for the versioned upsert sink (st24) and its vacuum
@@ -23,65 +24,59 @@ import org.apache.spark.sql.functions._
   *     head still decodes (count verified against the expected
   *     keyspace).
   *
-  * Run: `sbt "runMain graft.tools.SnapshotChainScaleSmoke [nKeys] [batchRows] [nBatches]"`.
-  * Prints one JSON line per batch plus a vacuum line; the record lands
-  * in PLANS.md.
+  * Run: `sbt "runMain graft.tools.SnapshotChainScaleSmoke [nKeys] [batchRows] [nBatches]"`
+  * (defaults 5M, 5M, 4). Prints one JSON line per batch plus a vacuum
+  * line; the versions live in a scoped temp dir, deleted when the run
+  * returns or throws. The record lands in PLANS.md.
   */
 object SnapshotChainScaleSmoke {
 
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val nKeys = if (args.length > 0) args(0).toLong else 5000000L
-    val batchRows = if (args.length > 1) args(1).toLong else 5000000L
-    val nBatches = if (args.length > 2) args(2).toInt else 4
-    val spark = Catalog.localSession("graft-snapshot-chain-scale-smoke")
+  def main(args: Array[String]): Unit =
+    ToolKit.main("graft-snapshot-chain-scale-smoke")(run(_,
+      if (args.length > 0) args(0).toLong else 5000000L,
+      if (args.length > 1) args(1).toLong else 5000000L,
+      if (args.length > 2) args(2).toInt else 4))
 
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-chain-smoke").toString
-    val writeSnap = StreamingQueries.upsertSnapshotWriter(base)
+  /** One JSON line per merge batch plus a vacuum line. */
+  def run(spark: SparkSession, nKeys: Long, batchRows: Long, nBatches: Int): Unit =
+    TempDirs.scoped("graft-chain-smoke") { dir =>
+      val base = dir.toString
+      val writeSnap = StreamingQueries.upsertSnapshotWriter(base)
 
-    def dirBytes(p: String): Long = {
-      val f = new java.io.File(p)
-      if (!f.exists()) 0L
-      else Option(f.listFiles()).toSeq.flatten.map(_.length()).sum
+      def dirBytes(p: String): Long = {
+        val f = new java.io.File(p)
+        if (!f.exists()) 0L
+        else Option(f.listFiles()).toSeq.flatten.map(_.length()).sum
+      }
+
+      // synthetic batch b: batchRows events, keys uniform over the
+      // keyspace via a deterministic hash; distinct event ids per batch
+      def batch(bi: Long) =
+        spark.range(batchRows).toDF("i").select(
+          expr(s"pmod(hash(i, $bi), $nKeys)").cast("long").as("user_id"),
+          (col("i") + lit(bi * batchRows)).as("event_id"),
+          expr(s"concat('t', pmod(hash(i, $bi, 7), 5))").as("event_type"),
+          expr(s"pmod(hash(i, $bi, 11), 10000)").cast("long").as("cents"),
+          (lit(1704067200000L) + col("i") % 86400000L).as("ms"))
+
+      (0 until nBatches).foreach { bi =>
+        val (_, s, _) = ToolKit.phase { writeSnap(batch(bi.toLong), bi.toLong) }
+        val vDir = s"$base/v$bi"
+        val rows = spark.read.parquet(vDir).count()
+        ToolKit.emit("metric" -> "snapshot_chain_scale_smoke", "batch" -> bi,
+          "batch_rows" -> batchRows, "snapshot_keys" -> rows,
+          "snapshot_bytes" -> dirBytes(vDir), "merge_s" -> s)
+      }
+
+      // vacuum: retire all but the newest 2 versions (st25's policy)
+      val retire = 0 until (nBatches - 2)
+      val reclaimed = retire.map(bi => dirBytes(s"$base/v$bi")).sum
+      val (_, vacS, _) = ToolKit.phase {
+        retire.foreach(bi => TempDirs.deleteNow(dir.resolve(s"v$bi")))
+      }
+      val headRows = spark.read.parquet(s"$base/v${nBatches - 1}").count()
+      ToolKit.emit("metric" -> "snapshot_chain_scale_smoke", "vacuum" -> true,
+        "retired_versions" -> retire.size, "reclaimed_bytes" -> reclaimed,
+        "vacuum_s" -> vacS, "head_keys" -> headRows)
     }
-
-    // synthetic batch b: batchRows events, keys uniform over the
-    // keyspace via a deterministic hash; distinct event ids per batch
-    def batch(bi: Long) =
-      spark.range(batchRows).toDF("i").select(
-        expr(s"pmod(hash(i, $bi), $nKeys)").cast("long").as("user_id"),
-        (col("i") + lit(bi * batchRows)).as("event_id"),
-        expr(s"concat('t', pmod(hash(i, $bi, 7), 5))").as("event_type"),
-        expr(s"pmod(hash(i, $bi, 11), 10000)").cast("long").as("cents"),
-        (lit(1704067200000L) + col("i") % 86400000L).as("ms"))
-
-    (0 until nBatches).foreach { bi =>
-      val t0 = System.nanoTime()
-      writeSnap(batch(bi.toLong), bi.toLong)
-      val s = (System.nanoTime() - t0) / 1e9
-      val vDir = s"$base/v$bi"
-      val rows = spark.read.parquet(vDir).count()
-      println(s"""{"metric":"snapshot_chain_scale_smoke","batch":$bi,""" +
-        s""""batch_rows":$batchRows,"snapshot_keys":$rows,""" +
-        s""""snapshot_bytes":${dirBytes(vDir)},""" +
-        s""""merge_s":${"%.1f".format(s)}}""")
-    }
-
-    // vacuum: retire all but the newest 2 versions (st25's policy)
-    val retire = 0 until (nBatches - 2)
-    val reclaimed = retire.map(bi => dirBytes(s"$base/v$bi")).sum
-    val t0 = System.nanoTime()
-    retire.foreach { bi =>
-      graft.TempDirs.deleteNow(java.nio.file.Paths.get(s"$base/v$bi"))
-    }
-    val vacS = (System.nanoTime() - t0) / 1e9
-    val headRows = spark.read.parquet(s"$base/v${nBatches - 1}").count()
-    println(s"""{"metric":"snapshot_chain_scale_smoke","vacuum":true,""" +
-      s""""retired_versions":${retire.size},"reclaimed_bytes":$reclaimed,""" +
-      s""""vacuum_s":${"%.1f".format(vacS)},"head_keys":$headRows}""")
-
-    graft.TempDirs.deleteNow(java.nio.file.Paths.get(base))
-    spark.stop()
-  }
 }

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Catalog
 import graft.llm.GraphAlgs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for g14's scale design: the truss decomposition
@@ -25,15 +24,18 @@ import org.apache.spark.sql.functions._
   *
   * Graph generation is distributed and deterministic (hash-of-id
   * targets, no driver materialization). Run:
-  * `sbt "runMain graft.tools.TrussScaleSmoke"`; record lands in
+  * `sbt "runMain graft.tools.TrussScaleSmoke"` (20, 60 and 180 blocks;
+  * [[run]] takes the block counts). `total_s` times the decomposition
+  * through its materialized result. Record lands in
   * TRUSS_SCALE_r12.json + PLANS.md.
   */
 object TrussScaleSmoke {
 
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // deterministic JSON decimals
-    val spark = Catalog.localSession("graft-truss-scale-smoke")
+  def main(args: Array[String]): Unit =
+    ToolKit.main("graft-truss-scale-smoke")(run(_, Seq(20, 60, 180)))
 
+  /** One JSON line per 1000-node block count in `blockCounts`. */
+  def run(spark: SparkSession, blockCounts: Seq[Int]): Unit = {
     // planted 8-cliques: nodes block*1000 .. block*1000+7, all pairs.
     // background: each node u gets 4 hash-random forward edges
     // (u < v, v drawn from the whole id range) — triangle mass in the
@@ -56,18 +58,15 @@ object TrussScaleSmoke {
       clique.unionAll(bg)
     }
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-
-    Seq(20, 60, 180).foreach { nBlocks =>
+    ToolKit.rungs(spark, blockCounts) { nBlocks =>
       val g = graph(nBlocks).cache()
       val nEdges = g.distinct().count()
-      val (tn, secs) = timed {
-        GraphAlgs.trussDecomposition(g, maxK = 10).cache()
+      // the count materializes the cached result INSIDE the timer
+      val (tn, secs, _) = ToolKit.phase {
+        val t = GraphAlgs.trussDecomposition(g, maxK = 10).cache()
+        t.count()
+        t
       }
-      val nOut = tn.count()
       val hist = tn.groupBy(col("trussness")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val planted = hist.getOrElse(8L, 0L)
@@ -77,19 +76,17 @@ object TrussScaleSmoke {
       // id range; they only reinforce, so >= expected is the law —
       // and nothing anywhere may exceed the planted order
       val ok = planted >= expected && maxT <= 8L
-      println(s"""{"metric":"truss_scale_smoke","n_blocks":$nBlocks,""" +
-        s""""n_edges":$nEdges,""" +
-        s""""path":"${if (nEdges <= GraphAlgs.LocalPeelMaxEdges) "local_immediate"
-          else "distributed_then_local"}",""" +
-        s""""trussness_8_edges":$planted,"expected_clique_edges":$expected,""" +
-        s""""max_trussness":$maxT,"planted_recovered":$ok,""" +
-        s""""total_s":${"%.1f".format(secs)}}""")
+      ToolKit.emit("metric" -> "truss_scale_smoke", "n_blocks" -> nBlocks,
+        "n_edges" -> nEdges,
+        "path" -> (if (nEdges <= GraphAlgs.LocalPeelMaxEdges) "local_immediate"
+          else "distributed_then_local"),
+        "trussness_8_edges" -> planted, "expected_clique_edges" -> expected,
+        "max_trussness" -> maxT, "planted_recovered" -> ok,
+        "total_s" -> secs)
       // fail LOUDLY: a broken handoff must not land as a quiet false
       // in the committed artifact (round-12 review)
       assert(ok, s"planted-truss recovery failed at $nBlocks blocks: " +
         s"trussness-8 edges $planted (expected >= $expected), max $maxT")
-      tn.unpersist(); g.unpersist()
     }
-    spark.stop()
   }
 }
