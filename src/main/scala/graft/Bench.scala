@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main: runs every registered query against
@@ -83,24 +85,17 @@ object Bench {
       }
       q.name -> times.min
     }
-    // Locale.ROOT: a comma-decimal default locale (de_DE) would emit
-    // "1,234" and corrupt the JSON output
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val ok = results.filterNot { case (k, _) => failedNames.contains(k) }
     val total = ok.map(_._2).sum
-    val failedField =
-      "\"failed\":[" + failedNames.map("\"" + _ + "\"").mkString(",") + "]"
+    val head = Seq("metric" -> "total", "value" -> total, "unit" -> "sec")
+    val loadFields = Seq("load_before" -> loadBefore, "load_after" -> loadAvg(),
+      "runs" -> runs, "failed" -> failedNames.toSeq)
 
     // Full per-query detail -> a file (the driver keeps only the last
     // ~2000 chars of stdout, which a 95-entry map can never fit; the
     // committed detail file is the per-query record of a local run).
-    val loadAfter = loadAvg()
-    val loadFields = s""""load_before":${r3(loadBefore)},"load_after":${r3(loadAfter)},"runs":$runs,$failedField"""
-    val detail = ok.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val detailJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$detail,$loadFields,"sf":"$sfDir"}"""
+    val detailJson = Json.obj(head ++ Seq("queries" -> ListMap(ok: _*)) ++
+      loadFields :+ ("sf" -> sfDir): _*)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detailJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
@@ -111,9 +106,10 @@ object Bench {
     val fams = ok
       .groupBy { case (k, _) => k.takeWhile(_.isLetter) }
       .toSeq.sortBy(_._1)
-      .map { case (f, rs) => "\"" + f + "\":" + r3(rs.map(_._2).sum) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fams,"n_queries":${ok.size},$loadFields,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+      .map { case (f, rs) => f -> rs.map(_._2).sum }
+    println(Json.obj(head ++ Seq("queries" -> ListMap(fams: _*),
+      "n_queries" -> ok.size) ++ loadFields ++
+      Seq("detail" -> "BENCH_DETAIL.json", "sf" -> sfDir): _*))
     spark.stop()
   }
 }

@@ -12,12 +12,13 @@ import org.apache.spark.sql.SparkSession
   * operator would read it:
   *
   *  1. WRITE: bootstrap a value state of `nKeys` (Long → Long) entries
-  *     across 128 subtask files at maxPar 4096.
+  *     across `par` subtask files (`main`: 128 at maxPar 4096).
   *  2. SCAN: the source's byte-sized splits (runs of key groups up to
   *     `spark.sql.files.maxPartitionBytes`; at this size one partition
   *     per subtask file).
-  *  3. RESCALE: copy-through rewrite at parallelism 256 (key groups
-  *     re-bucketed 128 → 256 subtasks), then re-read and verify count.
+  *  3. RESCALE: copy-through rewrite at parallelism `2 * par` (key
+  *     groups re-bucketed 128 → 256 subtasks in `main`), then re-read
+  *     and verify count.
   *
   * What "driver holds handles only" means measurably: the driver-side
   * savepoint metadata is O(subtasks × states) file handles — printed as
@@ -39,17 +40,21 @@ object SavepointScaleSmoke {
     ToolKit.main("graft-scale-smoke")(run(_,
       if (args.length > 0) args(0).toLong else 5000000L,
       if (args.length > 1) args(1)
-      else graft.TempDirs.create("graft-scale"))) // a caller's dir is kept
+      else graft.TempDirs.create("graft-scale"), // a caller's dir is kept
+      128, 4096))
 
-  /** One JSON line for `nKeys` keys; the savepoints go under `root`. */
-  def run(spark: SparkSession, nKeys: Long, root: String): Unit = {
+  /** One JSON line for `nKeys` keys written by `par` subtasks at
+    * `maxPar` key groups and rescaled to `2 * par`; the savepoints go
+    * under `root`. The handle-count keys keep their names from `main`'s
+    * 128 → 256 subtasks at any `par`.
+    */
+  def run(spark: SparkSession, nKeys: Long, root: String,
+          par: Int, maxPar: Int): Unit = {
     import spark.implicits._
-    val maxPar = 4096
-    val par = 128
     val dir1 = s"$root/sp1"
     val dir2 = s"$root/sp2"
 
-    // 1. WRITE: nKeys of (k, 2k) value state, 128 subtasks, maxPar 4096
+    // 1. WRITE: nKeys of (k, 2k) value state
     val (meta1, writeS, writeMb) = ToolKit.phase {
       Savepoints.writer(spark, Savepoints.bootstrap("bigop", par, maxPar), "bigop")
         .withKeyCodec(LongCodec)
@@ -69,11 +74,11 @@ object SavepointScaleSmoke {
       (sizes.length, sizes.sum, sizes.max)
     }
 
-    // 3. RESCALE 128 → 256 subtasks (same maxPar), pure copy-through
+    // 3. RESCALE par → 2 * par subtasks (same maxPar), pure copy-through
     val (meta2, rescaleS, rescaleMb) = ToolKit.phase {
       val reader = Savepoints.reader(spark, meta1, "bigop")
       Savepoints.writer(spark, meta1, "bigop")
-        .withParallelism(256, maxPar)
+        .withParallelism(2 * par, maxPar)
         .addKeyedStateRows(reader.getAllUnreadKeyedStateRows)
         .writeAll(dir2)
     }

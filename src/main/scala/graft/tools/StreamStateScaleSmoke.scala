@@ -14,13 +14,13 @@ import org.apache.spark.sql.functions._
   * against. Per scale, for the count-min grid (st30's aggregation) and
   * the KMV sketch (st27's):
   *
-  *   - rows arrive as 8 parquet shards consumed 1 file/trigger → 8
-  *     micro-batches, so the final answer provably crossed 7
-  *     cross-batch state merges;
+  *   - rows arrive as `batches` parquet shards (8 in `main`) consumed
+  *     1 file/trigger → one micro-batch each, so the final answer
+  *     provably crossed `batches - 1` cross-batch state merges;
   *   - the complete-mode result row count IS the state bound: ≤256
   *     grid cells / one sketch row of ≤64 longs per event type — at
   *     every arrival volume;
-  *   - wall time and rows/s for the full 8-batch run;
+  *   - wall time and rows/s for the full run;
   *   - a batch recount of the same aggregation must match EXACTLY
   *     (the kappa law, here asserted at smoke scale too).
   *
@@ -34,27 +34,31 @@ import org.apache.spark.sql.functions._
   */
 object StreamStateScaleSmoke {
   def main(args: Array[String]): Unit =
-    ToolKit.main("graft-stream-state-scale-smoke")(run(_, Seq(1000000L, 10000000L)))
+    ToolKit.main("graft-stream-state-scale-smoke")(
+      run(_, Seq(1000000L, 10000000L), 8))
 
-  /** Two JSON lines (countmin, kmv) per row count in `ns`. */
-  def run(spark: SparkSession, ns: Seq[Long]): Unit =
+  /** Two JSON lines (countmin, kmv) per row count in `ns`, each streamed
+    * in `batches` micro-batches.
+    */
+  def run(spark: SparkSession, ns: Seq[Long], batches: Int): Unit =
     Catalog.withConfs(spark, StreamingQueries.StreamStatePartitions) {
       ToolKit.rungs(spark, ns) { n =>
         TempDirs.scoped(s"stream-smoke-$n") { shards =>
-          rung(spark, n, shards.toString)
+          rung(spark, n, batches, shards.toString)
         }
       }
     }
 
-  private def rung(spark: SparkSession, n: Long, dir: String): Unit = {
-    // skewed synthetic population, 8 shards (the micro-batch grain)
+  private def rung(spark: SparkSession, n: Long, batches: Int,
+                   dir: String): Unit = {
+    // skewed synthetic population, one shard per micro-batch
     spark.range(n).toDF("i")
       .select(
         expr("cast(floor(sqrt(i)) as bigint)").as("user_id"),
         expr("cast(i % 4 as int)").as("tmod"),
         expr("(cast(floor(sqrt(i)) as bigint) % 1000003) * 100003L" +
           " + i % 7").as("k"))
-      .repartition(8)
+      .repartition(batches)
       .write.mode("overwrite").parquet(dir)
 
     def streamed(tag: String)(agg: DataFrame => DataFrame): (DataFrame, Double) = {
@@ -84,7 +88,7 @@ object StreamStateScaleSmoke {
     val gridKappa = grid.collect().map(_.toSeq).toSet ==
       gridBatch.collect().map(_.toSeq).toSet
     ToolKit.emit("metric" -> "stream_state_smoke", "op" -> "countmin",
-      "n_rows" -> n, "micro_batches" -> 8, "state_rows" -> gridRows,
+      "n_rows" -> n, "micro_batches" -> batches, "state_rows" -> gridRows,
       "kappa_exact" -> gridKappa, "wall_s" -> gridS,
       "rows_per_s" -> (n / gridS).toLong)
 
@@ -99,7 +103,7 @@ object StreamStateScaleSmoke {
       expr("size(hs)").as("longs")).collect()
       .map(r => r.getInt(1)).toSeq
     ToolKit.emit("metric" -> "stream_state_smoke", "op" -> "kmv",
-      "n_rows" -> n, "micro_batches" -> 8, "state_rows" -> kmvState.length,
+      "n_rows" -> n, "micro_batches" -> batches, "state_rows" -> kmvState.length,
       "max_sketch_longs" -> kmvState.max, "k" -> kmvK,
       "wall_s" -> kmvS, "rows_per_s" -> (n / kmvS).toLong)
   }

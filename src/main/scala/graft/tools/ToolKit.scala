@@ -26,49 +26,46 @@ object ToolKit {
   }
 
   /** Run `body` once per rung of a size ladder, releasing the session's
-    * cached tables and collecting garbage after each, so one rung's
-    * cache and heap do not tax the next rung's numbers.
+    * cached tables after each, so one rung's cache does not tax the next
+    * rung's numbers. The heap needs no collection here: every timer is
+    * a [[phase]], which collects it before it starts.
     */
   def rungs[T](spark: SparkSession, sizes: Seq[T])(body: T => Unit): Unit =
     sizes.foreach { s =>
       body(s)
       spark.catalog.clearCache()
-      System.gc()
     }
 
-  private val peak = new AtomicLong(0L)
-
-  private def sample(): Unit = {
-    val rt = Runtime.getRuntime
-    val used = rt.totalMemory() - rt.freeMemory()
-    peak.updateAndGet(p => math.max(p, used))
-  }
-
-  // one daemon thread samples the heap every 100 ms from the first phase on
-  private lazy val sampler: Thread = {
-    val t = new Thread(() => while (true) { sample(); Thread.sleep(100) })
-    t.setDaemon(true)
-    t.start()
-    t
-  }
-
   /** Time `f`: its value, wall seconds and the peak JVM heap in MB seen
-    * while it ran. The heap is collected first, outside the timed
-    * region, so the peak is the phase's own. In local mode executors
-    * share the JVM, so the peak bounds driver and executors together.
+    * while it ran, sampled every 100 ms by a thread of this call. The
+    * heap is collected first, outside the timed region, so the peak is
+    * the phase's own. In local mode executors share the JVM, so the peak
+    * bounds driver and executors together.
     * `f` must materialize what it measures: a lazy `cache()` returned
     * unevaluated times only plan construction.
     */
   def phase[A](f: => A): (A, Double, Long) = {
-    sampler
     System.gc()
-    peak.set(0L)
-    sample()
-    val t0 = System.nanoTime()
-    val r = f
-    val secs = (System.nanoTime() - t0) / 1e9
-    sample()
-    (r, secs, peak.get() >> 20)
+    val peak = new AtomicLong(0L)
+    def sample(): Unit = {
+      val rt = Runtime.getRuntime
+      peak.accumulateAndGet(rt.totalMemory() - rt.freeMemory(), math.max)
+    }
+    val sampler = new Thread(() =>
+      try while (true) { sample(); Thread.sleep(100) }
+      catch { case _: InterruptedException => })
+    sampler.setDaemon(true)
+    sampler.start()
+    try {
+      val t0 = System.nanoTime()
+      val r = f
+      val secs = (System.nanoTime() - t0) / 1e9
+      sample()
+      (r, secs, peak.get() >> 20)
+    } finally {
+      sampler.interrupt()
+      sampler.join()
+    }
   }
 
   /** Print one JSON line; see [[graft.Json.obj]] for the value forms. */

@@ -74,7 +74,9 @@ class ScaleSmokeSpec extends AnyFunSuite {
         "scan_subtask_parts, scan_subtask_s, scan_subtask_max_rows, " +
         "scan_subtask_peak_mb, rescale_s, rescale_peak_mb, verify_s, " +
         "verified_rows") {
-        SavepointScaleSmoke.run(spark, 2000L, dir.toString)
+        // 4 → 8 subtasks: the path of main's 128 → 256 without its
+        // fixed cost per nearly empty subtask file
+        SavepointScaleSmoke.run(spark, 2000L, dir.toString, 4, 128)
       }
     }
   }
@@ -128,7 +130,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
     assertKeys(s"$head, slices, pairs_examined, pairs_per_vec, verified_pairs, " +
       "eps_edges, candidates_s, verify_s",
       s"$head, $recall, free_gb_end") {
-      EpsGraphScaleSmoke.blocked(spark, 1000L, 2)
+      EpsGraphScaleSmoke.blocked(spark, 500L, 2)
     }
   }
 
@@ -143,7 +145,8 @@ class ScaleSmokeSpec extends AnyFunSuite {
     val head = "metric, op, n_rows, micro_batches, state_rows"
     assertKeys(s"$head, kappa_exact, wall_s, rows_per_s",
       s"$head, max_sketch_longs, k, wall_s, rows_per_s") {
-      StreamStateScaleSmoke.run(spark, Seq(2000L))
+      // 2 micro-batches: one cross-batch state merge, as main's 8 make 7
+      StreamStateScaleSmoke.run(spark, Seq(2000L), 2)
     }
   }
 

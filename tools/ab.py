@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Paired A/B of the repository benchmark: a parent revision against the
-working tree (or a second revision), with a verdict per end-to-end metric.
+working tree, with a verdict per end-to-end metric.
 
 Usage (from the repository root):
 
@@ -8,12 +8,11 @@ Usage (from the repository root):
 
 The parent is exported with `git archive` into a temporary directory, which
 is removed on exit and on failure (a clean export, as a fresh checkout of the
-committed files; no worktree is registered in .git). `--change REV` exports a
-second revision the same way; without it the change is the working tree.
+committed files; no worktree is registered in .git).
 
 Each side first runs once unrecorded (this builds it and warms the host).
 Then, per workload, pair i runs the `BENCHMARK.json` command with
-`--workload W --seed SEED+i --seconds run_seconds --trace 0` on both sides,
+`--workload W --seed 1+i --seconds run_seconds --trace 0` on both sides,
 the parent first in even pairs and the change first in odd ones. Every run's
 metrics are printed as they arrive. The report gives, per workload and
 end-to-end metric, both medians, the parent's IQR/median, the change's wins
@@ -130,10 +129,8 @@ def run_once(tree, spec, workload, seed):
 def main():
     p = argparse.ArgumentParser()
     p.add_argument("--parent", required=True, help="parent revision")
-    p.add_argument("--change", help="change revision (default: working tree)")
     p.add_argument("--workload", nargs="+", required=True)
     p.add_argument("--pairs", type=int, default=10)
-    p.add_argument("--seed", type=int, default=1, help="seed of pair 0")
     a = p.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -143,15 +140,10 @@ def main():
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     with tempfile.TemporaryDirectory(prefix="graft-ab-") as tmp:
-        trees = {"parent": os.path.join(tmp, "parent")}
+        trees = {"parent": os.path.join(tmp, "parent"), "change": ROOT}
         export(a.parent, trees["parent"])
-        if a.change:
-            trees["change"] = os.path.join(tmp, "change")
-            export(a.change, trees["change"])
-        else:
-            trees["change"] = ROOT
         for side in ("parent", "change"):
-            if run_once(trees[side], spec, a.workload[0], a.seed) is None:
+            if run_once(trees[side], spec, a.workload[0], 1) is None:
                 raise SystemExit(f"{side}: the unrecorded first run failed")
 
         report = {}
@@ -160,13 +152,13 @@ def main():
             for i in range(a.pairs):
                 order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
                 for side in order:
-                    r = run_once(trees[side], spec, w, a.seed + i)
+                    r = run_once(trees[side], spec, w, 1 + i)
                     if r is None:  # no result line: timed out or crashed
                         r = {"correct": False, "attempted": 0, "failed": 0,
                              "metrics": {}, "no_result": True}
                     runs[side].append(r)
                     print(json.dumps({"workload": w, "pair": i, "side": side,
-                                      "seed": a.seed + i, **r}), flush=True)
+                                      "seed": 1 + i, **r}), flush=True)
             rows = {}
             for m in e2e:
                 name = m["name"]
