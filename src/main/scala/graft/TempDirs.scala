@@ -12,7 +12,10 @@ import scala.jdk.CollectionConverters._
   *     result re-reads it lazily on every action;
   *   - a path that nothing outside the call reads (a streaming
   *     checkpoint, a RocksDB work or staging dir) is [[scoped]] and
-  *     deleted when the call returns or throws.
+  *     deleted when the call returns or throws;
+  *   - a path the call hands to its caller to release (a localized
+  *     checkpoint download) is made by [[handOff]] and deleted at once
+  *     if the call throws before handing it over.
   * Repeated bench/verify runs in a long-lived driver therefore do not
   * accumulate output on disk. [[deleteNow]] is the only tree delete.
   */
@@ -37,6 +40,14 @@ object TempDirs {
   def scoped[A](prefix: String)(body: Path => A): A = {
     val dir = Files.createTempDirectory(prefix)
     try body(dir) finally deleteNow(dir)
+  }
+
+  /** Like [[scoped]], but the tree outlives a `body` that returns (its
+    * result hands the dir to the caller to release).
+    */
+  def handOff[A](prefix: String)(body: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) catch { case t: Throwable => deleteNow(dir); throw t }
   }
 
   /** Delete a file or directory tree now; a missing path is a no-op. */

@@ -1,8 +1,12 @@
 package graft.core.flink
 
+import graft.core.io.SnapshotFs
 import graft.core.meta._
+import graft.core.scan.RocksDbCheckpoints
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import org.apache.hadoop.fs.Path
+
+import java.io.{BufferedInputStream, DataInputStream, InputStream}
 
 /** Real Flink `_metadata` reader/writer — the checkpoint-metadata
   * header (`Checkpoints.storeCheckpointMetadata`) plus the SavepointV2
@@ -79,8 +83,6 @@ object FlinkMetadataIO {
     */
   val RelativeStreamHandle = 6
 
-  val MetadataFile = "_metadata"
-
   /** Sniff: does this file start with Flink's checkpoint magic? */
   def isFlinkMetadata(head: Array[Byte]): Boolean =
     head.length >= 4 &&
@@ -90,10 +92,11 @@ object FlinkMetadataIO {
   // ------------------------------------------------------------ write
 
   /** NO_OVERWRITE `_metadata` write (reference parity with
-    * StateMetadataUtils.java:189-194). Emits keyed KEY_GROUPS handles
+    * StateMetadataUtils.java:189-194, through
+    * [[SnapshotFs.writeMetadata]]). Emits keyed KEY_GROUPS handles
     * and non-keyed PARTITIONABLE operator handles (inline byte-stream
-    * delegates). All validation runs BEFORE the file is created, so a
-    * rejected write never leaves a half-written `_metadata` behind.
+    * delegates). A rejected write never leaves a half-written
+    * `_metadata` behind.
     *
     * Version selection: v2 (the reference's pinned 1.7 target) unless
     * any operator carries v3 coordinator state, in which case the v3
@@ -101,7 +104,7 @@ object FlinkMetadataIO {
     * v3-loaded savepoint rewrites as v3, never silently dropping its
     * enumerator checkpoints.
     */
-  def write(dirStr: String, meta: SavepointMeta): org.apache.hadoop.fs.Path = {
+  def write(dirStr: String, meta: SavepointMeta): Path = {
     // pre-validate: every keyed file of every operator must be in the
     // Flink stream layout (a loaded incremental checkpoint's RocksDB
     // stub handles cannot be re-emitted — rewrite those operators'
@@ -119,18 +122,13 @@ object FlinkMetadataIO {
         require("0123456789abcdef".contains(c), s"bad operator id ${op.operatorId}")
       }
     }
-    val dir = new org.apache.hadoop.fs.Path(dirStr)
-    val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.mkdirs(dir)
-    val mp = new org.apache.hadoop.fs.Path(dir, MetadataFile)
+    val dirQualified = SnapshotFs.qualify(new Path(dirStr)).toUri.getPath
     val version =
       if (meta.operators.exists(o => o.fullyFinished || o.finishedSubtasks.nonEmpty))
         MetadataV4Version
       else if (meta.operators.exists(_.coordinatorState.isDefined)) MetadataV3Version
       else SavepointVersion
-    val out = fs.create(mp, false) // NO_OVERWRITE
-    val d = new DataOutputStream(new BufferedOutputStream(out))
-    try {
+    SnapshotFs.writeMetadata(dirStr) { d =>
       d.writeInt(HeaderMagic)
       d.writeInt(version)
       d.writeLong(meta.checkpointId)
@@ -221,14 +219,12 @@ object FlinkMetadataIO {
             case None => d.writeByte(NullHandle)
             case Some(f) if f.kind == KeyedFileHandle.RocksDbKind =>
               val dirPath = KeyedFileHandle.resolve(meta.basePath, f.relativePath)
-              val dfs = dirPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
-              val files = dfs.listStatus(dirPath).filter(_.isFile)
+              val files = SnapshotFs.list(dirPath).filter(_.isFile)
                 .sortBy(_.getPath.getName)
               // a stub dir from a LOADED incremental handle (manifest +
               // partially materialized files) is not a real checkpoint;
               // only writer-produced / genuine RocksDB dirs re-emit
-              require(!files.exists(_.getPath.getName ==
-                graft.core.scan.RocksDbCheckpoints.ManifestName),
+              require(!files.exists(_.getPath.getName == RocksDbCheckpoints.ManifestName),
                 s"operator ${op.uid} subtask $subtask: keyed dir is a " +
                   "localization stub of a loaded incremental checkpoint; " +
                   "rewrite its rows instead of re-emitting the handle")
@@ -269,23 +265,21 @@ object FlinkMetadataIO {
               d.writeInt(f.kgEnd - f.kgStart + 1)
               f.offsets.foreach(d.writeLong)
               val resolved = KeyedFileHandle.resolve(meta.basePath, f.relativePath)
-              val pfs = resolved.getFileSystem(new org.apache.hadoop.conf.Configuration())
               // qualify so the emitted reference is absolute even when
               // the SOURCE savepoint was loaded from a relative path —
               // an unqualified path would re-resolve against the NEW
               // dir on read and dangle
-              val p = pfs.makeQualified(resolved)
+              val p = SnapshotFs.qualify(resolved)
               // fail fast on a missing/unreadable state file: a
               // savepoint referencing absent state must not be written
-              val size = pfs.getFileStatus(p).getLen
+              val size = SnapshotFs.length(p)
               if (version == MetadataV4Version &&
                   KeyedFileHandle.isRelative(f.relativePath) &&
                   // relocatability requires CO-LOCATION: only files that
                   // actually live in the output dir may be referenced
                   // relative to it (a carried-over handle whose file
                   // stays in the source savepoint must stay absolute)
-                  Option(p.getParent).exists(_.toUri.getPath ==
-                    fs.makeQualified(dir).toUri.getPath)) {
+                  Option(p.getParent).exists(_.toUri.getPath == dirQualified)) {
                 // 1.14 savepoints are fully relocatable: in-dir state
                 // files are referenced relative to the metadata dir
                 d.writeByte(RelativeStreamHandle)
@@ -314,136 +308,127 @@ object FlinkMetadataIO {
         }
         } // fullyFinished else
       }
-      d.flush()
-    } finally d.close()
-    mp
+    }
   }
 
   // ------------------------------------------------------------- read
 
-  def load(pathStr: String): SavepointMeta = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val raw = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = raw.getFileSystem(conf)
-    val mp = if (fs.getFileStatus(raw).isDirectory)
-      new org.apache.hadoop.fs.Path(raw, MetadataFile) else raw
-    val basePath = mp.getParent.toString
-    val in = fs.open(mp)
-    val d = new DataInputStream(new BufferedInputStream(in))
-    try {
+  /** Parses a Flink `_metadata` from `in`, whose handles resolve
+    * against `basePath`; [[MetadataIO.load]] opens and closes it.
+    */
+  private[core] def read(in: InputStream, basePath: String): SavepointMeta = {
+    val d = new DataInputStream(in)
+    val magic = d.readInt()
+    require(magic == HeaderMagic, f"not a Flink checkpoint: magic 0x$magic%08x")
+    val version = d.readInt()
+    require(version == SavepointVersion || version == MetadataV3Version ||
+      version == MetadataV4Version,
+      s"unsupported savepoint metadata version $version (supported: 2, 3, 4)")
+    val checkpointId = d.readLong()
+    val nMaster = d.readInt()
+    val masterStates = (0 until nMaster).map { _ =>
       val magic = d.readInt()
-      require(magic == HeaderMagic, f"not a Flink checkpoint: magic 0x$magic%08x")
-      val version = d.readInt()
-      require(version == SavepointVersion || version == MetadataV3Version ||
-        version == MetadataV4Version,
-        s"unsupported savepoint metadata version $version (supported: 2, 3, 4)")
-      val checkpointId = d.readLong()
-      val nMaster = d.readInt()
-      val masterStates = (0 until nMaster).map { _ =>
-        val magic = d.readInt()
-        require(magic == MasterStateMagic,
-          f"corrupt master state: magic 0x$magic%08x")
-        val len = d.readInt()
-        val bytes = new Array[Byte](len)
-        d.readFully(bytes)
-        bytes
-      }
-      val nOps = d.readInt()
-      val ops = (0 until nOps).map { _ =>
-        val idBytes = new Array[Byte](16)
-        putLong(idBytes, 0, d.readLong())
-        putLong(idBytes, 8, d.readLong())
-        val opId = bytesToHex(idBytes)
-        val par = d.readInt()
-        val maxPar = d.readInt()
-        // v2: legacy chain length (always 1). v3 (Flink >=1.11,
-        // MetadataV3Serializer): an operator-coordinator stream handle
-        // instead — staged verbatim so a drop is never silent.
-        val coordinator: Option[Array[Byte]] =
-          if (version == SavepointVersion) { d.readInt(); None }
-          else Some(capture(d)(skipStreamHandle)).filterNot(isNullSection)
-        // v4 sentinel -1: FLIP-147 fully-finished operator, no subtasks
-        val nSubRaw = d.readInt()
-        val fullyFinished = version == MetadataV4Version && nSubRaw == -1
-        require(nSubRaw >= 0 || fullyFinished,
-          s"operator $opId: bad subtask count $nSubRaw for version $version")
-        val nSub = if (fullyFinished) 0 else nSubRaw
-        val files = scala.collection.mutable.ArrayBuffer.empty[KeyedFileHandle]
-        val nonKeyed = scala.collection.mutable.Map.empty[Int, OperatorBackendState]
-        val proxySources = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-        val rawOp = scala.collection.mutable.Map.empty[Int, Array[Byte]]
-        val rawKeyed = scala.collection.mutable.Map.empty[Int, Array[Byte]]
-        val finishedSub = scala.collection.mutable.Set.empty[Int]
-        (0 until nSub).foreach { _ =>
-          val subtask = d.readInt()
-          // v4: a finished subtask is a single boolean, no state body
-          val finished = version == MetadataV4Version && d.readBoolean()
-          if (finished) finishedSub += subtask
-          else {
-          d.readLong() // legacy duration
-          val nLegacy = d.readInt()
-          (0 until nLegacy).foreach(_ => readStreamHandle(d)) // absorb
-          if (d.readInt() == 1)
-            readOperatorHandle(d, basePath).foreach(nonKeyed(subtask) = _)
-          // raw operator state: arbitrary user bytes — stage the handle
-          // section VERBATIM without fetching or parsing the delegate
-          // (it is not an OperatorBackendSerializationProxy). Replayed
-          // byte-identically on write (reference passthrough,
-          // OperatorStateWriter.java:266-280).
-          if (d.readInt() == 1)
-            rawOp(subtask) = capture(d)(skipOperatorHandle)
-          readKeyedHandle(d, basePath, subtask, proxySources).foreach(files += _)
-          // raw keyed: stage the full handle section verbatim (heap
-          // timers of a real Flink job live here)
-          val rk = capture(d)(skipKeyedHandle)
-          if (!isNullSection(rk)) rawKeyed(subtask) = rk
-          if (version >= MetadataV3Version) {
-            // v3+ channel state (unaligned checkpoints): savepoints are
-            // always aligned, so both collections are empty; reject a
-            // non-empty one rather than guess its layout
-            val nIn = d.readInt()
-            require(nIn == 0, "unaligned-checkpoint input-channel state " +
-              "is not supported; take an (aligned) savepoint instead")
-            val nOut = d.readInt()
-            require(nOut == 0, "unaligned-checkpoint result-subpartition " +
-              "state is not supported; take an (aligned) savepoint instead")
-          }
-          }
+      require(magic == MasterStateMagic,
+        f"corrupt master state: magic 0x$magic%08x")
+      val len = d.readInt()
+      val bytes = new Array[Byte](len)
+      d.readFully(bytes)
+      bytes
+    }
+    val nOps = d.readInt()
+    val ops = (0 until nOps).map { _ =>
+      val idBytes = new Array[Byte](16)
+      putLong(idBytes, 0, d.readLong())
+      putLong(idBytes, 8, d.readLong())
+      val opId = bytesToHex(idBytes)
+      val par = d.readInt()
+      val maxPar = d.readInt()
+      // v2: legacy chain length (always 1). v3 (Flink >=1.11,
+      // MetadataV3Serializer): an operator-coordinator stream handle
+      // instead — staged verbatim so a drop is never silent.
+      val coordinator: Option[Array[Byte]] =
+        if (version == SavepointVersion) { d.readInt(); None }
+        else Some(capture(d)(skipStreamHandle)).filterNot(isNullSection)
+      // v4 sentinel -1: FLIP-147 fully-finished operator, no subtasks
+      val nSubRaw = d.readInt()
+      val fullyFinished = version == MetadataV4Version && nSubRaw == -1
+      require(nSubRaw >= 0 || fullyFinished,
+        s"operator $opId: bad subtask count $nSubRaw for version $version")
+      val nSub = if (fullyFinished) 0 else nSubRaw
+      val files = scala.collection.mutable.ArrayBuffer.empty[KeyedFileHandle]
+      val nonKeyed = scala.collection.mutable.Map.empty[Int, OperatorBackendState]
+      val proxySources = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+      val rawOp = scala.collection.mutable.Map.empty[Int, Array[Byte]]
+      val rawKeyed = scala.collection.mutable.Map.empty[Int, Array[Byte]]
+      val finishedSub = scala.collection.mutable.Set.empty[Int]
+      (0 until nSub).foreach { _ =>
+        val subtask = d.readInt()
+        // v4: a finished subtask is a single boolean, no state body
+        val finished = version == MetadataV4Version && d.readBoolean()
+        if (finished) finishedSub += subtask
+        else {
+        d.readLong() // legacy duration
+        val nLegacy = d.readInt()
+        (0 until nLegacy).foreach(_ => readStreamHandle(d)) // absorb
+        if (d.readInt() == 1)
+          readOperatorHandle(d, basePath).foreach(nonKeyed(subtask) = _)
+        // raw operator state: arbitrary user bytes — stage the handle
+        // section VERBATIM without fetching or parsing the delegate
+        // (it is not an OperatorBackendSerializationProxy). Replayed
+        // byte-identically on write (reference passthrough,
+        // OperatorStateWriter.java:266-280).
+        if (d.readInt() == 1)
+          rawOp(subtask) = capture(d)(skipOperatorHandle)
+        readKeyedHandle(d, basePath, subtask, proxySources).foreach(files += _)
+        // raw keyed: stage the full handle section verbatim (heap
+        // timers of a real Flink job live here)
+        val rk = capture(d)(skipKeyedHandle)
+        if (!isNullSection(rk)) rawKeyed(subtask) = rk
+        if (version >= MetadataV3Version) {
+          // v3+ channel state (unaligned checkpoints): savepoints are
+          // always aligned, so both collections are empty; reject a
+          // non-empty one rather than guess its layout
+          val nIn = d.readInt()
+          require(nIn == 0, "unaligned-checkpoint input-channel state " +
+            "is not supported; take an (aligned) savepoint instead")
+          val nOut = d.readInt()
+          require(nOut == 0, "unaligned-checkpoint result-subpartition " +
+            "state is not supported; take an (aligned) savepoint instead")
         }
-        (OperatorStateMeta(opId, opId, par, maxPar, None, Seq.empty,
-          compression = false, files.toSeq, nonKeyed.toMap,
-          rawOperatorState = rawOp.toMap, rawKeyedState = rawKeyed.toMap,
-          coordinatorState = coordinator, fullyFinished = fullyFinished,
-          finishedSubtasks = finishedSub.toSet),
-          proxySources.headOption)
+        }
       }
-      // resolve codecs/compression per operator from the proxy: full
-      // savepoints carry it at the head of each keyed file, incremental
-      // checkpoints in their dedicated meta state handle (reference:
-      // StateMetadataUtils.getKeyedBackendSerializationProxy, :127-140)
-      val resolved = ops.map { case (op, incProxyBytes) =>
-        op.keyedFiles.find(_.kind == KeyedFileHandle.FlinkStreamKind) match {
-          case Some(f) =>
-            val p = KeyedFileHandle.resolve(basePath, f.relativePath)
-            val sin = p.getFileSystem(conf).open(p)
-            try {
-              val proxy = FlinkProxyIO.read(new BufferedInputStream(sin))
+      (OperatorStateMeta(opId, opId, par, maxPar, None, Seq.empty,
+        compression = false, files.toSeq, nonKeyed.toMap,
+        rawOperatorState = rawOp.toMap, rawKeyedState = rawKeyed.toMap,
+        coordinatorState = coordinator, fullyFinished = fullyFinished,
+        finishedSubtasks = finishedSub.toSet),
+        proxySources.headOption)
+    }
+    // resolve codecs/compression per operator from the proxy: full
+    // savepoints carry it at the head of each keyed file, incremental
+    // checkpoints in their dedicated meta state handle (reference:
+    // StateMetadataUtils.getKeyedBackendSerializationProxy, :127-140)
+    val resolved = ops.map { case (op, incProxyBytes) =>
+      op.keyedFiles.find(_.kind == KeyedFileHandle.FlinkStreamKind) match {
+        case Some(f) =>
+          val sin = SnapshotFs.open(KeyedFileHandle.resolve(basePath, f.relativePath))
+          try {
+            val proxy = FlinkProxyIO.read(new BufferedInputStream(sin))
+            op.copy(keyCodecId = Some(proxy.keyCodecId),
+              states = proxy.states, compression = proxy.compression)
+          } finally sin.close()
+        case None =>
+          incProxyBytes match {
+            case Some(bytes) =>
+              val proxy = FlinkProxyIO.read(new java.io.ByteArrayInputStream(bytes))
               op.copy(keyCodecId = Some(proxy.keyCodecId),
                 states = proxy.states, compression = proxy.compression)
-            } finally sin.close()
-          case None =>
-            incProxyBytes match {
-              case Some(bytes) =>
-                val proxy = FlinkProxyIO.read(new java.io.ByteArrayInputStream(bytes))
-                op.copy(keyCodecId = Some(proxy.keyCodecId),
-                  states = proxy.states, compression = proxy.compression)
-              case None => op
-            }
-        }
+            case None => op
+          }
       }
-      SavepointMeta(checkpointId, basePath, resolved, Dialect.Flink,
-        masterStates)
-    } finally d.close()
+    }
+    SavepointMeta(checkpointId, basePath, resolved, Dialect.Flink,
+      masterStates)
   }
 
   /** Parse one keyed-state handle. KEY_GROUPS -> a seekable stream-file
@@ -492,10 +477,7 @@ object FlinkMetadataIO {
         readStreamHandle(d) match { // meta state: the serialization proxy
           case ByteHandle(_, bytes) => proxyOut += bytes
           case FileHandle(path, _) =>
-            val p = KeyedFileHandle.resolve(basePath, path)
-            val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            val in = fs.open(p)
-            try proxyOut += in.readAllBytes() finally in.close()
+            proxyOut += SnapshotFs.readAll(KeyedFileHandle.resolve(basePath, path))
           case NullStream =>
         }
         // stub dir: inline files written out, remote files manifested.
@@ -524,18 +506,18 @@ object FlinkMetadataIO {
         java.nio.file.Files.createDirectories(stage)
         val stub = graft.TempDirs.track(
           java.nio.file.Files.createTempDirectory(stage, "graft-flink-inc"))
-        val manifest = new StringBuilder
-        (shared ++ priv).foreach {
+        val remote = (shared ++ priv).flatMap {
           case (name, ByteHandle(_, bytes)) =>
             java.nio.file.Files.write(stub.resolve(name), bytes)
+            None
           case (name, FileHandle(path, _)) =>
-            manifest.append(name).append('\t')
-              .append(KeyedFileHandle.resolve(basePath, path).toString).append('\n')
-          case (_, NullStream) =>
+            Some(name -> KeyedFileHandle.resolve(basePath, path).toString)
+          case (_, NullStream) => None
         }
-        java.nio.file.Files.write(
-          stub.resolve(graft.core.scan.RocksDbCheckpoints.ManifestName),
-          manifest.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        // local staging like the inline files: a checksummed-FS create
+        // costs milliseconds per file, on every load
+        java.nio.file.Files.write(stub.resolve(RocksDbCheckpoints.ManifestName),
+          RocksDbCheckpoints.manifestBytes(remote))
         Some(KeyedFileHandle(subtask, stub.toAbsolutePath.toString, kgStart,
           kgStart + numKgs - 1, Seq.empty, KeyedFileHandle.RocksDbKind))
       case other =>
@@ -590,11 +572,8 @@ object FlinkMetadataIO {
       case ByteHandle(_, bytes) =>
         Some(FlinkOperatorStateIO.read(bytes, offsets))
       case FileHandle(path, _) =>
-        val p = KeyedFileHandle.resolve(basePath, path)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        Some(FlinkOperatorStateIO.read(bytes, offsets))
+        Some(FlinkOperatorStateIO.read(
+          SnapshotFs.readAll(KeyedFileHandle.resolve(basePath, path)), offsets))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.core.flink
 
 import graft.core.codec.{ByteReader, CodecRegistry}
+import graft.core.io.SnapshotFs
 import graft.core.meta.KeyedFileHandle
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, InputStream}
@@ -199,27 +200,22 @@ object FlinkTimerIO {
   /** Decode every timer of one staged section (driver- or executor-side;
     * the caller decides distribution granularity — see
     * [[graft.state.OperatorStateReader.readTimers]] for the
-    * per-key-group parallel path).
+    * per-key-group parallel path). A file-backed section is opened once
+    * and seeked per key group.
     */
   def decodeSection(section: Array[Byte], basePath: String,
       subtask: Int): Iterator[TimerRow] =
     parseSection(section, basePath).iterator.flatMap { h =>
-      h.offsets.indices.iterator.flatMap { i =>
-        val off = h.offsets(i)
-        h.inline match {
-          case Some(bytes) =>
-            decodeGroup(new java.io.ByteArrayInputStream(
-              bytes, off.toInt, bytes.length - off.toInt), subtask)
-          case None =>
-            val p = new org.apache.hadoop.fs.Path(h.filePath.get)
-            val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            val in = fs.open(p)
-            try {
-              in.seek(off)
-              // materialize this group's rows before closing the stream
-              decodeGroup(in, subtask).toVector.iterator
-            } finally in.close()
-        }
+      h.inline match {
+        case Some(bytes) =>
+          h.offsets.iterator.flatMap(off => decodeGroup(
+            new java.io.ByteArrayInputStream(bytes, off.toInt, bytes.length - off.toInt),
+            subtask))
+        case None =>
+          val in = SnapshotFs.open(new org.apache.hadoop.fs.Path(h.filePath.get))
+          // materialize the section's rows before closing the stream
+          try h.offsets.flatMap { off => in.seek(off); decodeGroup(in, subtask).toVector }.iterator
+          finally in.close()
       }
     }
 }

@@ -1,9 +1,10 @@
 package graft.core.meta
 
 import graft.core.codec.{ByteReader, ByteWriter}
+import graft.core.flink.FlinkMetadataIO
+import graft.core.io.SnapshotFs
 
-import java.io.{BufferedInputStream, BufferedOutputStream}
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.io.{BufferedInputStream, InputStream}
 
 /** Binary `_metadata` reader/writer (S1/S10 in SURVEY.md §2.1).
   *
@@ -51,108 +52,103 @@ object MetadataIO {
   val Magic = "GRFTSP05"
   private val MagicV4 = "GRFTSP04"
   private val MagicV3 = "GRFTSP03"
-  val MetadataFile = "_metadata"
 
-  def resolveMetadataPath(pathStr: String): Path = {
-    val p = Paths.get(pathStr)
-    if (Files.isDirectory(p)) p.resolve(MetadataFile) else p
-  }
-
-  /** Loads either dialect, sniffed from the magic: `GRFTSP03` (graft)
-    * or Flink's checkpoint header 0x4960672d (S1 — real `_metadata`,
-    * reference StateMetadataUtils.java:59-74, parsed by
+  /** Loads either dialect from one open of the `_metadata` that
+    * [[SnapshotFs.metadataPath]] locates, sniffed from the magic:
+    * `GRFTSP0x` (graft) or Flink's checkpoint header 0x4960672d (S1 —
+    * real `_metadata`, reference StateMetadataUtils.java:59-74, parsed by
     * [[graft.core.flink.FlinkMetadataIO]]).
     */
   def load(pathStr: String): SavepointMeta = {
-    val mp = resolveMetadataPath(pathStr)
-    val head = {
-      val in = Files.newInputStream(mp)
-      try in.readNBytes(4) finally in.close()
-    }
-    if (graft.core.flink.FlinkMetadataIO.isFlinkMetadata(head))
-      return graft.core.flink.FlinkMetadataIO.load(mp.toString)
-    val in = new BufferedInputStream(Files.newInputStream(mp))
+    val mp = SnapshotFs.metadataPath(pathStr)
+    val basePath = mp.getParent.toString
+    val in = new BufferedInputStream(SnapshotFs.open(mp))
     try {
-      val r = new ByteReader(in)
-      val magic = new String(r.readFully(Magic.length),
-        java.nio.charset.StandardCharsets.US_ASCII)
-      require(magic == Magic || magic == MagicV4 || magic == MagicV3,
-        s"not a graft savepoint: bad magic '$magic'")
-      val checkpointId = r.readVarLong()
-      val nOps = r.readVarInt()
-      val ops = (0 until nOps).map { _ =>
-        val uid = r.readString()
-        val opId = r.readString()
-        val par = r.readVarInt()
-        val maxPar = r.readVarInt()
-        val keyCodec = if (r.readBoolean()) Some(r.readString()) else None
-        val nStates = r.readVarInt()
-        val states = (0 until nStates).map { _ =>
-          val name = r.readString()
-          val kind = r.readByte()
-          val vc = r.readString()
-          val mkc = if (r.readBoolean()) Some(r.readString()) else None
-          val ns = r.readString()
-          StateMeta(name, kind, vc, mkc, ns)
-        }
-        val compression = r.readBoolean()
-        val nFiles = r.readVarInt()
-        val files = (0 until nFiles).map { _ =>
-          KeyedFileHandle(r.readVarInt(), r.readString(), r.readVarInt(),
-            r.readVarInt(), (0 until r.readVarInt()).map(_ => r.readVarLong()),
-            r.readByte())
-        }
-        val nNk = r.readVarInt()
-        val nonKeyed = (0 until nNk).map { _ =>
-          val sub = r.readVarInt()
-          val nls = r.readVarInt()
-          val lsWithCodec = (0 until nls).map { _ =>
-            val name = r.readString()
-            val mode = r.readByte()
-            val codec = r.readString() // "" = undeclared
-            val entries = (0 until r.readVarInt()).map(_ => r.readBytes())
-            (name, mode, codec, entries: Seq[Array[Byte]])
-          }
-          val nbs = r.readVarInt()
-          val bsWithCodec = (0 until nbs).map { _ =>
-            val name = r.readString()
-            val kCodec = r.readString()
-            val vCodec = r.readString()
-            val entries = (0 until r.readVarInt()).map(_ => (r.readBytes(), r.readBytes()))
-            (name, kCodec, vCodec, entries: Seq[(Array[Byte], Array[Byte])])
-          }
-          sub -> OperatorBackendState(
-            lsWithCodec.map { case (n, m, _, e) => n -> (m, e) }.toMap,
-            bsWithCodec.map { case (n, _, _, e) => n -> e }.toMap,
-            lsWithCodec.collect { case (n, _, c, _) if c.nonEmpty => n -> c }.toMap,
-            bsWithCodec.collect { case (n, k, v, _) if k.nonEmpty && v.nonEmpty =>
-              n -> (k, v) }.toMap)
-        }.toMap
-        val (rawOp, rawKeyed, coordinator) =
-          if (magic != Magic) (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]], None)
-          else {
-            val ro = (0 until r.readVarInt()).map(_ => r.readVarInt() -> r.readBytes()).toMap
-            val rk = (0 until r.readVarInt()).map(_ => r.readVarInt() -> r.readBytes()).toMap
-            val co = if (r.readBoolean()) Some(r.readBytes()) else None
-            (ro, rk, co)
-          }
-        OperatorStateMeta(uid, opId, par, maxPar, keyCodec, states,
-          compression, files, nonKeyed, rawOp, rawKeyed, coordinator)
-      }
-      val masterStates =
-        if (magic == MagicV3) Seq.empty[Array[Byte]]
-        else (0 until r.readVarInt()).map(_ => r.readBytes())
-      SavepointMeta(checkpointId,
-        mp.getParent.toAbsolutePath.toString, ops,
-        masterStates = masterStates)
+      in.mark(4)
+      val head = in.readNBytes(4)
+      in.reset()
+      if (FlinkMetadataIO.isFlinkMetadata(head)) FlinkMetadataIO.read(in, basePath)
+      else read(in, basePath)
     } finally in.close()
   }
 
-  /** NO_OVERWRITE like the reference (StateMetadataUtils.java:189-194). */
-  def write(dirStr: String, meta: SavepointMeta): Path = {
-    val dir = Paths.get(dirStr)
-    Files.createDirectories(dir)
-    val mp = dir.resolve(MetadataFile)
+  private def read(in: InputStream, basePath: String): SavepointMeta = {
+    val r = new ByteReader(in)
+    val magic = new String(r.readFully(Magic.length),
+      java.nio.charset.StandardCharsets.US_ASCII)
+    require(magic == Magic || magic == MagicV4 || magic == MagicV3,
+      s"not a graft savepoint: bad magic '$magic'")
+    val checkpointId = r.readVarLong()
+    val nOps = r.readVarInt()
+    val ops = (0 until nOps).map { _ =>
+      val uid = r.readString()
+      val opId = r.readString()
+      val par = r.readVarInt()
+      val maxPar = r.readVarInt()
+      val keyCodec = if (r.readBoolean()) Some(r.readString()) else None
+      val nStates = r.readVarInt()
+      val states = (0 until nStates).map { _ =>
+        val name = r.readString()
+        val kind = r.readByte()
+        val vc = r.readString()
+        val mkc = if (r.readBoolean()) Some(r.readString()) else None
+        val ns = r.readString()
+        StateMeta(name, kind, vc, mkc, ns)
+      }
+      val compression = r.readBoolean()
+      val nFiles = r.readVarInt()
+      val files = (0 until nFiles).map { _ =>
+        KeyedFileHandle(r.readVarInt(), r.readString(), r.readVarInt(),
+          r.readVarInt(), (0 until r.readVarInt()).map(_ => r.readVarLong()),
+          r.readByte())
+      }
+      val nNk = r.readVarInt()
+      val nonKeyed = (0 until nNk).map { _ =>
+        val sub = r.readVarInt()
+        val nls = r.readVarInt()
+        val lsWithCodec = (0 until nls).map { _ =>
+          val name = r.readString()
+          val mode = r.readByte()
+          val codec = r.readString() // "" = undeclared
+          val entries = (0 until r.readVarInt()).map(_ => r.readBytes())
+          (name, mode, codec, entries: Seq[Array[Byte]])
+        }
+        val nbs = r.readVarInt()
+        val bsWithCodec = (0 until nbs).map { _ =>
+          val name = r.readString()
+          val kCodec = r.readString()
+          val vCodec = r.readString()
+          val entries = (0 until r.readVarInt()).map(_ => (r.readBytes(), r.readBytes()))
+          (name, kCodec, vCodec, entries: Seq[(Array[Byte], Array[Byte])])
+        }
+        sub -> OperatorBackendState(
+          lsWithCodec.map { case (n, m, _, e) => n -> (m, e) }.toMap,
+          bsWithCodec.map { case (n, _, _, e) => n -> e }.toMap,
+          lsWithCodec.collect { case (n, _, c, _) if c.nonEmpty => n -> c }.toMap,
+          bsWithCodec.collect { case (n, k, v, _) if k.nonEmpty && v.nonEmpty =>
+            n -> (k, v) }.toMap)
+      }.toMap
+      val (rawOp, rawKeyed, coordinator) =
+        if (magic != Magic) (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]], None)
+        else {
+          val ro = (0 until r.readVarInt()).map(_ => r.readVarInt() -> r.readBytes()).toMap
+          val rk = (0 until r.readVarInt()).map(_ => r.readVarInt() -> r.readBytes()).toMap
+          val co = if (r.readBoolean()) Some(r.readBytes()) else None
+          (ro, rk, co)
+        }
+      OperatorStateMeta(uid, opId, par, maxPar, keyCodec, states,
+        compression, files, nonKeyed, rawOp, rawKeyed, coordinator)
+    }
+    val masterStates =
+      if (magic == MagicV3) Seq.empty[Array[Byte]]
+      else (0 until r.readVarInt()).map(_ => r.readBytes())
+    SavepointMeta(checkpointId, basePath, ops, masterStates = masterStates)
+  }
+
+  /** NO_OVERWRITE like the reference (StateMetadataUtils.java:189-194),
+    * through [[SnapshotFs.writeMetadata]].
+    */
+  def write(dirStr: String, meta: SavepointMeta): org.apache.hadoop.fs.Path = {
     val w = new ByteWriter()
     w.writeRaw(Magic.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     w.writeVarLong(meta.checkpointId)
@@ -220,9 +216,6 @@ object MetadataIO {
     }
     w.writeVarInt(meta.masterStates.size)
     meta.masterStates.foreach(w.writeBytes)
-    val out = new BufferedOutputStream(Files.newOutputStream(mp,
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE))
-    try out.write(w.toBytes) finally out.close()
-    mp
+    SnapshotFs.writeMetadata(dirStr)(_.write(w.toBytes))
   }
 }

@@ -1,8 +1,12 @@
 package graft.core.scan
 
+import graft.core.io.SnapshotFs
+
+import org.apache.hadoop.fs.Path
 import org.rocksdb._
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Incremental-checkpoint support (SURVEY.md §2.1 S4): state stored as a
@@ -89,32 +93,14 @@ object RocksDbCheckpoints {
       targetDir: String,
       baseDir: String,
       delta: Iterator[(String, Array[Byte], Option[Array[Byte]])]): IncrementalResult = {
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val conf = new org.apache.hadoop.conf.Configuration()
-
     // 1. what the base already stores, under its ORIGINAL uri (a stub
     // base contributes its manifest entries verbatim — the chain is
     // flattened, every reference points at a materialized file)
-    val basePath = new org.apache.hadoop.fs.Path(baseDir)
-    val baseFs = basePath.getFileSystem(conf)
-    val baseFiles = scala.collection.mutable.Map.empty[String, (String, Long)]
-    baseFs.listStatus(basePath).foreach { st =>
-      if (st.getPath.getName != ManifestName)
-        baseFiles(st.getPath.getName) =
-          (st.getPath.toUri.toString, st.getLen)
-    }
-    val baseManifest = new org.apache.hadoop.fs.Path(basePath, ManifestName)
-    if (baseFs.exists(baseManifest)) {
-      val in = baseFs.open(baseManifest)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-        finally in.close()
-      lines.filter(_.nonEmpty).foreach { line =>
-        val Array(name, uri) = line.split("\t", 2)
-        val p = new org.apache.hadoop.fs.Path(uri)
-        baseFiles(name) = (uri, p.getFileSystem(conf).getFileStatus(p).getLen)
-      }
-    }
+    val basePath = new Path(baseDir)
+    val baseFiles = SnapshotFs.list(basePath).filter(_.getPath.getName != ManifestName)
+      .map(st => st.getPath.getName -> (st.getPath.toUri.toString, st.getLen)).toMap ++
+      readManifest(basePath).getOrElse(Seq.empty)
+        .map { case (name, uri) => name -> (uri, SnapshotFs.length(new Path(uri))) }
 
     // 2. writable work copy: hard-link the immutable SSTs (fallback:
     // copy), copy the small mutable metadata files
@@ -142,11 +128,11 @@ object RocksDbCheckpoints {
       val cpDir = work.resolveSibling(work.getFileName.toString + "-cp")
       try {
         val byName = handles.asScala.toSeq.zip(cfNames)
-          .map { case (h, n) => new String(n, utf8) -> h }
+          .map { case (h, n) => new String(n, UTF_8) -> h }
         val cfMap = scala.collection.mutable.Map(byName: _*)
         delta.foreach { case (state, k, v) =>
           val h = cfMap.getOrElseUpdate(state,
-            db.createColumnFamily(new ColumnFamilyDescriptor(state.getBytes(utf8), cfOpts)))
+            db.createColumnFamily(new ColumnFamilyDescriptor(state.getBytes(UTF_8), cfOpts)))
           v match {
             case Some(bytes) => db.put(h, k, bytes)
             case None => db.delete(h, k)
@@ -165,9 +151,8 @@ object RocksDbCheckpoints {
 
       // 4. stub write: share what the base already stores, materialize
       // the rest
-      val target = new org.apache.hadoop.fs.Path(targetDir)
-      val targetFs = target.getFileSystem(conf)
-      targetFs.mkdirs(target)
+      val target = new Path(targetDir)
+      SnapshotFs.mkdirs(target)
       val shared = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       val created = scala.collection.mutable.ArrayBuffer.empty[String]
       try {
@@ -178,18 +163,12 @@ object RocksDbCheckpoints {
           if (reusable) shared += name -> baseFiles(name)._1
           else {
             created += name
-            targetFs.copyFromLocalFile(
-              new org.apache.hadoop.fs.Path(f.toAbsolutePath.toString),
-              new org.apache.hadoop.fs.Path(target, name))
+            SnapshotFs.upload(f, new Path(target, name))
           }
         }
         if (shared.nonEmpty) {
-          val out = targetFs.create(
-            new org.apache.hadoop.fs.Path(target, ManifestName), true)
-          try out.write(shared.sortBy(_._1)
-            .map { case (n, u) => s"$n\t$u" }.mkString("", "\n", "\n")
-            .getBytes(utf8))
-          finally out.close()
+          val out = SnapshotFs.create(new Path(target, ManifestName), overwrite = true)
+          try out.write(manifestBytes(shared.toSeq)) finally out.close()
         }
       } finally graft.TempDirs.deleteNow(cpDir)
       IncrementalResult(shared.map(_._1).toSeq.sorted, created.toSeq.sorted)
@@ -199,7 +178,6 @@ object RocksDbCheckpoints {
   /** Closeable scan over the kept column families of a checkpoint dir. */
   final class CheckpointScan(localDir: String, keep: Option[Set[String]])
       extends Iterator[(String, Array[Byte], Array[Byte])] with AutoCloseable {
-    private val utf8 = java.nio.charset.StandardCharsets.UTF_8
     private val cfNames = {
       val listOpts = new Options()
       try RocksDB.listColumnFamilies(listOpts, localDir).asScala.toSeq
@@ -209,7 +187,7 @@ object RocksDbCheckpoints {
     // (reference RocksDBCheckpointIterator.java:150-166); "default" must
     // always be opened per RocksDB contract but holds no graft state.
     private val wanted = cfNames.filter { n =>
-      val name = new String(n, utf8)
+      val name = new String(n, UTF_8)
       name == "default" || keep.forall(_.contains(name))
     }
     private val handles = new java.util.ArrayList[ColumnFamilyHandle]()
@@ -218,7 +196,7 @@ object RocksDbCheckpoints {
       new ColumnFamilyDescriptor(_)).asJava, handles)
 
     private val perCf = handles.asScala.toSeq.zip(wanted)
-      .filter { case (_, n) => new String(n, utf8) != "default" }
+      .filter { case (_, n) => new String(n, UTF_8) != "default" }
     private var cfIdx = 0
     private var rit: RocksIterator = _
     private var curName: String = _
@@ -231,7 +209,7 @@ object RocksDbCheckpoints {
         if (cfIdx >= perCf.size) return false
         val (h, nameBytes) = perCf(cfIdx)
         cfIdx += 1
-        curName = new String(nameBytes, utf8)
+        curName = new String(nameBytes, UTF_8)
         rit = db.newIterator(h)
         rit.seekToFirst()
       }
@@ -279,25 +257,30 @@ object RocksDbCheckpoints {
     */
   val ManifestName = "_graft_manifest"
 
+  /** The one manifest encoding, decoded by [[readManifest]]: a
+    * `name\turi` line per (checkpoint-local name, file uri) entry.
+    */
+  def manifestBytes(entries: Seq[(String, String)]): Array[Byte] =
+    entries.sortBy(_._1).map { case (n, u) => s"$n\t$u\n" }.mkString.getBytes(UTF_8)
+
+  /** The one manifest reader: the entries of `dir`'s manifest, or None
+    * when `dir` holds none (a materialized checkpoint, not a stub).
+    */
+  def readManifest(dir: Path): Option[Seq[(String, String)]] = {
+    val manifest = new Path(dir, ManifestName)
+    if (!SnapshotFs.exists(manifest)) None
+    else Some(new String(SnapshotFs.readAll(manifest), UTF_8).split('\n').toSeq
+      .filter(_.nonEmpty).map { line =>
+        val Array(name, uri) = line.split("\t", 2)
+        name -> uri
+      })
+  }
+
   /** Every file URI a set of live checkpoint dirs still references via
     * their [[ManifestName]] stubs. Input for [[gcCheckpoint]].
     */
-  def referencedUris(liveDirs: Seq[String]): Set[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    liveDirs.flatMap { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      val manifest = new org.apache.hadoop.fs.Path(p, ManifestName)
-      if (!fs.exists(manifest)) Seq.empty[String]
-      else {
-        val in = fs.open(manifest)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-          finally in.close()
-        lines.filter(_.nonEmpty).map(_.split("\t", 2)(1))
-      }
-    }.toSet
-  }
+  def referencedUris(liveDirs: Seq[String]): Set[String] =
+    liveDirs.flatMap(d => readManifest(new Path(d)).getOrElse(Seq.empty).map(_._2)).toSet
 
   final case class GcReport(deleted: Seq[String], retained: Seq[String])
 
@@ -312,18 +295,16 @@ object RocksDbCheckpoints {
     * retire at the cost of a listing, never a rewrite.
     */
   def gcCheckpoint(dropDir: String, referenced: Set[String]): GcReport = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = new org.apache.hadoop.fs.Path(dropDir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return GcReport(Seq.empty, Seq.empty)
+    val p = new Path(dropDir)
+    if (!SnapshotFs.exists(p)) return GcReport(Seq.empty, Seq.empty)
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
     val retained = scala.collection.mutable.ArrayBuffer.empty[String]
-    fs.listStatus(p).foreach { st =>
+    SnapshotFs.list(p).foreach { st =>
       val uri = st.getPath.toUri.toString
       if (referenced(uri)) retained += uri
-      else { fs.delete(st.getPath, false); deleted += uri }
+      else { SnapshotFs.delete(st.getPath, recursive = false); deleted += uri }
     }
-    if (retained.isEmpty) fs.delete(p, true)
+    if (retained.isEmpty) SnapshotFs.delete(p, recursive = true)
     GcReport(deleted.toSeq.sorted, retained.toSeq.sorted)
   }
 
@@ -332,50 +313,27 @@ object RocksDbCheckpoints {
     * transfer step, RocksDBCheckpointIterator.java:92-148). A stub dir
     * containing [[ManifestName]] is always assembled into a fresh local
     * dir: local stub files are copied, manifest-listed files fetched
-    * under their checkpoint-local names.
+    * under their checkpoint-local names. A download dir is the
+    * caller's to release through `close()`; a failed download deletes
+    * it before the error propagates.
     */
   def localize(dir: String): LocalizedDir = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val fs = p.getFileSystem(conf)
-    val manifest = new org.apache.hadoop.fs.Path(p, ManifestName)
-    if (fs.exists(manifest)) return assembleFromManifest(p, fs, conf)
+    val p = new Path(dir)
+    val manifest = readManifest(p)
     val scheme = Option(p.toUri.getScheme).getOrElse("file")
-    if (scheme == "file" || fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
-      LocalizedDir(p.toUri.getPath, downloaded = false)
-    } else {
-      val local: Path = Files.createTempDirectory("graft-rocks-dl")
-      fs.listStatus(p).foreach { st =>
-        fs.copyToLocalFile(st.getPath,
-          new org.apache.hadoop.fs.Path(local.resolve(st.getPath.getName).toString))
+    if (manifest.isEmpty && (scheme == "file" || SnapshotFs.isLocal(p)))
+      return LocalizedDir(p.toUri.getPath, downloaded = false)
+    graft.TempDirs.handOff("graft-rocks-dl") { local =>
+      // the stub's (or remote dir's) own files, then every
+      // manifest-listed file under its checkpoint-local name
+      SnapshotFs.list(p).foreach { st =>
+        if (st.getPath.getName != ManifestName)
+          SnapshotFs.download(st.getPath, local.resolve(st.getPath.getName))
+      }
+      manifest.getOrElse(Seq.empty).foreach { case (name, uri) =>
+        SnapshotFs.download(new Path(uri), local.resolve(name))
       }
       LocalizedDir(local.toString, downloaded = true)
     }
-  }
-
-  private def assembleFromManifest(
-      stub: org.apache.hadoop.fs.Path,
-      stubFs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration): LocalizedDir = {
-    val local: Path = Files.createTempDirectory("graft-rocks-asm")
-    // 1. copy the stub's materialized small files
-    stubFs.listStatus(stub).foreach { st =>
-      if (st.getPath.getName != ManifestName)
-        stubFs.copyToLocalFile(st.getPath,
-          new org.apache.hadoop.fs.Path(local.resolve(st.getPath.getName).toString))
-    }
-    // 2. fetch every manifest-listed file under its checkpoint-local name
-    val in = stubFs.open(new org.apache.hadoop.fs.Path(stub, ManifestName))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-      finally in.close()
-    lines.filter(_.nonEmpty).foreach { line =>
-      val Array(name, uri) = line.split("\t", 2)
-      val src = new org.apache.hadoop.fs.Path(uri)
-      src.getFileSystem(conf).copyToLocalFile(src,
-        new org.apache.hadoop.fs.Path(local.resolve(name).toString))
-    }
-    LocalizedDir(local.toString, downloaded = true)
   }
 }

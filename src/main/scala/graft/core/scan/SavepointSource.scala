@@ -1,5 +1,6 @@
 package graft.core.scan
 
+import graft.core.io.SnapshotFs
 import graft.core.meta.{KeyedFileHandle, MetadataIO, OperatorStateMeta}
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -155,7 +156,6 @@ final class SavepointScan(
     // nothing matches the filter -> zero partitions
     if (nameFilter.isDefined && keepIds.isEmpty) return Array.empty
 
-    val conf = new org.apache.hadoop.conf.Configuration()
     val target = SQLConf.get.filesMaxPartitionBytes
     op.keyedFiles.flatMap { f =>
       val p = KeyedFileHandle.resolve(basePath, f.relativePath)
@@ -168,18 +168,17 @@ final class SavepointScan(
         throw new UnsupportedOperationException(
           s"subtask ${f.subtaskIndex} of operator ${op.uid} is not " +
             s"scannable: ${f.relativePath}")
-      } else streamPartitions(f, p, conf, target, stateNames, keepIds)
+      } else streamPartitions(f, p, target, stateNames, keepIds)
     }.toArray
   }
 
   private def streamPartitions(
       f: KeyedFileHandle,
       p: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration,
       target: Long,
       stateNames: Array[String],
       keepIds: Array[Int]): Seq[InputPartition] = {
-    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    val len = SnapshotFs.length(p)
     val offsets = f.offsets.toArray
     val flink = f.kind == KeyedFileHandle.FlinkStreamKind
     SavepointScan.runs(SavepointScan.segmentSizes(offsets, len, flink), target)
@@ -288,9 +287,7 @@ final class RocksDbPartitionReader(p: RocksDbPartition)
 final class StateSegmentReader(p: StateSegmentPartition)
     extends PartitionReader[InternalRow] {
 
-  private val hPath = new org.apache.hadoop.fs.Path(p.filePath)
-  private val fs = hPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
-  private val in = fs.open(hPath)
+  private val in = SnapshotFs.open(new org.apache.hadoop.fs.Path(p.filePath))
   private val keep: Int => Boolean =
     if (p.keepIds.isEmpty) _ => true else p.keepIds.toSet
   private val names = p.stateNames.map(UTF8String.fromString)

@@ -1,6 +1,7 @@
 package graft.state
 
 import graft.core.codec._
+import graft.core.io.SnapshotFs
 import graft.core.meta._
 import graft.core.scan.StateStreamFormat
 
@@ -366,9 +367,7 @@ object OperatorStateWriter {
       metaBytes: Array[Byte] = Array.emptyByteArray): HandleRow = {
     val (kgStart, kgEnd) = KeyGroups.keyGroupRange(maxPar, par, opIndex)
     val rel = s"op-$opId/part-$opIndex-${java.util.UUID.randomUUID().toString.take(8)}"
-    val path = new org.apache.hadoop.fs.Path(outDir, rel)
-    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val out = fs.create(path, false)
+    val out = SnapshotFs.create(new org.apache.hadoop.fs.Path(outDir, rel), overwrite = false)
     val records =
       it.map(e => (e.keyGroup, StateStreamFormat.Record(e.stateId, e.key, e.value)))
     val offsets =
@@ -398,12 +397,9 @@ object OperatorStateWriter {
       graft.core.scan.RocksDbCheckpoints.createCheckpoint(cpDir.toString,
         it.map(e => (stateNames(e.stateId), e.key, e.value)))
       val dst = new org.apache.hadoop.fs.Path(outDir, rel)
-      val fs = dst.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      fs.mkdirs(dst)
+      SnapshotFs.mkdirs(dst)
       java.nio.file.Files.list(cpDir).forEach { f =>
-        fs.copyFromLocalFile(
-          new org.apache.hadoop.fs.Path(f.toAbsolutePath.toString),
-          new org.apache.hadoop.fs.Path(dst, f.getFileName.toString))
+        SnapshotFs.upload(f, new org.apache.hadoop.fs.Path(dst, f.getFileName.toString))
       }
     }
     HandleRow(opIndex, rel, kgStart, kgEnd, Seq.empty)

@@ -1,6 +1,7 @@
 package graft.state
 
-import graft.core.codec.{ByteReader, CodecRegistry, KeyFraming, KeyGroups}
+import graft.core.codec.{ByteReader, CodecRegistry, KeyGroups}
+import graft.core.io.SnapshotFs
 import graft.core.meta.{KeyedFileHandle, SavepointMeta, StateKind}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -255,14 +256,8 @@ object StateMaintenance {
       }
     }
     // the dropped savepoint's _metadata: no longer a restore point
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val metaPath = new org.apache.hadoop.fs.Path(
-      drop.basePath, graft.core.meta.MetadataIO.MetadataFile)
-    val fs = metaPath.getFileSystem(conf)
-    if (fs.exists(metaPath)) {
-      fs.delete(metaPath, false)
-      deleted += metaPath.toUri.toString
-    }
+    val metaPath = new org.apache.hadoop.fs.Path(drop.basePath, SnapshotFs.MetadataFile)
+    if (SnapshotFs.delete(metaPath, recursive = false)) deleted += metaPath.toUri.toString
     SavepointGcReport(deleted.toSeq.sorted, retained.toSeq.sorted,
       skipped.toSeq.sorted)
   }

@@ -38,11 +38,12 @@ class RoundEightBatchTwentyFiveSpec extends AnyFunSuite {
     assert(back === Map(1L -> 10L, 2L -> 20L))
     // the new uid resolves; the old one must NOT
     intercept[Exception] { re.operator("spec-old") }
-    // no state bytes were copied: dir2 holds only the metadata
+    // no state bytes were copied: dir2 holds only the metadata (and
+    // its checksum sidecar)
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir2))
-      .iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(files === Seq("_metadata"), files.toString)
+      .iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    assert(files === Seq("._metadata.crc", "_metadata"), files.toString)
   }
 
   // ------------------------------------------------------------- q64

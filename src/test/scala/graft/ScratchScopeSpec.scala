@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The scratch helpers: [[Catalog.withConfs]] gives borrowed session
   * confs back, [[TempDirs.scoped]] deletes its dir when the call ends,
+  * [[TempDirs.handOff]] deletes its dir only when the call throws,
   * and [[TempDirs.deleteNow]] takes a tree, a single file or nothing.
   */
 class ScratchScopeSpec extends AnyFunSuite {
@@ -72,6 +73,21 @@ class ScratchScopeSpec extends AnyFunSuite {
     var seen: Path = null
     intercept[IllegalStateException] {
       TempDirs.scoped("graft-scope-throw") { dir =>
+        seen = dir
+        fillTree(dir)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(seen != null && !Files.exists(seen))
+  }
+
+  test("TempDirs.handOff keeps the tree it returns and deletes it when the body throws") {
+    val kept = TempDirs.handOff("graft-handoff-ok") { dir => fillTree(dir); dir }
+    try assert(Files.exists(kept.resolve("a/b/leaf.bin")))
+    finally TempDirs.deleteNow(kept)
+    var seen: Path = null
+    intercept[IllegalStateException] {
+      TempDirs.handOff("graft-handoff-throw") { dir =>
         seen = dir
         fillTree(dir)
         throw new IllegalStateException("body failed")

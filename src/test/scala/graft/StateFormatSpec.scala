@@ -110,7 +110,7 @@ class MetadataIOSpec extends AnyFunSuite {
   test("metadata write is NO_OVERWRITE (StateMetadataUtils.java:189-194)") {
     val dir = TempDirs.create("graft-meta2")
     MetadataIO.write(dir, sampleMeta(dir))
-    intercept[java.nio.file.FileAlreadyExistsException] {
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
       MetadataIO.write(dir, sampleMeta(dir))
     }
   }

@@ -15,7 +15,8 @@ Then, per workload, pair i runs the `BENCHMARK.json` command with
 `--workload W --seed 1+i --seconds run_seconds --trace 0` on both sides,
 the parent first in even pairs and the change first in odd ones. Every run's
 metrics are printed as they arrive. The report gives, per workload and
-end-to-end metric, both medians, the parent's IQR/median, the change's wins
+end-to-end metric, both medians, the parent's IQR/median, the change's wins,
+the median per-pair change/parent ratio, the sign-test p-value of the wins
 and a verdict from `decide`, using each metric's bound from BENCHMARK.json.
 A workload whose change runs fail a larger share of operations than the
 parent's is reported as regressed on `failed_share`, and one with more change
@@ -24,6 +25,7 @@ as regressed on `runs_without_result`.
 """
 import argparse
 import json
+import math
 import os
 import signal
 import statistics
@@ -48,6 +50,22 @@ def quartiles(xs):
     return q1, statistics.median(xs), q3
 
 
+def sign_test(wins, losses):
+    """Exact two-sided sign-test p-value of `wins` against `losses` (ties
+    are not counted in either).
+
+    >>> sign_test(10, 0)
+    0.001953125
+    >>> round(sign_test(8, 2), 4)
+    0.1094
+    >>> sign_test(3, 3), sign_test(0, 0)
+    (1.0, 1.0)
+    """
+    n = wins + losses
+    tail = sum(math.comb(n, i) for i in range(min(wins, losses) + 1)) / 2 ** n
+    return min(1.0, 2 * tail)
+
+
 def decide(parent, change, better, bound):
     """The verdict for one metric on one workload.
 
@@ -57,14 +75,18 @@ def decide(parent, change, better, bound):
       parent's median (negative when it is better).
     - `spread`: the parent's IQR over its median.
     - `wins`: pairs where the change reads better (ties count for neither).
+    - `ratio`: the median over pairs of change/parent (None when every
+      parent value is 0).
+    - `p_sign`: `sign_test` of the wins against the pairs where the
+      change reads worse.
     Verdict:
     - "ok" when every change run reads better than every parent run;
     - otherwise "unresolved" when `spread` is wider than `bound`;
     - otherwise "regressed" when `worse` exceeds `bound`, else "ok".
 
     >>> r = decide([10, 11, 12, 10, 11, 12], [10.5, 11, 12, 10, 11, 12], "lower", 0.25)
-    >>> r["verdict"], r["wins"], round(r["spread"], 3)
-    ('ok', 0, 0.136)
+    >>> r["verdict"], r["wins"], round(r["spread"], 3), r["ratio"], r["p_sign"]
+    ('ok', 0, 0.136, 1.0, 1.0)
     >>> decide([10, 10, 10, 10], [13, 13, 13, 13], "lower", 0.25)["verdict"]
     'regressed'
     >>> decide([100, 100, 100, 100], [80, 80, 80, 80], "higher", 0.25)["verdict"]
@@ -74,10 +96,11 @@ def decide(parent, change, better, bound):
     >>> decide([6, 8, 12, 14], [10, 10, 10, 10], "lower", 0.25)["verdict"]
     'unresolved'
     >>> r = decide([6, 8, 12, 14], [5, 5, 5, 5], "lower", 0.25)
-    >>> r["verdict"], r["wins"]
-    ('ok', 4)
-    >>> decide([0, 0], [0, 0], "lower", 0.05)["verdict"]
-    'ok'
+    >>> r["verdict"], r["wins"], round(r["ratio"], 3), r["p_sign"]
+    ('ok', 4, 0.521, 0.125)
+    >>> r = decide([0, 0], [0, 0], "lower", 0.05)
+    >>> r["verdict"], r["ratio"]
+    ('ok', None)
     """
     if len(parent) != len(change) or not parent:
         raise ValueError("need one parent and one change value per pair")
@@ -88,6 +111,8 @@ def decide(parent, change, better, bound):
     worse = sign * (cm - pm) / scale
     spread = (q3 - q1) / scale
     wins = sum(1 for p, c in zip(parent, change) if sign * (c - p) < 0)
+    losses = sum(1 for p, c in zip(parent, change) if sign * (c - p) > 0)
+    ratios = [c / p for p, c in zip(parent, change) if p]
     if max(sign * c for c in change) < min(sign * p for p in parent):
         verdict = "ok"
     elif spread > bound:
@@ -98,7 +123,8 @@ def decide(parent, change, better, bound):
         verdict = "ok"
     return {"parent_median": pm, "change_median": cm, "worse": worse,
             "spread": spread, "wins": wins, "pairs": len(parent),
-            "verdict": verdict}
+            "ratio": statistics.median(ratios) if ratios else None,
+            "p_sign": sign_test(wins, losses), "verdict": verdict}
 
 
 def export(rev, into):
@@ -185,16 +211,17 @@ def main():
     for w, rows in report.items():
         print(f"\n{w}")
         print(f"  {'metric':<18}{'parent':>12}{'change':>12}{'worse':>8}"
-              f"{'p.iqr/med':>10}{'wins':>7}  verdict")
+              f"{'p.iqr/med':>10}{'wins':>7}{'ratio':>8}{'p.sign':>8}  verdict")
         for name, r in rows.items():
             if name in ("failed_share", "runs_without_result"):
                 print(f"  {name:<18}{r['parent']:>12.4g}{r['change']:>12.4g}"
-                      f"{'':>25}  {r['verdict']}")
+                      f"{'':>41}  {r['verdict']}")
             elif r["pairs"]:
                 print(f"  {name:<18}{r['parent_median']:>12.4g}"
                       f"{r['change_median']:>12.4g}{r['worse']:>+8.3f}"
-                      f"{r['spread']:>10.3f}{r['wins']:>4}/{r['pairs']:<2}  "
-                      f"{r['verdict']}")
+                      f"{r['spread']:>10.3f}{r['wins']:>4}/{r['pairs']:<2}"
+                      f"{'n/a' if r['ratio'] is None else format(r['ratio'], '.3f'):>8}"
+                      f"{r['p_sign']:>8.3f}  {r['verdict']}")
             else:
                 print(f"  {name:<18}{'no pairs':>24}  {r['verdict']}")
     print(json.dumps({"ab": report}))
