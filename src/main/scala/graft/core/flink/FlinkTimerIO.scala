@@ -212,10 +212,12 @@ object FlinkTimerIO {
             new java.io.ByteArrayInputStream(bytes, off.toInt, bytes.length - off.toInt),
             subtask))
         case None =>
+          // one key group's rows held at a time; closed after the last
           val in = SnapshotFs.open(new org.apache.hadoop.fs.Path(h.filePath.get))
-          // materialize the section's rows before closing the stream
-          try h.offsets.flatMap { off => in.seek(off); decodeGroup(in, subtask).toVector }.iterator
-          finally in.close()
+          h.offsets.iterator.flatMap { off =>
+            try { in.seek(off); decodeGroup(in, subtask).toVector }
+            catch { case t: Throwable => in.close(); throw t }
+          } ++ { in.close(); Iterator.empty[TimerRow] }
       }
     }
 }

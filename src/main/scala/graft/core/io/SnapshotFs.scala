@@ -1,7 +1,7 @@
 package graft.core.io
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path}
 
 import java.io.{BufferedOutputStream, DataOutputStream}
 
@@ -36,8 +36,6 @@ object SnapshotFs {
   def readAll(p: Path): Array[Byte] = { val in = open(p); try in.readAllBytes() finally in.close() }
   /** `p` with its file system's scheme, authority and working dir. */
   def qualify(p: Path): Path = fs(p).makeQualified(p)
-  def isLocal(p: Path): Boolean =
-    fs(p).isInstanceOf[LocalFileSystem] || fs(p).isInstanceOf[RawLocalFileSystem]
   def upload(local: java.nio.file.Path, dst: Path): Unit =
     fs(dst).copyFromLocalFile(new Path(local.toAbsolutePath.toString), dst)
   def download(src: Path, local: java.nio.file.Path): Unit =
@@ -46,24 +44,29 @@ object SnapshotFs {
   val MetadataFile = "_metadata"
 
   /** The one `_metadata` locator of both dialects: `path` itself when
-    * it names a file, `path/_metadata` when it names a directory.
+    * it names a file, `path/_metadata` when it names a directory; made
+    * absolute (a plain path stays scheme-less), so handles carried into
+    * a savepoint written elsewhere resolve.
     */
   def metadataPath(path: String): Path = {
-    val p = new Path(path)
+    val raw = new Path(path)
+    val p = if (raw.isUriPathAbsolute) raw else if (raw.toUri.getScheme != null) qualify(raw)
+      else Path.getPathWithoutSchemeAndAuthority(qualify(raw))
     if (fs(p).getFileStatus(p).isDirectory) new Path(p, MetadataFile) else p
   }
 
   /** Creates `dir` and writes `dir/_metadata` through `body`,
     * NO_OVERWRITE like the reference (StateMetadataUtils.java:189-194).
-    * A `body` that throws leaves no partial `_metadata` behind.
+    * A `body` or close that throws leaves no partial `_metadata`.
     */
   def writeMetadata(dir: String)(body: DataOutputStream => Unit): Path = {
     val mp = new Path(dir, MetadataFile)
     mkdirs(mp.getParent)
     val out = new DataOutputStream(new BufferedOutputStream(create(mp, overwrite = false)))
-    try body(out)
-    catch { case t: Throwable => out.close(); delete(mp, recursive = false); throw t }
-    out.close()
+    try { body(out); out.close() }
+    catch { case t: Throwable =>
+      try out.close() catch { case c: Throwable => t.addSuppressed(c) }
+      delete(mp, recursive = false); throw t }
     mp
   }
 }

@@ -320,8 +320,7 @@ object RocksDbCheckpoints {
   def localize(dir: String): LocalizedDir = {
     val p = new Path(dir)
     val manifest = readManifest(p)
-    val scheme = Option(p.toUri.getScheme).getOrElse("file")
-    if (manifest.isEmpty && (scheme == "file" || SnapshotFs.isLocal(p)))
+    if (manifest.isEmpty && SnapshotFs.qualify(p).toUri.getScheme == "file")
       return LocalizedDir(p.toUri.getPath, downloaded = false)
     graft.TempDirs.handOff("graft-rocks-dl") { local =>
       // the stub's (or remote dir's) own files, then every

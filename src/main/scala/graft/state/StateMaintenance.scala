@@ -240,8 +240,9 @@ object StateMaintenance {
     def absDirs(sp: SavepointMeta): Seq[String] =
       sp.operators.flatMap(_.keyedFiles).map(f =>
         KeyedFileHandle.resolve(sp.basePath, f.relativePath).toString)
-    def norm(dir: String): String =
-      new org.apache.hadoop.fs.Path(dir).toUri.toString
+    // compared as URIs, so `/x`, `file:/x` and `file:///x` are one file
+    def norm(dir: String): java.net.URI =
+      SnapshotFs.qualify(new org.apache.hadoop.fs.Path(dir)).toUri
     val liveDirs = live.flatMap(absDirs)
     val liveDirSet = liveDirs.map(norm).toSet
     val referenced = RocksDbCheckpoints.referencedUris(liveDirs)

@@ -4,7 +4,7 @@ import graft.core.codec.Codecs
 import graft.core.flink.{FlinkMetadataIO, FlinkTimerIO}
 import graft.core.meta.{Dialect, KeyedFileHandle, MetadataIO, SavepointMeta}
 import graft.core.scan.RocksDbCheckpoints
-import graft.state.Savepoints
+import graft.state.{Savepoints, StateMaintenance}
 
 import org.apache.hadoop.fs.FileAlreadyExistsException
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
 
 /** Snapshot file IO through its one home ([[graft.core.io.SnapshotFs]]):
   * scheme-qualified savepoint paths, the one NO_OVERWRITE failure of
-  * both `_metadata` dialects, file-backed timer sections and the
-  * cleanup of a failed checkpoint download.
+  * both `_metadata` dialects, relative and scheme-qualified spellings
+  * of one savepoint, file-backed timer sections and the cleanup of a
+  * failed checkpoint download.
   */
 class SnapshotFsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -95,22 +96,63 @@ class SnapshotFsSpec extends AnyFunSuite {
     assert(rows(bos.toByteArray) === expected)
   }
 
+  for ((name, dialect) <- Seq("graft" -> Dialect.Graft, "flink" -> Dialect.Flink))
+    test(s"$name dialect: a savepoint loaded through a relative path keeps its " +
+      "untouched operator readable after a rewrite into another dir and a GC of " +
+      "the source loaded through a file: URI") {
+      import spark.implicits._
+      val sp0 = SavepointMeta(0L, "", Seq(
+        Savepoints.bootstrap("opA", 2, 128).operators.head,
+        Savepoints.bootstrap("opB", 2, 128).operators.head))
+      def write(base: SavepointMeta, uid: String, rows: Seq[(Long, Long)], dir: String) =
+        Savepoints.writer(spark, base, uid).withDialect(dialect)
+          .withKeyCodec(Codecs.LongCodec)
+          .createNewValueState("v", rows.toDS(), Codecs.LongCodec)
+          .writeAll(dir)
+      val dirA = TempDirs.create(s"graft-rel-a-$name")
+      val dirB = TempDirs.create(s"graft-rel-b-$name")
+      write(write(sp0, "opA", Seq(1L -> 10L), dirA), "opB", Seq(2L -> 20L), dirB)
+      // opB's files live in dirB, which is now named relative to the working dir
+      val relB = Paths.get("").toAbsolutePath.relativize(Paths.get(dirB)).toString
+      val loaded = Savepoints.load(relB)
+      assert(new org.apache.hadoop.fs.Path(loaded.basePath).isUriPathAbsolute)
+      // deeper than the working dir, so a handle still relative to it
+      // (`../../tmp/…`) cannot climb back out of dirC to dirB by chance
+      val depth = Paths.get("").toAbsolutePath.getNameCount
+      val dirC = Iterator.iterate(Paths.get(TempDirs.create(s"graft-rel-c-$name")))(
+        _.resolve("d")).drop(depth).next().toString
+      Savepoints.writer(spark, loaded, "opA")
+        .addValueState("v", Seq(1L -> 11L).toDS())
+        .writeAll(dirC)
+      val reloaded = Savepoints.load(dirC)
+      // retiring dirB must keep the opB files dirC still uses, however
+      // the two savepoints spell the same file
+      val gc = StateMaintenance.gcSavepoint(Savepoints.load("file:" + dirB), Seq(reloaded))
+      assert(gc.skippedLiveDirs.nonEmpty)
+      assert(Savepoints.reader(spark, reloaded, "opB")
+        .readValueStates[Long, Long]("v").collect().toMap === Map(2L -> 20L))
+      assert(Savepoints.reader(spark, reloaded, "opA")
+        .readValueStates[Long, Long]("v").collect().toMap === Map(1L -> 11L))
+    }
+
   test("localizing a stub whose manifest names a missing file throws and " +
     "leaves no graft-rocks-* dir") {
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    def rocksDirs(): Set[String] = {
+    def downloadDirs(): Set[String] = {
       val ls = Files.list(tmp)
       try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("graft-rocks-")).toSet
+        .filter(_.startsWith("graft-rocks-dl")).toSet
       finally ls.close()
     }
     TempDirs.scoped("graft-stub") { stub =>
       Files.write(stub.resolve("CURRENT"), "MANIFEST-000001\n".getBytes("UTF-8"))
       Files.write(stub.resolve(RocksDbCheckpoints.ManifestName), RocksDbCheckpoints.manifestBytes(
         Seq("000009.sst" -> stub.resolve("missing/000009.sst").toUri.toString)))
-      val before = rocksDirs()
+      val before = downloadDirs()
       intercept[java.io.FileNotFoundException](RocksDbCheckpoints.localize(stub.toString))
-      assert(rocksDirs() === before)
+      // only a new graft-rocks-dl* dir would be this call's: other
+      // processes may add or remove theirs meanwhile
+      assert((downloadDirs() -- before).isEmpty)
     }
   }
 }
