@@ -17,13 +17,13 @@ object Bench {
   /** Seconds to build `query` and run it through the `noop` sink.
     * Afterwards, OUTSIDE the timed region and also when it throws, the
     * session's cached tables are released and the heap is collected:
-    *   - queries may cache() intermediates (LSH signatures). Spark's
-    *     CacheManager matches a repeat run's identical plan against the
-    *     previous run's still-populated InMemoryRelation, so a query
-    *     whose builder caches its dominant subtree (c11, d03) recorded a
-    *     second-run "minimum" that timed a mostly-materialized plan
-    *     (round-17 measurement fix). Clearing makes every run recompute
-    *     from the parquet inputs;
+    *   - library builders release their own caches (`Materialize`), but
+    *     a cache the query itself leaves would be matched by Spark's
+    *     CacheManager against a repeat run's identical plan, and the
+    *     second-run "minimum" would time a mostly-materialized plan
+    *     (round 17 measured this on c11 and d03, whose builders then
+    *     cached their dominant subtree). Clearing makes every run
+    *     recompute from the parquet inputs;
     *   - one run's heap garbage must not tax the next run's allocations
     *     — in-suite d07 measured 2.6x its isolated time from exactly
     *     this carryover.

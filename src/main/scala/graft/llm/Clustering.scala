@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -216,9 +216,11 @@ object Clustering {
     * touches ONLY the target cluster's members (cached once, three
     * narrow passes); both seed picks are 1-row TakeOrdered collects, so
     * nothing corpus-sized approaches the driver and nothing shuffles
-    * except the final per-dimension aggregate.
+    * except the final per-dimension aggregate, which is pinned (two
+    * rows per dimension) while the member cache lives.
     */
-  def bisectLargest(vecs: DataFrame, centroids: DataFrame): DataFrame = {
+  def bisectLargest(vecs: DataFrame, centroids: DataFrame): DataFrame =
+    Materialize.scoped { scope =>
     graft.functions.GraftFunctions.register(vecs.sparkSession)
     val cent = centroids.select(col("cid"), col("embedding").as("cemb"))
       .withColumn("cnrm", expr(s"${sparkNorm("cemb")}"))
@@ -229,8 +231,8 @@ object Clustering {
     val target = asg.groupBy(col("cid")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("cid").asc).limit(1)
       .select(col("cid")).collect()(0).getLong(0)
-    val m = asg.filter(col("cid") === target)
-      .select(col("neighbor_id"), col("ca"), col("cn")).cache()
+    val m = scope.cache(asg.filter(col("cid") === target)
+      .select(col("neighbor_id"), col("ca"), col("cn")))
     def seedLit(r: org.apache.spark.sql.Row): (String, String) = {
       val emb = r.getSeq[Double](1)
       (s"array(${emb.map(Similarity.dlit).mkString(",")})",
@@ -243,8 +245,7 @@ object Clustering {
       m.withColumn("cosa", expr(cosA))
         .orderBy(col("cosa").asc, col("neighbor_id").asc)
         .limit(1).collect()(0))
-    val out = m
-      .withColumn("sub_id",
+    m.withColumn("sub_id",
         expr(s"IF($cosA >= ${sparkDot("ca", ba)} / (cn * $bn), " +
           "cast(0 as bigint), cast(1 as bigint))"))
       .select(col("sub_id"), posexplode(col("ca")).as(Seq("dim", "x")))
@@ -253,8 +254,7 @@ object Clustering {
         sum(expr(s"cast(round(x * $MeanFx) as bigint)")).as("sum_fx"))
       .select(lit(target).as("parent_cid"), col("sub_id"), col("dim"),
         col("n_members"), expr("sum_fx div n_members").as("mean_fx"))
-    m.unpersist()
-    out
+      .localCheckpoint(true)
   }
 
   private def bisectOracle: String =
@@ -835,10 +835,10 @@ object Clustering {
     val c = vecs.select(col("vec_id").as("neighbor_id"),
       col("embedding").cast("array<double>").as("ca"))
       .withColumn("cn", expr(s"${sparkNorm("ca")}"))
-    // cached: the assigned set feeds both sides of the in-cluster join
+    // pinned: the assigned set feeds both sides of the in-cluster join
     val asg = assignCells(c, cent)
       .select(col("neighbor_id").as("vec_id"), col("cid"),
-        col("ca"), col("cn")).cache()
+        col("ca"), col("cn")).localCheckpoint(true)
     val a = asg.select(col("cid"), col("vec_id").as("a_id"),
       col("ca").as("aa"), col("cn").as("an"))
     val b = asg.select(col("cid"), col("vec_id").as("b_id"),
@@ -1267,24 +1267,14 @@ object Clustering {
     // the corpus and never more than cap rows on the driver side of
     // any stage
     val panel = dbscanPanel(Catalog.t(s, d, "embeddings"))
-    // cache(), round 16: the eps-graph relation below feeds the degree
+    // pinned, round 16: the eps-graph relation below feeds the degree
     // count AND the border semi-join, and `counted` feeds the core set
-    // AND the final report — without the caches the LSH candidate +
-    // verify pipeline (the query's dominant cost) appeared FOUR times
-    // in one physical plan (359 operators, the embeddings scan repeated
-    // 104×; measured plan audit, plans/r16/c11_dbscan_core_before.txt).
-    // Lazy cache rather than an eager checkpoint so the eps-graph
-    // subtree stays INSIDE the returned plan, which is what
-    // PlanQualitySpec's c11 pin (no cartesian / no mandatory broadcast)
-    // inspects.
-    // Lifecycle (r16 advice): the returned LAZY plan references both
-    // caches, so this builder cannot unpersist them itself — release is
-    // the CALLER's: `spark.catalog.clearCache()` after consuming the
-    // result (the bench does this between every run; a long-lived
-    // library session that batch-calls builders must do the same or
-    // storage grows by ~|panel eps-graph| per invocation).
+    // AND the final report — unpinned, the LSH candidate + verify
+    // pipeline (the query's dominant cost) appeared FOUR times in one
+    // physical plan (359 operators, the embeddings scan repeated 104×;
+    // measured plan audit, plans/r16/c11_dbscan_core_before.txt).
     val pairs = Similarity.embeddingNearDups(panel, DbscanEps,
-      bands = DbscanBands, rowBits = DbscanRowBits).cache()
+      bands = DbscanBands, rowBits = DbscanRowBits).localCheckpoint(true)
     // symmetrize with ONE scan (posexplode of both orientations) — the
     // union formulation scanned the pair relation once per leg
     val edges = pairs.select(explode(array(
@@ -1296,7 +1286,7 @@ object Clustering {
     val counted = panel.select(col("vec_id"))
       .join(deg, Seq("vec_id"), "left")
       .na.fill(0L, Seq("n_nb"))
-      .cache()
+      .localCheckpoint(true)
     val core = counted.filter(col("n_nb") + 1 >= DbscanMinPts)
       .select(col("vec_id").as("core_id"))
     val borderIds = edges

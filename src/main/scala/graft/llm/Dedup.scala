@@ -1,6 +1,7 @@
 package graft.llm
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
+import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointStats
@@ -201,12 +202,6 @@ object Dedup {
   // over a `docs` table with (doc_id: bigint, text: string) — the
   // library API the gate queries above exercise against the driver
   // corpus. Custom kernels register themselves on the input's session.
-  //
-  // The hash-based operators cache() intermediates (signatures, shingle
-  // sets) that the RESULT's lineage still references, so they stay
-  // cached until the session's storage evicts them or the caller runs
-  // spark.catalog.clearCache(); long-lived applications calling these
-  // per batch should clearCache between batches (the gate harness does).
 
   /** Exact duplicate groups: md5(text) → copy count + canonical id. */
   def exactDuplicates(docs: DataFrame): DataFrame = docs
@@ -316,17 +311,14 @@ object Dedup {
     * self-join on exploded band keys for candidates — never all-pairs.
     */
   def minhashLshPairs(docs: DataFrame): DataFrame =
-    minhashPairsWithSig(docs)._1
+    Materialize.scoped(m => minhashPairs(m, docs).localCheckpoint(true))
 
-  /** Core derivation from the docs relation. Returns (pairs, sig) with
-    * `sig` cached — sig appears twice in the pairs join, so caching it
-    * halves the signature computation; the CALLER owns unpersisting it
-    * once pairs are materialized (the memoized gate path and d14 do;
-    * the plain public API leaves it to the session-cache note at the
-    * top of this section).
+  /** Core derivation from the docs relation, with the signature cached
+    * in `m` — sig appears twice in the pairs join, so caching it halves
+    * the signature computation. Callers pin the pairs before `m` exits.
     */
-  private def minhashPairsWithSig(docs: DataFrame): (DataFrame, DataFrame) = {
-    val sig = minhashSignatureNarrow(docs).cache()
+  private def minhashPairs(m: Materialize.Scope, docs: DataFrame): DataFrame = {
+    val sig = m.cache(minhashSignatureNarrow(docs))
     // candidates via ONE self-join on exploded (bandIdx, bandKey) rows —
     // same idiom as d05's chunk join (one shuffle, not one per band)
     val bandStructs = (0 until Bands).map { b =>
@@ -347,18 +339,17 @@ object Dedup {
       (0 until Perms).map(j => col(s"h$j").as(s"y$j")): _*)
     val matches = (0 until Perms)
       .map(j => s"CASE WHEN x$j = y$j THEN 1 ELSE 0 END").mkString(" + ")
-    val pairs = cand.join(sa, "doc_a").join(sb, "doc_b")
+    cand.join(sa, "doc_a").join(sb, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         expr(s"cast($matches as double) / $Perms").as("est_sim"))
       .filter(col("est_sim") >= 0.5)
-    (pairs, sig)
   }
 
   // One shared MinHash derivation per (session, data dir) for the gate
   // queries — same memo discipline as the graph family below: d02, d14
   // and d16 all consume the SAME eagerly-checkpointed candidate pairs
   // and candidate-doc shingle set instead of re-deriving the signature
-  // pipeline, and the intermediate sig cache is unpersisted as soon as
+  // pipeline, and the intermediate sig cache is released as soon as
   // the pairs are materialized. The memo holds exactly THREE stored
   // artifacts per (session, dir) — corpus shingles, pairs, pruned
   // candidate shingles — however many gate queries (or bench repeats)
@@ -366,34 +357,21 @@ object Dedup {
   // a long suite. The corpus shingle set is its own memo stage because
   // d03 (exact n-gram Jaccard) consumes it WITHOUT needing the MinHash
   // signature pipeline on top.
-  private val shingleMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-  private val minhashMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame, DataFrame)]()
+  private val shingleMemo = new SessionMemo[DataFrame]
+  private val minhashMemo = new SessionMemo[(DataFrame, DataFrame)]
 
   /** Eagerly-checkpointed distinct (doc_id, sh) set for the gate corpus,
     * derived once per (session, dir).
     */
   private def corpusShingles(s: SparkSession, d: String): DataFrame =
-    shingleMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else (s, shingles(Catalog.t(s, d, "documents")).localCheckpoint(true))
-    })._2
+    shingleMemo(s, d)(shingles(Catalog.t(s, d, "documents")).localCheckpoint(true))
 
-  private def minhashShared(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val e = minhashMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val sh = corpusShingles(s, d)
-        val (pairs0, sig) = minhashPairsWithSig(Catalog.t(s, d, "documents"))
-        val pairs = pairs0.localCheckpoint(true)
-        sig.unpersist()
-        val shc = pruneToCandidates(pairs, sh).localCheckpoint(true)
-        (s, pairs, shc)
-      }
+  private def minhashShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    minhashMemo(s, d)(Materialize.scoped { m =>
+      val sh = corpusShingles(s, d)
+      val pairs = minhashPairs(m, Catalog.t(s, d, "documents")).localCheckpoint(true)
+      (pairs, pruneToCandidates(pairs, sh).localCheckpoint(true))
     })
-    (e._2, e._3)
-  }
 
   /** Shingles restricted to docs that appear in a candidate pair —
     * tiny relative to the corpus (LSH's whole point); the broadcast of
@@ -442,8 +420,8 @@ object Dedup {
     * eagerly and returned as a local frame, so the cached signature is
     * released before the call returns.
     */
-  def lshTuning(docs: DataFrame): DataFrame = {
-    val sig = minhashSignatureNarrow(docs).cache()
+  def lshTuning(docs: DataFrame): DataFrame = Materialize.scoped { m =>
+    val sig = m.cache(minhashSignatureNarrow(docs))
     val matches = (0 until Perms)
       .map(j => s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END").mkString(" + ")
     val per = TuneConfigs.map { case (nb, r) =>
@@ -474,7 +452,6 @@ object Dedup {
     }
     val report = per.reduce(_ unionByName _)
     val rows = report.collect()
-    sig.unpersist(blocking = true)
     docs.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), report.schema)
   }
@@ -581,14 +558,13 @@ object Dedup {
     * ingest without rescanning itself.
     */
   def streamingMinhashDedup(corpus: DataFrame, arriving: DataFrame): DataFrame = {
-    // cached: the static side of a stream-static join re-executes every
+    // pinned: the static side of a stream-static join re-executes every
     // micro-batch — the corpus index must be computed once, not per
-    // arrival batch (same discipline as incrementalDedup's index;
-    // released by the gate's session clearCache)
+    // arrival batch (same discipline as incrementalDedup's index)
     val corpusIdx = bandedSignatures(minhashSignatureNarrow(corpus))
       .select(col("doc_id").as("corpus_id") +: col("bi") +: col("bk") +:
         (0 until Perms).map(j => col(s"h$j").as(s"x$j")): _*)
-      .cache()
+      .localCheckpoint(true)
     val arrivingBands = bandedSignatures(minhashSignatureNarrow(arriving))
       .select(col("doc_id").as("batch_id") +: col("bi") +: col("bk") +:
         (0 until Perms).map(j => col(s"h$j").as(s"y$j")): _*)
@@ -650,18 +626,14 @@ object Dedup {
     * the work is candidates x shingles-per-doc, never the corpus-wide
     * inverted-index self-join.
     */
-  def minhashEstimateQuality(docs: DataFrame): DataFrame = {
-    val sh = shingles(docs).cache()
-    val (pairs, sig) = minhashPairsWithSig(docs)
-    // eagerly materialize the (small) result, then drop the corpus-sized
-    // intermediates — the caller gets a lineage-free DataFrame and no
-    // residual executor storage (own-the-unpersist, like GraphAlgs)
-    val result = qualityFromParts(pairs, pruneToCandidates(pairs, sh))
-      .localCheckpoint(true)
-    sig.unpersist()
-    sh.unpersist()
-    result
-  }
+  def minhashEstimateQuality(docs: DataFrame): DataFrame =
+    Materialize.scoped { m =>
+      val sh = m.cache(shingles(docs))
+      val pairs = minhashPairs(m, docs)
+      // the (small) result is pinned before the scope drops the
+      // corpus-sized intermediates
+      qualityFromParts(pairs, pruneToCandidates(pairs, sh)).localCheckpoint(true)
+    }
 
   /** Candidate-pair overlap stats shared by d14 (Jaccard quality) and
     * d16 (containment): exact shingle intersections ONLY for the LSH
@@ -747,12 +719,14 @@ object Dedup {
     // and the inverted-index join — without it the split/explode/distinct
     // (two jobs' worth of shuffle) runs twice (the gate path passes the
     // memoized checkpointed corpus set instead)
-    ngramJaccardFrom(shingles(docs).cache())
+    Materialize.scoped(m => ngramJaccardFrom(m.cache(shingles(docs))))
 
   private def ngramJaccardFrom(ds: DataFrame): DataFrame = {
     val keep = ds.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= DfCap).select("sh")
-    val dk = ds.join(keep, "sh").cache()
+    // pinned: the capped index feeds the size aggregate and both sides
+    // of the pair join
+    val dk = ds.join(keep, "sh").localCheckpoint(true)
     val sz = dk.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pr = dk.select(col("doc_id").as("doc_a"), col("sh"))
       .join(dk.select(col("doc_id").as("doc_b"), col("sh")), "sh")
@@ -800,11 +774,11 @@ object Dedup {
   def incrementalDedup(corpus: DataFrame, batch: DataFrame): DataFrame = {
     def fp(df: DataFrame): DataFrame = df.withColumn("fingerprint",
       md5(expr(s"cast(concat_ws(' ', slice($sparkWords, 1, $PrefixWords)) as binary)")))
-    // the corpus index is consumed twice (bloom build + join probe):
-    // pin it so the corpus fingerprint scan runs once
+    // the corpus index is consumed three times (count, bloom build,
+    // join probe): pin it so the corpus fingerprint scan runs once
     val idx = fp(corpus).groupBy("fingerprint")
       .agg(min(col("doc_id")).as("corpus_id"))
-      .cache()
+      .localCheckpoint(true)
     val nFp = idx.count()
     // bloom pre-drop (q42's shape): batch rows whose fingerprint is
     // DEFINITELY absent from the corpus bypass the join shuffle
@@ -934,11 +908,16 @@ object Dedup {
   /** SimHash near-dup pairs by hamming distance over 16-bit fingerprint
     * chunks (pigeonhole: hamming ≤ 3 over 4 chunks guarantees a match).
     */
-  def simhashNearDupPairs(docs: DataFrame): DataFrame = {
+  def simhashNearDupPairs(docs: DataFrame): DataFrame =
+    simhashPairsFrom(simhashFingerprints(docs).localCheckpoint(true))
+
+  /** [[simhashNearDupPairs]] over materialized fingerprints: the chunk
+    * self-join reads `fp` once per side, so the simhash pipeline must
+    * not be planned per join side.
+    */
+  private def simhashPairsFrom(fp: DataFrame): DataFrame = {
     // single self-join on exploded (chunkIdx, chunkVal) keys — one
-    // shuffle instead of four band-wise joins; cache the fingerprints so
-    // the simhash pipeline isn't planned once per join side
-    val fp = simhashFingerprints(docs).cache()
+    // shuffle instead of four band-wise joins
     val chunked = simhashChunks(fp)
     val a = chunked.select(col("doc_id").as("doc_a"), col("simhash").as("sa"),
       col("ci"), col("cv"))
@@ -973,14 +952,14 @@ object Dedup {
     * (pigeonhole: hamming <= 3 over 4 chunks guarantees a matching
     * chunk, so the equi-join loses no true pair). Emits
     * `(corpus_id, batch_id, hamming)` for cross-split pairs within the
-    * hamming bound. The cached corpus index is the only persisted
+    * hamming bound. The pinned corpus index is the only persisted
     * artifact; candidates shuffle on chunk keys, never all-pairs.
     */
   def streamingSimhashDedup(corpus: DataFrame, arriving: DataFrame): DataFrame = {
     val corpusIdx = simhashChunks(simhashFingerprints(corpus))
       .select(col("doc_id").as("corpus_id"), col("simhash").as("sa"),
         col("ci"), col("cv"))
-      .cache()
+      .localCheckpoint(true)
     val arr = simhashChunks(simhashFingerprints(arriving))
       .select(col("doc_id").as("batch_id"), col("simhash").as("sb"),
         col("ci"), col("cv"))
@@ -1128,15 +1107,11 @@ object Dedup {
         posexplode(expr(windowConcatSpark(windowWords))).as(Seq("pos", "sh")))
 
   // shared by the d12/d19 gates: one window explode per (session, dir)
-  private val spanMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+  private val spanMemo = new SessionMemo[DataFrame]
 
   private def spanWindows(s: SparkSession, d: String): DataFrame =
-    spanMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else (s, windowsWithPos(Catalog.t(s, d, "documents"), SpanWords)
-        .localCheckpoint(true))
-    })._2
+    spanMemo(s, d)(windowsWithPos(Catalog.t(s, d, "documents"), SpanWords)
+      .localCheckpoint(true))
 
   /** Public API: per-document duplicated-span stats over `(doc_id,
     * text)` — `n_windows`, `n_dup_windows` (window occurrences whose
@@ -1144,11 +1119,9 @@ object Dedup {
     * docs), `dup_ratio`.
     */
   def dupSpans(docs: DataFrame, windowWords: Int = SpanWords): DataFrame =
-    dupSpansFrom(windowsWithPos(docs, windowWords).cache())
+    dupSpansFrom(windowsWithPos(docs, windowWords).localCheckpoint(true))
 
-  /** [[dupSpans]] over a pre-built `(doc_id, pos, sh)` window relation
-    * (see the session-cache note at the top of this section).
-    */
+  /** [[dupSpans]] over a pre-built `(doc_id, pos, sh)` window relation. */
   def dupSpansFrom(sw: DataFrame): DataFrame = {
     val dup = sw.select(col("doc_id"), col("sh")).distinct()
       .groupBy(col("sh")).agg(count(lit(1)).as("nd"))
@@ -1178,7 +1151,8 @@ object Dedup {
     * d12, so the two operators share one exploded relation.
     */
   def dupSpanRanges(docs: DataFrame, windowWords: Int = SpanWords): DataFrame =
-    dupSpanRangesFrom(windowsWithPos(docs, windowWords).cache(), windowWords)
+    dupSpanRangesFrom(windowsWithPos(docs, windowWords).localCheckpoint(true),
+      windowWords)
 
   /** [[dupSpanRanges]] over a pre-built `(doc_id, pos, sh)` relation. */
   def dupSpanRangesFrom(
@@ -1243,40 +1217,27 @@ object Dedup {
     * `clearCache()` does not evict it, while a fresh SparkSession (the
     * driver may use one per query) simply recomputes.
     */
-  // Keyed by data dir and validated against the CURRENT session: a
-  // fresh session (the driver may use one per query) replaces the
-  // entry, dropping the strong reference to the old session's
-  // checkpointed DataFrames so its storage can be collected — the maps
-  // hold at most one session's graph per dir, never an unbounded
-  // history.
-  private val graphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame, DataFrame)]()
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+  private val graphMemo = new SessionMemo[(DataFrame, DataFrame)]
+  private val labelsMemo = new SessionMemo[DataFrame]
 
-  private def nearDupGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val entry = graphMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val docs = Catalog.t(s, d, "documents")
-        // actual stored size, not the stock checkpoint's inherited
-        // ESTIMATE of the join-heavy candidate derivation (5.9 GB for
-        // the ~2 MB sf0.1 edge list), which would poison every
-        // size-derived decision downstream — the graph family's
-        // adaptive partition counts most of all
-        (s,
-          CheckpointStats.truncate(
-            docs.select(col("doc_id").as("id")).distinct(),
-            reliable = false, CheckpointStats.Actual),
-          // hamming rides along: g03 selects the tight-clique subgraph
-          CheckpointStats.truncate(simhashNearDupPairs(docs)
-              .select(col("doc_a").as("src"), col("doc_b").as("dst"),
-                col("hamming")),
-            reliable = false, CheckpointStats.Actual))
-      }
+  private def nearDupGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    graphMemo(s, d)(Materialize.scoped { m =>
+      val docs = Catalog.t(s, d, "documents")
+      // actual stored size, not the stock checkpoint's inherited
+      // ESTIMATE of the join-heavy candidate derivation (5.9 GB for
+      // the ~2 MB sf0.1 edge list), which would poison every
+      // size-derived decision downstream — the graph family's
+      // adaptive partition counts most of all
+      (CheckpointStats.truncate(
+          docs.select(col("doc_id").as("id")).distinct(),
+          reliable = false, CheckpointStats.Actual),
+        // hamming rides along: g03 selects the tight-clique subgraph
+        CheckpointStats.truncate(
+          simhashPairsFrom(m.cache(simhashFingerprints(docs)))
+            .select(col("doc_a").as("src"), col("doc_b").as("dst"),
+              col("hamming")),
+          reliable = false, CheckpointStats.Actual))
     })
-    (entry._2, entry._3)
-  }
 
   /** Round-truncation mode for the iterative gate queries: unset (the
     * default) uses executor-local checkpoints — fastest, but a lost
@@ -1292,16 +1253,13 @@ object Dedup {
     s.conf.getOption(GraphCheckpointDirConf)
 
   private def componentsSpark(s: SparkSession, d: String): DataFrame =
-    labelsMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val (nodes, edges) = nearDupGraph(s, d)
-        (s, GraphAlgs.connectedComponents(nodes, edges,
-            checkpointDir = graphCheckpointDir(s))
-          .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-          .localCheckpoint(true))
-      }
-    })._2
+    labelsMemo(s, d) {
+      val (nodes, edges) = nearDupGraph(s, d)
+      GraphAlgs.connectedComponents(nodes, edges,
+          checkpointDir = graphCheckpointDir(s))
+        .select(col("id").as("doc_id"), col("component").as("cluster_id"))
+        .localCheckpoint(true)
+    }
 
   // --------------------------------------------- graph centrality (g01)
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
 
+import graft.Materialize
+
 /** Reusable distributed graph algorithms over plain DataFrames — the
   * library surface behind the d08/g01 gate queries. Both take:
   *
@@ -40,9 +42,11 @@ object GraphAlgs {
     * [[connectedComponentsWithStats]] (the scale smokes read it to show
     * rounds grow O(log diameter) while per-round work stays
     * proportional to edges — the scale claim single-query benches
-    * can't see).
+    * can't see), plus the physical path the loop took (`broadcast` or
+    * `co-partitioned` label joins) and the edge layout's partition count.
     */
-  final case class CcStats(rounds: Int, roundSecs: Seq[Double])
+  final case class CcStats(rounds: Int, roundSecs: Seq[Double], path: String,
+      partitions: Int)
 
   /** Nodes at or below which the node-sized side is broadcast. ~4M rows
     * of (long, long) ≈ 64 MB serialized — a conservative ceiling for
@@ -93,17 +97,17 @@ object GraphAlgs {
       .min(BigInt(conf)).max(BigInt(1)).toInt
   }
 
-  /** Symmetrized edge list, hash-partitioned by `src` once and cached.
-    * Callers own the unpersist. The explicit fixed-width repartition is
-    * load-bearing: AQE never coalesces a user repartition, so the
-    * cached layout is exactly `hash(src) % p` and iteration joins that
-    * bring the other side in the same layout need no edge Exchange.
+  /** Symmetrized edge list, hash-partitioned by `src` once and cached
+    * in `m`. The explicit fixed-width repartition is load-bearing: AQE
+    * never coalesces a user repartition, so the cached layout is
+    * exactly `hash(src) % p` and iteration joins that bring the other
+    * side in the same layout need no edge Exchange.
     */
-  private def undirected(edges: DataFrame, p: Int): DataFrame = {
+  private def undirected(m: Materialize.Scope, edges: DataFrame,
+      p: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p, col("src"))
-      .cache()
+    m.cache(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(p, col("src")))
   }
 
   /** Connected components by min-label propagation with a pointer-jump
@@ -129,14 +133,13 @@ object GraphAlgs {
       edges: DataFrame,
       maxRounds: Int = 40,
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): (DataFrame, CcStats) = {
+      checkpointDir: Option[String] = None): (DataFrame, CcStats) =
+    Materialize.scoped { m =>
     val spark = nodes.sparkSession
     val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
-    val e = undirected(edges, p)
-    val labels0 = nodes.select(col("id"))
-      .withColumn("label", col("id")).cache()
-    var labels = labels0
+    val e = undirected(m, edges, p)
+    var labels = m.cache(nodes.select(col("id")).withColumn("label", col("id")))
     // one pass gets both the fixpoint potential and the broadcast gate
     def sumAndCount(df: DataFrame): (Long, Long) = {
       val r = df.agg(coalesce(sum(col("label")), lit(0L)), count(lit(1))).first()
@@ -180,26 +183,25 @@ object GraphAlgs {
       // flow through edge adjacency is the binding constraint, not
       // pointer depth) while each round paid one more node-sized join;
       // interleaved A/B: 4.43 vs 3.77 s warm on g12. Single jump kept.)
-      val l1t = if (small) l1.cache() else truncate(l1, rel, Severed)
+      val l1t = if (small) m.cache(l1) else truncate(l1, rel, Severed)
       val ptr = l1t.select(col("id").as("pid"), col("label").as("plabel"))
       val ptrIn = if (small) broadcast(ptr) else ptr
       val next = l1t.join(ptrIn, l1t("label") === ptrIn("pid"))
         .select(l1t("id"), least(l1t("label"), col("plabel")).as("label"))
       val nextT = truncate(next, rel, Severed)
-      if (small) l1t.unpersist()
+      if (small) m.release(l1t)
       prevSum = curSum
       curSum = sumAndCount(nextT)._1
       labels = nextT
       round += 1
       roundSecs += (System.nanoTime() - tr) / 1e9
     }
-    e.unpersist()
-    labels0.unpersist()
     if (curSum != prevSum)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds")
     (labels.select(col("id"), col("label").as("component")),
-      CcStats(round, roundSecs.toSeq))
+      CcStats(round, roundSecs.toSeq,
+        if (small) "broadcast" else "co-partitioned", p))
   }
 
   /** Multi-source BFS distances: hops from the nearest seed, breadth
@@ -243,11 +245,11 @@ object GraphAlgs {
       seeds: DataFrame,
       maxDepth: Int,
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
     val spark = edges.sparkSession
     val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(edges))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     // Round 16 (guide §2.4): the visited set is a LAZY union of the
     // per-depth checkpointed frontier frames, never re-materialized.
     // The old shape re-checkpointed `dist.union(next)` every depth —
@@ -294,7 +296,6 @@ object GraphAlgs {
       dist = dist.union(next)
       frontier = next.select(col("probe"), col("id"))
     }
-    e.unpersist()
     dist
   }
 
@@ -333,20 +334,20 @@ object GraphAlgs {
       iters: Int = 5,
       scale: Long = 1000000000000L,
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
     val spark = nodes.sparkSession
     val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     // cached: the edge set appears on BOTH sides of the deg bake-in join
     // below — uncached it would evaluate its lineage twice
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     val deg = e.groupBy(col("src").as("dnode")).agg(count(lit(1)).as("deg"))
     // degree is loop-invariant: bake it onto the edge list ONCE (and
     // keep the hash(src)%p layout) so each iteration is one edge join
     // with no edge-side Exchange + a partial-agg shuffle
-    val edgesWithDeg = e.join(deg, col("src") === col("dnode"))
+    val edgesWithDeg = m.cache(e.join(deg, col("src") === col("dnode"))
       .select(col("src"), col("dst"), col("deg"))
-      .repartition(p, col("src")).cache()
+      .repartition(p, col("src")))
     // seed membership is loop-invariant too: bake it onto the node
     // table once — init mass and restart (base) mass are per-node
     // constants of the loop. The uniform call (pageRank delegates with
@@ -354,7 +355,7 @@ object GraphAlgs {
     // entirely: the seed column is a literal Catalyst folds away, so
     // g01 keeps its pre-delegation setup shape.
     val uniform = seeds eq nodes
-    val n0 = (if (uniform)
+    val n0 = m.cache((if (uniform)
         nodes.select(col("id")).withColumn("seed", lit(true))
       else {
         val sd = seeds.select(col("id")).distinct()
@@ -362,46 +363,41 @@ object GraphAlgs {
         nodes.select(col("id"))
           .join(sd, Seq("id"), "left")
           .select(col("id"), coalesce(col("isSeed"), lit(false)).as("seed"))
-      }).repartition(p, col("id")).cache()
+      }).repartition(p, col("id")))
     val n = n0.count()
     val ns =
       if (n == 0) 0L
       else if (uniform) n
       else n0.filter(col("seed")).count()
-    if (ns == 0) { // empty graph or seed set: zero mass (and no div by 0)
-      e.unpersist(); edgesWithDeg.unpersist()
-      val out = n0.select(col("id"), lit(0L).as("rank"))
-      n0.unpersist()
-      return out
+    // empty graph or seed set: zero mass (and no div by 0)
+    if (ns == 0) truncate(n0.select(col("id"), lit(0L).as("rank")), rel, Severed)
+    else {
+      val small = n <= broadcastMaxNodes
+      val init = scale / ns
+      val base = (15L * init) / 100L
+      val baseCol = when(col("seed"), lit(base)).otherwise(lit(0L))
+      var pr = n0.select(col("id"),
+        when(col("seed"), lit(init)).otherwise(lit(0L)).as("val"))
+      for (it <- 1 to iters) {
+        // Small N: broadcast the rank table (checkpointed RDDs carry no
+        // stats, so without the hint Spark would shuffle the edge list).
+        // Large N: ranks repartition to the edge layout — node-sized
+        // Exchange, edge side untouched. Never a mandatory broadcast.
+        val prIn =
+          if (small) broadcast(pr) else pr.repartition(p, col("id"))
+        val contrib = prIn
+          .join(edgesWithDeg, prIn("id") === edgesWithDeg("src"))
+          .groupBy(col("dst"))
+          .agg(sum(expr("val div deg")).as("msum"))
+        val contribIn =
+          if (small) broadcast(contrib) else contrib.repartition(p, col("dst"))
+        val next = n0.join(contribIn, n0("id") === contribIn("dst"), "left")
+          .select(n0("id"),
+            (baseCol + expr("(85 * coalesce(msum, 0L)) div 100")).as("val"))
+        pr = truncate(next, rel, Severed)
+      }
+      pr.select(col("id"), col("val").as("rank"))
     }
-    val small = n <= broadcastMaxNodes
-    val init = scale / ns
-    val base = (15L * init) / 100L
-    val baseCol = when(col("seed"), lit(base)).otherwise(lit(0L))
-    var pr = n0.select(col("id"),
-      when(col("seed"), lit(init)).otherwise(lit(0L)).as("val"))
-    for (it <- 1 to iters) {
-      // Small N: broadcast the rank table (checkpointed RDDs carry no
-      // stats, so without the hint Spark would shuffle the edge list).
-      // Large N: ranks repartition to the edge layout — node-sized
-      // Exchange, edge side untouched. Never a mandatory broadcast.
-      val prIn =
-        if (small) broadcast(pr) else pr.repartition(p, col("id"))
-      val contrib = prIn
-        .join(edgesWithDeg, prIn("id") === edgesWithDeg("src"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("val div deg")).as("msum"))
-      val contribIn =
-        if (small) broadcast(contrib) else contrib.repartition(p, col("dst"))
-      val next = n0.join(contribIn, n0("id") === contribIn("dst"), "left")
-        .select(n0("id"),
-          (baseCol + expr("(85 * coalesce(msum, 0L)) div 100")).as("val"))
-      pr = truncate(next, rel, Severed)
-    }
-    e.unpersist()
-    edgesWithDeg.unpersist()
-    n0.unpersist()
-    pr.select(col("id"), col("val").as("rank"))
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -423,12 +419,12 @@ object GraphAlgs {
       edges: DataFrame,
       rounds: Int = 2,
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
     val spark = nodes.sparkSession
     val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
-    val e = undirected(edges, p)
-    val n0 = nodes.select(col("id")).repartition(p, col("id")).cache()
+    val e = undirected(m, edges, p)
+    val n0 = m.cache(nodes.select(col("id")).repartition(p, col("id")))
     val small = n0.count() <= broadcastMaxNodes
     var labels = n0.withColumn("label", col("id"))
     for (_ <- 1 to rounds) {
@@ -448,8 +444,6 @@ object GraphAlgs {
           .select(col("id"), coalesce(col("nlabel"), col("label")).as("label")),
         rel, Severed)
     }
-    e.unpersist()
-    n0.unpersist()
     labels
   }
 
@@ -464,9 +458,10 @@ object GraphAlgs {
     * Scale: two keyed self-joins on the oriented edge list — never
     * all-pairs; counts are exact integers, lcc a single IEEE division.
     */
-  def triangleCounts(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  def triangleCounts(nodes: DataFrame, edges: DataFrame): DataFrame =
+    Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(nodes))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     // deg and o are each consumed by MULTIPLE downstream joins that the
     // caller materializes after this method returns — eager
     // localCheckpoint (not lazy cache) so the upstream caches can be
@@ -500,7 +495,6 @@ object GraphAlgs {
       .withColumn("lcc", expr(
         "CASE WHEN degree < 2 THEN cast(0 as double) " +
           "ELSE cast(2 * n_triangles as double) / cast(degree * (degree - 1) as double) END"))
-    e.unpersist() // deg and o are checkpointed; e's cache is no longer needed
     out
   }
 
@@ -523,14 +517,14 @@ object GraphAlgs {
     * triangle counting does.
     */
   def edgeTriangleSupport(edges: DataFrame, minSupport: Int,
-      pOverride: Option[Int] = None): DataFrame = {
+      pOverride: Option[Int] = None): DataFrame = Materialize.scoped { m =>
     // pOverride (round 17): trussDecomposition's per-round survivor set
     // is a severed-stats checkpoint (sizeInBytes = session default), so
     // the statistic-derived count cannot see how small it is — but the
     // caller tracks the exact edge count per round and passes the
     // matching layout width down.
     val p = pOverride.getOrElse(adaptiveP(edges, shufflePartitions(edges)))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val da = deg.select(col("node").as("src"), col("deg").as("dsrc"))
@@ -559,14 +553,13 @@ object GraphAlgs {
       .groupBy(col("ea"), col("eb")).agg(count(lit(1)).as("support"))
     // canonical edges straight from the INPUT (min-id, max-id): the
     // symmetrized cache `e` is not a dependency of the returned plan,
-    // so the unpersist below cannot force a recompute of the union
+    // so its release at scope exit cannot force a recompute of the union
     val canon = edges.select(least(col("src"), col("dst")).as("ea"),
       greatest(col("src"), col("dst")).as("eb")).distinct()
     val out = canon.join(support, Seq("ea", "eb"), "left")
       .select(col("ea").as("src"), col("eb").as("dst"),
         coalesce(col("support"), lit(0L)).as("support"))
       .withColumn("in_truss", col("support") >= minSupport)
-    e.unpersist()
     out
   }
 
@@ -744,9 +737,10 @@ object GraphAlgs {
     * adjacency. Callers pass a degree-bounded subgraph (the tight
     * hamming cut) exactly as triangle counting does.
     */
-  def twoHopReach(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  def twoHopReach(nodes: DataFrame, edges: DataFrame): DataFrame =
+    Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(nodes))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val ab = e.select(col("src").as("u"), col("dst").as("v"))
@@ -754,13 +748,11 @@ object GraphAlgs {
     val wed = ab.join(bc, "v").filter(col("w") =!= col("u"))
       .select(col("u"), col("w")).distinct()
     val adj = e.select(col("src").as("u"), col("dst").as("w"))
-    // node-sized; materialized eagerly so the edge cache can be
-    // released here instead of leaking until the session's next
-    // clearCache (round-16 unpersist-after-consumption sweep)
+    // node-sized; materialized eagerly so the returned plan reads no
+    // edge cache
     val reach = wed.join(adj, Seq("u", "w"), "left_anti")
       .groupBy(col("u")).agg(count(lit(1)).as("two_hop"))
       .localCheckpoint(true)
-    e.unpersist()
     nodes.select(col("id"))
       .join(deg.select(col("node").as("id"), col("deg")), Seq("id"), "left")
       .join(reach.select(col("u").as("id"), col("two_hop")), Seq("id"), "left")
@@ -784,9 +776,10 @@ object GraphAlgs {
     * must SEE those candidate pairs avoids enumerating them.
     * Already-adjacent pairs leave via one anti-join.
     */
-  def linkPrediction(edges: DataFrame, minCommon: Int): DataFrame = {
+  def linkPrediction(edges: DataFrame, minCommon: Int): DataFrame =
+    Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     // wedges centered at v: (v→u, v→w) with u < w — each unordered
@@ -800,12 +793,10 @@ object GraphAlgs {
       .select(col("src").as("u"), col("dst").as("w"))
     // the wedge count and the adjacency anti-join are the two consumers
     // of the cached edge list: materialize their composition eagerly
-    // BEFORE e.unpersist(), or the returned lazy plan recomputes the
-    // symmetrize+repartition for each of its three e-scans (round-16
-    // unpersist-after-consumption sweep)
+    // while the cache lives, or the returned lazy plan recomputes the
+    // symmetrize+repartition for each of its three e-scans
     val nonAdj = cn.join(adj, Seq("u", "w"), "left_anti")
       .localCheckpoint(true)
-    e.unpersist()
     nonAdj
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("w"), col("deg").as("dw")), "w")
@@ -855,12 +846,12 @@ object GraphAlgs {
       k: Int,
       rounds: Int,
       broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
     require(k >= 1 && rounds >= 1, "k-core peel needs k >= 1, rounds >= 1")
     val spark = nodes.sparkSession
     val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     var remaining = truncate(nodes.select(col("id")).distinct(), rel, Severed)
     var nRem = remaining.count()
     val profile = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
@@ -895,24 +886,22 @@ object GraphAlgs {
       remaining = next
       nRem = nNext
     }
-    e.unpersist()
     import spark.implicits._
     profile.toSeq.toDF("round", "n_removed", "n_remaining")
   }
 
-  def modularity(labels: DataFrame, edges: DataFrame): DataFrame = {
+  def modularity(labels: DataFrame, edges: DataFrame): DataFrame =
+    Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val com = labels.select(col("id"), col("community"))
     // intra is the one OTHER consumer of the cached edge list;
-    // materialize it eagerly (|communities| rows) BEFORE e.unpersist()
-    // below. The old shape unpersisted e while the returned lazy plan
-    // still referenced it through both, so the consumer recomputed the
-    // symmetrize+repartition of the whole edge list twice (round-16
-    // find, guide §5 "unpersist when done" read literally: done means
-    // CONSUMED, not constructed).
+    // materialize it eagerly (|communities| rows) while the cache
+    // lives: the returned lazy plan must not reference it, or the
+    // consumer recomputes the symmetrize+repartition of the whole edge
+    // list after the scope releases it.
     // Round 17: m2 (the symmetrized edge count) is Σ deg — derive it
     // from the already-checkpointed node-sized degree table instead of
     // a third full scan of the cached edge list plus its own eager
@@ -926,7 +915,6 @@ object GraphAlgs {
       .filter(col("ca") === col("cb"))
       .groupBy(col("ca").as("community")).agg(count(lit(1)).as("intra2"))
       .localCheckpoint(true)
-    e.unpersist()
     val dc = com.join(deg, com("id") === deg("node"), "left")
       .groupBy(col("community"))
       .agg(count(lit(1)).as("n_members"),
@@ -964,17 +952,16 @@ object GraphAlgs {
     * relative to |E|), then a single-row global aggregate — map-side
     * partials do almost all the work.
     */
-  def degreeProfile(edges: DataFrame): DataFrame = {
+  def degreeProfile(edges: DataFrame): DataFrame = Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
-    val e = undirected(edges, p)
+    val e = undirected(m, edges, p)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val nodeStats = deg.agg(
       count(lit(1)).as("n_nodes"), max(col("deg")).as("max_degree"),
       sum(col("deg")).as("sum_deg"))
-    // one row; materialized eagerly so e.unpersist() below happens
-    // AFTER the edge list's last consumer ran, not before (round-16
-    // unpersist-after-consumption sweep)
+    // one row; materialized eagerly so the edge list's last consumer
+    // runs before the scope releases it
     val moments = e
       .join(deg.select(col("node").as("src"), col("deg").as("dx")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("dy")), "dst")
@@ -1002,7 +989,6 @@ object GraphAlgs {
              |    / (sqrt(cast(cast(n as decimal(38,0))*sxx - cast(sx as decimal(38,0))*sx as double))
              |       * sqrt(cast(cast(n as decimal(38,0))*syy - cast(sy as decimal(38,0))*sy as double))) END""".stripMargin)
         .as("assortativity"))
-    e.unpersist()
     out
   }
 }

@@ -199,12 +199,14 @@ object Pipeline {
         val quality = train.withColumn("w", expr(sparkWords))
           .filter(expr("size(w) BETWEEN 5 AND 2000"))
         val bad = contamination(train, eval0).select("doc_id")
-        // cached: `clean` feeds the sampler AND the token projection,
-        // `samp` feeds the packer AND the final pick join — uncached,
+        // pinned: `clean` feeds the sampler AND the token projection,
+        // `samp` feeds the packer AND the final pick join — unpinned,
         // the shingle-explode contamination anti-join would re-execute
         // per consumer
-        val clean = quality.join(bad, Seq("doc_id"), "left_anti").cache()
-        val samp = balancedSample(clean, col("lang"), CurationK).cache()
+        val clean = quality.join(bad, Seq("doc_id"), "left_anti")
+          .localCheckpoint(true)
+        val samp = balancedSample(clean, col("lang"), CurationK)
+          .localCheckpoint(true)
         val withTokens = samp.join(
           clean.select(col("doc_id"),
             expr("cast(size(w) as bigint)").as("toks")), "doc_id")

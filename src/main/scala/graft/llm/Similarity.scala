@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Catalog, QueryDef}
+import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -826,22 +827,14 @@ object Similarity {
     lshCandidatePairs(vecs, bands, rowBits, AdMaxBits)
   }
 
-  /** Memoized `count(embeddings)` per dir — the adaptive family's tier
-    * decision for every gate consumer (d06, s11, d29, d30) reads this
-    * one snapshot instead of re-scanning the table per query. Keyed by
-    * DIR with the owning session alongside (the graphMemo eviction
-    * pattern): a new session replaces the entry, so a driver cycling
-    * one session per query never accumulates strong references to
-    * stopped sessions. The table is immutable for the life of a
-    * gate/bench session, which is exactly the snapshot semantics the
-    * ladder documents. */
-  private val corpusNMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Long)]()
+  /** Memoized `count(embeddings)` per (session, dir) — the adaptive
+    * family's tier decision for every gate consumer (d06, s11, d29, d30)
+    * reads this one snapshot instead of re-scanning the table per query.
+    * The table is immutable for the life of a gate/bench session, which
+    * is exactly the snapshot semantics the ladder documents. */
+  private val corpusNMemo = new SessionMemo[Long]
   private def corpusN(s: SparkSession, d: String): Long =
-    corpusNMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else (s, Catalog.t(s, d, "embeddings").count())
-    })._2
+    corpusNMemo(s, d)(Catalog.t(s, d, "embeddings").count())
 
   /** Test twin of the oracle's masked-full-width computation: band
     * keys under the MAXIMAL family, masked to the tier with pmod —
@@ -1455,7 +1448,7 @@ object Similarity {
     * centroid set is static and collected ONCE; the stream side only
     * gains narrow columns), then a stream-static equi-join on cell id
     * flags cross-split pairs with cosine >= `minCos`. The cell-bucketed
-    * corpus is the only persisted artifact and is cached so
+    * corpus is the only persisted artifact and is pinned eagerly so
     * micro-batches never recompute it — candidate search shuffles on
     * cell id, never all-pairs, exactly how a 100 TB lake
     * semantically gates its ingest.
@@ -1469,7 +1462,7 @@ object Similarity {
       corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ca"))
         .withColumn("cn", expr(s"${sparkNorm("ca")}")), cent)
       .select(col("cid"), col("neighbor_id").as("corpus_id"), col("ca"), col("cn"))
-      .cache()
+      .localCheckpoint(true)
     val arrivingCells = assignCells(
       arriving.select(col("vec_id").as("neighbor_id"), col("embedding").as("ca"))
         .withColumn("cn", expr(s"${sparkNorm("ca")}")), cent)

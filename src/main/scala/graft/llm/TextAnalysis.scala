@@ -1,6 +1,7 @@
 package graft.llm
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
+import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
@@ -1895,12 +1896,8 @@ object TextAnalysis {
     * distributed BPE trainer (e.g. the original sentencepiece-style
     * map-reduce formulation) performs.
     */
-  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame = {
-    val s = docs.sparkSession
-    val (out, reprs) = bpeTrain(docs, rounds)
-    reprs.unpersist()
-    mergesToDF(s, out)
-  }
+  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame =
+    mergesToDF(docs.sparkSession, Materialize.scoped(m => bpeTrain(m, docs, rounds)._1))
 
   private def mergesToDF(s: SparkSession,
       out: Seq[(Int, String, String, Long)]): DataFrame = {
@@ -1915,36 +1912,29 @@ object TextAnalysis {
   // table AND tokenize with the segmented vocabulary from the same
   // checkpointed result. A fresh session replaces the entry.
   private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (SparkSession, Seq[(Int, String, String, Long)], DataFrame)]()
+    new SessionMemo[(Seq[(Int, String, String, Long)], DataFrame)]
 
   private def bpeShared(s: SparkSession, d: String):
-      (Seq[(Int, String, String, Long)], DataFrame) = {
-    val e = bpeMemo.compute(d, { (_, cur) =>
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val (merges, reprs) = bpeTrain(Catalog.t(s, d, "documents"), BpeRounds)
-        val ck = reprs.localCheckpoint(true)
-        reprs.unpersist()
-        (s, merges, ck)
-      }
+      (Seq[(Int, String, String, Long)], DataFrame) =
+    bpeMemo(s, d)(Materialize.scoped { m =>
+      val (merges, reprs) = bpeTrain(m, Catalog.t(s, d, "documents"), BpeRounds)
+      (merges, reprs.localCheckpoint(true))
     })
-    (e._2, e._3)
-  }
 
   /** BPE trainer core: returns the merge list and the FINAL segmented
-    * vocabulary `(word, freq, repr)` (cached — the caller owns the
-    * unpersist). Shared by [[bpeMerges]] (the merge table) and
-    * [[bpeEncode]] (corpus tokenization with the trained segmentation).
+    * vocabulary `(word, freq, repr)`, cached in `m` (each round's
+    * vocabulary is released once the next one is materialized). Shared
+    * by [[bpeMerges]] (the merge table) and [[bpeEncode]] (corpus
+    * tokenization with the trained segmentation).
     */
-  private def bpeTrain(docs: DataFrame, rounds: Int):
+  private def bpeTrain(m: Materialize.Scope, docs: DataFrame, rounds: Int):
       (Seq[(Int, String, String, Long)], DataFrame) = {
     val words = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    var reprs = words.select(col("word"), col("freq"), expr(
+    var reprs = m.cache(words.select(col("word"), col("freq"), expr(
       "concat_ws(' ', transform(sequence(1, length(word)), " +
-        "i -> substring(word, i, 1)))").as("repr")).cache()
+        "i -> substring(word, i, 1)))").as("repr")))
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     for (r <- 1 to rounds) {
       val pairs = reprs.withColumn("w", split(col("repr"), " "))
@@ -1967,7 +1957,7 @@ object TextAnalysis {
         // without the pair skip the fold entirely (the vast majority
         // every round).
         val pad = q(" " + l + " " + rt + " ")
-        val next = reprs.withColumn("repr", expr(
+        val next = m.cache(reprs.withColumn("repr", expr(
           s"""IF(NOT contains(concat(' ', repr, ' '), $pad), repr,
              |  concat_ws(' ', aggregate(
              |  split(repr, ' '),
@@ -1980,9 +1970,9 @@ object TextAnalysis {
              |      IF(s.prev IS NULL, s.acc, array_append(s.acc, s.prev)),
              |      'prev', x)),
              |  s -> IF(s.prev IS NULL, s.acc, array_append(s.acc, s.prev)))))"""
-            .stripMargin)).cache()
+            .stripMargin)))
         next.count() // materialize before releasing the parent round
-        reprs.unpersist()
+        m.release(reprs)
         reprs = next
       }
     }
@@ -1997,11 +1987,8 @@ object TextAnalysis {
     * the corpus); the tokenize join keys on `word` and AQE broadcasts
     * the vocab when it fits — no all-pairs, no global window.
     */
-  def bpeEncode(docs: DataFrame, rounds: Int): DataFrame = {
-    val (_, reprs) = bpeTrain(docs, rounds)
-    val out = bpeEncodeWith(docs, reprs).localCheckpoint(true)
-    reprs.unpersist()
-    out
+  def bpeEncode(docs: DataFrame, rounds: Int): DataFrame = Materialize.scoped { m =>
+    bpeEncodeWith(docs, bpeTrain(m, docs, rounds)._2).localCheckpoint(true)
   }
 
   /** Tokenize `docs` against an already-trained segmented vocabulary

@@ -83,6 +83,33 @@ object StreamingQueries {
     s.table(name)
   }
 
+  /** st04's stream-stream self-join: click-to-purchase pairs within the
+    * preceding hour, both sides watermarked so join state is bounded
+    * (SURVEY §2.11 → Structured Streaming joins). The coarse timestamp
+    * band gives Spark its state-retention bound; the exact predicate is
+    * on ms bigints so the emitted set matches the batch oracle
+    * bit-for-bit (a timestamp-only predicate could disagree with the
+    * oracle's ms-floored compare on sub-ms boundaries).
+    */
+  private[graft] def clickToPurchase(raw: DataFrame): DataFrame = {
+    val ev = raw.select(col("event_id"), col("user_id"), col("event_type"),
+      col("ts"), unix_millis(col("ts")).as("ms"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("ts").as("pts"), col("ms").as("pms"))
+      .withWatermark("pts", "1 hour")
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("cuser"),
+        col("ts").as("cts"), col("ms").as("cms"))
+      .withWatermark("cts", "1 hour")
+    p.join(c, col("cuser") === col("user_id")
+        && col("cts") >= col("pts") - expr("INTERVAL 61 MINUTES")
+        && col("cts") <= col("pts") + expr("INTERVAL 1 SECOND")
+        && col("cms") >= col("pms") - GapMs2 && col("cms") < col("pms"))
+      .select(col("purchase_id"), col("click_id"), col("user_id"),
+        col("pms"), col("cms"))
+  }
+
   def all: Seq[QueryDef] = Seq(
     QueryDef(
       "st01_stream_hourly",
@@ -146,12 +173,7 @@ object StreamingQueries {
       }),
 
     // st04: stream-stream self-join — click-to-purchase pairs within the
-    // preceding hour, both sides watermarked so join state is bounded
-    // (SURVEY §2.11 → Structured Streaming joins). The coarse timestamp
-    // band gives Spark its state-retention bound; the exact predicate is
-    // on ms bigints so the emitted set matches the batch oracle
-    // bit-for-bit (a timestamp-only predicate could disagree with the
-    // oracle's ms-floored compare on sub-ms boundaries).
+    // preceding hour ([[clickToPurchase]]).
     QueryDef(
       "st04_stream_stream_join",
       Some(s"""WITH ev AS (SELECT event_id, user_id, event_type,
@@ -161,24 +183,7 @@ object StreamingQueries {
               |FROM ev p JOIN ev c ON p.event_type = 'purchase'
               |  AND c.event_type = 'click' AND c.user_id = p.user_id
               |  AND c.ms >= p.ms - $GapMs2 AND c.ms < p.ms""".stripMargin),
-      (s, d) => runToMemorySink(s, d, "st04", "append") { raw =>
-        val ev = raw.select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"), unix_millis(col("ts")).as("ms"))
-        val p = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-            col("ts").as("pts"), col("ms").as("pms"))
-          .withWatermark("pts", "1 hour")
-        val c = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id").as("cuser"),
-            col("ts").as("cts"), col("ms").as("cms"))
-          .withWatermark("cts", "1 hour")
-        p.join(c, col("cuser") === col("user_id")
-            && col("cts") >= col("pts") - expr("INTERVAL 61 MINUTES")
-            && col("cts") <= col("pts") + expr("INTERVAL 1 SECOND")
-            && col("cms") >= col("pms") - GapMs2 && col("cms") < col("pms"))
-          .select(col("purchase_id"), col("click_id"), col("user_id"),
-            col("pms"), col("cms"))
-      }),
+      (s, d) => runToMemorySink(s, d, "st04", "append")(clickToPurchase)),
 
     // st05: streaming dedup — dropDuplicates over the key projection
     // emits exactly the distinct key set (keys only, so the emitted set

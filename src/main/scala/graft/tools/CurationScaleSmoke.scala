@@ -111,6 +111,7 @@ object CurationScaleSmoke {
       // rounds grow O(log diameter) while per-round work tracks edges
       row(copies, "d08_families", nSurv, nFamilies, cS,
         "cc_rounds" -> st.rounds, "cc_round_s" -> st.roundSecs,
+        "cc_path" -> st.path, "cc_partitions" -> st.partitions,
         "cc_s_per_kpair" -> (if (nPairs == 0) 0.0 else cS * 1000.0 / nPairs))
 
       // stage 4 — p27 leakage-safe split keyed on the family id

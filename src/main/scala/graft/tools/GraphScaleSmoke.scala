@@ -65,8 +65,6 @@ object GraphScaleSmoke {
       val edges = CheckpointStats.truncate(spark.range(n - chains)
           .select(col("id").as("src"), (col("id") + chains).as("dst")),
         reliable = false, CheckpointStats.Actual)
-      val path = if (n <= bmax) "broadcast" else "co-partition"
-
       val ((nComp, st), ccSecs, _) = ToolKit.phase {
         val (labels, st) = GraphAlgs.connectedComponentsWithStats(nodes, edges,
           maxRounds = 64, broadcastMaxNodes = bmax)
@@ -75,8 +73,8 @@ object GraphScaleSmoke {
       assert(nComp == chains.min(n),
         s"tier $n: expected ${chains.min(n)} components, got $nComp")
       ToolKit.emit("smoke" -> "graph_scale", "algo" -> "cc", "nodes" -> n,
-        "edges" -> (n - chains), "path" -> path, "rounds" -> st.rounds,
-        "round_secs" -> st.roundSecs, "total_sec" -> ccSecs,
+        "edges" -> (n - chains), "path" -> st.path, "partitions" -> st.partitions,
+        "rounds" -> st.rounds, "round_secs" -> st.roundSecs, "total_sec" -> ccSecs,
         "n_components" -> nComp, "broadcast_max_nodes" -> bmax)
 
       // multi-source BFS: seeds = one node per 1000th chain head; at

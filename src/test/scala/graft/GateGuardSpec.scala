@@ -23,12 +23,16 @@ class RegistryCompletenessSpec extends AnyFunSuite {
   test("every registry entry runs end-to-end at sf0.001 (no silent gate loss)") {
     val s = TestSpark.spark
     val failures = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    val leaks = scala.collection.mutable.ListBuffer.empty[String]
     var nonEmpty = 0
     SparkEntry.registry.foreach { qd =>
       try {
         val df = qd.run(s, sf)
         assert(df.schema.nonEmpty, s"${qd.name}: empty schema")
         if (df.count() > 0) nonEmpty += 1
+        // a library call releases what it caches: once its result is
+        // consumed, no cache entry of the builder may remain
+        if (!s.sharedState.cacheManager.isEmpty) leaks += qd.name
       } catch {
         case e: Throwable =>
           failures += qd.name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
@@ -38,6 +42,9 @@ class RegistryCompletenessSpec extends AnyFunSuite {
       s"${failures.size} registry queries FAILED to run (these would vanish " +
         s"from the driver's CORRECTNESS file): " +
         failures.map { case (n, m) => s"$n [$m]" }.mkString("; "))
+    assert(leaks.isEmpty,
+      s"${leaks.size} registry queries left a cache entry after their result " +
+        s"was consumed: ${leaks.mkString(", ")}")
     // nearly every query yields rows even at sf0.001; a mass-zero result
     // would mean the gate is comparing empty sets (vacuously green)
     assert(nonEmpty >= SparkEntry.registry.size - 5,

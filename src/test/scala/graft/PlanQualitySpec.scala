@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions: the properties that make these queries
@@ -18,6 +20,36 @@ class PlanQualitySpec extends AnyFunSuite {
 
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
+
+  /** The physical plans of every action `body` runs on the session —
+    * collects, counts and the eager checkpoints a builder pins its
+    * intermediates with — in the order they finish.
+    */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = seen.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener bus is asynchronous but ordered: once a marker
+      // action run after `body` is reported, so is everything before it
+      val marker = spark.range(1).toDF()
+      marker.collect()
+      val plans = Seq.newBuilder[String]
+      var qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (qe != null && (qe ne marker.queryExecution)) {
+        plans += qe.executedPlan.toString
+        qe = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(qe != null, "the marker action was never reported")
+      plans.result()
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("q04 filtered scan pushes predicates and prunes columns") {
     val p = plan("q04_filtered_scan")
@@ -230,13 +262,21 @@ class PlanQualitySpec extends AnyFunSuite {
     // the only condition — a BroadcastNestedLoopJoin whose pair count
     // grows O(N²/25). It now routes through d06's banded sign-LSH
     // candidates; this pin keeps it that way (d06-pin idiom: with
-    // broadcast thresholds off, any BroadcastExchange left is mandatory)
+    // broadcast thresholds off, any BroadcastExchange left is mandatory).
+    // The builder pins the eps graph eagerly, so every plan the query
+    // executes is checked: the pins' and the report's.
     Catalog.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      val p = plan("c11_dbscan_core")
-      assert(!p.contains("CartesianProduct"), p)
-      assert(!p.contains("BroadcastNestedLoopJoin"), p)
-      assert(!p.contains("BroadcastExchange"), p)
+      val plans =
+        executedPlans(SparkEntry.queries("c11_dbscan_core")(spark, sf).collect())
+      // the two pins (eps graph, per-vector counts) and the report
+      assert(plans.size >= 3 && plans.exists(_.contains("Join")),
+        plans.mkString("\n"))
+      plans.foreach { p =>
+        assert(!p.contains("CartesianProduct"), p)
+        assert(!p.contains("BroadcastNestedLoopJoin"), p)
+        assert(!p.contains("BroadcastExchange"), p)
+      }
     }
   }
 
@@ -291,9 +331,12 @@ class PlanQualitySpec extends AnyFunSuite {
     // the corpus side must reduce to (fingerprint, min_id) BEFORE the
     // join — partial+final HashAggregate phases — and the join itself
     // must be keyed, never a nested loop: the historical corpus is the
-    // unbounded side at 100 TB
-    val p = plan("d17_incremental_dedup")
-    assert(count(p, "HashAggregate") >= 2, p)
+    // unbounded side at 100 TB. The builder pins the index eagerly, so
+    // its aggregate runs in a plan of its own, before the join's.
+    var p = ""
+    val pins = executedPlans { p = plan("d17_incremental_dedup") }
+    assert(pins.exists(q => count(q, "HashAggregate") >= 2 && q.contains("min(doc_id")),
+      pins.mkString("\n"))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
     // bloom pre-drop: the batch side is FILTERED below the join (the
@@ -385,9 +428,10 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
     assert(count(p, "HashAggregate") >= 2, p)
-    // the exploded shingle relation is computed once and reused (cached),
-    // not re-derived per consumer
-    assert(p.contains("InMemoryTableScan"), p)
+    // the capped shingle index is computed once and read as a pinned
+    // scan by every consumer, never re-derived (no explode in the plan)
+    assert(p.contains("Scan ExistingRDD"), p)
+    assert(!p.contains("Generate"), p)
   }
 
   test("g01/d02 iterative results are checkpoint-truncated: no unbounded lineage") {
@@ -498,28 +542,8 @@ class PlanQualitySpec extends AnyFunSuite {
     "config") {
     // lshTuning runs the sweep eagerly and returns its rows as a local
     // frame, so check the plan its own collect executed
-    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = executed.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      SparkEntry.queries("d22_lsh_tuning")(spark, sf)
-      // the execution-listener bus is asynchronous: drain until the
-      // capture count is stable
-      var (last, stable, waited) = (-1, 0, 0)
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        val cur = executed.size()
-        if (cur > 0 && cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val p = String.join("\n", executed)
+    val p = executedPlans(SparkEntry.queries("d22_lsh_tuning")(spark, sf))
+      .mkString("\n")
     assert(p.contains("Join"), s"no band join captured:\n$p")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

@@ -89,21 +89,6 @@ class RoundEightBatchTwelveSpec extends AnyFunSuite {
     assert(got("b4r4")._1 <= got("b8r2")._1)
   }
 
-  test("d22 lshTuning leaves no cached signature behind") {
-    // a library call releases what it caches: once the caller has
-    // consumed the result, no cache entry and no stored block from the
-    // call remains, without the caller running clearCache
-    spark.catalog.clearCache() // baseline: what earlier suites left
-    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    val before = stored
-    val report = graft.llm.Dedup.lshTuning(Catalog.t(spark, sf, "documents"))
-    assert(report.collect().length === 3)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "lshTuning left a cache entry")
-    assert((stored -- before).isEmpty,
-      s"lshTuning left stored blocks: ${stored -- before}")
-  }
-
   // ------------------------------------------------ i10 malformed audit
 
   test("i10 quarantines exactly the injected corrupt lines into the " +

@@ -84,7 +84,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
   test("CurationScaleSmoke") {
     val stage = "metric, scale, stage, rows_in, rows_out, s"
     assertKeys(stage,
-      s"$stage, cc_rounds, cc_round_s, cc_s_per_kpair",
+      s"$stage, cc_rounds, cc_round_s, cc_path, cc_partitions, cc_s_per_kpair",
       s"$stage, splits",
       s"$stage, max_bin_id") {
       CurationScaleSmoke.run(spark, sf, Seq(1))
@@ -92,8 +92,8 @@ class ScaleSmokeSpec extends AnyFunSuite {
   }
 
   test("GraphScaleSmoke") {
-    assertKeys("smoke, algo, nodes, edges, path, rounds, round_secs, " +
-      "total_sec, n_components, broadcast_max_nodes",
+    assertKeys("smoke, algo, nodes, edges, path, partitions, rounds, " +
+      "round_secs, total_sec, n_components, broadcast_max_nodes",
       "smoke, algo, nodes, edges, path, depth, seeds, reached, total_sec, " +
         "broadcast_max_nodes") {
       // broadcast ceiling 0: the co-partition path of both loops; chains

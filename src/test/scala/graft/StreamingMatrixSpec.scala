@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.operators.stateful.join.StreamingSymmetricHashJoinExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,6 +135,27 @@ class StreamingMatrixSpec extends AnyFunSuite {
   test("st04 stream-stream interval join pairs click->purchase within 1h") {
     assert(rows(run("st04_stream_stream_join")) == Set(
       Seq(4L, 2L, 1L, m(40), m(10))))
+  }
+
+  test("st04 join state is bounded: both sides carry a state watermark " +
+    "predicate") {
+    // Spark logs a failed state-constraint extraction for each ms-bigint
+    // conjunct; the timestamp band must still bound both sides' state
+    val raw = Catalog.normalizeTs(spark.readStream
+      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .option("pathGlobFilter", "events.parquet").parquet(dir))
+    val q = graft.streaming.StreamingQueries.clickToPurchase(raw).writeStream
+      .format("memory").queryName("st04_state_bound").outputMode("append")
+      .start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      val joins = plan.collect { case j: StreamingSymmetricHashJoinExec => j }
+      assert(joins.size == 1, plan)
+      val wm = joins.head.stateWatermarkPredicates
+      assert(wm.left.isDefined && wm.right.isDefined, wm)
+    } finally q.stop()
   }
 
   test("st05 streaming dedup emits the distinct key set") {
