@@ -29,7 +29,6 @@ object Verify {
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache() // release per-query cached intermediates
     }
     // Completeness guard: a query that throws must NOT vanish silently
     // from the correctness gate (round 7 lost 16 queries this way — the

@@ -3,6 +3,7 @@ package graft.llm
 import graft.{Catalog, Materialize, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
 /** Embedding clustering + compressed-domain search: the index-TRAINING
   * side of the ANN stack (s02/s03/s06 are the index-USE side).
@@ -245,7 +246,7 @@ object Clustering {
       m.withColumn("cosa", expr(cosA))
         .orderBy(col("cosa").asc, col("neighbor_id").asc)
         .limit(1).collect()(0))
-    m.withColumn("sub_id",
+    scope.pin(m.withColumn("sub_id",
         expr(s"IF($cosA >= ${sparkDot("ca", ba)} / (cn * $bn), " +
           "cast(0 as bigint), cast(1 as bigint))"))
       .select(col("sub_id"), posexplode(col("ca")).as(Seq("dim", "x")))
@@ -253,8 +254,7 @@ object Clustering {
       .agg(count(lit(1)).as("n_members"),
         sum(expr(s"cast(round(x * $MeanFx) as bigint)")).as("sum_fx"))
       .select(lit(target).as("parent_cid"), col("sub_id"), col("dim"),
-        col("n_members"), expr("sum_fx div n_members").as("mean_fx"))
-      .localCheckpoint(true)
+        col("n_members"), expr("sum_fx div n_members").as("mean_fx")), Actual)
   }
 
   private def bisectOracle: String =
@@ -416,15 +416,14 @@ object Clustering {
     * k-row seed set + a 1-row argmin collect; the corpus itself never
     * shuffles, so rounds cost a scan each and k stays driver-sized.
     */
-  def kmeansppSeed(vecs: DataFrame, k: Int): DataFrame = {
+  def kmeansppSeed(vecs: DataFrame, k: Int): DataFrame = Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(vecs.sparkSession)
     val s = vecs.sparkSession
     import s.implicits._
     require(k >= 1, s"need at least one seed, got $k")
-    val v = vecs
+    val v = m.pin(vecs
       .select(col("vec_id"), col("embedding").cast("array<double>").as("va"))
-      .withColumn("vn", expr(s"${sparkNorm("va")}"))
-      .localCheckpoint(true)
+      .withColumn("vn", expr(s"${sparkNorm("va")}")), Actual)
     require(!v.isEmpty,
       "k-means++ seeding needs a non-empty vector set (got 0 vectors)")
     val first = v.agg(min(col("vec_id"))).as[Long].head()
@@ -828,7 +827,8 @@ object Clustering {
     * C ~ sqrt(N) keeps per-cluster work ~N total). Assignment is the
     * shuffle-free inlined-centroid fold shared with s03/c01.
     */
-  def semDedup(vecs: DataFrame, centroids: DataFrame, tau: Double): DataFrame = {
+  def semDedup(vecs: DataFrame, centroids: DataFrame, tau: Double): DataFrame =
+    Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(vecs.sparkSession)
     val cent = centroids.select(col("cid"), col("embedding").as("cemb"))
       .withColumn("cnrm", expr(s"${sparkNorm("cemb")}"))
@@ -836,9 +836,9 @@ object Clustering {
       col("embedding").cast("array<double>").as("ca"))
       .withColumn("cn", expr(s"${sparkNorm("ca")}"))
     // pinned: the assigned set feeds both sides of the in-cluster join
-    val asg = assignCells(c, cent)
+    val asg = m.pin(assignCells(c, cent)
       .select(col("neighbor_id").as("vec_id"), col("cid"),
-        col("ca"), col("cn")).localCheckpoint(true)
+        col("ca"), col("cn")), Actual)
     val a = asg.select(col("cid"), col("vec_id").as("a_id"),
       col("ca").as("aa"), col("cn").as("an"))
     val b = asg.select(col("cid"), col("vec_id").as("b_id"),
@@ -1259,7 +1259,8 @@ object Clustering {
     slice.join(capIds, Seq("vec_id"), "left_semi")
   }
 
-  private def dbscanSpark(s: SparkSession, d: String): DataFrame = {
+  private def dbscanSpark(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(s)
     // fixed-cardinality panel: the cap smallest LCG-hash members of the
     // audit slice (vec_id tiebreak) — a TakeOrdered of cap ids, then
@@ -1273,8 +1274,8 @@ object Clustering {
     // pipeline (the query's dominant cost) appeared FOUR times in one
     // physical plan (359 operators, the embeddings scan repeated 104×;
     // measured plan audit, plans/r16/c11_dbscan_core_before.txt).
-    val pairs = Similarity.embeddingNearDups(panel, DbscanEps,
-      bands = DbscanBands, rowBits = DbscanRowBits).localCheckpoint(true)
+    val pairs = m.pin(Similarity.embeddingNearDups(panel, DbscanEps,
+      bands = DbscanBands, rowBits = DbscanRowBits), Actual)
     // symmetrize with ONE scan (posexplode of both orientations) — the
     // union formulation scanned the pair relation once per leg
     val edges = pairs.select(explode(array(
@@ -1283,10 +1284,9 @@ object Clustering {
       .select(col("e.ia").as("ia"), col("e.ib").as("ib"))
     val deg = edges.groupBy(col("ia").as("vec_id"))
       .agg(count(lit(1)).as("n_nb"))
-    val counted = panel.select(col("vec_id"))
+    val counted = m.pin(panel.select(col("vec_id"))
       .join(deg, Seq("vec_id"), "left")
-      .na.fill(0L, Seq("n_nb"))
-      .localCheckpoint(true)
+      .na.fill(0L, Seq("n_nb")), Actual)
     val core = counted.filter(col("n_nb") + 1 >= DbscanMinPts)
       .select(col("vec_id").as("core_id"))
     val borderIds = edges

@@ -2,9 +2,9 @@ package graft.llm
 
 import graft.{Catalog, Materialize, QueryDef}
 import graft.Materialize.SessionMemo
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointStats
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
 /** Deduplication operators for LLM data pipelines: exact (hash
   * groupBy), MinHash+LSH, n-gram Jaccard, and SimHash over `documents`,
@@ -311,7 +311,7 @@ object Dedup {
     * self-join on exploded band keys for candidates — never all-pairs.
     */
   def minhashLshPairs(docs: DataFrame): DataFrame =
-    Materialize.scoped(m => minhashPairs(m, docs).localCheckpoint(true))
+    Materialize.scoped(m => m.pin(minhashPairs(m, docs), Actual))
 
   /** Core derivation from the docs relation, with the signature cached
     * in `m` — sig appears twice in the pairs join, so caching it halves
@@ -364,13 +364,14 @@ object Dedup {
     * derived once per (session, dir).
     */
   private def corpusShingles(s: SparkSession, d: String): DataFrame =
-    shingleMemo(s, d)(shingles(Catalog.t(s, d, "documents")).localCheckpoint(true))
+    shingleMemo(s, d)(Materialize.scoped(_.pin(shingles(Catalog.t(s, d, "documents")),
+      Actual)))
 
   private def minhashShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
     minhashMemo(s, d)(Materialize.scoped { m =>
       val sh = corpusShingles(s, d)
-      val pairs = minhashPairs(m, Catalog.t(s, d, "documents")).localCheckpoint(true)
-      (pairs, pruneToCandidates(pairs, sh).localCheckpoint(true))
+      val pairs = m.pin(minhashPairs(m, Catalog.t(s, d, "documents")), Actual)
+      (pairs, m.pin(pruneToCandidates(pairs, sh), Actual))
     })
 
   /** Shingles restricted to docs that appear in a candidate pair —
@@ -557,14 +558,14 @@ object Dedup {
     * the per-pair dedup, exactly how a 100 TB lake LSH-gates its
     * ingest without rescanning itself.
     */
-  def streamingMinhashDedup(corpus: DataFrame, arriving: DataFrame): DataFrame = {
+  def streamingMinhashDedup(corpus: DataFrame, arriving: DataFrame): DataFrame =
+    Materialize.scoped { m =>
     // pinned: the static side of a stream-static join re-executes every
     // micro-batch — the corpus index must be computed once, not per
     // arrival batch (same discipline as incrementalDedup's index)
-    val corpusIdx = bandedSignatures(minhashSignatureNarrow(corpus))
+    val corpusIdx = m.pin(bandedSignatures(minhashSignatureNarrow(corpus))
       .select(col("doc_id").as("corpus_id") +: col("bi") +: col("bk") +:
-        (0 until Perms).map(j => col(s"h$j").as(s"x$j")): _*)
-      .localCheckpoint(true)
+        (0 until Perms).map(j => col(s"h$j").as(s"x$j")): _*), Actual)
     val arrivingBands = bandedSignatures(minhashSignatureNarrow(arriving))
       .select(col("doc_id").as("batch_id") +: col("bi") +: col("bk") +:
         (0 until Perms).map(j => col(s"h$j").as(s"y$j")): _*)
@@ -632,7 +633,7 @@ object Dedup {
       val pairs = minhashPairs(m, docs)
       // the (small) result is pinned before the scope drops the
       // corpus-sized intermediates
-      qualityFromParts(pairs, pruneToCandidates(pairs, sh)).localCheckpoint(true)
+      m.pin(qualityFromParts(pairs, pruneToCandidates(pairs, sh)), Actual)
     }
 
   /** Candidate-pair overlap stats shared by d14 (Jaccard quality) and
@@ -721,12 +722,12 @@ object Dedup {
     // memoized checkpointed corpus set instead)
     Materialize.scoped(m => ngramJaccardFrom(m.cache(shingles(docs))))
 
-  private def ngramJaccardFrom(ds: DataFrame): DataFrame = {
+  private def ngramJaccardFrom(ds: DataFrame): DataFrame = Materialize.scoped { m =>
     val keep = ds.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= DfCap).select("sh")
     // pinned: the capped index feeds the size aggregate and both sides
     // of the pair join
-    val dk = ds.join(keep, "sh").localCheckpoint(true)
+    val dk = m.pin(ds.join(keep, "sh"), Actual)
     val sz = dk.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pr = dk.select(col("doc_id").as("doc_a"), col("sh"))
       .join(dk.select(col("doc_id").as("doc_b"), col("sh")), "sh")
@@ -771,14 +772,14 @@ object Dedup {
     * a bloom filter over it pre-drops the clear-miss majority before the
     * join (the q42 pattern).
     */
-  def incrementalDedup(corpus: DataFrame, batch: DataFrame): DataFrame = {
+  def incrementalDedup(corpus: DataFrame, batch: DataFrame): DataFrame =
+    Materialize.scoped { m =>
     def fp(df: DataFrame): DataFrame = df.withColumn("fingerprint",
       md5(expr(s"cast(concat_ws(' ', slice($sparkWords, 1, $PrefixWords)) as binary)")))
     // the corpus index is consumed three times (count, bloom build,
     // join probe): pin it so the corpus fingerprint scan runs once
-    val idx = fp(corpus).groupBy("fingerprint")
-      .agg(min(col("doc_id")).as("corpus_id"))
-      .localCheckpoint(true)
+    val idx = m.pin(fp(corpus).groupBy("fingerprint")
+      .agg(min(col("doc_id")).as("corpus_id")), Actual)
     val nFp = idx.count()
     // bloom pre-drop (q42's shape): batch rows whose fingerprint is
     // DEFINITELY absent from the corpus bypass the join shuffle
@@ -790,21 +791,20 @@ object Dedup {
     // over zero rows has null bits and NPEs on probe) — short-circuit
     // so day-one ingest against an empty lake just works
     val fb = fp(batch)
-    if (nFp == 0L) {
-      return fb.select(col("doc_id"), col("fingerprint"),
+    def misses(keep: Column): DataFrame = fb.filter(keep)
+      .select(col("doc_id"), col("fingerprint"),
         lit(false).as("dup_in_corpus"), lit(null).cast("long").as("corpus_id"))
+    if (nFp == 0L) misses(lit(true))
+    else {
+      val bf = idx.stat.bloomFilter("fingerprint", nFp, 0.01)
+      val bc = batch.sparkSession.sparkContext.broadcast(bf)
+      val might = udf((s: String) => s != null && bc.value.mightContainString(s))
+      fb.filter(might(col("fingerprint")))
+        .join(idx, Seq("fingerprint"), "left")
+        .select(col("doc_id"), col("fingerprint"),
+          col("corpus_id").isNotNull.as("dup_in_corpus"), col("corpus_id"))
+        .unionAll(misses(!might(col("fingerprint"))))
     }
-    val bf = idx.stat.bloomFilter("fingerprint", math.max(nFp, 1L), 0.01)
-    val bc = batch.sparkSession.sparkContext.broadcast(bf)
-    val might = udf((s: String) => s != null && bc.value.mightContainString(s))
-    val joined = fb.filter(might(col("fingerprint")))
-      .join(idx, Seq("fingerprint"), "left")
-      .select(col("doc_id"), col("fingerprint"),
-        col("corpus_id").isNotNull.as("dup_in_corpus"), col("corpus_id"))
-    val misses = fb.filter(!might(col("fingerprint")))
-      .select(col("doc_id"), col("fingerprint"),
-        lit(false).as("dup_in_corpus"), lit(null).cast("long").as("corpus_id"))
-    joined.unionAll(misses)
   }
 
   private[graft] def incrementalOracle: String =
@@ -909,7 +909,7 @@ object Dedup {
     * chunks (pigeonhole: hamming ≤ 3 over 4 chunks guarantees a match).
     */
   def simhashNearDupPairs(docs: DataFrame): DataFrame =
-    simhashPairsFrom(simhashFingerprints(docs).localCheckpoint(true))
+    Materialize.scoped(m => simhashPairsFrom(m.pin(simhashFingerprints(docs), Actual)))
 
   /** [[simhashNearDupPairs]] over materialized fingerprints: the chunk
     * self-join reads `fp` once per side, so the simhash pipeline must
@@ -955,11 +955,11 @@ object Dedup {
     * hamming bound. The pinned corpus index is the only persisted
     * artifact; candidates shuffle on chunk keys, never all-pairs.
     */
-  def streamingSimhashDedup(corpus: DataFrame, arriving: DataFrame): DataFrame = {
-    val corpusIdx = simhashChunks(simhashFingerprints(corpus))
+  def streamingSimhashDedup(corpus: DataFrame, arriving: DataFrame): DataFrame =
+    Materialize.scoped { m =>
+    val corpusIdx = m.pin(simhashChunks(simhashFingerprints(corpus))
       .select(col("doc_id").as("corpus_id"), col("simhash").as("sa"),
-        col("ci"), col("cv"))
-      .localCheckpoint(true)
+        col("ci"), col("cv")), Actual)
     val arr = simhashChunks(simhashFingerprints(arriving))
       .select(col("doc_id").as("batch_id"), col("simhash").as("sb"),
         col("ci"), col("cv"))
@@ -1067,9 +1067,8 @@ object Dedup {
     * of O(diameter) (plain propagation needed >25 rounds on a chain
     * component at sf0.1 and took minutes; this converges in a handful).
     * Labels only ever decrease, so `sum(label)` is a monotone potential
-    * and one cheap aggregate per round detects the fixpoint. At 100 TB
-    * you would localCheckpoint every few rounds to truncate lineage,
-    * which this omits at test scale.
+    * and one cheap aggregate per round detects the fixpoint; each round
+    * is a severed-stats pin that truncates lineage.
     *
     * The oracle walks the same edges with a recursive CTE and takes
     * min(reachable label) per node.
@@ -1110,8 +1109,8 @@ object Dedup {
   private val spanMemo = new SessionMemo[DataFrame]
 
   private def spanWindows(s: SparkSession, d: String): DataFrame =
-    spanMemo(s, d)(windowsWithPos(Catalog.t(s, d, "documents"), SpanWords)
-      .localCheckpoint(true))
+    spanMemo(s, d)(Materialize.scoped(_.pin(
+      windowsWithPos(Catalog.t(s, d, "documents"), SpanWords), Actual)))
 
   /** Public API: per-document duplicated-span stats over `(doc_id,
     * text)` — `n_windows`, `n_dup_windows` (window occurrences whose
@@ -1119,7 +1118,8 @@ object Dedup {
     * docs), `dup_ratio`.
     */
   def dupSpans(docs: DataFrame, windowWords: Int = SpanWords): DataFrame =
-    dupSpansFrom(windowsWithPos(docs, windowWords).localCheckpoint(true))
+    Materialize.scoped(m =>
+      dupSpansFrom(m.pin(windowsWithPos(docs, windowWords), Actual)))
 
   /** [[dupSpans]] over a pre-built `(doc_id, pos, sh)` window relation. */
   def dupSpansFrom(sw: DataFrame): DataFrame = {
@@ -1151,8 +1151,8 @@ object Dedup {
     * d12, so the two operators share one exploded relation.
     */
   def dupSpanRanges(docs: DataFrame, windowWords: Int = SpanWords): DataFrame =
-    dupSpanRangesFrom(windowsWithPos(docs, windowWords).localCheckpoint(true),
-      windowWords)
+    Materialize.scoped(m =>
+      dupSpanRangesFrom(m.pin(windowsWithPos(docs, windowWords), Actual), windowWords))
 
   /** [[dupSpanRanges]] over a pre-built `(doc_id, pos, sh)` relation. */
   def dupSpanRangesFrom(
@@ -1207,12 +1207,11 @@ object Dedup {
   /** d05 near-dup pairs as a (src, dst) edge list + all docs as nodes —
     * the graph inputs d08, g01 and d10 hand to [[GraphAlgs]].
     *
-    * Memoized per (session, data dir) as eagerly-materialized
-    * localCheckpoints: the three graph queries share ONE simhash
-    * edge-set derivation per run instead of re-deriving the multi-
-    * million-edge candidate join three times. This is how a real
-    * pipeline runs (build the graph once, then cluster AND score), and
-    * it is safe under the harness: localCheckpoint RDD storage is not
+    * Memoized per (session, data dir) as eager pins: the three graph
+    * queries share ONE simhash edge-set derivation per run instead of
+    * re-deriving the multi-million-edge candidate join three times. This
+    * is how a real pipeline runs (build the graph once, then cluster AND
+    * score), and it is safe under the harness: pin storage is not
     * registered in the Dataset cache manager, so per-query
     * `clearCache()` does not evict it, while a fresh SparkSession (the
     * driver may use one per query) simply recomputes.
@@ -1223,42 +1222,20 @@ object Dedup {
   private def nearDupGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
     graphMemo(s, d)(Materialize.scoped { m =>
       val docs = Catalog.t(s, d, "documents")
-      // actual stored size, not the stock checkpoint's inherited
-      // ESTIMATE of the join-heavy candidate derivation (5.9 GB for
-      // the ~2 MB sf0.1 edge list), which would poison every
-      // size-derived decision downstream — the graph family's
-      // adaptive partition counts most of all
-      (CheckpointStats.truncate(
-          docs.select(col("doc_id").as("id")).distinct(),
-          reliable = false, CheckpointStats.Actual),
+      (m.pin(docs.select(col("doc_id").as("id")).distinct(), Actual),
         // hamming rides along: g03 selects the tight-clique subgraph
-        CheckpointStats.truncate(
-          simhashPairsFrom(m.cache(simhashFingerprints(docs)))
+        m.pin(simhashPairsFrom(m.cache(simhashFingerprints(docs)))
             .select(col("doc_a").as("src"), col("doc_b").as("dst"),
-              col("hamming")),
-          reliable = false, CheckpointStats.Actual))
+              col("hamming")), Actual))
     })
 
-  /** Round-truncation mode for the iterative gate queries: unset (the
-    * default) uses executor-local checkpoints — fastest, but a lost
-    * executor mid-iteration fails the job. Point this session conf at a
-    * reliable filesystem (HDFS/S3) and every graph gate switches to
-    * fault-tolerant `checkpoint()` rounds with identical results
-    * (spec-asserted). Flip it for long multi-round jobs on preemptible
-    * or large clusters where executor loss is expected, not exceptional.
-    */
-  val GraphCheckpointDirConf = "graft.graph.checkpointDir"
-
-  private def graphCheckpointDir(s: SparkSession): Option[String] =
-    s.conf.getOption(GraphCheckpointDirConf)
-
+  // memoized over connectedComponents' own result pin: a projection
+  // of it, not a second stored copy
   private def componentsSpark(s: SparkSession, d: String): DataFrame =
     labelsMemo(s, d) {
       val (nodes, edges) = nearDupGraph(s, d)
-      GraphAlgs.connectedComponents(nodes, edges,
-          checkpointDir = graphCheckpointDir(s))
+      GraphAlgs.connectedComponents(nodes, edges)
         .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-        .localCheckpoint(true)
     }
 
   // --------------------------------------------- graph centrality (g01)
@@ -1275,8 +1252,7 @@ object Dedup {
 
   private def pagerankSpark(s: SparkSession, d: String): DataFrame = {
     val (nodes, edges) = nearDupGraph(s, d)
-    GraphAlgs.pageRank(nodes, edges, PrIters, PrScale,
-        checkpointDir = graphCheckpointDir(s))
+    GraphAlgs.pageRank(nodes, edges, PrIters, PrScale)
       .select(col("id").as("doc_id"), col("rank").as("pr"))
   }
 
@@ -1318,8 +1294,7 @@ object Dedup {
   private def pprSpark(s: SparkSession, d: String): DataFrame = {
     val (nodes, edges) = nearDupGraph(s, d)
     val seeds = nodes.filter(col("id") % PprSeedMod === 0)
-    GraphAlgs.personalizedPageRank(nodes, edges, seeds, PrIters, PrScale,
-        checkpointDir = graphCheckpointDir(s))
+    GraphAlgs.personalizedPageRank(nodes, edges, seeds, PrIters, PrScale)
       .select(col("id").as("doc_id"), col("rank").as("ppr"))
   }
 
@@ -1397,8 +1372,7 @@ object Dedup {
     val minSource = docs.agg(min(col("source"))).first().getString(0)
     val seeds = docs.filter(col("source") === lit(minSource))
       .select(col("doc_id").as("id"))
-    GraphAlgs.bfsLayers(nodes, edges, seeds, BfsMaxDepth,
-        checkpointDir = graphCheckpointDir(s))
+    GraphAlgs.bfsLayers(nodes, edges, seeds, BfsMaxDepth)
       .select(col("id").as("doc_id"), col("dist"))
   }
 
@@ -1440,8 +1414,7 @@ object Dedup {
       .filter(col("doc_id") % ProbeEvery === 0 &&
         col("doc_id") < ProbeEvery.toLong * ProbeCap)
       .select(col("doc_id").as("probe"), col("doc_id").as("id"))
-    val dist = GraphAlgs.multiSourceBfs(edges, probes, BfsMaxDepth,
-      checkpointDir = graphCheckpointDir(s))
+    val dist = GraphAlgs.multiSourceBfs(edges, probes, BfsMaxDepth)
     val h = dist.filter(col("dist") > 0)
       .groupBy(col("probe"))
       .agg(count(lit(1)).as("n_reached"),
@@ -1560,8 +1533,7 @@ object Dedup {
     */
   private def kCoreSpark(s: SparkSession, d: String): DataFrame = {
     val (nodes, edges) = nearDupGraph(s, d)
-    GraphAlgs.kCorePeelProfile(nodes, edges, PeelK, PeelRounds,
-      checkpointDir = graphCheckpointDir(s))
+    GraphAlgs.kCorePeelProfile(nodes, edges, PeelK, PeelRounds)
   }
 
   private def kCoreOracle: String = {
@@ -1693,7 +1665,7 @@ object Dedup {
   private def trussDecompSpark(s: SparkSession, d: String): DataFrame = {
     val (_, edges) = nearDupGraph(s, d)
     GraphAlgs.trussDecomposition(edges.select(col("src"), col("dst")),
-      TrussDecompMaxK, graphCheckpointDir(s))
+      TrussDecompMaxK)
   }
 
   /** DuckDB mirror: one recursive peel CTE per level k = 3..maxK, each
@@ -1976,8 +1948,7 @@ object Dedup {
     val baseEdges = edges
       .filter(col("src") % 10 =!= 0 && col("dst") % 10 =!= 0)
     val labels = GraphAlgs.connectedComponents(
-        nodes.filter(col("id") % 10 =!= 0), baseEdges,
-        checkpointDir = graphCheckpointDir(s))
+        nodes.filter(col("id") % 10 =!= 0), baseEdges)
       .select(col("id").as("base_id"), col("component"))
     val arrivalLinks = edges
       .filter((col("src") % 10 === 0) =!= (col("dst") % 10 === 0))

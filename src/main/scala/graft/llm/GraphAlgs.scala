@@ -1,8 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
+import org.apache.spark.sql.graftshim.CheckpointStats.{Actual, Severed}
 
 import graft.Materialize
 
@@ -26,14 +26,16 @@ import graft.Materialize
   *    broadcast (fastest at small N). Above it — where a rank table
   *    outgrows any broadcast threshold — the co-partitioned path runs
   *    unchanged. Pass `broadcastMaxNodes = 0` to force the scale path.
-  *  - **Iteration persistence is pluggable.** Each round truncates
-  *    lineage eagerly (with `cache()` alone a self-referencing
-  *    iteration doubles the analyzed logical plan every round and
-  *    Catalyst analysis time grows exponentially). The default
-  *    `localCheckpoint` stores on executors — fast, but one lost
-  *    executor mid-iteration fails the job. Passing `checkpointDir`
-  *    switches to reliable `checkpoint()` against that (HDFS/object
-  *    store) directory: the fault-tolerant large-scale mode.
+  *  - **Each round is a pin.** Each round truncates lineage through
+  *    [[graft.Materialize.Scope.pin]] with severed statistics (with
+  *    `cache()` alone a self-referencing iteration doubles the analyzed
+  *    logical plan every round and Catalyst analysis time grows
+  *    exponentially; inherited estimates would square per round). A
+  *    round's pin is released once the next round's pin exists or the
+  *    call returns, unless the result reads it. Pins are
+  *    executor-local unless the session sets
+  *    [[graft.Materialize.GraphCheckpointDirConf]]: the fault-tolerant
+  *    large-scale mode.
   */
 object GraphAlgs {
 
@@ -54,20 +56,6 @@ object GraphAlgs {
     * it at corpus scale.
     */
   val DefaultBroadcastMaxNodes: Long = 4L * 1000 * 1000
-
-  /** Sets the reliable checkpoint directory when one is given and says
-    * whether the loop's per-round truncations use it. Every loop below
-    * truncates each round through
-    * [[org.apache.spark.sql.graftshim.CheckpointStats.truncate]] with
-    * severed statistics and the recovered layout: a self-referential
-    * round joins the previous table with a derivative of itself, so
-    * inherited estimates would square per round, and under AQE a stock
-    * checkpoint drops the layout the next round's joins rely on.
-    */
-  private def reliable(spark: SparkSession, dir: Option[String]): Boolean = {
-    dir.foreach(spark.sparkContext.setCheckpointDir)
-    dir.isDefined
-  }
 
   private def shufflePartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -122,21 +110,16 @@ object GraphAlgs {
       nodes: DataFrame,
       edges: DataFrame,
       maxRounds: Int = 40,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsWithStats(nodes, edges, maxRounds, broadcastMaxNodes,
-      checkpointDir)._1
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame =
+    connectedComponentsWithStats(nodes, edges, maxRounds, broadcastMaxNodes)._1
 
   /** [[connectedComponents]] plus this run's [[CcStats]]. */
   private[graft] def connectedComponentsWithStats(
       nodes: DataFrame,
       edges: DataFrame,
       maxRounds: Int = 40,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): (DataFrame, CcStats) =
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): (DataFrame, CcStats) =
     Materialize.scoped { m =>
-    val spark = nodes.sparkSession
-    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(m, edges, p)
     var labels = m.cache(nodes.select(col("id")).withColumn("label", col("id")))
@@ -183,13 +166,14 @@ object GraphAlgs {
       // flow through edge adjacency is the binding constraint, not
       // pointer depth) while each round paid one more node-sized join;
       // interleaved A/B: 4.43 vs 3.77 s warm on g12. Single jump kept.)
-      val l1t = if (small) m.cache(l1) else truncate(l1, rel, Severed)
+      val l1t = if (small) m.cache(l1) else m.pin(l1, Severed)
       val ptr = l1t.select(col("id").as("pid"), col("label").as("plabel"))
       val ptrIn = if (small) broadcast(ptr) else ptr
       val next = l1t.join(ptrIn, l1t("label") === ptrIn("pid"))
         .select(l1t("id"), least(l1t("label"), col("plabel")).as("label"))
-      val nextT = truncate(next, rel, Severed)
-      if (small) m.release(l1t)
+      val nextT = m.pin(next, Severed)
+      m.release(l1t)
+      m.release(labels)
       prevSum = curSum
       curSum = sumAndCount(nextT)._1
       labels = nextT
@@ -216,15 +200,14 @@ object GraphAlgs {
       edges: DataFrame,
       seeds: DataFrame,
       maxDepth: Int,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = {
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = {
     // single-source-set BFS = the multi-source traversal with one
     // constant probe (round-13 review: the iteration machinery —
     // broadcast threshold, checkpoint rounds, visited anti-join — must
     // live in ONE place or a fix to it silently misses a traversal)
     val dist = multiSourceBfs(edges,
       seeds.select(lit(0L).as("probe"), col("id")), maxDepth,
-      broadcastMaxNodes, checkpointDir).drop("probe")
+      broadcastMaxNodes).drop("probe")
     nodes.select(col("id")).join(dist, Seq("id"), "left")
       .select(col("id"), coalesce(col("dist"), lit(-1)).as("dist"))
   }
@@ -244,10 +227,7 @@ object GraphAlgs {
       edges: DataFrame,
       seeds: DataFrame,
       maxDepth: Int,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
-    val spark = edges.sparkSession
-    val rel = reliable(spark, checkpointDir)
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
     val e = undirected(m, edges, p)
     // Round 16 (guide §2.4): the visited set is a LAZY union of the
@@ -258,9 +238,9 @@ object GraphAlgs {
     // checkpointed RDD, so the union plan stays shallow (≤ maxDepth
     // leaves), the anti-join reads it as plain scans, and the only
     // per-depth materialization left is the new frontier itself.
-    var dist = truncate(
+    var dist = m.pin(
       seeds.select(col("probe"), col("id")).distinct()
-        .withColumn("dist", lit(0)), rel, Severed)
+        .withColumn("dist", lit(0)), Severed)
     var frontier = dist.select(col("probe"), col("id"))
     var frontierCount = frontier.count()
     var visitedCount = frontierCount
@@ -288,9 +268,9 @@ object GraphAlgs {
       val vIn =
         if (visitedCount <= broadcastMaxNodes / 4) broadcast(dist)
         else dist.repartition(p, col("probe"), col("id"))
-      val next = truncate(
+      val next = m.pin(
         nbrs.join(vIn, Seq("probe", "id"), "left_anti")
-          .withColumn("dist", lit(depth)), rel, Severed)
+          .withColumn("dist", lit(depth)), Severed)
       frontierCount = next.count()
       visitedCount += frontierCount
       dist = dist.union(next)
@@ -310,13 +290,12 @@ object GraphAlgs {
       edges: DataFrame,
       iters: Int = 5,
       scale: Long = 1000000000000L,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame =
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame =
     // uniform PageRank IS the personalized walk with every node in the
     // seed set (init = scale/n, restart mass everywhere): one loop owns
     // the iteration machinery (round-13 lesson — see multiSourceBfs)
     personalizedPageRank(nodes, edges, nodes, iters, scale,
-      broadcastMaxNodes, checkpointDir)
+      broadcastMaxNodes)
 
   /** Personalized PageRank: the random walk restarts only into `seeds`
     * (uniformly over them), so rank measures proximity to the seed set
@@ -333,10 +312,7 @@ object GraphAlgs {
       seeds: DataFrame,
       iters: Int = 5,
       scale: Long = 1000000000000L,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
-    val spark = nodes.sparkSession
-    val rel = reliable(spark, checkpointDir)
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(nodes))
     // cached: the edge set appears on BOTH sides of the deg bake-in join
     // below — uncached it would evaluate its lineage twice
@@ -370,7 +346,7 @@ object GraphAlgs {
       else if (uniform) n
       else n0.filter(col("seed")).count()
     // empty graph or seed set: zero mass (and no div by 0)
-    if (ns == 0) truncate(n0.select(col("id"), lit(0L).as("rank")), rel, Severed)
+    if (ns == 0) m.pin(n0.select(col("id"), lit(0L).as("rank")), Severed)
     else {
       val small = n <= broadcastMaxNodes
       val init = scale / ns
@@ -394,7 +370,9 @@ object GraphAlgs {
         val next = n0.join(contribIn, n0("id") === contribIn("dst"), "left")
           .select(n0("id"),
             (baseCol + expr("(85 * coalesce(msum, 0L)) div 100")).as("val"))
-        pr = truncate(next, rel, Severed)
+        val prev = pr
+        pr = m.pin(next, Severed)
+        if (it > 1) m.release(prev)
       }
       pr.select(col("id"), col("val").as("rank"))
     }
@@ -418,16 +396,13 @@ object GraphAlgs {
       nodes: DataFrame,
       edges: DataFrame,
       rounds: Int = 2,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
-    val spark = nodes.sparkSession
-    val rel = reliable(spark, checkpointDir)
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(m, edges, p)
     val n0 = m.cache(nodes.select(col("id")).repartition(p, col("id")))
     val small = n0.count() <= broadcastMaxNodes
     var labels = n0.withColumn("label", col("id"))
-    for (_ <- 1 to rounds) {
+    for (r <- 1 to rounds) {
       val labelsIn =
         if (small) broadcast(labels) else labels.repartition(p, col("id"))
       // most frequent neighbor label; max(struct) keeps the argmax
@@ -439,10 +414,12 @@ object GraphAlgs {
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("dst"), (-col("m.nl")).as("nlabel"))
       val bestIn = if (small) broadcast(best) else best
-      labels = truncate(
+      val prev = labels
+      labels = m.pin(
         labels.join(bestIn, labels("id") === bestIn("dst"), "left")
           .select(col("id"), coalesce(col("nlabel"), col("label")).as("label")),
-        rel, Severed)
+        Severed)
+      if (r > 1) m.release(prev)
     }
     labels
   }
@@ -463,20 +440,20 @@ object GraphAlgs {
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(m, edges, p)
     // deg and o are each consumed by MULTIPLE downstream joins that the
-    // caller materializes after this method returns — eager
-    // localCheckpoint (not lazy cache) so the upstream caches can be
-    // released here without the final plan recomputing them per use
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    // caller materializes after this method returns — eager pins (not
+    // lazy caches) so the upstream caches can be released here without
+    // the final plan recomputing them per use
+    val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      Actual)
     // orient each undirected pair from lower (deg, id) to higher: keep
     // one direction of the symmetrized list, comparing endpoint ranks
     val da = deg.select(col("node").as("src"), col("deg").as("dsrc"))
     val db = deg.select(col("node").as("dst"), col("deg").as("ddst"))
-    val o = e.join(da, "src").join(db, "dst")
+    val o = m.pin(e.join(da, "src").join(db, "dst")
       .filter(col("dsrc") < col("ddst") ||
         (col("dsrc") === col("ddst") && col("src") < col("dst")))
       .select(col("src"), col("dst"))
-      .repartition(p, col("src")).localCheckpoint(true)
+      .repartition(p, col("src")), Actual)
     // wedges at u: (u→v, u→w); triangle iff v→w is also oriented
     val e1 = o.select(col("src").as("u"), col("dst").as("v"))
     val e2 = o.select(col("src").as("u"), col("dst").as("w"))
@@ -525,15 +502,15 @@ object GraphAlgs {
     // matching layout width down.
     val p = pOverride.getOrElse(adaptiveP(edges, shufflePartitions(edges)))
     val e = undirected(m, edges, p)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      Actual)
     val da = deg.select(col("node").as("src"), col("deg").as("dsrc"))
     val db = deg.select(col("node").as("dst"), col("deg").as("ddst"))
-    val o = e.join(da, "src").join(db, "dst")
+    val o = m.pin(e.join(da, "src").join(db, "dst")
       .filter(col("dsrc") < col("ddst") ||
         (col("dsrc") === col("ddst") && col("src") < col("dst")))
       .select(col("src"), col("dst"))
-      .repartition(p, col("src")).localCheckpoint(true)
+      .repartition(p, col("src")), Actual)
     val e1 = o.select(col("src").as("u"), col("dst").as("v"))
     val e2 = o.select(col("src").as("u"), col("dst").as("w"))
     val e3 = o.select(col("src").as("v"), col("dst").as("w"))
@@ -578,7 +555,7 @@ object GraphAlgs {
     * Σ deg(v)² wedge join on a MONOTONICALLY SHRINKING subgraph — no
     * all-pairs anywhere; round lineage is checkpoint-truncated exactly
     * like [[connectedComponents]] (local by default, reliable via
-    * `checkpointDir`). Total rounds are bounded by max trussness plus
+    * the session conf). Total rounds are bounded by max trussness plus
     * the number of non-trivial cascades (each batch round removes ALL
     * under-threshold edges at once — the standard batched peel;
     * measured on the gate graph: 14 rounds to full decomposition at
@@ -600,14 +577,12 @@ object GraphAlgs {
   val LocalPeelMaxEdges: Int = 200000
 
   def trussDecomposition(edges: DataFrame, maxK: Int,
-      checkpointDir: Option[String] = None,
-      localMaxEdges: Int = LocalPeelMaxEdges): DataFrame = {
+      localMaxEdges: Int = LocalPeelMaxEdges): DataFrame = Materialize.scoped { m =>
     require(maxK >= 3, "truss decomposition needs maxK >= 3")
     val spark = edges.sparkSession
-    val rel = reliable(spark, checkpointDir)
     val canon = edges.select(least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst")).distinct()
-    var cur = truncate(canon, rel, Severed)
+    var cur = m.pin(canon, Severed)
     var curN = cur.count()
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 3
@@ -621,10 +596,10 @@ object GraphAlgs {
         // canonical edge, same 32 MB/partition target as adaptiveP
         val pRound = ((curN * 48 + TargetPartitionBytes - 1) /
           TargetPartitionBytes).min(confP).max(1).toInt
-        val keep = truncate(
+        val keep = m.pin(
           edgeTriangleSupport(cur, k - 2, Some(pRound))
             .filter(col("in_truss"))
-            .select(col("src"), col("dst")), rel, Severed)
+            .select(col("src"), col("dst")), Severed)
         val keepN = keep.count()
         rounds += 1
         stable = keepN == curN
@@ -741,8 +716,8 @@ object GraphAlgs {
     Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(m, edges, p)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      Actual)
     val ab = e.select(col("src").as("u"), col("dst").as("v"))
     val bc = e.select(col("src").as("v"), col("dst").as("w"))
     val wed = ab.join(bc, "v").filter(col("w") =!= col("u"))
@@ -750,9 +725,8 @@ object GraphAlgs {
     val adj = e.select(col("src").as("u"), col("dst").as("w"))
     // node-sized; materialized eagerly so the returned plan reads no
     // edge cache
-    val reach = wed.join(adj, Seq("u", "w"), "left_anti")
-      .groupBy(col("u")).agg(count(lit(1)).as("two_hop"))
-      .localCheckpoint(true)
+    val reach = m.pin(wed.join(adj, Seq("u", "w"), "left_anti")
+      .groupBy(col("u")).agg(count(lit(1)).as("two_hop")), Actual)
     nodes.select(col("id"))
       .join(deg.select(col("node").as("id"), col("deg")), Seq("id"), "left")
       .join(reach.select(col("u").as("id"), col("two_hop")), Seq("id"), "left")
@@ -780,8 +754,8 @@ object GraphAlgs {
     Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
     val e = undirected(m, edges, p)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      Actual)
     // wedges centered at v: (v→u, v→w) with u < w — each unordered
     // candidate pair surfaces once per shared neighbor
     val eu = e.select(col("src").as("v"), col("dst").as("u"))
@@ -795,8 +769,7 @@ object GraphAlgs {
     // of the cached edge list: materialize their composition eagerly
     // while the cache lives, or the returned lazy plan recomputes the
     // symmetrize+repartition for each of its three e-scans
-    val nonAdj = cn.join(adj, Seq("u", "w"), "left_anti")
-      .localCheckpoint(true)
+    val nonAdj = m.pin(cn.join(adj, Seq("u", "w"), "left_anti"), Actual)
     nonAdj
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("w"), col("deg").as("dw")), "w")
@@ -845,14 +818,12 @@ object GraphAlgs {
       edges: DataFrame,
       k: Int,
       rounds: Int,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes,
-      checkpointDir: Option[String] = None): DataFrame = Materialize.scoped { m =>
+      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
     require(k >= 1 && rounds >= 1, "k-core peel needs k >= 1, rounds >= 1")
     val spark = nodes.sparkSession
-    val rel = reliable(spark, checkpointDir)
     val p = adaptiveP(edges, shufflePartitions(nodes))
     val e = undirected(m, edges, p)
-    var remaining = truncate(nodes.select(col("id")).distinct(), rel, Severed)
+    var remaining = m.pin(nodes.select(col("id")).distinct(), Severed)
     var nRem = remaining.count()
     val profile = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var r = 0
@@ -877,10 +848,11 @@ object GraphAlgs {
         .join(dstIn, Seq("dst"), "left_semi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       val degIn = if (small) broadcast(deg) else deg
-      val next = truncate(
+      val next = m.pin(
         remaining.join(degIn, Seq("id"), "left")
           .filter(coalesce(col("deg"), lit(0L)) >= k)
-          .select(col("id")), rel, Severed)
+          .select(col("id")), Severed)
+      m.release(remaining)
       val nNext = next.count()
       profile += ((r, nRem - nNext, nNext))
       remaining = next
@@ -894,8 +866,8 @@ object GraphAlgs {
     Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
     val e = undirected(m, edges, p)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      Actual)
     val com = labels.select(col("id"), col("community"))
     // intra is the one OTHER consumer of the cached edge list;
     // materialize it eagerly (|communities| rows) while the cache
@@ -909,12 +881,12 @@ object GraphAlgs {
     // every symmetrized row contributes 1 to exactly one node's degree.
     // coalesce keeps the empty-graph value identical to count(*)'s 0.
     val m2 = deg.agg(coalesce(sum(col("deg")), lit(0L)).as("m2"))
-    val intra = e
+    val intra = m.pin(e
       .join(com.select(col("id").as("src"), col("community").as("ca")), "src")
       .join(com.select(col("id").as("dst"), col("community").as("cb")), "dst")
       .filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("intra2"))
-      .localCheckpoint(true)
+      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("intra2")),
+      Actual)
     val dc = com.join(deg, com("id") === deg("node"), "left")
       .groupBy(col("community"))
       .agg(count(lit(1)).as("n_members"),
@@ -955,22 +927,21 @@ object GraphAlgs {
   def degreeProfile(edges: DataFrame): DataFrame = Materialize.scoped { m =>
     val p = adaptiveP(edges, shufflePartitions(edges))
     val e = undirected(m, edges, p)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      Actual)
     val nodeStats = deg.agg(
       count(lit(1)).as("n_nodes"), max(col("deg")).as("max_degree"),
       sum(col("deg")).as("sum_deg"))
     // one row; materialized eagerly so the edge list's last consumer
     // runs before the scope releases it
-    val moments = e
+    val moments = m.pin(e
       .join(deg.select(col("node").as("src"), col("deg").as("dx")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("dy")), "dst")
       .agg(count(lit(1)).as("n"),
         sum(col("dx")).as("sx"), sum(col("dy")).as("sy"),
         sum(col("dx") * col("dy")).as("sxy"),
         sum(col("dx") * col("dx")).as("sxx"),
-        sum(col("dy") * col("dy")).as("syy"))
-      .localCheckpoint(true)
+        sum(col("dy") * col("dy")).as("syy")), Actual)
     val out = nodeStats.crossJoin(moments).select(
       col("n_nodes"),
       expr("sum_deg div 2").as("n_edges"),

@@ -1,9 +1,10 @@
 package graft.llm
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
 /** Training-pipeline assembly operators over `documents`: sequence
   * packing into fixed token budgets, benchmark-contamination detection,
@@ -192,7 +193,7 @@ object Pipeline {
               |SELECT doc_id, lang, pick, n_tokens,
               |  cast(cum // $PackBudget as bigint) AS bin_id
               |FROM c""".stripMargin),
-      (s, d) => {
+      (s, d) => Materialize.scoped { m =>
         val docs = Catalog.t(s, d, "documents")
         val train = docs.filter(col("doc_id") % EvalMod =!= 0)
         val eval0 = docs.filter(col("doc_id") % EvalMod === 0)
@@ -203,10 +204,8 @@ object Pipeline {
         // `samp` feeds the packer AND the final pick join — unpinned,
         // the shingle-explode contamination anti-join would re-execute
         // per consumer
-        val clean = quality.join(bad, Seq("doc_id"), "left_anti")
-          .localCheckpoint(true)
-        val samp = balancedSample(clean, col("lang"), CurationK)
-          .localCheckpoint(true)
+        val clean = m.pin(quality.join(bad, Seq("doc_id"), "left_anti"), Actual)
+        val samp = m.pin(balancedSample(clean, col("lang"), CurationK), Actual)
         val withTokens = samp.join(
           clean.select(col("doc_id"),
             expr("cast(size(w) as bigint)").as("toks")), "doc_id")
@@ -1416,14 +1415,15 @@ object Pipeline {
   /** The mix apportionments run UNPARTITIONED windows over one row per
     * group — fine by construction (mix groups are sources/domains, a
     * handful), but the contract is enforced, not assumed (the
-    * MaxInlineCentroids discipline): the grouped aggregate is pinned
-    * with `localCheckpoint`, counted, and rejected above this bound
-    * before any single-partition window touches it.
+    * MaxInlineCentroids discipline): the grouped aggregate is pinned,
+    * counted, and rejected above this bound before any single-partition
+    * window touches it.
     */
   private[graft] val MaxMixGroups = 65536L
 
-  private def boundedGroups(tok: DataFrame, what: String): DataFrame = {
-    val pinned = tok.localCheckpoint(true)
+  private def boundedGroups(tok: DataFrame, what: String): DataFrame =
+    Materialize.scoped { m =>
+    val pinned = m.pin(tok, Actual)
     val n = pinned.count()
     require(n <= MaxMixGroups,
       s"$what produced $n groups, above MaxMixGroups=$MaxMixGroups — its " +

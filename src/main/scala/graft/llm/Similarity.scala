@@ -1,9 +1,10 @@
 package graft.llm
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
 import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).
   *
@@ -217,7 +218,7 @@ object Similarity {
     * flag, retired by the ladder, not by a floor.
     */
   def knnGraph(vecs: DataFrame, k: Int,
-      knownN: Option[Long] = None): DataFrame = {
+      knownN: Option[Long] = None): DataFrame = Materialize.scoped { m =>
     import org.apache.spark.sql.expressions.Window
     // materialized ONCE (round 16): the symmetrizing union below
     // consumes the pair relation twice, and without the eager
@@ -226,8 +227,8 @@ object Similarity {
     // the worked-example rule (guide §8): decide on narrow rows once,
     // never recompute the heavy pass to re-read its output. The
     // checkpoint is narrow (vec_a, vec_b, cosine) — ~24 B/pair.
-    val pairs = embeddingNearDups(vecs, minCosine = -1.0, adaptive = true,
-      knownN = knownN).localCheckpoint(true)
+    val pairs = m.pin(embeddingNearDups(vecs, minCosine = -1.0, adaptive = true,
+      knownN = knownN), Actual)
     val sym = pairs
       .select(col("vec_a").as("src"), col("vec_b").as("dst"), col("cosine"))
       .unionAll(pairs
@@ -868,7 +869,8 @@ object Similarity {
     * over `count(*)` or the row hash-fails. Scale: two counts plus the
     * d06 candidate currency; nothing new crosses a shuffle.
     */
-  private def familyReportSpark(s: SparkSession, d: String): DataFrame = {
+  private def familyReportSpark(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(s)
     val e = Catalog.t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -881,8 +883,7 @@ object Similarity {
     // twice below (its own count + the verify join) and the banded
     // self-join + distinct behind it is the report's dominant cost —
     // without the eager checkpoint it executed once per consumer
-    val cand = lshCandidatePairs(e, bands, rowBits, AdMaxBits)
-      .localCheckpoint(true)
+    val cand = m.pin(lshCandidatePairs(e, bands, rowBits, AdMaxBits), Actual)
     val dups = cosineOnCandidates(
       e.withColumn("nrm", expr(s"${sparkNorm("embedding")}")), cand, 0.9)
     e.agg(count(lit(1)).as("n_vecs"))
@@ -1454,15 +1455,16 @@ object Similarity {
     * semantically gates its ingest.
     */
   def streamingSemanticDedup(corpus: DataFrame, arriving: DataFrame,
-      centroids: DataFrame, minCos: Double = SemIngestMinCos): DataFrame = {
+      centroids: DataFrame, minCos: Double = SemIngestMinCos): DataFrame =
+    Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val cent = centroids.select(col("cid"), col("embedding").as("cemb"))
       .withColumn("cnrm", expr(s"${sparkNorm("cemb")}"))
-    val corpusCells = assignCells(
+    val corpusCells = m.pin(assignCells(
       corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ca"))
         .withColumn("cn", expr(s"${sparkNorm("ca")}")), cent)
-      .select(col("cid"), col("neighbor_id").as("corpus_id"), col("ca"), col("cn"))
-      .localCheckpoint(true)
+      .select(col("cid"), col("neighbor_id").as("corpus_id"), col("ca"), col("cn")),
+      Actual)
     val arrivingCells = assignCells(
       arriving.select(col("vec_id").as("neighbor_id"), col("embedding").as("ca"))
         .withColumn("cn", expr(s"${sparkNorm("ca")}")), cent)
@@ -1758,12 +1760,12 @@ object Similarity {
     * exact brute-force top-k, computed once and memoized.
     */
   def nprobeSweep(queries: DataFrame, candidates: DataFrame,
-      centroids: DataFrame, probes: Seq[Int], k: Int): DataFrame = {
+      centroids: DataFrame, probes: Seq[Int], k: Int): DataFrame =
+    Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(queries.sparkSession)
     import org.apache.spark.sql.expressions.Window
-    val exact = cosineTopK(queries, candidates, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint()
+    val exact = m.pin(cosineTopK(queries, candidates, k)
+      .select(col("query_id"), col("neighbor_id")), Actual)
     val nq = queries.count() // broadcast-side by contract (s01's shape)
     val cent = centroids.select(col("cid"), col("embedding").as("cemb"))
       .withColumn("cnrm", expr(s"${sparkNorm("cemb")}"))
@@ -1773,7 +1775,7 @@ object Similarity {
     val assigned = assignCells(c, cent)
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("ccos").desc, col("cid").asc)
-    val scored = queries.select(col("query_id"),
+    val scored = m.pin(queries.select(col("query_id"),
       col("embedding").cast("array<double>").as("qa"))
       .withColumn("qn", expr(s"${sparkNorm("qa")}"))
       .crossJoin(broadcast(cent))
@@ -1784,8 +1786,8 @@ object Similarity {
       .join(assigned, "cid")
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", expr(s"${sparkDot("qa", "ca")} / (qn * cn)"))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("prn"))
-      .localCheckpoint()
+      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("prn")),
+      Actual)
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     probes.map { np =>
@@ -1877,7 +1879,7 @@ object Similarity {
     * neighbor-id tie-breaks — bit-stable across engines and retries.
     */
   def mmrRerank(queries: DataFrame, candidates: DataFrame, k: Int,
-      shortlistN: Int): DataFrame = {
+      shortlistN: Int): DataFrame = Materialize.scoped { m =>
     graft.functions.GraftFunctions.register(queries.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val q = queries.select(col("query_id"),
@@ -1888,16 +1890,15 @@ object Similarity {
       .withColumn("cn", expr(s"${sparkNorm("ca")}"))
     val ws = Window.partitionBy(col("query_id"))
       .orderBy(col("rel_fx").desc, col("neighbor_id").asc)
-    val short = broadcast(q)
+    val short = m.pin(broadcast(q)
       .join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("rel_fx", expr(
         s"cast(round(${sparkDot("qa", "ca")} / (qn * cn) * $MmrFx) as bigint)"))
       .withColumn("srn", row_number().over(ws))
       .filter(col("srn") <= shortlistN)
       .select(col("query_id"), col("neighbor_id"), col("rel_fx"),
-        col("ca"), col("cn"))
-      .localCheckpoint()
-    val ps = short
+        col("ca"), col("cn")), Actual)
+    val ps = m.pin(short
       .select(col("query_id"), col("neighbor_id").as("cand_id"),
         col("ca").as("aa"), col("cn").as("an"))
       .join(short.select(col("query_id"), col("neighbor_id").as("sel_id"),
@@ -1905,20 +1906,19 @@ object Similarity {
       .filter(col("cand_id") =!= col("sel_id"))
       .withColumn("sim_fx", expr(
         s"cast(round(${sparkDot("aa", "ba")} / (an * bn) * $MmrFx) as bigint)"))
-      .select(col("query_id"), col("cand_id"), col("sel_id"), col("sim_fx"))
-      .localCheckpoint()
+      .select(col("query_id"), col("cand_id"), col("sel_id"), col("sim_fx")),
+      Actual)
     val slim = short.select(col("query_id"), col("neighbor_id"), col("rel_fx"))
-    val p1 = slim
+    val p1 = m.pin(slim
       .withColumn("rn", row_number().over(ws)).filter(col("rn") === 1)
       .select(col("query_id"), col("neighbor_id"), col("rel_fx"),
-        expr("7 * rel_fx").as("score_fx"), lit(1).as("rank"))
-      .localCheckpoint()
+        expr("7 * rel_fx").as("score_fx"), lit(1).as("rank")), Actual)
     var picks = Vector(p1)
     var sel = p1
     for (r <- 2 to k) {
       val wr = Window.partitionBy(col("query_id"))
         .orderBy(col("score_fx").desc, col("cand_id").asc)
-      val p = slim
+      val p = m.pin(slim
         .join(sel.select(col("query_id"), col("neighbor_id")),
           Seq("query_id", "neighbor_id"), "left_anti")
         .withColumnRenamed("neighbor_id", "cand_id")
@@ -1930,8 +1930,7 @@ object Similarity {
         .withColumn("score_fx", expr("7 * rel_fx - 3 * msim"))
         .withColumn("rn", row_number().over(wr)).filter(col("rn") === 1)
         .select(col("query_id"), col("cand_id").as("neighbor_id"),
-          col("rel_fx"), col("score_fx"), lit(r).as("rank"))
-        .localCheckpoint()
+          col("rel_fx"), col("score_fx"), lit(r).as("rank")), Actual)
       picks = picks :+ p
       sel = sel.union(p)
     }

@@ -4,7 +4,7 @@ import graft.{Catalog, Materialize, QueryDef}
 import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointStats.{Severed, truncate}
+import org.apache.spark.sql.graftshim.CheckpointStats.{Actual, Severed}
 
 /** Text-analysis operators for LLM data pipelines over the `documents`
   * table: language ID (stopword n-gram heuristic), quality scoring,
@@ -1918,7 +1918,7 @@ object TextAnalysis {
       (Seq[(Int, String, String, Long)], DataFrame) =
     bpeMemo(s, d)(Materialize.scoped { m =>
       val (merges, reprs) = bpeTrain(m, Catalog.t(s, d, "documents"), BpeRounds)
-      (merges, reprs.localCheckpoint(true))
+      (merges, m.pin(reprs, Actual))
     })
 
   /** BPE trainer core: returns the merge list and the FINAL segmented
@@ -1988,7 +1988,7 @@ object TextAnalysis {
     * the vocab when it fits — no all-pairs, no global window.
     */
   def bpeEncode(docs: DataFrame, rounds: Int): DataFrame = Materialize.scoped { m =>
-    bpeEncodeWith(docs, bpeTrain(m, docs, rounds)._2).localCheckpoint(true)
+    m.pin(bpeEncodeWith(docs, bpeTrain(m, docs, rounds)._2), Actual)
   }
 
   /** Tokenize `docs` against an already-trained segmented vocabulary
@@ -2246,7 +2246,8 @@ object TextAnalysis {
     * Every quantity is an integer (floor divisions mirror the oracle's
     * `//`), so ranks are bit-identical across engines and retries.
     */
-  def textRankKeywords(docs: DataFrame, iters: Int, k: Int): DataFrame = {
+  def textRankKeywords(docs: DataFrame, iters: Int, k: Int): DataFrame =
+    Materialize.scoped { m =>
     import org.apache.spark.sql.expressions.Window
     val bg = docs
       .withColumn("w", split(col("text"), " "))
@@ -2272,18 +2273,18 @@ object TextAnalysis {
     // discipline instead of leaning on stats-based auto-broadcast
     // (t34 is swept by StatsInvarianceSpec like the g-family).
     val p = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = truncate(e0.join(wdeg, Seq("lang", "u")), reliable = false, Severed)
+    val e = m.pin(e0.join(wdeg, Seq("lang", "u")), Severed)
     val nv = wdeg.groupBy(col("lang")).agg(count(lit(1)).as("nv"))
-    val nodes = truncate(
+    val nodes = m.pin(
       wdeg.select(col("lang"), col("u"))
       .join(nv, "lang")
       .withColumn("init", expr(s"$TrScale div nv"))
       .withColumn("base", expr("(15 * init) div 100")),
-      reliable = false, Severed)
+      Severed)
     val nWords = nodes.count()
     val small = nWords <= graft.llm.GraphAlgs.DefaultBroadcastMaxNodes
     var tr = nodes.select(col("lang"), col("u"), col("init").as("val"))
-    for (_ <- 1 to iters) {
+    for (it <- 1 to iters) {
       val trIn =
         if (small) broadcast(tr)
         else tr.repartition(p, col("lang"), col("u"))
@@ -2292,13 +2293,15 @@ object TextAnalysis {
         .agg(sum(expr("(val * wgt) div wdeg")).as("msum"))
       val contribIn =
         if (small) broadcast(contrib) else contrib
-      tr = truncate(nodes
+      val prev = tr
+      tr = m.pin(nodes
         .select(col("lang"), col("u"), col("base"))
         .join(contribIn.withColumnRenamed("v", "u"), Seq("lang", "u"), "left")
         .select(col("lang"), col("u"),
           (col("base") + expr("(85 * coalesce(msum, 0L)) div 100"))
             .as("val")),
-        reliable = false, Severed)
+        Severed)
+      if (it > 1) m.release(prev)
     }
     val wtop = Window.partitionBy(col("lang"))
       .orderBy(col("val").desc, col("u").asc)

@@ -1,9 +1,10 @@
 package graft.relational
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
 /** Fourth batch of relational coverage: correlated existence predicates,
   * ordered string aggregation, deterministic mode / discrete quantiles,
@@ -202,7 +203,7 @@ object RelationalQueries4 {
              |      ORDER BY d100, l_orderkey, l_linenumber) AS rn,
              |    count(*) OVER (PARTITION BY l_returnflag) AS n FROM dev)
              |WHERE rn = (n + 1) // 2""".stripMargin),
-      (s, d) => {
+      (s, d) => Materialize.scoped { m =>
         // Round 17 (guide §2.5): the rank-pick median sorted the ENTIRE
         // lineitem table inside a window partitioned by the 3-value
         // return flag — two full-table sorts feeding 3 reducers each, the
@@ -232,12 +233,11 @@ object RelationalQueries4 {
         // tiny (|flags| x |distinct quantities|); eagerly materialized so
         // its two consumers (median pick + deviation histogram) cost ONE
         // lineitem scan, not two
-        val hist = t(s, d, "lineitem")
+        val hist = m.pin(t(s, d, "lineitem")
           .select(col("l_returnflag"),
             expr("cast(round(l_quantity * 100) as bigint)").as("q100"))
           .groupBy(col("l_returnflag"), col("q100"))
-          .agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
+          .agg(count(lit(1)).as("cnt")), Actual)
         val med = histMedian(hist, "q100", "med100")
         val devHist = hist.join(broadcast(med), Seq("l_returnflag"))
           .select(col("l_returnflag"),
@@ -1347,12 +1347,11 @@ object RelationalQueries4 {
              |JOIN nx nb ON nb.event_type = es.type_b
              |LEFT JOIN xi ON xi.type_a = es.type_a
              |  AND xi.type_b = es.type_b""".stripMargin),
-      (s, d) => {
+      (s, d) => Materialize.scoped { m =>
         graft.functions.GraftFunctions.register(s)
-        val uu = t(s, d, "events")
+        val uu = m.pin(t(s, d, "events") // sketches + exact audit share one scan
           .filter(col("user_id").isNotNull)
-          .select(col("event_type"), col("user_id")).distinct()
-          .localCheckpoint(true) // sketches + exact audit share one scan
+          .select(col("event_type"), col("user_id")).distinct(), Actual)
         val sk = uu
           .select(col("event_type"),
             expr("graft_polyhash32(cast(user_id as string))").as("h"))

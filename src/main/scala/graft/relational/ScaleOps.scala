@@ -2,6 +2,9 @@ package graft.relational
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
+
+import graft.Materialize
 
 /** Shuffle-management utilities for the 100 TB stance (builder prompt /
   * SURVEY §4): explicit skew salting and bucketed co-located joins,
@@ -98,10 +101,10 @@ object ScaleOps {
     * the result is then independent of where range boundaries land.
     * Output = input columns + `outCol` (inclusive running total).
     *
-    * The sorted layout is pinned with `localCheckpoint(true)` so phases
-    * 2 and 3 observe the SAME partitioning; the checkpoint blocks back
-    * the returned DataFrame and are reclaimed by Spark's ContextCleaner
-    * once the result is no longer referenced.
+    * The sorted layout is pinned so phases 2 and 3 observe the SAME
+    * partitioning; the pin backs the returned DataFrame, so it outlives
+    * the call's scope and is reclaimed by Spark's ContextCleaner once
+    * the result is no longer referenced.
     */
   def globalPrefixSum(
       df: DataFrame,
@@ -120,7 +123,7 @@ object ScaleOps {
       order: Seq[org.apache.spark.sql.Column],
       valueCol: org.apache.spark.sql.Column,
       outCol: String,
-      partitions: Int = 32): (DataFrame, Long) = {
+      partitions: Int = 32): (DataFrame, Long) = Materialize.scoped { m =>
     import org.apache.spark.sql.expressions.Window
     val pidCol = "__graft_pid"
     val vCol = "__graft_psv"
@@ -138,12 +141,11 @@ object ScaleOps {
         org.apache.spark.sql.types.ByteType).contains(vType),
       s"globalPrefixSum needs an integral value column, got $vType; " +
         "cast explicitly (and accept the rounding) if that is intended")
-    val parted = typed
+    val parted = m.pin(typed // phases 2+3 must see the SAME partitioning
       .withColumn(vCol, col(vCol).cast("long"))
       .repartitionByRange(partitions, order: _*)
       .sortWithinPartitions(order: _*)
-      .withColumn(pidCol, spark_partition_id())
-      .localCheckpoint(true) // phases 2+3 must see the SAME partitioning
+      .withColumn(pidCol, spark_partition_id()), Actual)
     val totals = parted.groupBy(col(pidCol)).agg(sum(col(vCol)).as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = (0 until partitions)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Catalog, QueryDef}
+import graft.{Catalog, Materialize, QueryDef}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,7 +62,9 @@ object StreamingQueries {
     * materialized table. The `ts` column is normalized to TimestampType
     * via [[Catalog.normalizeTs]] BEFORE `build` sees the frame, so query
     * builders are independent of how the driver's parquet encoded event
-    * time (int64 nanos vs timestamp[us] NTZ).
+    * time (int64 nanos vs timestamp[us] NTZ). The stream runs in a
+    * [[Materialize.scoped]] block, so the pins `build` takes (the
+    * stream-static corpus indexes) are released once it stops.
     */
   private def runToMemorySink(
       s: SparkSession, d: String, tag: String, outputMode: String,
@@ -70,7 +72,7 @@ object StreamingQueries {
       build: DataFrame => DataFrame): DataFrame = {
     val rawSchema = s.read.parquet(s"$d/$table.parquet").schema
     val name = s"${tag}_mem_${counter.incrementAndGet()}"
-    Catalog.withConfs(s, StreamStatePartitions) {
+    Catalog.withConfs(s, StreamStatePartitions)(Materialize.scoped { _ =>
       // readStream requires a directory: stream the sf dir, globbed to
       // the events table only
       val raw = Catalog.normalizeTs(s.readStream.schema(rawSchema)
@@ -78,7 +80,7 @@ object StreamingQueries {
       val q = build(raw).writeStream
         .outputMode(outputMode).format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()
-    }
+    })
     // the memory table lives in the session after stop
     s.table(name)
   }
@@ -89,9 +91,11 @@ object StreamingQueries {
     * band gives Spark its state-retention bound; the exact predicate is
     * on ms bigints so the emitted set matches the batch oracle
     * bit-for-bit (a timestamp-only predicate could disagree with the
-    * oracle's ms-floored compare on sub-ms boundaries).
+    * oracle's ms-floored compare on sub-ms boundaries). `joinType`
+    * "leftOuter" is st10: purchases no click matches are emitted too.
     */
-  private[graft] def clickToPurchase(raw: DataFrame): DataFrame = {
+  private[graft] def clickToPurchase(raw: DataFrame,
+      joinType: String = "inner"): DataFrame = {
     val ev = raw.select(col("event_id"), col("user_id"), col("event_type"),
       col("ts"), unix_millis(col("ts")).as("ms"))
     val p = ev.filter(col("event_type") === "purchase")
@@ -105,7 +109,8 @@ object StreamingQueries {
     p.join(c, col("cuser") === col("user_id")
         && col("cts") >= col("pts") - expr("INTERVAL 61 MINUTES")
         && col("cts") <= col("pts") + expr("INTERVAL 1 SECOND")
-        && col("cms") >= col("pms") - GapMs2 && col("cms") < col("pms"))
+        && col("cms") >= col("pms") - GapMs2 && col("cms") < col("pms"),
+        joinType)
       .select(col("purchase_id"), col("click_id"), col("user_id"),
         col("pms"), col("cms"))
   }
@@ -183,7 +188,7 @@ object StreamingQueries {
               |FROM ev p JOIN ev c ON p.event_type = 'purchase'
               |  AND c.event_type = 'click' AND c.user_id = p.user_id
               |  AND c.ms >= p.ms - $GapMs2 AND c.ms < p.ms""".stripMargin),
-      (s, d) => runToMemorySink(s, d, "st04", "append")(clickToPurchase)),
+      (s, d) => runToMemorySink(s, d, "st04", "append")(clickToPurchase(_))),
 
     // st05: streaming dedup — dropDuplicates over the key projection
     // emits exactly the distinct key set (keys only, so the emitted set
@@ -368,25 +373,8 @@ object StreamingQueries {
               |    -- correlated range NOT EXISTS nested-loops at sf0.1)
               |    AND p.event_id NOT IN (SELECT purchase_id FROM m))
               |SELECT * FROM m UNION ALL SELECT * FROM um""".stripMargin),
-      (s, d) => runToMemorySink(s, d, "st10", "append") { raw =>
-        val ev = raw.select(col("event_id"), col("user_id"), col("event_type"),
-          col("ts"), unix_millis(col("ts")).as("ms"))
-        val p = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-            col("ts").as("pts"), col("ms").as("pms"))
-          .withWatermark("pts", "1 hour")
-        val c = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id").as("cuser"),
-            col("ts").as("cts"), col("ms").as("cms"))
-          .withWatermark("cts", "1 hour")
-        p.join(c, col("cuser") === col("user_id")
-            && col("cts") >= col("pts") - expr("INTERVAL 61 MINUTES")
-            && col("cts") <= col("pts") + expr("INTERVAL 1 SECOND")
-            && col("cms") >= col("pms") - GapMs2 && col("cms") < col("pms"),
-            "leftOuter")
-          .select(col("purchase_id"), col("click_id"), col("user_id"),
-            col("pms"), col("cms"))
-      }),
+      (s, d) => runToMemorySink(s, d, "st10", "append")(
+        clickToPurchase(_, "leftOuter"))),
 
     // st11: foreachBatch parquet sink — the production export path
     // (streams land in a lake table, not a memory sink). Each

@@ -1,10 +1,11 @@
 package graft.tools
 
+import graft.Materialize
 import graft.llm.GraphAlgs
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointStats
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
 /** Round 17 (r16 verdict item 3): parallel-scaling evidence for the
   * iterative graph loops. The sf0.1 bench cannot provide it — every
@@ -56,15 +57,13 @@ object GraphScaleSmoke {
 
   /** Two JSON lines (cc, msbfs) per (nodes, broadcastMaxNodes) tier. */
   def run(spark: SparkSession, tiers: Seq[(Long, Long)], chains: Long): Unit =
-    ToolKit.rungs(spark, tiers) { case (n, bmax) =>
+    ToolKit.rungs(spark, tiers) { case (n, bmax) => Materialize.scoped { m =>
       // chain graph: i -> i + chains (disjoint chains of length
-      // ~n/chains); localCheckpoint so tier build cost stays out of
-      // the timed region and stats are the checkpoint's own
-      val nodes = CheckpointStats.truncate(spark.range(n).select(col("id")),
-        reliable = false, CheckpointStats.Actual)
-      val edges = CheckpointStats.truncate(spark.range(n - chains)
-          .select(col("id").as("src"), (col("id") + chains).as("dst")),
-        reliable = false, CheckpointStats.Actual)
+      // ~n/chains); pinned so tier build cost stays out of the timed
+      // region and stats are the pin's own, released after the tier
+      val nodes = m.pin(spark.range(n).select(col("id")), Actual)
+      val edges = m.pin(spark.range(n - chains)
+          .select(col("id").as("src"), (col("id") + chains).as("dst")), Actual)
       val ((nComp, st), ccSecs, _) = ToolKit.phase {
         val (labels, st) = GraphAlgs.connectedComponentsWithStats(nodes, edges,
           maxRounds = 64, broadcastMaxNodes = bmax)
@@ -99,5 +98,5 @@ object GraphScaleSmoke {
         "edges" -> (n - chains), "path" -> bfsPath, "depth" -> depth,
         "seeds" -> nSeeds, "reached" -> reached,
         "total_sec" -> bfsSecs, "broadcast_max_nodes" -> bmax)
-    }
+    }}
 }

@@ -18,11 +18,8 @@ object PlanAudit {
   /** (query name, plan) for every registry entry, built serially. */
   def sweep(spark: SparkSession, sfDir: String): Seq[(String, String)] =
     SparkEntry.registry.map { q =>
-      val p =
-        try q.run(spark, sfDir).queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"BUILD-FAILED: ${e.getMessage}" }
-      spark.catalog.clearCache()
-      q.name -> p
+      q.name -> (try q.run(spark, sfDir).queryExecution.executedPlan.toString
+        catch { case e: Throwable => s"BUILD-FAILED: ${e.getMessage}" })
     }
 
   def main(args: Array[String]): Unit = ToolKit.main("graft-plan-audit") { spark =>

@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** The one home of lineage truncation: [[truncate]]. Stock
+/** The one home of lineage truncation: [[truncate]], which library code
+  * reaches only through `graft.Materialize.Scope.pin`. Stock
   * `Dataset.checkpoint` has two defects that hurt iterative DataFrame
   * code:
   *

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows. These suites make both failure modes red in CI:
   *
   *   - [[RegistryCompletenessSpec]]: every declared query must run end
-  *     to end on sf0.001 — a throwing entry fails the suite by name.
+  *     to end on sf0.001 — a throwing entry fails the suite by name —
+  *     and leave neither a cache entry nor a stored RDD block that its
+  *     result does not read and no session memo holds.
   *   - [[SchemaDriftSpec]]: the Spark-side dtypes of all ten driver
   *     tables (after [[Catalog.t]] normalization) are pinned, so the
   *     next silent testdata regeneration fails here, in the builder's
@@ -24,15 +26,22 @@ class RegistryCompletenessSpec extends AnyFunSuite {
     val s = TestSpark.spark
     val failures = scala.collection.mutable.ListBuffer.empty[(String, String)]
     val leaks = scala.collection.mutable.ListBuffer.empty[String]
+    val strays = scala.collection.mutable.ListBuffer.empty[String]
+    def stored = s.sparkContext.getRDDStorageInfo.map(_.id).toSet
     var nonEmpty = 0
     SparkEntry.registry.foreach { qd =>
       try {
+        val before = stored
         val df = qd.run(s, sf)
         assert(df.schema.nonEmpty, s"${qd.name}: empty schema")
         if (df.count() > 0) nonEmpty += 1
         // a library call releases what it caches: once its result is
         // consumed, no cache entry of the builder may remain
         if (!s.sharedState.cacheManager.isEmpty) leaks += qd.name
+        // ... and every block it newly stored is one its result reads
+        // or one a session memo holds (no wait on the ContextCleaner)
+        val extra = stored -- before -- Materialize.rddIds(df) -- Materialize.memoRddIds
+        if (extra.nonEmpty) strays += s"${qd.name} (${extra.size})"
       } catch {
         case e: Throwable =>
           failures += qd.name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
@@ -45,6 +54,9 @@ class RegistryCompletenessSpec extends AnyFunSuite {
     assert(leaks.isEmpty,
       s"${leaks.size} registry queries left a cache entry after their result " +
         s"was consumed: ${leaks.mkString(", ")}")
+    assert(strays.isEmpty,
+      s"${strays.size} registry queries left stored RDD blocks their result " +
+        s"does not read: ${strays.mkString(", ")}")
     // nearly every query yields rows even at sf0.001; a mass-zero result
     // would mean the gate is comparing empty sets (vacuously green)
     assert(nonEmpty >= SparkEntry.registry.size - 5,

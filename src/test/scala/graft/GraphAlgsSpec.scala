@@ -3,6 +3,7 @@ package graft
 import graft.llm.GraphAlgs
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.CheckpointStats
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit checks for the reusable graph API on a crafted graph: a 1-2-3
@@ -205,7 +206,7 @@ class GraphAlgsSpec extends AnyFunSuite {
       // a fresh session invalidates the graph memo (session-identity
       // check), so the conf'd run really re-derives through checkpoint()
       val s2 = spark0.newSession()
-      s2.conf.set(graft.llm.Dedup.GraphCheckpointDirConf, dir.toString)
+      s2.conf.set(Materialize.GraphCheckpointDirConf, dir.toString)
       val cc = SparkEntry.queries("d08_conn_components")(s2, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(cc === ccBase)
@@ -221,14 +222,17 @@ class GraphAlgsSpec extends AnyFunSuite {
 
   test("reliable checkpoint mode: results identical, checkpoint dir used") {
     TempDirs.scoped("graft-ckpt") { dir =>
-      val got = GraphAlgs.pageRank(nodes, edges, iters = 5,
-        checkpointDir = Some(dir.toString))
+      // every pin reads the conf from its frame's session
+      val s2 = spark.newSession()
+      s2.conf.set(Materialize.GraphCheckpointDirConf, dir.toString)
+      val nodes = s2.createDataFrame(Seq(1L, 2L, 3L, 4L).map(Tuple1(_))).toDF("id")
+      val edges = s2.createDataFrame(Seq((1L, 2L), (2L, 3L))).toDF("src", "dst")
+      val got = GraphAlgs.pageRank(nodes, edges, iters = 5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === Map(
         1L -> 167084492187L, 2L -> 415831015625L,
         3L -> 167084492187L, 4L -> 37500000000L))
-      val cc = GraphAlgs.connectedComponents(nodes, edges,
-        checkpointDir = Some(dir.toString))
+      val cc = GraphAlgs.connectedComponents(nodes, edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
       // reliable checkpoints actually landed in the directory
@@ -237,6 +241,20 @@ class GraphAlgsSpec extends AnyFunSuite {
         .count(java.nio.file.Files.isRegularFile(_))
       assert(files > 0, "no checkpoint files written")
     }
+  }
+
+  test("adaptiveP collapses a tiny relation to one partition and keeps " +
+    "the configured parallelism when the statistic is huge") {
+    val tiny = spark.range(100).toDF("id").localCheckpoint(true)
+    val tinyStats = CheckpointStats.truncate(spark.range(100).toDF("id"),
+      reliable = false, CheckpointStats.Actual)
+    assert(GraphAlgs.adaptiveP(tinyStats, 32) === 1)
+    // a parquet-less huge estimate: cross joins inflate sizeInBytes
+    val big = tiny.crossJoin(tiny).crossJoin(tiny).crossJoin(tiny)
+      .crossJoin(tiny)
+    assert(GraphAlgs.adaptiveP(big, 32) === 32)
+    // clamp floor: even a zero/unknown size never returns < 1
+    assert(GraphAlgs.adaptiveP(tinyStats, 1) === 1)
   }
 
   test("bfsLayers: hop distances from multi-source seeds, depth cap and " +

@@ -1,14 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Materialize.SessionMemo
 
 /** [[Materialize]]: a scope releases every cache it took on return, on
-  * throw and per nested scope, an early release frees only its own
-  * cache, and a [[SessionMemo]] builds once per (session, dir).
+  * throw and per nested scope, and every pin its result does not read;
+  * an early release frees only its own cache or pin; the session conf
+  * makes pins reliable; a [[SessionMemo]] builds once per (session,
+  * dir); and library code materializes nowhere else.
   */
 class MaterializeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -19,6 +22,12 @@ class MaterializeSpec extends AnyFunSuite {
     spark.range(10 + k).selectExpr(s"id * ${1000003 + k} AS materialize_$k")
 
   private def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+
+  /** RDD ids with stored blocks. */
+  private def stored: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  private def pinStored(p: DataFrame): Boolean =
+    stored.intersect(Materialize.rddIds(p)).nonEmpty
 
   test("a scope releases its caches when the body returns") {
     val (a, b) = Materialize.scoped { m =>
@@ -66,6 +75,99 @@ class MaterializeSpec extends AnyFunSuite {
     assert(!cached(frame(7)))
   }
 
+  test("an intermediate pin is released when the scope returns or throws") {
+    var mid: DataFrame = null
+    val n = Materialize.scoped { m =>
+      mid = m.pin(frame(8), Actual)
+      assert(pinStored(mid))
+      mid.count()
+    }
+    assert(n === 18)
+    assert(!pinStored(mid))
+    intercept[IllegalStateException] {
+      Materialize.scoped { m =>
+        mid = m.pin(frame(9), Actual)
+        assert(pinStored(mid))
+        throw new IllegalStateException("round failed")
+      }
+    }
+    assert(!pinStored(mid))
+  }
+
+  test("a pin the returned frame reads survives the scope and collects") {
+    var mid: DataFrame = null
+    val out = Materialize.scoped { m =>
+      mid = m.pin(frame(10), Actual)
+      m.pin(mid.selectExpr("materialize_10 + 1 AS x"), Actual).filter("x > 0")
+    }
+    assert(!pinStored(mid))
+    assert(pinStored(out))
+    assert(out.collect().length === 20)
+  }
+
+  test("the pins of a tuple result are kept") {
+    val (a, b, n) = Materialize.scoped { m =>
+      (m.pin(frame(11), Actual), m.pin(frame(12), Actual).limit(5), 3L)
+    }
+    assert(pinStored(a) && pinStored(b) && n === 3L)
+    assert(a.count() === 21 && b.count() === 5)
+  }
+
+  test("a kept pin passes to the enclosing scope, which applies the rule") {
+    var inner: DataFrame = null
+    val total = Materialize.scoped { _ =>
+      inner = Materialize.scoped(m => m.pin(frame(13), Actual))
+      assert(pinStored(inner))
+      inner.count()
+    }
+    assert(total === 23)
+    assert(!pinStored(inner))
+  }
+
+  test("release drops exactly one pin") {
+    Materialize.scoped { m =>
+      val a = m.pin(frame(14), Actual)
+      val b = m.pin(frame(15), Actual)
+      m.release(a)
+      assert(!pinStored(a) && pinStored(b))
+      intercept[IllegalArgumentException](m.release(a))
+    }
+  }
+
+  test("with the checkpoint-dir conf set, pin writes reliable checkpoint files") {
+    TempDirs.scoped("graft-pin-ckpt") { dir =>
+      val s2 = spark.newSession()
+      s2.conf.set(Materialize.GraphCheckpointDirConf, dir.toString)
+      val before = stored
+      val n = Materialize.scoped { m =>
+        val p = m.pin(s2.range(25).toDF("id"), Actual)
+        assert((stored -- before).isEmpty, "a reliable pin stored executor blocks")
+        p.count()
+      }
+      assert(n === 25)
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(dir).iterator().asScala
+        .count(java.nio.file.Files.isRegularFile(_))
+      assert(files > 0, "no reliable checkpoint files written")
+    }
+  }
+
+  test("library code caches, pins and releases only through Materialize") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"no source tree under ${new java.io.File(".").getAbsolutePath}")
+    val call = "localCheckpoint\\(|truncate\\(|\\.cache\\(\\)|unpersist\\(".r
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.filterNot(_.getName == "tools").flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val hits = sources(root).filterNot(_.getName == "Materialize.scala").flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined => s"${f.getPath}:${i + 1}"
+      }.toList finally src.close()
+    }
+    assert(hits.isEmpty, s"materialization outside Materialize: ${hits.mkString(", ")}")
+  }
+
   test("a session memo builds once per (session, dir) and rebuilds for a " +
     "new session") {
     val memo = new SessionMemo[Int]
@@ -86,7 +188,6 @@ class MaterializeSpec extends AnyFunSuite {
     // consumed the result, no cache entry and no stored block from the
     // call remains, without the caller running clearCache
     spark.catalog.clearCache() // baseline: what earlier suites left
-    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
     val before = stored
     val report = graft.llm.Dedup.lshTuning(Catalog.t(spark, sf, "documents"))
     assert(report.collect().length === 3)

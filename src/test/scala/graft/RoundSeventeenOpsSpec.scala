@@ -2,37 +2,16 @@ package graft
 
 import graft.llm.GraphAlgs
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointStats
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-17 optimization internals:
-  *
-  *  - `GraphAlgs.adaptiveP`: the scale-adaptive partition count derives
-  *    from the plan's sizeInBytes statistic, clamped to [1, conf] — a
-  *    tiny relation collapses to one partition, an unknown/huge one
-  *    keeps the configured parallelism (so nothing changes at scale).
-  *  - `GraphAlgs.modularity`: m2 now derives from the degree table
-  *    (Σ deg) instead of a third edge scan — results must stay
-  *    bit-identical, including the empty-edge case whose m2 must stay
-  *    exactly count(*)'s 0, not sum's NULL.
+/** Round-17 optimization internals: `GraphAlgs.modularity`'s m2 now
+  * derives from the degree table (Σ deg) instead of a third edge scan —
+  * results must stay bit-identical, including the empty-edge case whose
+  * m2 must stay exactly count(*)'s 0, not sum's NULL.
   */
 class RoundSeventeenOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("adaptiveP collapses a tiny relation to one partition and keeps " +
-    "the configured parallelism when the statistic is huge") {
-    val tiny = spark.range(100).toDF("id").localCheckpoint(true)
-    val tinyStats = CheckpointStats.truncate(spark.range(100).toDF("id"),
-      reliable = false, CheckpointStats.Actual)
-    assert(GraphAlgs.adaptiveP(tinyStats, 32) === 1)
-    // a parquet-less huge estimate: cross joins inflate sizeInBytes
-    val big = tiny.crossJoin(tiny).crossJoin(tiny).crossJoin(tiny)
-      .crossJoin(tiny)
-    assert(GraphAlgs.adaptiveP(big, 32) === 32)
-    // clamp floor: even a zero/unknown size never returns < 1
-    assert(GraphAlgs.adaptiveP(tinyStats, 1) === 1)
-  }
 
   test("modularity: m2 from Σ deg matches the direct edge count, " +
     "including the empty-edge case") {

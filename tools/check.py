@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: run each oracle SQL in
 DuckDB over the same parquet tables and compare (exactly) with the engine
-result parquet dumped by graft.Verify.
+result parquet dumped by graft.Verify. Queries are checked in parallel,
+one process per CPU (each with its own DuckDB connection); the report is
+printed in query-name order.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [name,name,...]
 """
 import json, sys, glob, os
+from concurrent.futures import ProcessPoolExecutor
 import duckdb
 import pandas as pd
 import numpy as np
@@ -61,61 +64,76 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
-def main(sf_dir, out_dir, only=None):
-    con = duckdb.connect()
+_con = None  # this worker's DuckDB connection
+
+
+def _connect(sf_dir):
+    global _con
+    _con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            _con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+
+def check_one(item):
+    """One query's verdict: (ok, report line)."""
+    name, sql, out_dir = item
+    try:
+        exp = fetch_oracle(_con, sql)
+    except Exception as e:
+        return False, f"FAIL {name}: oracle SQL error: {e}"
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    if not files:
+        return False, f"FAIL {name}: no engine output"
+    try:
+        got = pd.concat([read_engine(f) for f in sorted(files)])
+    except AssertionError as e:
+        return False, f"FAIL {name}: {e}"
+    if sorted(got.columns) != sorted(exp.columns):
+        return False, f"FAIL {name}: columns {sorted(got.columns)} vs oracle {sorted(exp.columns)}"
+    g, e = norm(got), norm(exp)
+    if len(g) != len(e):
+        return False, f"FAIL {name}: rows {len(g)} vs {len(e)}"
+    bad_cols = []
+    # the driver hashes STRINGIFIED values, so an int64 engine column
+    # vs a float64 oracle column (e.g. DuckDB HUGEINT -> float) is a
+    # hash mismatch even when numerically equal — flag kind drift.
+    # int64-vs-uint64 (and bool-vs-object-bool) stringify identically,
+    # so the driver's hash would match — treat those kinds as compatible
+    def kinds_compatible(a, b):
+        if a == b:
+            return True
+        pair = {a, b}
+        return pair <= {"i", "u"} or pair <= {"b", "O"}
+    kind_bad = [(c, g[c].dtype.kind, e[c].dtype.kind) for c in g.columns
+                if not kinds_compatible(g[c].dtype.kind, e[c].dtype.kind)]
+    if kind_bad:
+        return False, f"FAIL {name}: dtype-kind drift (engine vs oracle) {kind_bad}"
+    for c in g.columns:
+        gv, ev = g[c].values, e[c].values
+        eq = (pd.isna(gv) & pd.isna(ev)) | (gv == ev)
+        if not eq.all():
+            i = int(np.argmin(eq))
+            bad_cols.append((c, gv[i], ev[i]))
+    if bad_cols:
+        return False, f"FAIL {name}: value mismatch {bad_cols[:3]}"
+    return True, f"ok   {name} ({len(g)} rows)"
+
+
+def main(sf_dir, out_dir, only=None):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     if only:
         keep = set(only.split(","))
         oracle = {k: v for k, v in oracle.items() if k in keep}
+    items = [(name, sql, out_dir) for name, sql in sorted(oracle.items())]
     n_ok = n_bad = 0
-    for name, sql in sorted(oracle.items()):
-        try:
-            exp = fetch_oracle(con, sql)
-        except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}"); n_bad += 1; continue
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            print(f"FAIL {name}: no engine output"); n_bad += 1; continue
-        try:
-            got = pd.concat([read_engine(f) for f in sorted(files)])
-        except AssertionError as e:
-            print(f"FAIL {name}: {e}"); n_bad += 1; continue
-        if sorted(got.columns) != sorted(exp.columns):
-            print(f"FAIL {name}: columns {sorted(got.columns)} vs oracle {sorted(exp.columns)}")
-            n_bad += 1; continue
-        g, e = norm(got), norm(exp)
-        if len(g) != len(e):
-            print(f"FAIL {name}: rows {len(g)} vs {len(e)}"); n_bad += 1; continue
-        bad_cols = []
-        # the driver hashes STRINGIFIED values, so an int64 engine column
-        # vs a float64 oracle column (e.g. DuckDB HUGEINT -> float) is a
-        # hash mismatch even when numerically equal — flag kind drift.
-        # int64-vs-uint64 (and bool-vs-object-bool) stringify identically,
-        # so the driver's hash would match — treat those kinds as compatible
-        def kinds_compatible(a, b):
-            if a == b:
-                return True
-            pair = {a, b}
-            return pair <= {"i", "u"} or pair <= {"b", "O"}
-        kind_bad = [(c, g[c].dtype.kind, e[c].dtype.kind) for c in g.columns
-                    if not kinds_compatible(g[c].dtype.kind, e[c].dtype.kind)]
-        if kind_bad:
-            print(f"FAIL {name}: dtype-kind drift (engine vs oracle) {kind_bad}")
-            n_bad += 1; continue
-        for c in g.columns:
-            gv, ev = g[c].values, e[c].values
-            eq = (pd.isna(gv) & pd.isna(ev)) | (gv == ev)
-            if not eq.all():
-                i = int(np.argmin(eq))
-                bad_cols.append((c, gv[i], ev[i]))
-        if bad_cols:
-            print(f"FAIL {name}: value mismatch {bad_cols[:3]}"); n_bad += 1
-        else:
-            print(f"ok   {name} ({len(g)} rows)"); n_ok += 1
+    with ProcessPoolExecutor(max_workers=os.cpu_count() or 1,
+                             initializer=_connect, initargs=(sf_dir,)) as pool:
+        for ok, line in pool.map(check_one, items):
+            print(line, flush=True)
+            n_ok += ok
+            n_bad += not ok
     print(f"== {n_ok} ok, {n_bad} fail")
     return 1 if n_bad else 0
 
