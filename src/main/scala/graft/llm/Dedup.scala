@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Catalog, Materialize, QueryDef}
+import graft.{Catalog, Layout, Materialize, QueryDef}
 import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -267,16 +267,9 @@ object Dedup {
       "fuzzyPairs needs at least one blocking column — an unblocked " +
         "edit-distance verify is an all-pairs cartesian join")
     val keep = (Seq(idCol, nameCol) ++ blockCols).map(col)
-    val p0 = items.select(keep: _*)
-    // round 17 (JobProfile, the t12 class): a single-split input scan
-    // makes the quadratic in-block verify — this operator's entire
-    // cost — run single-threaded through the block join (1.34 of
-    // 1.71 s in one task on d07). Spread the narrow projection only
-    // when the scan cannot feed the session's parallelism; at corpus
-    // scale the scan has plenty of splits and no repartition fires.
-    val conf = items.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val p = if (p0.rdd.getNumPartitions < conf) p0.repartition(conf) else p0
+    // the quadratic in-block verify is this operator's entire cost:
+    // spread the narrow projection first
+    val p = Layout.spread(items.select(keep: _*))
     val a = p.select(Seq(col(idCol).as(outA), col(nameCol).as("name_a")) ++
       blockCols.map(col): _*)
     val b = p.select(Seq(col(idCol).as(outB), col(nameCol).as("name_b")) ++
@@ -313,12 +306,12 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame): DataFrame =
     Materialize.scoped(m => m.pin(minhashPairs(m, docs), Actual))
 
-  /** Core derivation from the docs relation, with the signature cached
-    * in `m` — sig appears twice in the pairs join, so caching it halves
-    * the signature computation. Callers pin the pairs before `m` exits.
+  /** Core derivation from the docs relation: the signature is pinned in
+    * `m` over the spread docs, so the band join and both signature
+    * lookups read one built relation. Callers pin the pairs before `m` exits.
     */
   private def minhashPairs(m: Materialize.Scope, docs: DataFrame): DataFrame = {
-    val sig = m.cache(minhashSignatureNarrow(docs))
+    val sig = m.pin(minhashSignatureNarrow(Layout.spread(docs)), Actual)
     // candidates via ONE self-join on exploded (bandIdx, bandKey) rows —
     // same idiom as d05's chunk join (one shuffle, not one per band)
     val bandStructs = (0 until Bands).map { b =>
@@ -417,12 +410,12 @@ object Dedup {
     * candidates to verify; this report prices that trade on the actual
     * corpus. One signature computation (narrow, shuffle-free) feeds all
     * configs; per config one exploded band self-join — the d02 shape —
-    * never all-pairs. The report (one row per config) is computed
-    * eagerly and returned as a local frame, so the cached signature is
-    * released before the call returns.
+    * never all-pairs. The signature is pinned over the spread docs
+    * before the configs fan out; the report (one row per config) is
+    * collected into a local frame, so the pin is released on return.
     */
   def lshTuning(docs: DataFrame): DataFrame = Materialize.scoped { m =>
-    val sig = m.cache(minhashSignatureNarrow(docs))
+    val sig = m.pin(minhashSignatureNarrow(Layout.spread(docs)), Actual)
     val matches = (0 until Perms)
       .map(j => s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END").mkString(" + ")
     val per = TuneConfigs.map { case (nb, r) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointStats.{Actual, Severed}
 
-import graft.Materialize
+import graft.{Layout, Materialize}
 
 /** Reusable distributed graph algorithms over plain DataFrames — the
   * library surface behind the d08/g01 gate queries. Both take:
@@ -50,41 +50,6 @@ object GraphAlgs {
   final case class CcStats(rounds: Int, roundSecs: Seq[Double], path: String,
       partitions: Int)
 
-  /** Nodes at or below which the node-sized side is broadcast. ~4M rows
-    * of (long, long) ≈ 64 MB serialized — a conservative ceiling for
-    * executor broadcast memory; far below it at test scale, far above
-    * it at corpus scale.
-    */
-  val DefaultBroadcastMaxNodes: Long = 4L * 1000 * 1000
-
-  private def shufflePartitions(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-
-  /** Scale-adaptive partition count for the family's explicit
-    * repartition+cache layouts (round 17, guide §2.2: derive
-    * partitioning from input size, never a constant tuned to either
-    * local mode or a cluster). The gate graphs are a few MB; laying
-    * them out across `spark.sql.shuffle.partitions` tasks made every
-    * loop stage pay parallelism it could not use — JobProfile measured
-    * ~0.35 s/task of pure contention per iteration at local[32], and
-    * the whole suite ran FASTER at 8 cores than 32 (the r16 driver's
-    * scaling block). Deriving the count from the plan's `sizeInBytes`
-    * statistic fixes that from the data: tiny graphs collapse to a few
-    * partitions, while anything large (or statistically unknown —
-    * severed stats report the session default, i.e. effectively
-    * infinite) keeps the configured parallelism, so no behavior changes
-    * at cluster scale. Pure layout: results are partitioning-invariant
-    * by the family's integer-exact contract.
-    */
-  private[graft] val TargetPartitionBytes: Long = 32L * 1024 * 1024
-
-  private[graft] def adaptiveP(df: DataFrame, conf: Int): Int = {
-    val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sz <= 0) conf
-    else ((sz + TargetPartitionBytes - 1) / TargetPartitionBytes)
-      .min(BigInt(conf)).max(BigInt(1)).toInt
-  }
-
   /** Symmetrized edge list, hash-partitioned by `src` once and cached
     * in `m`. The explicit fixed-width repartition is load-bearing: AQE
     * never coalesces a user repartition, so the cached layout is
@@ -110,7 +75,7 @@ object GraphAlgs {
       nodes: DataFrame,
       edges: DataFrame,
       maxRounds: Int = 40,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame =
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame =
     connectedComponentsWithStats(nodes, edges, maxRounds, broadcastMaxNodes)._1
 
   /** [[connectedComponents]] plus this run's [[CcStats]]. */
@@ -118,9 +83,9 @@ object GraphAlgs {
       nodes: DataFrame,
       edges: DataFrame,
       maxRounds: Int = 40,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): (DataFrame, CcStats) =
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): (DataFrame, CcStats) =
     Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(nodes))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     var labels = m.cache(nodes.select(col("id")).withColumn("label", col("id")))
     // one pass gets both the fixpoint potential and the broadcast gate
@@ -200,7 +165,7 @@ object GraphAlgs {
       edges: DataFrame,
       seeds: DataFrame,
       maxDepth: Int,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = {
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame = {
     // single-source-set BFS = the multi-source traversal with one
     // constant probe (round-13 review: the iteration machinery —
     // broadcast threshold, checkpoint rounds, visited anti-join — must
@@ -227,8 +192,8 @@ object GraphAlgs {
       edges: DataFrame,
       seeds: DataFrame,
       maxDepth: Int,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(edges))
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     // Round 16 (guide §2.4): the visited set is a LAZY union of the
     // per-depth checkpointed frontier frames, never re-materialized.
@@ -290,7 +255,7 @@ object GraphAlgs {
       edges: DataFrame,
       iters: Int = 5,
       scale: Long = 1000000000000L,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame =
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame =
     // uniform PageRank IS the personalized walk with every node in the
     // seed set (init = scale/n, restart mass everywhere): one loop owns
     // the iteration machinery (round-13 lesson — see multiSourceBfs)
@@ -312,8 +277,8 @@ object GraphAlgs {
       seeds: DataFrame,
       iters: Int = 5,
       scale: Long = 1000000000000L,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(nodes))
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
+    val p = Layout.partitions(edges)
     // cached: the edge set appears on BOTH sides of the deg bake-in join
     // below — uncached it would evaluate its lineage twice
     val e = undirected(m, edges, p)
@@ -396,8 +361,8 @@ object GraphAlgs {
       nodes: DataFrame,
       edges: DataFrame,
       rounds: Int = 2,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(nodes))
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     val n0 = m.cache(nodes.select(col("id")).repartition(p, col("id")))
     val small = n0.count() <= broadcastMaxNodes
@@ -437,7 +402,7 @@ object GraphAlgs {
     */
   def triangleCounts(nodes: DataFrame, edges: DataFrame): DataFrame =
     Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(nodes))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     // deg and o are each consumed by MULTIPLE downstream joins that the
     // caller materializes after this method returns — eager pins (not
@@ -495,12 +460,12 @@ object GraphAlgs {
     */
   def edgeTriangleSupport(edges: DataFrame, minSupport: Int,
       pOverride: Option[Int] = None): DataFrame = Materialize.scoped { m =>
-    // pOverride (round 17): trussDecomposition's per-round survivor set
+    // pOverride: trussDecomposition's per-round survivor set
     // is a severed-stats checkpoint (sizeInBytes = session default), so
     // the statistic-derived count cannot see how small it is — but the
     // caller tracks the exact edge count per round and passes the
     // matching layout width down.
-    val p = pOverride.getOrElse(adaptiveP(edges, shufflePartitions(edges)))
+    val p = pOverride.getOrElse(Layout.partitions(edges))
     val e = undirected(m, edges, p)
     val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
       Actual)
@@ -587,15 +552,13 @@ object GraphAlgs {
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 3
     var rounds = 0
-    val confP = shufflePartitions(edges)
     while (k <= maxK && curN > 0 && curN > localMaxEdges) {
       var stable = false
       while (!stable && curN > 0 && curN > localMaxEdges) {
         // size the round's layout from the EXACT survivor count (the
         // checkpoint's severed stats cannot): ~48 B per symmetrized
-        // canonical edge, same 32 MB/partition target as adaptiveP
-        val pRound = ((curN * 48 + TargetPartitionBytes - 1) /
-          TargetPartitionBytes).min(confP).max(1).toInt
+        // canonical edge
+        val pRound = Layout.partitions(spark, curN * 48)
         val keep = m.pin(
           edgeTriangleSupport(cur, k - 2, Some(pRound))
             .filter(col("in_truss"))
@@ -714,7 +677,7 @@ object GraphAlgs {
     */
   def twoHopReach(nodes: DataFrame, edges: DataFrame): DataFrame =
     Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(nodes))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
       Actual)
@@ -752,7 +715,7 @@ object GraphAlgs {
     */
   def linkPrediction(edges: DataFrame, minCommon: Int): DataFrame =
     Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(edges))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
       Actual)
@@ -818,10 +781,10 @@ object GraphAlgs {
       edges: DataFrame,
       k: Int,
       rounds: Int,
-      broadcastMaxNodes: Long = DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
+      broadcastMaxNodes: Long = Layout.DefaultBroadcastMaxNodes): DataFrame = Materialize.scoped { m =>
     require(k >= 1 && rounds >= 1, "k-core peel needs k >= 1, rounds >= 1")
     val spark = nodes.sparkSession
-    val p = adaptiveP(edges, shufflePartitions(nodes))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     var remaining = m.pin(nodes.select(col("id")).distinct(), Severed)
     var nRem = remaining.count()
@@ -864,7 +827,7 @@ object GraphAlgs {
 
   def modularity(labels: DataFrame, edges: DataFrame): DataFrame =
     Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(edges))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
       Actual)
@@ -925,7 +888,7 @@ object GraphAlgs {
     * partials do almost all the work.
     */
   def degreeProfile(edges: DataFrame): DataFrame = Materialize.scoped { m =>
-    val p = adaptiveP(edges, shufflePartitions(edges))
+    val p = Layout.partitions(edges)
     val e = undirected(m, edges, p)
     val deg = m.pin(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
       Actual)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Catalog, Materialize, QueryDef}
+import graft.{Catalog, Layout, Materialize, QueryDef}
 import graft.Materialize.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -311,20 +311,9 @@ object TextAnalysis {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("lang"))
           .orderBy(col("cnt").desc, col("tri").asc)
-        // round 17 (JobProfile, guide §2/§6): documents.parquet reads
-        // as ONE split at test scale (single small file), so the
-        // trigram explode+aggregate — this query's entire cost — ran
-        // single-threaded (2.17 of 2.56 s in one task). When the scan
-        // cannot feed the session's parallelism, spread the narrow
-        // (lang, text) projection round-robin first: the shuffle moves
-        // each row once (~MB here); at corpus scale the scan has
-        // plenty of splits and no repartition fires.
-        val src = Catalog.t(s, d, "documents")
-          .select(col("lang"), col("text"))
-        val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val spread =
-          if (src.rdd.getNumPartitions < p) src.repartition(p) else src
-        spread
+        // the trigram explode+aggregate is this query's entire cost:
+        // spread the narrow (lang, text) projection first
+        Layout.spread(Catalog.t(s, d, "documents").select(col("lang"), col("text")))
           // sequence(1, 0) DESCENDS in Spark — guard texts under 3 chars
           .select(col("lang"), explode(expr(
             "CASE WHEN length(text) >= 3 THEN transform(" +
@@ -2272,7 +2261,7 @@ object TextAnalysis {
     // carries the graph family's explicit broadcast/co-partition
     // discipline instead of leaning on stats-based auto-broadcast
     // (t34 is swept by StatsInvarianceSpec like the g-family).
-    val p = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val p = Layout.parallelism(docs.sparkSession)
     val e = m.pin(e0.join(wdeg, Seq("lang", "u")), Severed)
     val nv = wdeg.groupBy(col("lang")).agg(count(lit(1)).as("nv"))
     val nodes = m.pin(
@@ -2282,7 +2271,7 @@ object TextAnalysis {
       .withColumn("base", expr("(15 * init) div 100")),
       Severed)
     val nWords = nodes.count()
-    val small = nWords <= graft.llm.GraphAlgs.DefaultBroadcastMaxNodes
+    val small = nWords <= Layout.DefaultBroadcastMaxNodes
     var tr = nodes.select(col("lang"), col("u"), col("init").as("val"))
     for (it <- 1 to iters) {
       val trIn =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Catalog, Materialize, QueryDef}
+import graft.{Catalog, Layout, Materialize, QueryDef}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,15 +27,6 @@ final case class UserSession(
 object StreamingQueries {
 
   private val counter = new AtomicInteger(0)
-  // Stateful streaming ops open one state store PER shuffle partition
-  // (stream-stream joins open four); at test scale the store setup
-  // dominates, so every stream of this family runs with few partitions.
-  // A real deployment sizes this to keyspace/executor count instead.
-  // Borrowed through Catalog.withConfs, so batch queries keep the
-  // session default. A stream gives it back only after
-  // processAllAvailable/stop: micro-batch planning reads the conf
-  // lazily during the run, not at start().
-  private[graft] val StreamStatePartitions = "spark.sql.shuffle.partitions" -> "8"
   private val GapMs = 1800000L
   private val GapMs2 = 3600000L // st04 attribution window (1 hour in ms)
   // st28 monitor family: a fixed 4-band × 12-bit PREFIX of the maximal
@@ -72,7 +63,7 @@ object StreamingQueries {
       build: DataFrame => DataFrame): DataFrame = {
     val rawSchema = s.read.parquet(s"$d/$table.parquet").schema
     val name = s"${tag}_mem_${counter.incrementAndGet()}"
-    Catalog.withConfs(s, StreamStatePartitions)(Materialize.scoped { _ =>
+    Catalog.withConfs(s, Layout.StreamStatePartitions)(Materialize.scoped { _ =>
       // readStream requires a directory: stream the sf dir, globbed to
       // the events table only
       val raw = Catalog.normalizeTs(s.readStream.schema(rawSchema)
@@ -395,7 +386,7 @@ object StreamingQueries {
         // the stream stops
         val outDir = graft.TempDirs.create("graft-st11-out")
         graft.TempDirs.scoped("graft-st11-ckpt") { ckpt =>
-          Catalog.withConfs(s, StreamStatePartitions) {
+          Catalog.withConfs(s, Layout.StreamStatePartitions) {
             val raw = s.readStream.schema(rawSchema)
               .option("pathGlobFilter", "events.parquet").parquet(d)
             val q = raw.filter(col("event_type") === "purchase")
@@ -758,11 +749,7 @@ object StreamingQueries {
         val schema = new org.apache.spark.sql.types.StructType()
           .add("doc_id", "long").add("text", "string").add("lang", "string")
         val name = s"st15_mem_${counter.incrementAndGet()}"
-        // without the family's few-partitions rule each of the three
-        // file-trigger batches opened and committed a state store per
-        // SESSION shuffle partition (~0.8 s/task of store setup across
-        // 32 tasks per batch)
-        Catalog.withConfs(s, StreamStatePartitions) {
+        Catalog.withConfs(s, Layout.StreamStatePartitions) {
           val q = s.readStream.schema(schema)
             .option("maxFilesPerTrigger", "3").json(dir)
             .groupBy("lang")
@@ -1030,7 +1017,7 @@ object StreamingQueries {
         val rawSchema = s.read.parquet(s"$d/events.parquet").schema
         val snapBase = graft.TempDirs.create("graft-st24-snap")
         graft.TempDirs.scoped("graft-st24-ckpt") { ckptPath =>
-          Catalog.withConfs(s, StreamStatePartitions) {
+          Catalog.withConfs(s, Layout.StreamStatePartitions) {
             val raw = Catalog.normalizeTs(s.readStream.schema(rawSchema)
               .option("pathGlobFilter", "events.parquet").parquet(d))
             val q = raw.select(col("user_id"), col("event_id"),
@@ -1159,7 +1146,7 @@ object StreamingQueries {
             expr("cast(round(value * 100) as bigint)").as("cents"),
             unix_millis(col("ts")).as("ms"))
         val writeSnap = upsertSnapshotWriter(snapBase)
-        Catalog.withConfs(s, StreamStatePartitions) {
+        Catalog.withConfs(s, Layout.StreamStatePartitions) {
           // pmod, not %: Spark's % keeps the dividend's sign, so a
           // negative event_id would fall out of EVERY batch slice while
           // the oracle's positive-mod rewrite counts it — the slices

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Catalog
+import graft.{Catalog, Layout}
 import graft.llm.{Dedup, GraphAlgs, Pipeline, TextAnalysis}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -99,7 +99,7 @@ object CurationScaleSmoke {
         val (l, st) = GraphAlgs.connectedComponentsWithStats(
           survivors.select(col("doc_id").as("id")),
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-          broadcastMaxNodes = GraphAlgs.DefaultBroadcastMaxNodes)
+          broadcastMaxNodes = Layout.DefaultBroadcastMaxNodes)
         val lc = l.select(col("id").as("doc_id"), col("component").as("cluster_id"))
           .cache()
         lc.count()

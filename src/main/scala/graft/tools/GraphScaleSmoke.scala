@@ -1,14 +1,13 @@
 package graft.tools
 
-import graft.Materialize
+import graft.{Layout, Materialize}
 import graft.llm.GraphAlgs
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointStats.Actual
 
-/** Round 17 (r16 verdict item 3): parallel-scaling evidence for the
-  * iterative graph loops. The sf0.1 bench cannot provide it — every
+/** Parallel-scaling evidence for the iterative graph loops. The sf0.1 bench cannot provide it — every
   * family's 8-vs-32-core ratio is ≤ 1.02 because per-query fixed cost
   * dominates at gate scale — so this smoke runs connectedComponents and
   * multiSourceBfs on synthetic graphs whose node count ladders PAST
@@ -19,8 +18,8 @@ import org.apache.spark.sql.graftshim.CheckpointStats.Actual
   *     locally), with correct results on both sides of the flip;
   *  2. per-round wall time grows ~linearly with edges while the round
   *     COUNT stays at O(log diameter) — the scale claim;
-  *  3. the round-17 size-derived layout (`adaptiveP`) keeps small
-  *     tiers at few partitions and large tiers at the configured
+  *  3. the size-derived layout ([[graft.Layout.partitions]]) keeps
+  *     small tiers at few partitions and large tiers at the session's
   *     parallelism (no local-mode tuning leaking to scale).
   *
   * The graph is deterministic and its answers are closed-form: nodes
@@ -49,7 +48,7 @@ object GraphScaleSmoke {
         val parts = t.trim.split(":")
         (parts(0).toLong,
           if (parts.length > 1) parts(1).toLong
-          else GraphAlgs.DefaultBroadcastMaxNodes)
+          else Layout.DefaultBroadcastMaxNodes)
       }
     val chains = if (args.length > 1) args(1).toLong else 50000L
     ToolKit.main("graft-graph-scale-smoke")(run(_, tiers, chains))

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{Catalog, TempDirs}
-import graft.streaming.StreamingQueries
+import graft.{Catalog, Layout, TempDirs}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +27,7 @@ import org.apache.spark.sql.functions._
   * the two artifacts describe the same corpus shape. Run:
   * `sbt "runMain graft.tools.StreamStateScaleSmoke"` — one JSON line
   * per (scale, op) at 1M and 10M rows ([[run]] takes the row counts);
-  * the streams borrow the streaming family's 8 shuffle partitions and
+  * the streams borrow `Layout.StreamStatePartitions` and
   * each scale's shards live in a scoped temp dir. Record lands in
   * STREAM_STATE_r13.json.
   */
@@ -41,7 +40,7 @@ object StreamStateScaleSmoke {
     * in `batches` micro-batches.
     */
   def run(spark: SparkSession, ns: Seq[Long], batches: Int): Unit =
-    Catalog.withConfs(spark, StreamingQueries.StreamStatePartitions) {
+    Catalog.withConfs(spark, Layout.StreamStatePartitions) {
       ToolKit.rungs(spark, ns) { n =>
         TempDirs.scoped(s"stream-smoke-$n") { shards =>
           rung(spark, n, batches, shards.toString)

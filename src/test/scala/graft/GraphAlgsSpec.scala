@@ -3,7 +3,6 @@ package graft
 import graft.llm.GraphAlgs
 
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftshim.CheckpointStats
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit checks for the reusable graph API on a crafted graph: a 1-2-3
@@ -241,20 +240,6 @@ class GraphAlgsSpec extends AnyFunSuite {
         .count(java.nio.file.Files.isRegularFile(_))
       assert(files > 0, "no checkpoint files written")
     }
-  }
-
-  test("adaptiveP collapses a tiny relation to one partition and keeps " +
-    "the configured parallelism when the statistic is huge") {
-    val tiny = spark.range(100).toDF("id").localCheckpoint(true)
-    val tinyStats = CheckpointStats.truncate(spark.range(100).toDF("id"),
-      reliable = false, CheckpointStats.Actual)
-    assert(GraphAlgs.adaptiveP(tinyStats, 32) === 1)
-    // a parquet-less huge estimate: cross joins inflate sizeInBytes
-    val big = tiny.crossJoin(tiny).crossJoin(tiny).crossJoin(tiny)
-      .crossJoin(tiny)
-    assert(GraphAlgs.adaptiveP(big, 32) === 32)
-    // clamp floor: even a zero/unknown size never returns < 1
-    assert(GraphAlgs.adaptiveP(tinyStats, 1) === 1)
   }
 
   test("bfsLayers: hop distances from multi-source seeds, depth cap and " +

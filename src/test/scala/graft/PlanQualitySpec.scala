@@ -549,6 +549,17 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("d22 builds its signature once before the sweep fans out: no " +
+    "executed plan holds both a band join and the signature kernel") {
+    // graft_polyhash32 prints as its expression, polyhash32(...)
+    val kernel = "polyhash32("
+    val plans = executedPlans(SparkEntry.queries("d22_lsh_tuning")(spark, sf))
+    assert(plans.exists(_.contains(kernel)),
+      s"no signature build captured:\n${plans.mkString("\n")}")
+    val both = plans.filter(p => p.contains("Join") && p.contains(kernel))
+    assert(both.isEmpty, both.mkString("\n"))
+  }
+
   test("t31 burstiness plans the bounded top-32 as TakeOrdered, " +
     "windowless") {
     val p = plan("t31_burstiness")
