@@ -307,11 +307,11 @@ object Dedup {
     Materialize.scoped(m => m.pin(minhashPairs(m, docs), Actual))
 
   /** Core derivation from the docs relation: the signature is pinned in
-    * `m` over the spread docs, so the band join and both signature
-    * lookups read one built relation. Callers pin the pairs before `m` exits.
+    * `m`, so the band join and both signature lookups read one built
+    * relation. Callers pin the pairs before `m` exits.
     */
   private def minhashPairs(m: Materialize.Scope, docs: DataFrame): DataFrame = {
-    val sig = m.pin(minhashSignatureNarrow(Layout.spread(docs)), Actual)
+    val sig = m.pin(minhashSignatureNarrow(docs), Actual)
     // candidates via ONE self-join on exploded (bandIdx, bandKey) rows —
     // same idiom as d05's chunk join (one shuffle, not one per band)
     val bandStructs = (0 until Bands).map { b =>
@@ -410,12 +410,14 @@ object Dedup {
     * candidates to verify; this report prices that trade on the actual
     * corpus. One signature computation (narrow, shuffle-free) feeds all
     * configs; per config one exploded band self-join — the d02 shape —
-    * never all-pairs. The signature is pinned over the spread docs
-    * before the configs fan out; the report (one row per config) is
-    * collected into a local frame, so the pin is released on return.
+    * never all-pairs. The signature is pinned before the configs fan
+    * out; the report (one row per config) is collected into a local
+    * frame, so the pin is released on return. The docs are not spread:
+    * the round-robin shuffle of their text outweighs the parallel kernel
+    * in shuffle bytes.
     */
   def lshTuning(docs: DataFrame): DataFrame = Materialize.scoped { m =>
-    val sig = m.pin(minhashSignatureNarrow(Layout.spread(docs)), Actual)
+    val sig = m.pin(minhashSignatureNarrow(docs), Actual)
     val matches = (0 until Perms)
       .map(j => s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END").mkString(" + ")
     val per = TuneConfigs.map { case (nb, r) =>
